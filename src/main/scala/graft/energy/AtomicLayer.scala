@@ -2,6 +2,7 @@ package graft.energy
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Atomic overwrite for the medallion layer tables: snapshot-versioned
   * Parquet with a commit marker, so a reader NEVER sees a half-written
@@ -356,10 +357,15 @@ object AtomicLayer {
     * external tables stay readable).
     */
   def read(spark: SparkSession, root: String): DataFrame =
-    latestCommitted(spark, root) match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None => spark.read.parquet(root)
-    }
+    spark.read.parquet(latestCommitted(spark, root).getOrElse(root))
+
+  /** [[read]] with the table's schema already known — typically the
+    * schema of the DataFrame just written to `root`. Parquet then runs
+    * no schema-inference job and the columns keep the writer's order and
+    * types.
+    */
+  def read(spark: SparkSession, root: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(latestCommitted(spark, root).getOrElse(root))
 
   /** Highest `_merged_batch_id` folded into the committed snapshot at
     * `root`, or -1 when no snapshot exists or it is empty (an empty

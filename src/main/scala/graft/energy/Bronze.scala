@@ -47,9 +47,14 @@ object Bronze {
       .withColumn("source", lit(source))
   }
 
+  /** What a Bronze ingest committed: the rows written and the table's
+    * schema, so the next stage opens the snapshot without inferring it.
+    */
+  final case class Ingested(rows: Long, schema: StructType)
+
   /** Fetch one payload per backfill day from the source and write the
-    * bronze table. Returns the row count written (0 rows → no write, like
-    * the reference's empty-ingest early-return, `power_ingestion.py:47-49`).
+    * bronze table (0 rows → no write, like the reference's empty-ingest
+    * early-return, `power_ingestion.py:47-49`).
     */
   def ingestPower(
       spark: SparkSession,
@@ -57,7 +62,7 @@ object Bronze {
       country: String,
       dates: Seq[LocalDate],
       outPath: String,
-  ): Long = {
+  ): Ingested = {
     val payloads = dates.map(d => d -> src.publicPower(country, d))
     writeBronze(bronzeDf(spark, "country", country, payloads), payloads.size, outPath)
   }
@@ -68,18 +73,18 @@ object Bronze {
       bzn: String,
       dates: Seq[LocalDate],
       outPath: String,
-  ): Long = {
+  ): Ingested = {
     val payloads = dates.map(d => d -> src.price(bzn, d))
     writeBronze(bronzeDf(spark, "market", bzn, payloads), payloads.size, outPath)
   }
 
-  private def writeBronze(df: DataFrame, n: Int, outPath: String): Long = {
-    if (n == 0) return 0L
-    // Partition by ingest day: at scale (years of backfill × many zones)
-    // this gives partition pruning on date-ranged reads downstream.
+  private def writeBronze(df: DataFrame, n: Int, outPath: String): Ingested = {
+    // One plain write, one file per write task: `date` stays a STRING
+    // data column (FIXTURES.md A3), and a date-ranged read pushes its
+    // range into the Parquet scan.
     // Snapshot-versioned (AtomicLayer): a reader during the overwrite
     // sees the previous complete snapshot, never a torn table.
-    AtomicLayer.write(df, outPath, partitionCols = Seq("date"))
-    n.toLong
+    if (n > 0) AtomicLayer.write(df, outPath)
+    Ingested(n.toLong, df.schema)
   }
 }

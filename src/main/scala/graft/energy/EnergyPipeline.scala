@@ -1,6 +1,7 @@
 package graft.energy
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** End-to-end Medallion orchestration: Bronze ingest → Silver flatten →
   * Gold aggregates/join, mirroring `src/main.py:28-114` of the reference.
@@ -55,39 +56,43 @@ object EnergyPipeline {
 
     val bronzePowerPath = cfg.storage.bronze("power")
     val bronzePricePath = cfg.storage.bronze("price")
-    val nPow = Bronze.ingestPower(spark, src, country, dates, bronzePowerPath)
-    val nPri = Bronze.ingestPrice(spark, src, bzn, dates, bronzePricePath)
+    val pow = Bronze.ingestPower(spark, src, country, dates, bronzePowerPath)
+    val pri = Bronze.ingestPrice(spark, src, bzn, dates, bronzePricePath)
 
     // Every layer read resolves the latest COMMITTED snapshot
     // (AtomicLayer): overlapping runs cannot hand a half-written table
-    // to the next stage.
-    val silverPower = Silver.powerToSilver(AtomicLayer.read(spark, bronzePowerPath))
-    val silverPrice = Silver.priceToSilver(AtomicLayer.read(spark, bronzePricePath))
-    val silverPowerPath = cfg.storage.silver("power")
-    val silverPricePath = cfg.storage.silver("price")
-    Silver.write(silverPower, silverPowerPath, partitionCols = Seq("date"))
-    Silver.write(silverPrice, silverPricePath)
+    // to the next stage. Each snapshot is opened with the schema it was
+    // written with, and Silver's row counts are observed on its writes,
+    // so no stage re-reads a table just to learn its shape or size.
+    val (sp, silverPowerRows) = commitCounted(
+      Silver.powerToSilver(AtomicLayer.read(spark, bronzePowerPath, pow.schema)),
+      cfg.storage.silver("power"))
+    val (spr, silverPriceRows) = commitCounted(
+      Silver.priceToSilver(AtomicLayer.read(spark, bronzePricePath, pri.schema)),
+      cfg.storage.silver("price"))
+    val goldPower = commit(Gold.powerDailyByType(sp), cfg.storage.gold("power_daily_by_type"))
+    val goldPrice = commit(Gold.priceDaily(spr), cfg.storage.gold("price_daily"))
+    val join = commit(Gold.offshoreWindVsPrice(goldPower, goldPrice),
+      cfg.storage.gold("power_price_daily"))
 
-    val sp = Silver.read(spark, silverPowerPath)
-    val spr = Silver.read(spark, silverPricePath)
-    val goldPower = Gold.powerDailyByType(sp)
-    val goldPrice = Gold.priceDaily(spr)
-    Gold.write(goldPower, cfg.storage.gold("power_daily_by_type"))
-    Gold.write(goldPrice, cfg.storage.gold("price_daily"))
-    val join = Gold.offshoreWindVsPrice(
-      Gold.read(spark, cfg.storage.gold("power_daily_by_type")),
-      Gold.read(spark, cfg.storage.gold("price_daily")),
-    )
-    Gold.write(join, cfg.storage.gold("power_price_daily"))
+    PipelineResult(pow.rows, pri.rows, silverPowerRows, silverPriceRows,
+      goldPower, goldPrice, join)
+  }
 
-    PipelineResult(
-      nPow,
-      nPri,
-      Silver.read(spark, silverPowerPath).count(),
-      Silver.read(spark, silverPricePath).count(),
-      Gold.read(spark, cfg.storage.gold("power_daily_by_type")),
-      Gold.read(spark, cfg.storage.gold("price_daily")),
-      Gold.read(spark, cfg.storage.gold("power_price_daily")),
-    )
+  /** Write `df` as the next snapshot of the table at `root` and open the
+    * committed snapshot with `df`'s schema.
+    */
+  private def commit(df: DataFrame, root: String): DataFrame = {
+    AtomicLayer.write(df, root)
+    AtomicLayer.read(df.sparkSession, root, df.schema)
+  }
+
+  /** [[commit]], plus the number of rows the write produced, counted by
+    * an observation on the write itself.
+    */
+  private def commitCounted(df: DataFrame, root: String): (DataFrame, Long) = {
+    val rows = Observation()
+    val committed = commit(df.observe(rows, count(lit(1)).as("rows")), root)
+    (committed, rows.get("rows").asInstanceOf[Long])
   }
 }

@@ -44,10 +44,4 @@ object Gold {
       .join(price, Seq("date"), "inner")
       .select(col("date"), col("offshore_wind_daily"), col("avg_price_eur_mwh"))
   }
-
-  def write(df: DataFrame, outPath: String): Unit =
-    AtomicLayer.write(df, outPath)
-
-  def read(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    AtomicLayer.read(spark, path)
 }

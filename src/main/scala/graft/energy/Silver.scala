@@ -101,12 +101,13 @@ object Silver {
       .where(col("timestamp").isNotNull && col("price_eur_mwh").isNotNull)
   }
 
-  /** Silver is the first *wide* table; callers partition power by its
-    * ingest-day column so gold's date-ranged reads prune partitions
-    * (price carries no date column and stays unpartitioned).
+  /** Silver is the first *wide* table. It is written unpartitioned, one
+    * file per write task: power keeps its ingest day as a STRING `date`
+    * column, and a date-ranged read pushes the range into the Parquet
+    * scan, which skips row groups by their min/max statistics.
     */
-  def write(df: DataFrame, outPath: String, partitionCols: Seq[String] = Nil): Unit =
-    AtomicLayer.write(df, outPath, partitionCols)
+  def write(df: DataFrame, outPath: String): Unit =
+    AtomicLayer.write(df, outPath)
 
   def read(spark: SparkSession, path: String): DataFrame =
     AtomicLayer.read(spark, path)

@@ -166,8 +166,8 @@ class AtomicLayerSpec extends SparkSpec {
     val power = Seq(("de", "2024-01-01", "wind offshore",
       java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
       .toDF("country", "date", "production_type", "timestamp", "value")
-    Silver.write(power, root, partitionCols = Seq("date"))
-    Silver.write(power.withColumn("value", lit(2.0)), root, partitionCols = Seq("date"))
+    Silver.write(power, root)
+    Silver.write(power.withColumn("value", lit(2.0)), root)
     val got = Silver.read(spark, root)
     assert(got.select("value").as[Double].collect() === Array(2.0))
     assert(Files.exists(Paths.get(root, "v1", "_SUCCESS")))

@@ -1,8 +1,13 @@
 package graft.energy
 
-import java.nio.file.Files
 import java.time.LocalDate
+import java.util.Properties
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Golden-fixture tests for the medallion pipeline, covering the edge
@@ -49,6 +54,96 @@ class EnergyPipelineSpec extends SparkSpec {
       ("offshore_wind_daily", DoubleType),
       ("avg_price_eur_mwh", DoubleType),
     ))
+  }
+
+  /** Run the pipeline over `days` days of the default synthetic fixture
+    * into a fresh storage root; returns the config it ran with.
+    */
+  private def runDays(prefix: String, days: Int): EnergyConfig = {
+    val start = day("2025-01-01")
+    val cfg = EnergyConfig.default(graft.tools.Scratch.dir(prefix).toString).copy(
+      backfill = BackfillConfig(start, start.plusDays(days - 1L)))
+    val dates = Dates.dateRange(cfg.backfill.startDate, cfg.backfill.endDate)
+    EnergyPipeline.run(spark, cfg, FixtureEnergySource.synthetic(dates))
+    cfg
+  }
+
+  test("committed Bronze and Silver tables carry the FIXTURES.md A3 schemas") {
+    val cfg = runDays("energy-schema", 3)
+    // schema as stored: inferred from the committed files, not the writer
+    def stored(root: String) =
+      spark.read.parquet(AtomicLayer.latestCommitted(spark, root).get)
+        .schema.map(f => (f.name, f.dataType))
+    val bronzeTail = Seq(("date", StringType), ("payload_json", StringType),
+      ("ingested_at", TimestampType), ("source", StringType))
+    assert(stored(cfg.storage.bronze("power")) == ("country", StringType) +: bronzeTail)
+    assert(stored(cfg.storage.bronze("price")) == ("market", StringType) +: bronzeTail)
+    assert(stored(cfg.storage.silver("power")) == Seq(
+      ("country", StringType), ("date", StringType), ("production_type", StringType),
+      ("timestamp", TimestampType), ("value", DoubleType)))
+    assert(stored(cfg.storage.silver("price")) == Seq(
+      ("market", StringType), ("timestamp", TimestampType), ("price_eur_mwh", DoubleType)))
+  }
+
+  test("run launches only SQL-execution jobs, as many for 40 days as for 3") {
+    val sc = spark.sparkContext
+    val TagKey = "graft.test.pipeline_run"
+    // properties of every job started while `body` runs on this thread
+    def jobsDuring(body: => Unit): Seq[Properties] = {
+      val tag = java.util.UUID.randomUUID().toString
+      val jobs = new ConcurrentLinkedQueue[Properties]()
+      val drained = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(p => (p, p.getProperty(TagKey))).foreach {
+            case (p, `tag`) => jobs.add(p)
+            case (_, t) if t == s"$tag.end" => drained.countDown()
+            case _ => ()
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setLocalProperty(TagKey, tag)
+        body
+        // the listener bus is FIFO: once this sentinel job's start event
+        // arrives, every job `body` launched has been seen
+        sc.setLocalProperty(TagKey, s"$tag.end")
+        sc.parallelize(Seq(1), 1).count()
+        assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      } finally {
+        sc.setLocalProperty(TagKey, null)
+        sc.removeSparkListener(listener)
+      }
+      jobs.asScala.toSeq
+    }
+    val short = jobsDuring(runDays("energy-jobs3", 3): Unit)
+    // 40 day directories would be above Spark's 32-path parallel-listing threshold
+    val long = jobsDuring(runDays("energy-jobs40", 40): Unit)
+    for ((label, jobs) <- Seq("3 days" -> short, "40 days" -> long)) {
+      val bare = jobs.count(_.getProperty("spark.sql.execution.id") == null)
+      assert(bare == 0,
+        s"$label: $bare of ${jobs.size} jobs ran outside a SQL execution " +
+          "(schema inference, file listing or an eager action)")
+    }
+    assert(short.nonEmpty && long.size == short.size,
+      s"jobs: ${short.size} for 3 days, ${long.size} for 40 days")
+  }
+
+  test("a date range on committed Silver power is pushed into the scan") {
+    val cfg = runDays("energy-prune", 10)
+    val silver = AtomicLayer.read(spark, cfg.storage.silver("power"))
+    val (lo, hi) = ("2025-01-03", "2025-01-05")
+    val ranged = silver.where(col("date").between(lo, hi))
+    val pushed = ranged.queryExecution.sparkPlan
+      .collectFirst { case s: FileSourceScanExec => s.metadata("PushedFilters") }
+    assert(pushed.exists(f => f.contains(s"GreaterThanOrEqual(date,$lo)") &&
+      f.contains(s"LessThanOrEqual(date,$hi)")), s"PushedFilters: $pushed")
+    val all = silver.collect()
+    val expected = all.filter { r =>
+      val d = r.getAs[String]("date"); d >= lo && d <= hi
+    }
+    assert(expected.nonEmpty && expected.length < all.length)
+    assert(ranged.collect().toSeq.sortBy(_.toString) == expected.toSeq.sortBy(_.toString))
   }
 
   test("G2/P4: misaligned arrays are null-padded by arrays_zip then dropped") {
