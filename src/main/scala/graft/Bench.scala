@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
@@ -195,42 +193,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every core on the box: the bench is a throughput
-    // measurement, and an unset env var must not quietly run it at 4.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // CODEGEN-CACHE THRASH (VERDICT r11 #1, found by the BenchReplay
-      // twice-through experiment): the generated-class cache holds 100
-      // entries (StaticSQLConf default) while the 423-query registry
-      // generates thousands of fragments, so any JVM serving the whole
-      // registry more than once Janino-RECOMPILES every fragment every
-      // pass and re-enters JIT warmup on the fresh classes — measured
-      // +15% total, +30..200% on 141 small queries, flat metaspace
-      // (pass totals 614.5 / 703.7 / 706.4 s at sf1.0 before the fix).
-      // The per-query warmup hides it from single-sweep medians; a
-      // serving deployment with a wide query mix hits it constantly.
-      // Knob documented in SCALE.md (r12 adjudication: 100 vs 5000).
-      // Parse defensively — a non-numeric env value would otherwise
-      // fail session construction with an opaque Spark error.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.get("SPARK_GRAFT_CODEGEN_CACHE") match {
-          case Some(v) if v.forall(_.isDigit) && v.nonEmpty => v
-          case Some(v) =>
-            System.err.println(
-              s"[bench] ignoring non-numeric SPARK_GRAFT_CODEGEN_CACHE='$v', using 5000")
-            "5000"
-          case None => "5000"
-        })
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Baselines from the PREVIOUS committed artifact — read before this
     // run overwrites the file. Only trusted when it measured the same

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints the formatted physical plan for each query
   * name (regex) given — the dev loop behind the "explain until it's the
   * plan you'd want" discipline. Usage:
@@ -11,17 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val patterns = args.tail.map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (patterns.exists(_.findFirstIn(name).isDefined)) {

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * Catalyst expressions into the SQL function registry, so
   * `SELECT cosine_similarity(a, b)` works alongside the Column API.
   *
-  * Install with `SparkSession.builder().withExtensions(new GraftExtensions)`
-  * or `spark.sql.extensions=graft.GraftExtensions`.
+  * [[GraftSession]] installs it; a session built elsewhere can set
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,6 +1,6 @@
 package graft.energy
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Pipeline orchestrator CLI — the Scala twin of the reference's
   * `src/main.py:28-114`: run the full Bronze → Silver → Gold backfill and
@@ -30,15 +30,10 @@ object EnergyMain {
         ))
       else cfg0
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val builder = GraftSession.builder(GraftSession.cores)
       .appName(cfg.projectName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
       .config("spark.sql.session.timeZone", cfg.timezone)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -56,16 +56,7 @@ object ScaleGen {
     val zipf = args.lift(3).contains("zipf")
     val clustered = args.lift(3).contains("clustered")
     val suffix = args.lift(3).contains("suffix")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, out, factor, zipf, clustered, suffix)
     spark.stop()

@@ -1,0 +1,38 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** The session contract lives in [[GraftSession]] alone: the shared test
+  * session carries all of it, and no other source builds a session (the
+  * hand-copied builders had drifted apart).
+  */
+class GraftSessionSpec extends SparkSpec {
+
+  test("the shared test session carries every contract setting") {
+    val contract = Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.ansi.enabled" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.adaptive.enabled" -> "true")
+    contract.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    // GraftExtensions registered its SQL functions
+    assert(spark.catalog.functionExists("cosine_similarity"))
+  }
+
+  test("no source outside GraftSession.scala builds a SparkSession") {
+    val builderCall = """SparkSession\s*\.\s*builder|\.builder\(\)|new\s+SparkSession\.Builder""".r
+    val builders = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter((p: Path) => builderCall.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).toList
+    // the scan must see the one legitimate builder, or it proves nothing
+    assert(builders.contains("GraftSession.scala"))
+    assert(builders.filterNot(_ == "GraftSession.scala").isEmpty,
+      s"session builders outside GraftSession: $builders")
+  }
+}

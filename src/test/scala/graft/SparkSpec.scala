@@ -3,24 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one JVM-wide SparkSession for all suites (forked test
-  * JVM), UTC-pinned, ANSI off to preserve the reference's null-on-error
-  * cast/parse semantics (SURVEY.md §4).
+/** Shared session: one JVM-wide [[GraftSession]] for all suites (forked
+  * test JVM) on a fixed `local[4]`, with its warehouse in a scratch dir.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         graft.tools.Scratch.dir("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -43,26 +43,9 @@ object BenchReplay {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(2)
     val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Default ON so the replay measures the FIXED engine; export
-      // SPARK_GRAFT_CODEGEN_CACHE=100 to reproduce the r11 thrash
-      // (pass totals 614.5 / 703.7 / 706.4 s at sf1.0 with the
-      // 100-entry default — see Bench.scala's note).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev scratchpad: evaluate one-off SQL against an in-memory session to
-  * probe Spark↔DuckDB function parity. Not part of the driver contract.
+/** Dev scratchpad: evaluate one-off SQL against the engine's session
+  * ([[graft.GraftSession]]) to probe Spark↔DuckDB function parity. Not
+  * part of the driver contract.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { sql =>
       println(s"SQL> $sql")
