@@ -12,10 +12,15 @@ import scala.jdk.CollectionConverters._
   * overwrite is semantically equivalent here — SURVEY.md §1).
   *
   * Reference: `src/ingestion/power_ingestion.py:31-79` and
-  * `src/ingestion/price_ingestion.py:31-78` (two near-identical modules,
-  * unified here into one generic ingest).
+  * `src/ingestion/price_ingestion.py:31-78`, two near-identical modules
+  * that differ only in key column, key value and API call. Here both are
+  * one [[ingest]]: a driver-side loop fetches each day's payload, then one
+  * write commits the table.
   */
 object Bronze {
+
+  /** Value of the `source` metadata column (`power_ingestion.py:68`). */
+  private val Source = "energy-charts"
 
   /** Bronze schema: key column (country|market), date, raw payload text.
     * Matches `power_ingestion.py:52-58` / `price_ingestion.py:51-57`.
@@ -36,7 +41,6 @@ object Bronze {
       keyCol: String,
       keyValue: String,
       payloads: Seq[(LocalDate, String)],
-      source: String = "energy-charts",
   ): DataFrame = {
     val rows = payloads.map { case (d, json) =>
       Row(keyValue, d.toString, json)
@@ -44,7 +48,7 @@ object Bronze {
     spark
       .createDataFrame(rows.asJava, schema(keyCol))
       .withColumn("ingested_at", current_timestamp())
-      .withColumn("source", lit(source))
+      .withColumn("source", lit(Source))
   }
 
   /** What a Bronze ingest committed: the rows written and the table's
@@ -52,39 +56,26 @@ object Bronze {
     */
   final case class Ingested(rows: Long, schema: StructType)
 
-  /** Fetch one payload per backfill day from the source and write the
-    * bronze table (0 rows → no write, like the reference's empty-ingest
-    * early-return, `power_ingestion.py:47-49`).
+  /** Fetch one payload per backfill day with `fetch` and write the bronze
+    * table keyed by `keyCol = key` (0 rows → no write, like the
+    * reference's empty-ingest early-return, `power_ingestion.py:47-49`).
+    *
+    * One plain write, one file per write task: `date` stays a STRING data
+    * column (FIXTURES.md A3), and a date-ranged read pushes its range into
+    * the Parquet scan. The write is snapshot-versioned ([[AtomicLayer]]):
+    * a reader during the overwrite sees the previous complete snapshot,
+    * never a torn table.
     */
-  def ingestPower(
+  def ingest(
       spark: SparkSession,
-      src: EnergySource,
-      country: String,
+      keyCol: String,
+      key: String,
       dates: Seq[LocalDate],
+      fetch: LocalDate => String,
       outPath: String,
   ): Ingested = {
-    val payloads = dates.map(d => d -> src.publicPower(country, d))
-    writeBronze(bronzeDf(spark, "country", country, payloads), payloads.size, outPath)
-  }
-
-  def ingestPrice(
-      spark: SparkSession,
-      src: EnergySource,
-      bzn: String,
-      dates: Seq[LocalDate],
-      outPath: String,
-  ): Ingested = {
-    val payloads = dates.map(d => d -> src.price(bzn, d))
-    writeBronze(bronzeDf(spark, "market", bzn, payloads), payloads.size, outPath)
-  }
-
-  private def writeBronze(df: DataFrame, n: Int, outPath: String): Ingested = {
-    // One plain write, one file per write task: `date` stays a STRING
-    // data column (FIXTURES.md A3), and a date-ranged read pushes its
-    // range into the Parquet scan.
-    // Snapshot-versioned (AtomicLayer): a reader during the overwrite
-    // sees the previous complete snapshot, never a torn table.
-    if (n > 0) AtomicLayer.write(df, outPath)
-    Ingested(n.toLong, df.schema)
+    val df = bronzeDf(spark, keyCol, key, dates.map(d => d -> fetch(d)))
+    if (dates.nonEmpty) AtomicLayer.write(df, outPath)
+    Ingested(dates.size.toLong, df.schema)
   }
 }

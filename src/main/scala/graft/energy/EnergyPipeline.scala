@@ -18,27 +18,6 @@ final case class PipelineResult(
 
 object EnergyPipeline {
 
-  /** Bronze via the DataSource V2 connector instead of the driver-side
-    * fetch loop: ingestion becomes a distributed scan (partition-per-day,
-    * date pushdown) and the rest of the medallion flow is unchanged.
-    * `EnergyPipelineSpec` asserts this path and [[run]] produce identical
-    * gold tables.
-    */
-  def bronzeFromConnector(
-      spark: SparkSession,
-      cfg: EnergyConfig,
-      dataset: String, // "power" | "price"
-  ): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.read.format("energy-charts")
-      .option("dataset", dataset)
-      .option("start", cfg.backfill.startDate.toString)
-      .option("end", cfg.backfill.endDate.toString)
-      .load()
-      .withColumn("ingested_at", current_timestamp())
-      .withColumn("source", lit("energy-charts"))
-  }
-
   def run(
       spark: SparkSession,
       cfg: EnergyConfig,
@@ -56,8 +35,10 @@ object EnergyPipeline {
 
     val bronzePowerPath = cfg.storage.bronze("power")
     val bronzePricePath = cfg.storage.bronze("price")
-    val pow = Bronze.ingestPower(spark, src, country, dates, bronzePowerPath)
-    val pri = Bronze.ingestPrice(spark, src, bzn, dates, bronzePricePath)
+    val pow = Bronze.ingest(spark, "country", country, dates,
+      src.publicPower(country, _), bronzePowerPath)
+    val pri = Bronze.ingest(spark, "market", bzn, dates,
+      src.price(bzn, _), bronzePricePath)
 
     // Every layer read resolves the latest COMMITTED snapshot
     // (AtomicLayer): overlapping runs cannot hand a half-written table

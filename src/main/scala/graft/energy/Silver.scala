@@ -1,6 +1,6 @@
 package graft.energy
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,6 +16,10 @@ import org.apache.spark.sql.types._
   *    truncate to matched pairs
   *  - timestamps via `to_timestamp(from_unixtime(...))` — session-tz
   *    dependent in the reference; we pin the session to UTC (SURVEY.md §1)
+  *
+  * [[EnergyPipeline.run]] commits both tables through [[AtomicLayer]],
+  * unpartitioned: power keeps its ingest day as a STRING `date` column,
+  * and a date-ranged read pushes the range into the Parquet scan.
   */
 object Silver {
 
@@ -100,15 +104,4 @@ object Silver {
       )
       .where(col("timestamp").isNotNull && col("price_eur_mwh").isNotNull)
   }
-
-  /** Silver is the first *wide* table. It is written unpartitioned, one
-    * file per write task: power keeps its ingest day as a STRING `date`
-    * column, and a date-ranged read pushes the range into the Parquet
-    * scan, which skips row groups by their min/max statistics.
-    */
-  def write(df: DataFrame, outPath: String): Unit =
-    AtomicLayer.write(df, outPath)
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    AtomicLayer.read(spark, path)
 }

@@ -3,10 +3,9 @@ package graft.energy
 import java.time.LocalDate
 
 /** Deterministic Energy-Charts payload generator (FIXTURES.md A1/A2
-  * shapes) shared by the driver-side [[FixtureEnergySource]] and the
-  * DataSource V2 connector (`graft.sources`): payloads are pure functions
-  * of the date, so any executor can generate its own partition's data
-  * without shipping state.
+  * shapes) behind [[FixtureEnergySource.synthetic]]: each payload is a
+  * pure function of its date, so a backfill of any width needs no
+  * checked-in files.
   */
 object SyntheticPayloads {
   val DefaultProductionTypes: Seq[String] =

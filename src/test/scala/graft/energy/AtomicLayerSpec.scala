@@ -2,7 +2,6 @@ package graft.energy
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions._
 
 /** AtomicLayer: snapshot-versioned Parquet overwrite with a commit
   * marker — readers see only complete snapshots, crashed writes are
@@ -159,17 +158,5 @@ class AtomicLayerSpec extends SparkSpec {
     val root = tmpTable()
     df(7, 8).write.parquet(root)
     assert(AtomicLayer.read(spark, root).as[Int].collect().sorted === Array(7, 8))
-  }
-
-  test("medallion write helpers route through the protocol") {
-    val root = tmpTable()
-    val power = Seq(("de", "2024-01-01", "wind offshore",
-      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
-      .toDF("country", "date", "production_type", "timestamp", "value")
-    Silver.write(power, root)
-    Silver.write(power.withColumn("value", lit(2.0)), root)
-    val got = Silver.read(spark, root)
-    assert(got.select("value").as[Double].collect() === Array(2.0))
-    assert(Files.exists(Paths.get(root, "v1", "_SUCCESS")))
   }
 }

@@ -85,6 +85,36 @@ class EnergyPipelineSpec extends SparkSpec {
       ("market", StringType), ("timestamp", TimestampType), ("price_eur_mwh", DoubleType)))
   }
 
+  test("configured dataset keys reach the source and the committed Bronze") {
+    val start = day("2025-01-01")
+    val cfg = EnergyConfig.default(graft.tools.Scratch.dir("energy-keys").toString).copy(
+      backfill = BackfillConfig(start, start.plusDays(2)),
+      datasets = Seq(
+        DatasetConfig("public_power_fr", "public_power", Map("country" -> "fr")),
+        DatasetConfig("price_at", "price", Map("bzn" -> "AT"))))
+    val fixture = FixtureEnergySource.synthetic(
+      Dates.dateRange(cfg.backfill.startDate, cfg.backfill.endDate))
+    // every (method, key) the pipeline asks the source for
+    val calls = new ConcurrentLinkedQueue[(String, String)]()
+    val recording = new EnergySource {
+      def publicPower(country: String, date: LocalDate): String = {
+        calls.add("publicPower" -> country); fixture.publicPower(country, date)
+      }
+      def price(bzn: String, date: LocalDate): String = {
+        calls.add("price" -> bzn); fixture.price(bzn, date)
+      }
+    }
+    EnergyPipeline.run(spark, cfg, recording)
+
+    val seen = calls.asScala.toSeq.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    assert(seen == Map("publicPower" -> Set("fr"), "price" -> Set("AT")), s"calls: $calls")
+    def keys(table: String, keyCol: String) =
+      AtomicLayer.read(spark, cfg.storage.bronze(table))
+        .select(keyCol).distinct().collect().map(_.getString(0)).toSeq
+    assert(keys("power", "country") == Seq("fr"))
+    assert(keys("price", "market") == Seq("AT"))
+  }
+
   test("run launches only SQL-execution jobs, as many for 40 days as for 3") {
     val sc = spark.sparkContext
     val TagKey = "graft.test.pipeline_run"
@@ -220,23 +250,6 @@ class EnergyPipelineSpec extends SparkSpec {
     )
     val gold = Gold.powerDailyByType(Silver.powerToSilver(bronze)).collect()
     assert(gold.length == 1 && gold.head.getDate(0).toString == "2025-03-01")
-  }
-
-  test("connector-ingested bronze yields identical gold to driver-loop bronze") {
-    val cfg = EnergyConfig.default("/tmp/unused").copy(
-      backfill = BackfillConfig(day("2025-01-01"), day("2025-01-03")))
-    val dates = Dates.dateRange(cfg.backfill.startDate, cfg.backfill.endDate)
-    val src = FixtureEnergySource.synthetic(dates)
-    // driver-loop path
-    val loopBronze = Bronze.bronzeDf(spark, "country", "de",
-      dates.map(d => d -> src.publicPower("de", d)))
-    // connector path
-    val connBronze = EnergyPipeline.bronzeFromConnector(spark, cfg, "power")
-    val a = Gold.powerDailyByType(Silver.powerToSilver(loopBronze))
-      .orderBy("date", "production_type").collect().map(_.toSeq)
-    val b = Gold.powerDailyByType(Silver.powerToSilver(connBronze))
-      .orderBy("date", "production_type").collect().map(_.toSeq)
-    assert(a.toSeq == b.toSeq)
   }
 
   test("dates: inclusive range + validation") {
