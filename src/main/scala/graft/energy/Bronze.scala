@@ -14,8 +14,8 @@ import scala.jdk.CollectionConverters._
   * Reference: `src/ingestion/power_ingestion.py:31-79` and
   * `src/ingestion/price_ingestion.py:31-78`, two near-identical modules
   * that differ only in key column, key value and API call. Here both are
-  * one [[ingest]]: a driver-side loop fetches each day's payload, then one
-  * write commits the table.
+  * one [[ingest]]: the caller fetches each day's payload on the driver,
+  * then one write commits the table.
   */
 object Bronze {
 
@@ -56,8 +56,8 @@ object Bronze {
     */
   final case class Ingested(rows: Long, schema: StructType)
 
-  /** Fetch one payload per backfill day with `fetch` and write the bronze
-    * table keyed by `keyCol = key` (0 rows → no write, like the
+  /** Write the bronze table of `payloads`, one (day, payload) per backfill
+    * day, keyed by `keyCol = key` (0 rows → no write, like the
     * reference's empty-ingest early-return, `power_ingestion.py:47-49`).
     *
     * One plain write, one file per write task: `date` stays a STRING data
@@ -70,12 +70,11 @@ object Bronze {
       spark: SparkSession,
       keyCol: String,
       key: String,
-      dates: Seq[LocalDate],
-      fetch: LocalDate => String,
+      payloads: Seq[(LocalDate, String)],
       outPath: String,
   ): Ingested = {
-    val df = bronzeDf(spark, keyCol, key, dates.map(d => d -> fetch(d)))
-    if (dates.nonEmpty) AtomicLayer.write(df, outPath)
-    Ingested(dates.size.toLong, df.schema)
+    val df = bronzeDf(spark, keyCol, key, payloads)
+    if (payloads.nonEmpty) AtomicLayer.write(df, outPath)
+    Ingested(payloads.size.toLong, df.schema)
   }
 }

@@ -1,10 +1,12 @@
 package graft.energy
 
+import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
-/** End-to-end Medallion orchestration: Bronze ingest → Silver flatten →
-  * Gold aggregates/join, mirroring `src/main.py:28-114` of the reference.
+/** What [[EnergyPipeline.run]] committed: Bronze and Silver row counts
+  * per table, and the three committed Gold tables.
   */
 final case class PipelineResult(
     bronzePowerRows: Long,
@@ -16,7 +18,25 @@ final case class PipelineResult(
     goldJoin: DataFrame,
 )
 
+/** End-to-end Medallion orchestration: Bronze ingest → Silver flatten →
+  * Gold aggregates/join, mirroring `src/main.py:28-114` of the reference.
+  *
+  * [[run]] first fetches every payload on the caller thread, sequentially
+  * and in date order: all power days, then all price days, so an
+  * [[EnergySource]] needs no thread safety. The power chain
+  * (Bronze → Silver → Gold `power_daily_by_type`) and the price chain
+  * (Bronze → Silver → Gold `price_daily`) are independent until the
+  * offshore-wind-vs-price join (`silver_to_gold.py:78-123`), so they then
+  * run concurrently: power on one thread created by `run`, price on the
+  * caller thread. The join is the only barrier; it is written once both
+  * chains have committed.
+  */
 object EnergyPipeline {
+
+  /** What one chain committed: its Bronze and Silver row counts and its
+    * committed Gold table.
+    */
+  private final case class Chain(bronzeRows: Long, silverRows: Long, gold: DataFrame)
 
   def run(
       spark: SparkSession,
@@ -33,31 +53,72 @@ object EnergyPipeline {
       .flatMap(_.params.get("bzn"))
       .getOrElse("DE-LU")
 
-    val bronzePowerPath = cfg.storage.bronze("power")
-    val bronzePricePath = cfg.storage.bronze("price")
-    val pow = Bronze.ingest(spark, "country", country, dates,
-      src.publicPower(country, _), bronzePowerPath)
-    val pri = Bronze.ingest(spark, "market", bzn, dates,
-      src.price(bzn, _), bronzePricePath)
+    // Fetch everything before writing anything: a failing fetch leaves
+    // every table as it was.
+    val powerPayloads = dates.map(d => d -> src.publicPower(country, d))
+    val pricePayloads = dates.map(d => d -> src.price(bzn, d))
 
     // Every layer read resolves the latest COMMITTED snapshot
     // (AtomicLayer): overlapping runs cannot hand a half-written table
     // to the next stage. Each snapshot is opened with the schema it was
     // written with, and Silver's row counts are observed on its writes,
     // so no stage re-reads a table just to learn its shape or size.
-    val (sp, silverPowerRows) = commitCounted(
-      Silver.powerToSilver(AtomicLayer.read(spark, bronzePowerPath, pow.schema)),
-      cfg.storage.silver("power"))
-    val (spr, silverPriceRows) = commitCounted(
-      Silver.priceToSilver(AtomicLayer.read(spark, bronzePricePath, pri.schema)),
-      cfg.storage.silver("price"))
-    val goldPower = commit(Gold.powerDailyByType(sp), cfg.storage.gold("power_daily_by_type"))
-    val goldPrice = commit(Gold.priceDaily(spr), cfg.storage.gold("price_daily"))
-    val join = commit(Gold.offshoreWindVsPrice(goldPower, goldPrice),
+    def chain(
+        table: String,
+        keyCol: String,
+        key: String,
+        payloads: Seq[(LocalDate, String)],
+        toSilver: DataFrame => DataFrame,
+        goldTable: String,
+        toGold: DataFrame => DataFrame,
+    ): Chain = {
+      val bronzePath = cfg.storage.bronze(table)
+      val bronze = Bronze.ingest(spark, keyCol, key, payloads, bronzePath)
+      val (silver, silverRows) = commitCounted(
+        toSilver(AtomicLayer.read(spark, bronzePath, bronze.schema)),
+        cfg.storage.silver(table))
+      Chain(bronze.rows, silverRows, commit(toGold(silver), cfg.storage.gold(goldTable)))
+    }
+    val (power, price) = concurrently(
+      chain("power", "country", country, powerPayloads,
+        Silver.powerToSilver, "power_daily_by_type", Gold.powerDailyByType),
+      chain("price", "market", bzn, pricePayloads,
+        Silver.priceToSilver, "price_daily", Gold.priceDaily))
+    val join = commit(Gold.offshoreWindVsPrice(power.gold, price.gold),
       cfg.storage.gold("power_price_daily"))
 
-    PipelineResult(pow.rows, pri.rows, silverPowerRows, silverPriceRows,
-      goldPower, goldPrice, join)
+    PipelineResult(power.bronzeRows, price.bronzeRows, power.silverRows,
+      price.silverRows, power.gold, price.gold, join)
+  }
+
+  /** Evaluate `a` on a thread created here and `b` on the caller thread,
+    * and return both results once both have finished. The thread is new
+    * rather than pooled so that it inherits the caller's SparkContext
+    * local properties (job group, job tags, scheduler pool) as they are
+    * now. If either side throws, the first failure is rethrown as is,
+    * with the other's attached via `addSuppressed`, and only after both
+    * sides have finished, so no write outlives the call.
+    */
+  private def concurrently[A, B](a: => A, b: => B): (A, B) = {
+    val failure = new AtomicReference[Throwable]()
+    def guarded[T](body: => T): Option[T] =
+      try Some(body) catch {
+        case t: Throwable =>
+          if (!failure.compareAndSet(null, t)) failure.get.addSuppressed(t)
+          None
+      }
+    var resultA: Option[A] = None // published to this thread by `join`
+    val thread = new Thread(() => resultA = guarded(a), "energy-pipeline-chain")
+    thread.start()
+    val resultB = guarded(b)
+    var interrupted = false
+    while (thread.isAlive) {
+      try thread.join()
+      catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    Option(failure.get).foreach(throw _)
+    (resultA.get, resultB.get)
   }
 
   /** Write `df` as the next snapshot of the table at `root` and open the

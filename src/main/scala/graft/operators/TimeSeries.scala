@@ -37,20 +37,6 @@ object TimeSeries {
         sum(col("value").cast(DecimalType(20, 4))).as("vsum"),
       )
 
-  /** Dense hourly spine per user spanning that user's [first, last] active
-    * hour, with actual aggregates left-joined on (missing hours carry
-    * n_events = 0 and a NULL sum).
-    */
-  def hourlySpine(events: DataFrame): DataFrame = {
-    val h = hourly(events)
-    val spine = h
-      .groupBy("user_id")
-      .agg(min(col("hr")).as("mn"), max(col("hr")).as("mx"))
-      .select(col("user_id"),
-        explode(expr("sequence(mn, mx, interval 1 hour)")).as("hr"))
-    spine.join(h, Seq("user_id", "hr"), "left")
-  }
-
   /** Each OBSERVED hourly row annotated with its successor observation
     * (`lead` within the user) and then EXPLODED into the dense segment it
     * owns: itself plus every missing hour strictly before the next

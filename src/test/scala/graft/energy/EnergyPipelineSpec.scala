@@ -2,11 +2,12 @@ package graft.energy
 
 import java.time.LocalDate
 import java.util.Properties
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -115,13 +116,23 @@ class EnergyPipelineSpec extends SparkSpec {
     assert(keys("price", "market") == Seq("AT"))
   }
 
+  /** The seven table roots a run commits, Bronze to the Gold join. */
+  private def layerRoots(cfg: EnergyConfig): Seq[String] = {
+    val st = cfg.storage
+    Seq(st.bronze("power"), st.bronze("price"), st.silver("power"), st.silver("price"),
+      st.gold("power_daily_by_type"), st.gold("price_daily"), st.gold("power_price_daily"))
+  }
+
   test("run launches only SQL-execution jobs, as many for 40 days as for 3") {
     val sc = spark.sparkContext
     val TagKey = "graft.test.pipeline_run"
-    // properties of every job started while `body` runs on this thread
-    def jobsDuring(body: => Unit): Seq[Properties] = {
+    // the config `body` ran with, the properties of every job started
+    // while it ran on this thread, and the physical plan of every SQL
+    // execution started meanwhile
+    def jobsDuring(body: => EnergyConfig): (EnergyConfig, Seq[Properties], Map[Long, String]) = {
       val tag = java.util.UUID.randomUUID().toString
       val jobs = new ConcurrentLinkedQueue[Properties]()
+      val plans = new ConcurrentHashMap[Long, String]()
       val drained = new CountDownLatch(1)
       val listener = new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -130,33 +141,92 @@ class EnergyPipelineSpec extends SparkSpec {
             case (_, t) if t == s"$tag.end" => drained.countDown()
             case _ => ()
           }
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
+          case _ => ()
+        }
       }
       sc.addSparkListener(listener)
       try {
         sc.setLocalProperty(TagKey, tag)
-        body
+        val cfg = body
         // the listener bus is FIFO: once this sentinel job's start event
         // arrives, every job `body` launched has been seen
         sc.setLocalProperty(TagKey, s"$tag.end")
         sc.parallelize(Seq(1), 1).count()
         assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+        (cfg, jobs.asScala.toSeq, plans.asScala.toMap)
       } finally {
         sc.setLocalProperty(TagKey, null)
         sc.removeSparkListener(listener)
       }
-      jobs.asScala.toSeq
     }
-    val short = jobsDuring(runDays("energy-jobs3", 3): Unit)
+    val short = jobsDuring(runDays("energy-jobs3", 3))
     // 40 day directories would be above Spark's 32-path parallel-listing threshold
-    val long = jobsDuring(runDays("energy-jobs40", 40): Unit)
-    for ((label, jobs) <- Seq("3 days" -> short, "40 days" -> long)) {
+    val long = jobsDuring(runDays("energy-jobs40", 40))
+    for ((label, (cfg, jobs, plans)) <- Seq("3 days" -> short, "40 days" -> long)) {
       val bare = jobs.count(_.getProperty("spark.sql.execution.id") == null)
       assert(bare == 0,
         s"$label: $bare of ${jobs.size} jobs ran outside a SQL execution " +
           "(schema inference, file listing or an eager action)")
+      // both chains run under the caller's local properties: the tagged
+      // jobs' executions write every layer's next snapshot
+      val tagged = jobs.flatMap(j => Option(j.getProperty("spark.sql.execution.id")))
+        .flatMap(id => plans.get(id.toLong))
+      val missed = layerRoots(cfg).filterNot(root => tagged.exists(_.contains(s"$root/v")))
+      assert(missed.isEmpty, s"$label: no tagged job wrote under $missed")
     }
-    assert(short.nonEmpty && long.size == short.size,
-      s"jobs: ${short.size} for 3 days, ${long.size} for 40 days")
+    assert(short._2.nonEmpty && long._2.size == short._2.size,
+      s"jobs: ${short._2.size} for 3 days, ${long._2.size} for 40 days")
+  }
+
+  test("a failing fetch throws as is and commits no layer") {
+    val start = day("2025-01-01")
+    val cfg = EnergyConfig.default(graft.tools.Scratch.dir("energy-fetch-fail").toString)
+      .copy(backfill = BackfillConfig(start, start.plusDays(2)))
+    val fixture = FixtureEnergySource.synthetic(
+      Dates.dateRange(cfg.backfill.startDate, cfg.backfill.endDate))
+    val boom = new IllegalStateException("price feed down")
+    val failing = new EnergySource {
+      def publicPower(country: String, date: LocalDate): String = fixture.publicPower(country, date)
+      def price(bzn: String, date: LocalDate): String =
+        if (date == start.plusDays(1)) throw boom else fixture.price(bzn, date)
+    }
+    val thrown = intercept[IllegalStateException](EnergyPipeline.run(spark, cfg, failing))
+    assert(thrown eq boom)
+    val committed = layerRoots(cfg).filter(AtomicLayer.latestCommitted(spark, _).nonEmpty)
+    assert(committed.isEmpty, s"committed despite the failed fetch: $committed")
+  }
+
+  test("a failing chain throws its own error only after the other chain committed") {
+    val start = day("2025-01-01")
+    // (Silver table made unwritable, Gold table of the other chain)
+    val cases = Seq(Seq("price") -> Some("power_daily_by_type"),
+      Seq("power") -> Some("price_daily"), Seq("power", "price") -> None)
+    for ((broken, otherGold) <- cases) {
+      val cfg = EnergyConfig.default(
+        graft.tools.Scratch.dir(s"energy-chain-fail-${broken.mkString("-")}").toString)
+        .copy(backfill = BackfillConfig(start, start.plusDays(2)))
+      // a regular file where the Silver table root should be
+      for (t <- broken) {
+        val f = new java.io.File(cfg.storage.silver(t))
+        f.getParentFile.mkdirs()
+        assert(f.createNewFile())
+      }
+      val src = FixtureEnergySource.synthetic(
+        Dates.dateRange(cfg.backfill.startDate, cfg.backfill.endDate))
+      val thrown = intercept[Exception](EnergyPipeline.run(spark, cfg, src))
+      // one failure per broken chain: the first thrown, the other suppressed
+      val failures = thrown +: thrown.getSuppressed.toSeq
+      assert(failures.size == broken.size, s"$broken: $failures")
+      for (t <- broken) assert(failures.exists(_.getMessage.contains(cfg.storage.silver(t))),
+        s"$broken: no failure names ${cfg.storage.silver(t)}: $failures")
+      otherGold.foreach { g =>
+        assert(AtomicLayer.latestCommitted(spark, cfg.storage.gold(g)).nonEmpty,
+          s"$broken: run threw before $g committed")
+      }
+      assert(AtomicLayer.latestCommitted(spark, cfg.storage.gold("power_price_daily")).isEmpty)
+    }
   }
 
   test("a date range on committed Silver power is pushed into the scan") {
