@@ -2,7 +2,7 @@ package graft.energy
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, lit, max}
 
 /** Atomic overwrite for the medallion layer tables: snapshot-versioned
   * Parquet with a commit marker, so a reader NEVER sees a half-written
@@ -13,8 +13,7 @@ import org.apache.spark.sql.types.StructType
   * `power_ingestion.py:76`); this environment ships no Delta jars
   * (SURVEY.md §1), and a plain Parquet overwrite has a window where the
   * old files are deleted and the new ones half-moved — a concurrent
-  * reader sees a torn table. Same protocol as
-  * [[graft.streaming.UpsertSink]]: each write lands in a fresh
+  * reader sees a torn table. Here each write lands in a fresh
   * `v<n>` directory inside the table root, the commit marker is Spark's
   * own `_SUCCESS` file (written by the job committer only after every
   * task file is in place), and readers resolve the highest version
@@ -32,6 +31,7 @@ import org.apache.spark.sql.types.StructType
 object AtomicLayer {
 
   private val V = "v(\\d+)".r
+  private val StaleClaim = "v(\\d+)\\.claim".r
 
   private def fsFor(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -41,8 +41,7 @@ object AtomicLayer {
   /** (version, dir, committed) for every `v<n>` child of `root`,
     * version-ascending.
     */
-  private def versionDirs(spark: SparkSession, root: String): Seq[(Int, Path, Boolean)] = {
-    val (fs, p) = fsFor(spark, root)
+  private def versionDirs(fs: FileSystem, p: Path): Seq[(Int, Path, Boolean)] = {
     if (!fs.exists(p)) return Seq.empty
     fs.listStatus(p).toSeq
       .filter(_.isDirectory)
@@ -58,15 +57,17 @@ object AtomicLayer {
 
   /** Highest committed snapshot directory, if any. */
   def latestCommitted(spark: SparkSession, root: String): Option[String] =
-    versionDirs(spark, root).filter(_._3).lastOption.map(_._2.toString)
+    committedVersions(spark, root).lastOption.map(_._2)
 
   /** All committed (version, dir) pairs, ascending — the TIME-TRAVEL
     * surface: any snapshot inside the retention window can be read by
     * version, exactly like Delta's `versionAsOf` scaled down to the
     * commit-marker protocol. `keepVersions` bounds how far back.
     */
-  def committedVersions(spark: SparkSession, root: String): Seq[(Int, String)] =
-    versionDirs(spark, root).filter(_._3).map { case (n, p, _) => (n, p.toString) }
+  def committedVersions(spark: SparkSession, root: String): Seq[(Int, String)] = {
+    val (fs, p) = fsFor(spark, root)
+    versionDirs(fs, p).filter(_._3).map { case (n, dir, _) => (n, dir.toString) }
+  }
 
   /** Atomically claim version number `n` by creating `v<n>.claim` with
     * overwrite=false — create-no-overwrite is atomic on the local FS
@@ -178,6 +179,12 @@ object AtomicLayer {
     * so a heartbeat or commit landing between the listing and the
     * delete aborts the reclaim.
     *
+    * After its commit, `write` runs the same [[sweep]] as [[vacuum]],
+    * over every version number, including numbers above its own: a
+    * concurrent writer's claim exists before its directory and outlives
+    * it, so a bound on the version number would protect nothing that
+    * the claim does not already protect.
+    *
     * SAME-LEASE REQUIREMENT: every writer AND every [[vacuum]] touching
     * one table root must use the same `claimLeaseMs`. The heartbeat
     * period is the OWNER's lease / 4, so a sweeper configured with a
@@ -197,9 +204,8 @@ object AtomicLayer {
     val spark = df.sparkSession
     val (fs, rootPath) = fsFor(spark, root)
     fs.mkdirs(rootPath)
-    val all = versionDirs(spark, root)
     val next = claimVersion(fs, rootPath,
-      all.map(_._1).maxOption.getOrElse(-1) + 1)
+      versionDirs(fs, rootPath).map(_._1).maxOption.getOrElse(-1) + 1)
     val dir = s"$root/v$next"
     val claimPath = new Path(rootPath, s"v$next.claim")
     val heartbeat = startHeartbeat(fs, claimPath, claimLeaseMs)
@@ -208,75 +214,9 @@ object AtomicLayer {
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir)
     } finally heartbeat.interrupt()
     fs.delete(claimPath, false)
-    // prune: committed versions beyond the retention window, any
-    // uncommitted debris older than the new snapshot (crashed writes),
-    // and orphaned claim files whose directory is COMMITTED (the owner
-    // definitely finished writing; it crashed between its commit and
-    // its own claim delete). Claims whose dir is absent or still
-    // uncommitted may belong to an in-flight writer and must never be
-    // swept: unseating one would let a later writer re-claim the number
-    // and interleave files — the exact race the claim protocol exists
-    // to prevent.
-    val after = versionDirs(spark, root)
-    val staleCommitted = after.filter(_._3).dropRight(keepVersions)
-    // an uncommitted dir WITH a live claim may be a concurrent writer
-    // mid-job (its committer hasn't placed _SUCCESS yet) — only sweep
-    // uncommitted dirs whose claim is gone (genuinely crashed/legacy)
-    val crashed = after.filter { case (v, _, committed) =>
-      !committed && v < next &&
-        !fs.exists(new Path(rootPath, s"v$v.claim"))
-    }
-    staleCommitted.foreach { case (_, p, _) => fs.delete(p, true) }
-    // second fence (same as the lease path): the `committed` flag above
-    // is a stale listing — a concurrent writer may have committed and
-    // dropped its claim between the listing and here. Re-check _SUCCESS
-    // immediately before the recursive delete so a freshly committed
-    // snapshot is never destroyed.
-    crashed.foreach { case (_, p, _) =>
-      if (!fs.exists(new Path(p, "_SUCCESS"))) fs.delete(p, true): Unit
-    }
-    fs.listStatus(rootPath).toSeq
-      .filter(st => !st.isDirectory)
-      .foreach { st =>
-        st.getPath.getName match {
-          case StaleClaim(n) if n.toInt < next =>
-            val vDir = new Path(rootPath, s"v$n")
-            if (fs.exists(new Path(vDir, "_SUCCESS")))
-              // owner definitely finished (crashed between its commit
-              // and its own claim delete) — the claim is pure debris
-              fs.delete(st.getPath, false)
-            else if (System.currentTimeMillis() - st.getModificationTime > claimLeaseMs) {
-              // LEASE EXPIRY: claim older than the lease with no commit
-              // — the claimant is presumed dead; reclaim its number.
-              // Dir first, claim second: after the dir delete the claim
-              // still blocks re-claimants, and only once the claim is
-              // gone can a later writer take the number against an
-              // empty dir — never interleaving with stale task files.
-              // (A crash between the two deletes leaves just the claim,
-              // which the next write's sweep retries.)
-              // SECOND FENCE: re-read the claim's mtime and re-check
-              // _SUCCESS right before the recursive delete — the owner
-              // may have heartbeated or committed since listStatus
-              // snapshotted its age; either aborts the reclaim. (The
-              // listing's mtime can be minutes stale under a long
-              // sweep; a heartbeating live writer always looks fresh
-              // here.)
-              val stillExpired =
-                try System.currentTimeMillis() -
-                  fs.getFileStatus(st.getPath).getModificationTime > claimLeaseMs
-                catch { case _: java.io.FileNotFoundException => false }
-              if (stillExpired && !fs.exists(new Path(vDir, "_SUCCESS"))) {
-                if (fs.exists(vDir)) fs.delete(vDir, true)
-                fs.delete(st.getPath, false)
-              }
-            }
-          case _ => ()
-        }
-      }
+    sweep(fs, rootPath, keepVersions, claimLeaseMs): Unit
     dir
   }
-
-  private val StaleClaim = "v(\\d+)\\.claim".r
 
   final case class VacuumStats(
       prunedCommitted: Int,
@@ -284,25 +224,13 @@ object AtomicLayer {
       sweptClaims: Int,
   )
 
-  /** Standalone maintenance GC (the protocol's VACUUM): prunes committed
-    * snapshots beyond `keepVersions`, sweeps crashed writers' debris —
-    * uncommitted version dirs with no claim (a live writer's claim
-    * always outlives its dir, so claimless uncommitted dirs are
-    * ownerless at ANY version number — with `_SUCCESS` re-checked
-    * immediately before the recursive delete, because the listing's
-    * committed flag is stale and the owner may have committed since),
-    * committed dirs' leftover claims
-    * (the owner provably finished), and lease-expired claims together
-    * with their uncommitted dirs (same second fence as [[write]]'s
-    * sweep: the claim's mtime is re-read and `_SUCCESS` re-checked
-    * immediately before the recursive delete, so heartbeating live
-    * writers are never unseated). [[write]] runs the same hygiene
-    * incrementally on every commit; vacuum is for read-mostly tables
-    * and scheduled maintenance, like Delta's VACUUM scaled down to the
-    * commit-marker protocol. Returns what was swept. `claimLeaseMs`
-    * must equal the writers' (see [[write]]'s SAME-LEASE REQUIREMENT):
-    * a vacuum run with a smaller lease than the writers' heartbeat
-    * period would reclaim live claims.
+  /** Standalone maintenance GC (the protocol's VACUUM), the same
+    * [[sweep]] that [[write]] runs after every commit. It is for
+    * read-mostly tables and scheduled maintenance, like Delta's VACUUM
+    * scaled down to the commit-marker protocol. Returns what was swept.
+    * `claimLeaseMs` must equal the writers' (see [[write]]'s SAME-LEASE
+    * REQUIREMENT): a vacuum run with a smaller lease than the writers'
+    * heartbeat period would reclaim live claims.
     */
   def vacuum(
       spark: SparkSession,
@@ -312,21 +240,55 @@ object AtomicLayer {
   ): VacuumStats = {
     require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
     val (fs, rootPath) = fsFor(spark, root)
-    if (!fs.exists(rootPath)) return VacuumStats(0, 0, 0)
-    val all = versionDirs(spark, root)
+    if (!fs.exists(rootPath)) VacuumStats(0, 0, 0)
+    else sweep(fs, rootPath, keepVersions, claimLeaseMs)
+  }
+
+  /** The protocol's one set of GC rules, for [[write]] and [[vacuum]]:
+    *   - committed snapshots beyond the newest `keepVersions` are pruned;
+    *   - an uncommitted version dir with no claim is a crashed writer's
+    *     debris, at ANY version number: a live writer's claim exists
+    *     before its dir and outlives it (it is deleted only after
+    *     `_SUCCESS`), so a claimless uncommitted dir has no owner;
+    *   - a claim whose dir is committed is debris (its owner crashed
+    *     between its commit and its own claim delete);
+    *   - a claim older than `claimLeaseMs` with no commit is presumed
+    *     dead (LEASE EXPIRY), and its uncommitted dir goes with it. Dir
+    *     first, claim second: after the dir delete the claim still
+    *     blocks re-claimants, so a later writer can only take the number
+    *     against an empty dir. (A crash between the two deletes leaves
+    *     just the claim, which the next sweep retries.)
+    * Claims whose dir is absent or uncommitted within the lease may
+    * belong to an in-flight writer and are never swept: unseating one
+    * would let a later writer re-claim the number and interleave files,
+    * the exact race the claim protocol exists to prevent.
+    *
+    * SECOND FENCE: the listing is stale by the time each delete runs, so
+    * `_SUCCESS` is re-checked immediately before every recursive delete,
+    * and on the lease path the claim's mtime is read from the file then,
+    * never taken from the listing. A commit or a heartbeat landing after
+    * the listing aborts that delete.
+    */
+  private def sweep(
+      fs: FileSystem,
+      rootPath: Path,
+      keepVersions: Int,
+      claimLeaseMs: Long,
+  ): VacuumStats = {
+    def committed(dir: Path) = fs.exists(new Path(dir, "_SUCCESS"))
+    def expired(claim: Path) =
+      try System.currentTimeMillis() -
+        fs.getFileStatus(claim).getModificationTime > claimLeaseMs
+      catch { case _: java.io.FileNotFoundException => false }
+    val all = versionDirs(fs, rootPath)
     var (pruned, sweptDirs, sweptClaims) = (0, 0, 0)
     all.filter(_._3).dropRight(keepVersions).foreach { case (_, p, _) =>
       fs.delete(p, true); pruned += 1
     }
-    all.filter { case (v, _, committed) =>
-      !committed && !fs.exists(new Path(rootPath, s"v$v.claim"))
+    all.filter { case (v, _, isCommitted) =>
+      !isCommitted && !fs.exists(new Path(rootPath, s"v$v.claim"))
     }.foreach { case (_, p, _) =>
-      // second fence: the listing's committed flag is stale — the owner
-      // may have committed (and dropped its claim) since. Re-check
-      // _SUCCESS immediately before the recursive delete.
-      if (!fs.exists(new Path(p, "_SUCCESS"))) {
-        fs.delete(p, true); sweptDirs += 1
-      }
+      if (!committed(p)) { fs.delete(p, true); sweptDirs += 1 }
     }
     fs.listStatus(rootPath).toSeq
       .filter(st => !st.isDirectory)
@@ -334,17 +296,11 @@ object AtomicLayer {
         st.getPath.getName match {
           case StaleClaim(n) =>
             val vDir = new Path(rootPath, s"v$n")
-            if (fs.exists(new Path(vDir, "_SUCCESS"))) {
+            if (committed(vDir)) {
               fs.delete(st.getPath, false); sweptClaims += 1
-            } else if (System.currentTimeMillis() - st.getModificationTime > claimLeaseMs) {
-              val stillExpired =
-                try System.currentTimeMillis() -
-                  fs.getFileStatus(st.getPath).getModificationTime > claimLeaseMs
-                catch { case _: java.io.FileNotFoundException => false }
-              if (stillExpired && !fs.exists(new Path(vDir, "_SUCCESS"))) {
-                if (fs.exists(vDir)) { fs.delete(vDir, true); sweptDirs += 1 }
-                fs.delete(st.getPath, false); sweptClaims += 1
-              }
+            } else if (expired(st.getPath) && !committed(vDir)) {
+              if (fs.exists(vDir)) { fs.delete(vDir, true); sweptDirs += 1 }
+              fs.delete(st.getPath, false); sweptClaims += 1
             }
           case _ => ()
         }
@@ -359,27 +315,35 @@ object AtomicLayer {
   def read(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(latestCommitted(spark, root).getOrElse(root))
 
-  /** [[read]] with the table's schema already known — typically the
-    * schema of the DataFrame just written to `root`. Parquet then runs
-    * no schema-inference job and the columns keep the writer's order and
-    * types.
-    */
-  def read(spark: SparkSession, root: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(latestCommitted(spark, root).getOrElse(root))
-
   /** Highest `_merged_batch_id` folded into the committed snapshot at
     * `root`, or -1 when no snapshot exists or it is empty (an empty
-    * first micro-batch commits a 0-row snapshot whose max is NULL) —
-    * THE foreachBatch retry guard shared by every streaming merge: a
-    * batch at-or-below this value must be a no-op. One definition, so
-    * a guard fix can never be applied to three of four copies.
+    * first micro-batch commits a 0-row snapshot whose max is NULL): a
+    * batch at or below this value has already been merged.
     */
   def lastMergedBatch(spark: SparkSession, root: String): Long =
-    if (latestCommitted(spark, root).isEmpty) -1L
+    latestCommitted(spark, root).fold(-1L)(dir => maxMergedBatch(spark.read.parquet(dir)))
+
+  private def maxMergedBatch(snapshot: DataFrame): Long = {
+    val row = snapshot.agg(max(col("_merged_batch_id"))).head()
+    if (row.isNullAt(0)) -1L else row.getLong(0)
+  }
+
+  /** THE foreachBatch retry guard shared by every streaming merge, so a
+    * guard fix can never be applied to three of four copies. Resolves
+    * the committed snapshot at `root` once; when its `_merged_batch_id`
+    * is at or above `batchId` the batch is a retry and nothing is
+    * written (false). Otherwise `fold` gets the snapshot without its tag
+    * column (None before the first commit), and its result is committed
+    * tagged with `batchId`, keeping one version (true).
+    */
+  def mergeBatch(spark: SparkSession, root: String, batchId: Long)(
+      fold: Option[DataFrame] => DataFrame): Boolean = {
+    val snapshot = latestCommitted(spark, root).map(spark.read.parquet(_))
+    if (snapshot.exists(maxMergedBatch(_) >= batchId)) false
     else {
-      val row = read(spark, root)
-        .agg(org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.col("_merged_batch_id"))).head
-      if (row.isNullAt(0)) -1L else row.getLong(0)
+      write(fold(snapshot.map(_.drop("_merged_batch_id")))
+        .withColumn("_merged_batch_id", lit(batchId)), root, keepVersions = 1)
+      true
     }
+  }
 }

@@ -14,8 +14,14 @@ import scala.jdk.CollectionConverters._
   * Reference: `src/ingestion/power_ingestion.py:31-79` and
   * `src/ingestion/price_ingestion.py:31-78`, two near-identical modules
   * that differ only in key column, key value and API call. Here both are
-  * one [[ingest]]: the caller fetches each day's payload on the driver,
-  * then one write commits the table.
+  * one [[bronzeDf]]: the caller fetches each day's payload on the driver,
+  * then one snapshot-versioned write ([[AtomicLayer]]) commits the table,
+  * so a reader during the overwrite sees the previous complete snapshot,
+  * never a torn table.
+  *
+  * Layout: one plain write, one file per write task, one row per
+  * (key, day). `date` stays a STRING data column (FIXTURES.md A3), and a
+  * date-ranged read pushes its range into the Parquet scan.
   */
 object Bronze {
 
@@ -49,32 +55,5 @@ object Bronze {
       .createDataFrame(rows.asJava, schema(keyCol))
       .withColumn("ingested_at", current_timestamp())
       .withColumn("source", lit(Source))
-  }
-
-  /** What a Bronze ingest committed: the rows written and the table's
-    * schema, so the next stage opens the snapshot without inferring it.
-    */
-  final case class Ingested(rows: Long, schema: StructType)
-
-  /** Write the bronze table of `payloads`, one (day, payload) per backfill
-    * day, keyed by `keyCol = key` (0 rows → no write, like the
-    * reference's empty-ingest early-return, `power_ingestion.py:47-49`).
-    *
-    * One plain write, one file per write task: `date` stays a STRING data
-    * column (FIXTURES.md A3), and a date-ranged read pushes its range into
-    * the Parquet scan. The write is snapshot-versioned ([[AtomicLayer]]):
-    * a reader during the overwrite sees the previous complete snapshot,
-    * never a torn table.
-    */
-  def ingest(
-      spark: SparkSession,
-      keyCol: String,
-      key: String,
-      payloads: Seq[(LocalDate, String)],
-      outPath: String,
-  ): Ingested = {
-    val df = bronzeDf(spark, keyCol, key, payloads)
-    if (payloads.nonEmpty) AtomicLayer.write(df, outPath)
-    Ingested(payloads.size.toLong, df.schema)
   }
 }

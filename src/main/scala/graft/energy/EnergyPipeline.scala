@@ -72,12 +72,11 @@ object EnergyPipeline {
         goldTable: String,
         toGold: DataFrame => DataFrame,
     ): Chain = {
-      val bronzePath = cfg.storage.bronze(table)
-      val bronze = Bronze.ingest(spark, keyCol, key, payloads, bronzePath)
-      val (silver, silverRows) = commitCounted(
-        toSilver(AtomicLayer.read(spark, bronzePath, bronze.schema)),
-        cfg.storage.silver(table))
-      Chain(bronze.rows, silverRows, commit(toGold(silver), cfg.storage.gold(goldTable)))
+      val bronze = commit(Bronze.bronzeDf(spark, keyCol, key, payloads),
+        cfg.storage.bronze(table))
+      val (silver, silverRows) = commitCounted(toSilver(bronze), cfg.storage.silver(table))
+      Chain(payloads.size.toLong, silverRows,
+        commit(toGold(silver), cfg.storage.gold(goldTable)))
     }
     val (power, price) = concurrently(
       chain("power", "country", country, powerPayloads,
@@ -122,12 +121,11 @@ object EnergyPipeline {
   }
 
   /** Write `df` as the next snapshot of the table at `root` and open the
-    * committed snapshot with `df`'s schema.
+    * directory that write committed, with `df`'s schema: no listing of
+    * the root and no schema-inference job.
     */
-  private def commit(df: DataFrame, root: String): DataFrame = {
-    AtomicLayer.write(df, root)
-    AtomicLayer.read(df.sparkSession, root, df.schema)
-  }
+  private def commit(df: DataFrame, root: String): DataFrame =
+    df.sparkSession.read.schema(df.schema).parquet(AtomicLayer.write(df, root))
 
   /** [[commit]], plus the number of rows the write produced, counted by
     * an observation on the write itself.

@@ -14,8 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The rewrite is a plain repartition-and-write — no shuffle key, so rows
   * round-robin into equal-size outputs. Production systems compact per
   * partition directory (bounding each rewrite) and swap atomically via
-  * their table format's commit; here the caller supplies a fresh target
-  * directory and flips readers over, mirroring UpsertSink's versioning.
+  * their table format's commit. `compact` makes no commit: the caller
+  * supplies a fresh target directory, and switching readers to it is the
+  * caller's job.
   */
 object Compaction {
 

@@ -135,42 +135,30 @@ object DocsStream {
     */
   private[graft] def mergeTermCounts(spark: SparkSession, root: String,
       batch: DataFrame, batchId: Long): Boolean = {
-    import graft.energy.AtomicLayer
-    val exists = AtomicLayer.latestCommitted(spark, root).isDefined
-    if (AtomicLayer.lastMergedBatch(spark, root) >= batchId) false
-    else {
+    graft.energy.AtomicLayer.mergeBatch(spark, root, batchId) { state =>
       val counts = batch
         .select(col("source"),
           explode(graft.operators.TextAnalysis.words(col("text"))).as("term"))
         .where(col("term") =!= "")
         .groupBy("source", "term").agg(count(lit(1)).as("cs"))
-      val merged =
-        if (exists)
-          AtomicLayer.read(spark, root).drop("_merged_batch_id")
-            .unionByName(counts)
-            .groupBy("source", "term")
-            .agg(sum(col("cs")).as("cs"))
-        else counts
-      AtomicLayer.write(merged.withColumn("_merged_batch_id", lit(batchId)),
-        root, keepVersions = 1)
-      true
+      state.fold(counts)(_.unionByName(counts)
+        .groupBy("source", "term")
+        .agg(sum(col("cs")).as("cs")))
     }
   }
 
   /** One micro-batch's census merge, IDEMPOTENT under foreachBatch's
-    * at-least-once retry contract: the committed snapshot carries the
-    * highest batchId already folded in (`_merged_batch_id`, constant
-    * across rows), and a batch at-or-below it is a no-op — a retried
-    * micro-batch must not double-count. The guard read is a 1-row
-    * aggregate of the (per-source, bounded) census, not a data scan.
-    * Returns true when the batch was merged, false when skipped.
+    * at-least-once retry contract through `AtomicLayer.mergeBatch`: the
+    * committed snapshot carries the highest batchId already folded in
+    * (`_merged_batch_id`, constant across rows), and a batch at-or-below
+    * it is a no-op — a retried micro-batch must not double-count. The
+    * guard read is a 1-row aggregate of the (per-source, bounded)
+    * census, not a data scan. Returns true when the batch was merged,
+    * false when skipped.
     */
   private[graft] def mergeCensus(spark: SparkSession, root: String,
       batch: DataFrame, batchId: Long): Boolean = {
-    import graft.energy.AtomicLayer
-    val exists = AtomicLayer.latestCommitted(spark, root).isDefined
-    if (AtomicLayer.lastMergedBatch(spark, root) >= batchId) false
-    else {
+    graft.energy.AtomicLayer.mergeBatch(spark, root, batchId) { state =>
       // Parallelism restore FIRST (r11 st24 profile): a micro-batch read
       // from one small parquet file is ONE split, so the compute-heavy
       // interpreted gopher folds would run on a single core inside
@@ -194,18 +182,11 @@ object DocsStream {
           expr("count_if(gopher_pass)").as("n_pass"),
           sum(when(col("gopher_pass"), col("n_words")).otherwise(0L))
             .as("pass_words"))
-      val merged =
-        if (exists)
-          AtomicLayer.read(spark, root).drop("_merged_batch_id")
-            .unionByName(census)
-            .groupBy("source")
-            .agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("n_pass")).as("n_pass"),
-              sum(col("pass_words")).as("pass_words"))
-        else census
-      AtomicLayer.write(merged.withColumn("_merged_batch_id", lit(batchId)),
-        root, keepVersions = 1)
-      true
+      state.fold(census)(_.unionByName(census)
+        .groupBy("source")
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("n_pass")).as("n_pass"),
+          sum(col("pass_words")).as("pass_words")))
     }
   }
 }

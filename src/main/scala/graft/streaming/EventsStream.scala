@@ -469,8 +469,8 @@ object EventsStream {
   }
 
   /** One micro-batch's SCD-2 merge, idempotent under foreachBatch's
-    * at-least-once retries (same `_merged_batch_id` guard as
-    * `DocsStream.mergeCensus`). The merge is RECOMPUTE-PER-AFFECTED-KEY:
+    * at-least-once retries (the `_merged_batch_id` guard of
+    * `AtomicLayer.mergeBatch`). The merge is RECOMPUTE-PER-AFFECTED-KEY:
     * untouched users' version rows pass through verbatim; for users in
     * the batch, the existing versions are replayed back to their change
     * events (each version row carries event_id, value, effective_from),
@@ -485,17 +485,13 @@ object EventsStream {
     */
   private[graft] def mergeScd2(spark: SparkSession, root: String,
       batch: DataFrame, batchId: Long): Boolean = {
-    import graft.energy.AtomicLayer
-    val exists = AtomicLayer.latestCommitted(spark, root).isDefined
-    if (AtomicLayer.lastMergedBatch(spark, root) >= batchId) false
-    else {
+    graft.energy.AtomicLayer.mergeBatch(spark, root, batchId) { state =>
       val events = batch
         .select(col("user_id"), col("event_id"), col("ts_sec"), col("value"))
       val dimCols = Seq("user_id", "version", "event_id", "value",
         "effective_from", "effective_to", "is_current")
-      val rebuiltAll =
-        if (exists) {
-          val dim = AtomicLayer.read(spark, root).drop("_merged_batch_id")
+      state match {
+        case Some(dim) =>
           val affected = events.select("user_id").distinct()
           val keep = dim.join(affected, Seq("user_id"), "left_anti")
           val replayed = dim.join(affected, Seq("user_id"), "left_semi")
@@ -514,15 +510,12 @@ object EventsStream {
             col("user_id"), col("ts_sec"), col("event_id"))
             .select(dimCols.map(col): _*)
           keep.select(dimCols.map(col): _*).unionByName(rebuilt)
-        } else
+        case None =>
           graft.operators.Scd2.buildHistory(
             events.dropDuplicates("event_id"),
             col("user_id"), col("ts_sec"), col("event_id"))
             .select(dimCols.map(col): _*)
-      AtomicLayer.write(
-        rebuiltAll.withColumn("_merged_batch_id", lit(batchId)),
-        root, keepVersions = 1)
-      true
+      }
     }
   }
 
@@ -559,10 +552,7 @@ object EventsStream {
     */
   private[graft] def mergeSketch(spark: SparkSession, root: String,
       batch: DataFrame, batchId: Long): Boolean = {
-    import graft.energy.AtomicLayer
-    val exists = AtomicLayer.latestCommitted(spark, root).isDefined
-    if (AtomicLayer.lastMergedBatch(spark, root) >= batchId) false
-    else {
+    graft.energy.AtomicLayer.mergeBatch(spark, root, batchId) { state =>
       val b = batch.select(
           floor(col("value") * 100).cast("long").as("cents"),
           graft.operators.Dedup.portableHash60(
@@ -573,16 +563,9 @@ object EventsStream {
       // redelivered batch re-inserts rows already in the state and the
       // duplicates crowd genuinely distinct elements out of the 256
       // (the idempotence the spec's forced re-merge pins).
-      val merged =
-        if (exists)
-          AtomicLayer.read(spark, root).drop("_merged_batch_id")
-            .unionByName(b)
-            .dropDuplicates("h", "cents")
-            .orderBy(col("h"), col("cents")).limit(256)
-        else b
-      AtomicLayer.write(merged.withColumn("_merged_batch_id", lit(batchId)),
-        root, keepVersions = 1)
-      true
+      state.fold(b)(_.unionByName(b)
+        .dropDuplicates("h", "cents")
+        .orderBy(col("h"), col("cents")).limit(256))
     }
   }
 }

@@ -64,4 +64,51 @@ class AtomicLayerConcurrencySpec extends SparkSpec {
     assert(latest.endsWith(after.stripPrefix("file:")),
       s"$latest is not the new write $after")
   }
+
+  test("a reader running alongside concurrent writers only opens whole snapshots") {
+    val root = graft.tools.Scratch.dir("alc_read").toString + "/t"
+    val writers = 4
+    val rounds = 3
+    val rowsPer = 50
+    // several files per snapshot, so a reader that opened a half-committed
+    // directory would see part of one writer's rows
+    def snapshot(w: Long) =
+      (0 until rowsPer).map(i => (w, i.toLong)).toDF("writer", "i").repartition(4)
+    // retention above every write this test makes, so no snapshot is
+    // pruned while the reader has it open
+    val keep = writers * rounds + 2
+    AtomicLayer.write(snapshot(-1L), root, keepVersions = keep)
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // one thread per writer plus the reader, so every party runs at once
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers + 1)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reader = Future {
+      var seen = Vector.empty[Array[Long]]
+      while (!done.get) {
+        // one scan per snapshot: a shuffle would queue each read behind
+        // the writers' jobs and leave few reads inside the write window
+        seen :+= AtomicLayer.read(spark, root).select("writer").as[Long].collect()
+      }
+      seen
+    }
+    val writes = Future.sequence((0 until writers).map { w =>
+      Future((0 until rounds).foreach { _ =>
+        AtomicLayer.write(snapshot(w.toLong), root, keepVersions = keep)
+      })
+    })
+    val seen =
+      try {
+        try Await.result(writes, 5.minutes) finally done.set(true)
+        Await.result(reader, 5.minutes)
+      } finally pool.shutdown()
+
+    info(s"the reader opened ${seen.size} snapshots")
+    assert(seen.nonEmpty)
+    for (ws <- seen)
+      assert(ws.distinct.length == 1 && ws.length == rowsPer,
+        s"torn snapshot: writers ${ws.distinct.mkString(",")}, ${ws.length} rows")
+    assert(AtomicLayer.committedVersions(spark, root).size == writers * rounds + 1)
+  }
 }

@@ -2,6 +2,7 @@ package graft.energy
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** AtomicLayer: snapshot-versioned Parquet overwrite with a commit
   * marker — readers see only complete snapshots, crashed writes are
@@ -121,37 +122,63 @@ class AtomicLayerSpec extends SparkSpec {
   }
 
   test("vacuum sweeps crashed-writer debris, never live claims or retained snapshots") {
-    val root = tmpTable()
-    AtomicLayer.write(df(1), root) // v0
-    AtomicLayer.write(df(2), root) // v1 (current)
-    // debris: v2 = crashed mid-write (dir + claim, will lease-expire);
-    // v1.claim = crashed between commit and claim delete; v3 = claimless
-    Files.createDirectories(Paths.get(root, "v2"))
-    Files.createFile(Paths.get(root, "v2", "part-00000.parquet"))
-    Files.createFile(Paths.get(root, "v2.claim"))
-    Files.createFile(Paths.get(root, "v1.claim"))
-    Files.createDirectories(Paths.get(root, "v3"))
-    Files.createFile(Paths.get(root, "v3", "part-00000.parquet"))
-    Thread.sleep(300) // expire v2.claim under the 200 ms lease
-    // LIVE concurrent writer: fresh claim + in-progress dir
-    Files.createFile(Paths.get(root, "v4.claim"))
-    Files.createDirectories(Paths.get(root, "v4"))
-    Files.createFile(Paths.get(root, "v4", "part-00000.parquet"))
+    // One fixture through both entry points of the one sweep: `vacuum`,
+    // and `write`'s post-commit sweep (which also commits v5 past the
+    // live writer's v4). The same debris must go and the same files stay.
+    val lease = 60L * 1000
+    def fixture(): String = {
+      val root = tmpTable()
+      AtomicLayer.write(df(1), root) // v0
+      AtomicLayer.write(df(2), root) // v1 (current)
+      // debris: v2 = crashed mid-write (dir + claim, lease expired);
+      // v1.claim = crashed between commit and claim delete; v3 = claimless
+      Files.createDirectories(Paths.get(root, "v2"))
+      Files.createFile(Paths.get(root, "v2", "part-00000.parquet"))
+      val expired = Files.createFile(Paths.get(root, "v2.claim"))
+      Files.setLastModifiedTime(expired, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - 2 * lease))
+      Files.createFile(Paths.get(root, "v1.claim"))
+      Files.createDirectories(Paths.get(root, "v3"))
+      Files.createFile(Paths.get(root, "v3", "part-00000.parquet"))
+      // LIVE concurrent writer: fresh claim + in-progress dir
+      Files.createFile(Paths.get(root, "v4.claim"))
+      Files.createDirectories(Paths.get(root, "v4"))
+      Files.createFile(Paths.get(root, "v4", "part-00000.parquet"))
+      root
+    }
+    def assertSwept(root: String, expected: Int): Unit = {
+      for (gone <- Seq("v0", "v2", "v2.claim", "v1.claim", "v3"))
+        assert(!Files.exists(Paths.get(root, gone)), s"$gone survived the sweep")
+      assert(Files.exists(Paths.get(root, "v4.claim")), "live claim survives")
+      assert(Files.exists(Paths.get(root, "v4", "part-00000.parquet")),
+        "live writer's in-progress dir survives")
+      assert(AtomicLayer.read(spark, root).as[Int].collect() === Array(expected))
+    }
 
-    val stats = AtomicLayer.vacuum(spark, root,
-      keepVersions = 1, claimLeaseMs = 200L)
+    val vacuumed = fixture()
+    val stats = AtomicLayer.vacuum(spark, vacuumed,
+      keepVersions = 1, claimLeaseMs = lease)
     assert(stats.prunedCommitted === 1, "v0 beyond retention")
     assert(stats.sweptUncommittedDirs === 2, "v2 (expired) + v3 (claimless)")
     assert(stats.sweptClaims === 2, "v1.claim (committed) + v2.claim (expired)")
-    assert(!Files.exists(Paths.get(root, "v0")))
-    assert(!Files.exists(Paths.get(root, "v2")))
-    assert(!Files.exists(Paths.get(root, "v2.claim")))
-    assert(!Files.exists(Paths.get(root, "v1.claim")))
-    assert(!Files.exists(Paths.get(root, "v3")))
-    assert(Files.exists(Paths.get(root, "v4.claim")), "live claim survives")
-    assert(Files.exists(Paths.get(root, "v4", "part-00000.parquet")),
-      "live writer's in-progress dir survives")
-    assert(AtomicLayer.read(spark, root).as[Int].collect() === Array(2))
+    assertSwept(vacuumed, 2)
+
+    val written = fixture()
+    assert(AtomicLayer.write(df(3), written, keepVersions = 2, claimLeaseMs = lease)
+      .endsWith("/v5"))
+    assertSwept(written, 3)
+    assert(Files.exists(Paths.get(written, "v1", "_SUCCESS")), "v1 is retained")
+  }
+
+  test("only AtomicLayer writes the _merged_batch_id column") {
+    val tagWrite = "withColumn(\"_merged_batch_id\""
+    val writers = Files.walk(Paths.get("src", "main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains(tagWrite))
+      .map(_.getFileName.toString).toList
+    // the scan must see the one legitimate site, or it proves nothing
+    assert(writers == List("AtomicLayer.scala"),
+      s"_merged_batch_id written outside AtomicLayer.mergeBatch: $writers")
   }
 
   test("read falls back to a plain (pre-atomic) parquet layout") {
