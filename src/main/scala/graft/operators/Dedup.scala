@@ -125,6 +125,37 @@ object Dedup {
   def portableHash60(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast(LongType)
 
+  /** Count-Min sketch of `keyCol`'s frequencies over the portable hash
+    * family: `depth` rows of `width` cells, row r hashing key k to cell
+    * `portableHash60("r:k") % width`. Returns (`keyCol`, `n` = true
+    * count, `est` = min over rows of the key's cell count); `est >= n`
+    * always. The hashes are md5, so DuckDB rebuilds the identical cell
+    * table and every estimate is oracle-checkable.
+    *
+    * One pass hashes each row `depth` times and reduces to per-(key,
+    * row, cell) counts; the sketch, the estimates and the true counts
+    * all derive from that one small aggregate (hashing the input twice
+    * would dominate the cost). The cell table is what stays mergeable
+    * across partitions and days where exact per-key counts are not.
+    * NULL keys hash to no cell and are absent from the result.
+    */
+  def countMin(df: DataFrame, keyCol: String, depth: Int, width: Int): DataFrame = {
+    val perKeyCell = df
+      .select(col(keyCol), explode(sequence(lit(0), lit(depth - 1))).as("__r"))
+      .select(col(keyCol), col("__r"),
+        (portableHash60(concat(col("__r"), lit(":"), col(keyCol))) % width)
+          .as("__cell"))
+      .groupBy(keyCol, "__r", "__cell").agg(count(lit(1)).as("__c"))
+      .localCheckpoint(eager = true)
+    val sketch = perKeyCell.groupBy("__r", "__cell").agg(sum(col("__c")).as("__cnt"))
+    val est = perKeyCell.select(col(keyCol), col("__r"), col("__cell"))
+      .join(sketch, Seq("__r", "__cell"))
+      .groupBy(keyCol).agg(min(col("__cnt")).as("est"))
+    perKeyCell.where(col("__r") === 0)
+      .select(col(keyCol), col("__c").as("n"))
+      .join(est, Seq(keyCol))
+  }
+
   /** Modulus of the portable slot family: the Mersenne prime 2^31-1.
     * Small enough that multiplier·hash products stay under 2^62 (exact
     * in 64-bit integers on any engine), large enough that per-slot min
@@ -467,18 +498,15 @@ object Dedup {
     connectedComponents(docs.select(col("doc_id").as("id")), edges)
       .withColumn("is_kept", (col("doc_id") === col("cluster_id")).cast(IntegerType))
 
-  /** Cluster assignment for the oracle-checkable consecutive-pair graph:
-    * documents whose bigram Jaccard with their successor clears
-    * `minJaccard` form chain edges; components collapse the chains.
-    * Output adds `is_kept` — the canonical keep-lowest-id decision.
+  /** Consecutive-pair bigram overlap — the oracle-checkable chain graph
+    * shared by d4 (reports it), and d6 pointer jumping / r1 recursive
+    * CTE (threshold it via [[consecutiveBigramEdges]]): one row per
+    * (doc_a, doc_b = doc_a + 1) where both have ≥ 2 words, with
+    * `n_shared` / `n_union` = sizes of the intersection / union of the
+    * two distinct-bigram sets. One definition, so a tokenization change
+    * can never desynchronize the queries.
     */
-  /** Consecutive-pair bigram-Jaccard edges — the oracle-checkable chain
-    * graph shared by the clustering variants (d6 pointer jumping, r1
-    * recursive CTE): an edge (doc_id, doc_id+1) exists when the pair's
-    * bigram Jaccard clears `minJaccard`. One definition, so a threshold
-    * or tokenization change can never desynchronize the two algorithms.
-    */
-  def consecutiveBigramEdges(docs: DataFrame, minJaccard: Double): DataFrame = {
+  def consecutiveBigramPairs(docs: DataFrame): DataFrame = {
     val ws = TextAnalysis.words(col("text"))
     val bigrams = array_distinct(transform(
       sequence(lit(0), size(col("w")) - 2),
@@ -497,12 +525,24 @@ object Dedup {
     val a = side.select(col("doc_id").as("doc_a"), col("bg").as("bg_a"))
     val b = side.select(col("doc_id").as("doc_b"), col("bg").as("bg_b"))
     a.join(b, col("doc_b") === col("doc_a") + 1)
-      .where(
-        (size(array_intersect(col("bg_a"), col("bg_b"))).cast(DoubleType) /
-          size(array_union(col("bg_a"), col("bg_b")))) >= minJaccard)
-      .select(col("doc_a"), col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("bg_a"), col("bg_b"))).as("n_shared"),
+        size(array_union(col("bg_a"), col("bg_b"))).as("n_union"))
   }
 
+  /** Chain edges (doc_a, doc_b) of [[consecutiveBigramPairs]] whose
+    * bigram Jaccard clears `minJaccard`.
+    */
+  def consecutiveBigramEdges(docs: DataFrame, minJaccard: Double): DataFrame =
+    consecutiveBigramPairs(docs)
+      .where((col("n_shared").cast(DoubleType) / col("n_union")) >= minJaccard)
+      .select(col("doc_a"), col("doc_b"))
+
+  /** Cluster assignment for the oracle-checkable consecutive-pair graph:
+    * documents whose bigram Jaccard with their successor clears
+    * `minJaccard` form chain edges; components collapse the chains.
+    * Output adds `is_kept` — the canonical keep-lowest-id decision.
+    */
   def nearDupClusters(docs: DataFrame, minJaccard: Double = 0.5): DataFrame = {
     val edges = consecutiveBigramEdges(docs, minJaccard)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))

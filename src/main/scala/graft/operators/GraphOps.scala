@@ -259,14 +259,19 @@ object GraphOps {
     visited.select(col("v"), col("hops").cast("int").as("hops"))
   }
 
+  /** Distance [[boundedSssp]] reports for an unreached node. */
+  val SsspInf = 1000000000L
+
   /** Bounded-round Bellman-Ford over undirected weighted edges: `k`
     * synchronous relaxation rounds from `source` — after round k every
     * ≤k-hop shortest path is exact (the distributed SSSP schedule:
     * fixed rounds, two edge joins + one min-groupBy each, distances
     * localCheckpoint-pinned between rounds). Unreached nodes stay at
     * the INF sentinel. `nodes` = (v), `edges` = (doc_a, doc_b, w).
+    * Every edge endpoint must appear in `nodes`: distances are anchored
+    * on `nodes` by a left join, so an endpoint missing there is dropped
+    * silently, along with every path through it.
     */
-  val SsspInf = 1000000000L
   def boundedSssp(nodes: DataFrame, edges: DataFrame, k: Int,
       isSource: Column): DataFrame = {
     // Symmetrize once outside the loop — same halving of per-round
@@ -447,7 +452,10 @@ object GraphOps {
     * rounds), no convergence test, which is how LPA is actually
     * scheduled on a 100 TB graph. Labels are node ids, so each round
     * shuffles only (long, long) pairs. `nodes` = (v), `edges` =
-    * (doc_a, doc_b); returns (v, lab).
+    * (doc_a, doc_b); returns (v, lab). Every edge endpoint must appear
+    * in `nodes`: labels are anchored on `nodes` by a left join, so an
+    * endpoint missing there is dropped silently and no label
+    * propagates through it.
     */
   def minLabelRounds(nodes: DataFrame, edges: DataFrame, k: Int): DataFrame = {
     // Symmetrize ONCE outside the loop (optimization r15, guide §2.4):

@@ -75,6 +75,29 @@ object Packing {
       .drop("__pid", "__off", "__lcum", "__w")
   }
 
+  /** Within-group rank without a per-group window: adds `rn` (1-based
+    * position in `orderCols` order inside the row's `groupCol` group)
+    * and `n` (the group's size). `row_number() OVER (PARTITION BY
+    * group)` sorts each group on one task, so a low-cardinality group
+    * key caps the sort's parallelism at the number of groups. Here the
+    * global row number comes from [[prefixSum]] over (group,
+    * orderCols), minus the group's start offset: a window over the
+    * per-group count relation, whose size is the number of groups, not
+    * of rows. `orderCols` must make the order total within a group;
+    * rows with a NULL group are dropped.
+    */
+  def groupRank(df: DataFrame, groupCol: String, orderCols: Seq[Column]): DataFrame = {
+    val ranked = prefixSum(df, col(groupCol) +: orderCols, lit(1L), "__grn")
+    val wGroup = Window.orderBy(groupCol)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val bounds = df.groupBy(groupCol)
+      .agg(count(lit(1)).as("n"))
+      .withColumn("__start", sum(col("n")).over(wGroup) - col("n"))
+    ranked.join(broadcast(bounds), Seq(groupCol))
+      .withColumn("rn", col("__grn") - col("__start"))
+      .drop("__grn", "__start")
+  }
+
   /** Cumulative-offset packing: adds `binCol` =
     * `floor((prefixSum - weight) / targetPerBin)` — the bin each row
     * STARTS in when rows are laid out consecutively in `orderCols`

@@ -1390,33 +1390,6 @@ object Similarity {
     }
   }
 
-  /** Fold pending tombstones into the edge relation: drop every edge
-    * touching a dead node on EITHER endpoint, then RE-RANK each
-    * surviving node's neighbors — dropped dead neighbors would
-    * otherwise leave rank gaps that starve a degree-filtered serve
-    * below its intended out-degree. Ends with an empty tombstone
-    * snapshot; between compactions serving stays correct via the
-    * anti-join.
-    */
-  def compactGraphIndex(spark: SparkSession, root: String): Unit = {
-    val tombs = tombstonesOrEmpty(spark, root)
-    if (!tombs.isEmpty) {
-      val path = s"$root/edges.parquet"
-      val alive = AtomicLayer.read(spark, path)
-        .join(broadcast(tombs.select(col("c_vec").as("v"))), Seq("v"), "left_anti")
-        .join(broadcast(tombs.select(col("c_vec").as("nbr"))), Seq("nbr"), "left_anti")
-      val w = Window.partitionBy("v").orderBy(col("cosine").desc, col("nbr"))
-      AtomicLayer.write(
-        alive.select(col("v"), col("nbr"), col("cosine"))
-          .withColumn("rank", row_number().over(w))
-          .select(col("v"), col("rank"), col("nbr"), col("cosine")),
-        path, keepVersions = 1)
-      AtomicLayer.write(tombs.limit(0),
-        s"$root/tombstones.parquet", keepVersions = 1)
-      (): Unit
-    }
-  }
-
   /** OFFLINE RECONCILIATION of the persisted graph index (VERDICT r11
     * #2) — the repair half of [[streamInsertIntoGraphIndex]]'s
     * serving-insert vs. repair split: ONE synchronous NN-descent

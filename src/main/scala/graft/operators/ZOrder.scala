@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   *
   * Inputs are int "ranks" in [0, 2^bits): callers bucket raw values
   * first (e.g. epoch-seconds >> 16, or an id modulo) — rank resolution
-  * only affects skipping granularity, not correctness.
+  * only affects skipping granularity, not correctness. The registry's
+  * layout audits (`zord1_zorder_layout`, `skip1_skipping_stats`) build
+  * their Morton codes with [[zValue]] over 8-bit ranks.
   */
 object ZOrder {
 

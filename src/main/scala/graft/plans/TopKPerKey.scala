@@ -143,16 +143,6 @@ case class TopKPerKeyExec(
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerKeyExec =
     copy(child = newChild)
 
-  /** A group's bounded heap plus (when deduping) the set of dedup keys
-    * currently held in it — membership is an O(1) byte-equality probe.
-    */
-  private final class Group(ordering: BaseOrdering, withDedup: Boolean) {
-    val heap: scala.collection.mutable.PriorityQueue[InternalRow] =
-      scala.collection.mutable.PriorityQueue.empty[InternalRow](ordering)
-    val held: java.util.HashSet[UnsafeRow] =
-      if (withDedup) new java.util.HashSet[UnsafeRow]() else null
-  }
-
   protected override def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val keyExprs = keys
@@ -174,13 +164,13 @@ case class TopKPerKeyExec(
       // (the contract requires such rows to be identical, see
       // [[TopKPerKey.topKPerKey]]); evictions release their key, so a
       // re-arriving duplicate of an evicted row competes normally.
-      val heaps = new java.util.HashMap[UnsafeRow, Group]()
+      val heaps = new java.util.HashMap[UnsafeRow, TopKPerKeyExec.Group]()
       while (iter.hasNext) {
         val row = iter.next()
         val key = keyProj(row)
         var group = heaps.get(key)
         if (group == null) {
-          group = new Group(ordering, dedupProj != null)
+          group = new TopKPerKeyExec.Group(ordering, dedupProj != null)
           heaps.put(key.copy(), group)
         }
         val heap = group.heap
@@ -225,5 +215,21 @@ case class TopKPerKeyExec(
         }
       }
     }, preservesPartitioning = true)
+  }
+}
+
+object TopKPerKeyExec {
+
+  /** A group's bounded heap plus (when deduping) the set of dedup keys
+    * currently held in it — membership is an O(1) byte-equality probe.
+    * Lives in the companion, not the exec: an inner class would capture
+    * the exec (and with it the physical subtree) in every task closure
+    * that builds one.
+    */
+  private final class Group(ordering: BaseOrdering, withDedup: Boolean) {
+    val heap: scala.collection.mutable.PriorityQueue[InternalRow] =
+      scala.collection.mutable.PriorityQueue.empty[InternalRow](ordering)
+    val held: java.util.HashSet[UnsafeRow] =
+      if (withDedup) new java.util.HashSet[UnsafeRow]() else null
   }
 }

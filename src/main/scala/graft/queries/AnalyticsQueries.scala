@@ -540,35 +540,19 @@ object AnalyticsQueries {
     // same exact-integer rank arithmetic as a12, decimal-exact sum, one
     // double division written identically on both engines.
     //
-    // Rank selection is the DISTRIBUTED prefix sum (the ml2/rfm1 shape),
-    // not `row_number() OVER (PARTITION BY l_returnflag)`: the flag has 3
-    // distinct values, so the window form sorts the entire fact on 3
-    // tasks no matter the cluster size. Instead: global row numbers over
-    // the total order (flag, price, tiebreak) via range-repartition +
-    // partition-local sums, minus each flag's broadcast start offset =
-    // the same within-group ranks, parallelism bounded by partitions,
-    // not by group cardinality. Tie order inside equal prices cannot
-    // change the aggregate (tied rows straddling a bound contribute
-    // identical values either way), so the result is hash-identical to
-    // the window form and to the oracle.
+    // Rank selection is Packing.groupRank, not `row_number() OVER
+    // (PARTITION BY l_returnflag)`: the flag has 3 distinct values, so
+    // the window form sorts the entire fact on 3 tasks no matter the
+    // cluster size. Tie order inside equal prices cannot change the
+    // aggregate (tied rows straddling a bound contribute identical
+    // values either way), so the result is hash-identical to the window
+    // form and to the oracle.
     "a18_trimmed_mean" -> { (spark, dir) =>
-      import graft.operators.Packing
       val base = Tables.lineitem(spark, dir)
         .select(col("l_returnflag"), col("l_extendedprice"),
           (col("l_orderkey") * lit(8L) + col("l_linenumber")).as("__tb"))
-      val ranked = Packing.prefixSum(base,
-        Seq(col("l_returnflag"), col("l_extendedprice"), col("__tb")),
-        lit(1L), "__grn")
-      // 3-row offsets relation: each flag's row count and start offset in
-      // the global order (window over an aggregate, not over the fact).
-      val wFlag = Window.orderBy("l_returnflag")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val bounds = base.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("__start", sum(col("n")).over(wFlag) - col("n"))
-      ranked
-        .join(broadcast(bounds), Seq("l_returnflag"))
-        .withColumn("rn", col("__grn") - col("__start"))
+      graft.operators.Packing.groupRank(base, "l_returnflag",
+          Seq(col("l_extendedprice"), col("__tb")))
         .where(col("rn") > expr("(5L * n) div 100L") &&
           col("rn") <= expr("(95L * n) div 100L"))
         .groupBy("l_returnflag")
@@ -598,32 +582,13 @@ object AnalyticsQueries {
         .orderBy("vec_id")
     },
     // Count-Min sketch over the portable hash family: d=4 rows × w=64
-    // buckets of event counts per user, plus the point estimate
-    // (min over rows) next to the true count. Construction is exact
-    // integer arithmetic, so the sketch itself is oracle-verifiable —
-    // the 100 TB story is the 256-cell sketch being mergeable across
-    // partitions/days where the exact per-key counts are not.
+    // buckets of event counts per user, plus the point estimate next to
+    // the true count (cms1 is the 4×256 sibling). Construction is exact
+    // integer arithmetic, so the sketch itself is oracle-verifiable.
     "cm1_countmin" -> { (spark, dir) =>
-      val d = 4
-      val w = 64
-      // One pass hashes each event d times and reduces to per-(user, r, b)
-      // counts; the sketch, the user→bucket list, and the true counts all
-      // derive from that one tiny aggregate (hashing the events table
-      // twice would dominate the query's cost).
-      val perUserCell = Tables.events(spark, dir).select(col("user_id"))
-        .select(col("user_id"), explode(sequence(lit(0), lit(d - 1))).as("r"))
-        .select(col("user_id"), col("r"),
-          pmod(Dedup.portableHash60(concat(col("r"), lit(":"), col("user_id"))),
-            lit(w.toLong)).as("b"))
-        .groupBy("user_id", "r", "b").agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = true)
-      val sketch = perUserCell.groupBy("r", "b").agg(sum(col("c")).as("cnt"))
-      val est = perUserCell.select(col("user_id"), col("r"), col("b"))
-        .join(sketch, Seq("r", "b"))
-        .groupBy("user_id").agg(min(col("cnt")).as("cm_est"))
-      val truth = perUserCell.where(col("r") === 0)
-        .select(col("user_id"), col("c").as("true_n"))
-      truth.join(est, Seq("user_id")).orderBy("user_id")
+      Dedup.countMin(Tables.events(spark, dir), "user_id", depth = 4, width = 64)
+        .select(col("user_id"), col("n").as("true_n"), col("est").as("cm_est"))
+        .orderBy("user_id")
     },
     // Multimodal frame sampling plumbing: the binary payload is cut into
     // fixed 32-byte frames at a 16-byte stride and each frame digested —

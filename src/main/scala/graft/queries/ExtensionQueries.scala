@@ -129,25 +129,9 @@ object ExtensionQueries {
         .orderBy("doc_a", "doc_b")
     },
     "d4_ngram_jaccard" -> { (spark, dir) =>
-      val docs = Tables.documentsParallel(spark, dir)
-      val ws = TextAnalysis.words(col("text"))
-      val bigrams = array_distinct(transform(
-        sequence(lit(0), size(col("w")) - 2),
-        i => concat(element_at(col("w"), i + 1), lit(" "), element_at(col("w"), i + 2)),
-      ))
-      val side = docs
-        .select(col("doc_id"), ws.as("w"))
-        .where(size(col("w")) >= 2)
-        .select(col("doc_id"), bigrams.as("bg"))
-      val a = side.select(col("doc_id").as("doc_a"), col("bg").as("bg_a"))
-      val b = side.select(col("doc_id").as("doc_b"), col("bg").as("bg_b"))
-      a.join(b, col("doc_b") === col("doc_a") + 1)
-        .select(
-          col("doc_a"), col("doc_b"),
-          size(array_intersect(col("bg_a"), col("bg_b"))).as("n_shared"),
-          (size(array_intersect(col("bg_a"), col("bg_b"))).cast("double") /
-            size(array_union(col("bg_a"), col("bg_b")))).as("jaccard"),
-        )
+      Dedup.consecutiveBigramPairs(Tables.documentsParallel(spark, dir))
+        .select(col("doc_a"), col("doc_b"), col("n_shared"),
+          (col("n_shared").cast("double") / col("n_union")).as("jaccard"))
         .orderBy("doc_a")
     },
     // Embedding-cosine near-dup on consecutive pairs (oracle-checked,

@@ -514,35 +514,22 @@ object ReferenceQueries {
     // percentile_disc(k/100) is the value at sorted position
     // ceil(k·n/100) = (k·n + 99) div 100 (exact integer arithmetic — a
     // double ceil(p·n) can land one off when p·n is representable high).
-    // Rank selection is the DISTRIBUTED prefix sum (a18's shape,
-    // VERDICT r11 #4): `row_number() OVER (PARTITION BY l_returnflag)`
-    // sorts the entire fact on 3 tasks however many cores exist (the
-    // whole-partition sort buffer the r11 sf1.0 profile flagged);
-    // instead, global row numbers over the total order (flag, price,
-    // tiebreak) via range-repartition + partition-local sums, minus each
-    // flag's broadcast start offset = the same within-group ranks with
-    // parallelism bounded by partitions, not group cardinality. The
-    // picked VALUE at a rank is tie-order-invariant, so the result is
-    // hash-identical to the window form and to the oracle's SQL-standard
-    // WITHIN GROUP form (5.63 s → ~1.4 s at sf1.0).
+    // Rank selection is Packing.groupRank (a18's shape, VERDICT r11 #4):
+    // `row_number() OVER (PARTITION BY l_returnflag)` sorts the entire
+    // fact on 3 tasks however many cores exist (the whole-partition sort
+    // buffer the r11 sf1.0 profile flagged). The picked VALUE at a rank
+    // is tie-order-invariant, so the result is hash-identical to the
+    // window form and to the oracle's SQL-standard WITHIN GROUP form
+    // (5.63 s → ~1.4 s at sf1.0).
     "a12_percentile_disc" -> { (spark, dir) =>
-      import graft.operators.Packing
       val base = Tables.lineitem(spark, dir)
         .select(col("l_returnflag"), col("l_extendedprice"),
           (col("l_orderkey") * lit(8L) + col("l_linenumber")).as("__tb"))
-      val ranked = Packing.prefixSum(base,
-        Seq(col("l_returnflag"), col("l_extendedprice"), col("__tb")),
-        lit(1L), "__grn")
-      val wFlag = Window.orderBy("l_returnflag")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val bounds = base.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("__start", sum(col("n")).over(wFlag) - col("n"))
       def pick(k: Int) =
         min(when(col("rn") === expr(s"(${k}L * n + 99L) div 100L"),
           col("l_extendedprice")))
-      ranked.join(broadcast(bounds), Seq("l_returnflag"))
-        .withColumn("rn", col("__grn") - col("__start"))
+      graft.operators.Packing.groupRank(base, "l_returnflag",
+          Seq(col("l_extendedprice"), col("__tb")))
         .groupBy("l_returnflag")
         .agg(pick(25).as("p25_disc"), pick(50).as("p50_disc"),
           pick(95).as("p95_disc"))

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.{TextAnalysis, ZOrder}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -16,19 +16,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 object ScaleOpsQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Morton (Z-order) interleave of the low `bits` bits of two
-    * non-negative columns: bit i of `a` lands at position 2i, bit i of
-    * `b` at 2i+1. Pure bitwise-codegen'd Column expression — no UDF.
-    */
-  private def morton(a: Column, b: Column, bits: Int): Column =
-    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(a.bitwiseAND(lit(1L << i)), i))
-        .bitwiseOR(shiftleft(b.bitwiseAND(lit(1L << i)), i + 1))
-    }
-
-  /** The same interleave as SQL text (for the DuckDB oracle), over
-    * columns named `dx`/`dy`.
+  /** [[ZOrder.zValue]]'s Morton interleave as SQL text (for the DuckDB
+    * oracle), over non-negative columns named `dx`/`dy`: bit i of `dx`
+    * lands at position 2i, bit i of `dy` at 2i+1.
     */
   private def mortonSql(bits: Int): String =
     (0 until bits).map { i =>
@@ -71,7 +61,7 @@ object ScaleOpsQueries {
           (col("o_custkey") % 256).as("dx"),
           (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256)
             .cast(LongType).as("dy"))
-        .withColumn("zval", morton(col("dx"), col("dy"), 8))
+        .withColumn("zval", ZOrder.zValue(col("dx"), col("dy"), 8))
         .withColumn("zrange", expr("zval div 4096"))
         .groupBy("zrange")
         .agg(
@@ -397,7 +387,7 @@ object ScaleOpsQueries {
           (col("o_custkey") % 256).as("dx"),
           (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256)
             .cast(LongType).as("dy"))
-        .withColumn("zval", morton(col("dx"), col("dy"), 8))
+        .withColumn("zval", ZOrder.zValue(col("dx"), col("dy"), 8))
         .withColumn("linkey", col("dx") * 256 + col("dy"))
       val files = d
         .select(lit("linear").as("layout"),

@@ -255,34 +255,14 @@ object SurfaceQueries {
     // Count-min sketch on the PORTABLE hash family — unlike x13's HLL /
     // x19's space-saving (engine-internal sketches, rows-only checked),
     // this sketch is md5-keyed, so DuckDB rebuilds the identical 4×256
-    // cell table and the per-key estimates gate hash-exact. The build is
-    // one map-side-partial aggregate into depth×width cells (mergeable
-    // partials = the property that makes CMS a streaming/distributed
-    // counter); probes broadcast-join the tiny cell table. overcount =
-    // est − truth ≥ 0 demonstrates the one-sided error bound live.
+    // cell table and the per-key estimates gate hash-exact.
+    // overcount = est − truth ≥ 0 demonstrates the one-sided error bound
+    // live.
     "cms1_countmin" -> { (spark, dir) =>
-      import graft.operators.Dedup.portableHash60
-      val depth = 4
-      val width = 256
-      def h(i: Int, c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        portableHash60(concat(lit(i), lit(":"), c.cast(StringType))) % width
-      val ev = Tables.events(spark, dir)
-      val cells = ev
-        .select(posexplode(
-          array((0 until depth).map(i => h(i, col("user_id"))): _*))
-          .as(Seq("row_i", "cell")))
-        .groupBy("row_i", "cell")
-        .agg(count(lit(1)).as("c"))
-      val truth = ev.groupBy("user_id").agg(count(lit(1)).as("n_events"))
-      truth
-        .select(col("user_id"), col("n_events"),
-          posexplode(array((0 until depth).map(i => h(i, col("user_id"))): _*))
-            .as(Seq("row_i", "cell")))
-        .join(broadcast(cells), Seq("row_i", "cell"))
-        .groupBy("user_id", "n_events")
-        .agg(min(col("c")).as("cms_est"))
-        .select(col("user_id"), col("n_events"), col("cms_est"),
-          (col("cms_est") - col("n_events")).as("overcount"))
+      graft.operators.Dedup.countMin(Tables.events(spark, dir), "user_id",
+          depth = 4, width = 256)
+        .select(col("user_id"), col("n").as("n_events"), col("est").as("cms_est"),
+          (col("est") - col("n")).as("overcount"))
         .orderBy("user_id")
     },
 

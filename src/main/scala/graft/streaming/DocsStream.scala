@@ -39,11 +39,7 @@ object DocsStream {
     * per NEW distinct content hash with its keeper id and copy count.
     */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val schema = StreamRun.cachedSchema(spark, dir, "documents.parquet")
-    val newDocs = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val newDocs = StreamRun.parquetSource(spark, dir, "documents.parquet")
       .where(col("doc_id") % 4 === 0)
       .select(col("doc_id"), sha2(col("text"), 256).as("content_hash"))
     val corpusIndex = spark.read.parquet(s"$dir/documents.parquet")
@@ -67,12 +63,8 @@ object DocsStream {
     * runs continuously; the oracle is the batch gate census.
     */
   def streamQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val schema = StreamRun.cachedSchema(spark, dir, "documents.parquet")
     gateDrive(spark,
-      spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir))
+      StreamRun.parquetSource(spark, dir, "documents.parquet"))
   }
 
   /** The gate drive itself, over any prepared documents stream —
@@ -104,12 +96,8 @@ object DocsStream {
     * token stream; each micro-batch shuffles only its own vocabulary.
     */
   def streamDriftCensus(spark: SparkSession, dir: String): DataFrame = {
-    val schema = StreamRun.cachedSchema(spark, dir, "documents.parquet")
     driftDrive(spark,
-      spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir))
+      StreamRun.parquetSource(spark, dir, "documents.parquet"))
   }
 
   /** The drift drive over any prepared documents stream — factored out

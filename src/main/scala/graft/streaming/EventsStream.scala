@@ -16,18 +16,11 @@ import org.apache.spark.sql.types._
 object EventsStream {
   private val runId = new AtomicInteger(0)
 
-  /** The file streaming source wants a directory; narrow it to the events
-    * table with a glob filter (the dir holds the other tables too).
-    */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = StreamRun.cachedSchema(spark, dir, "events.parquet")
+  /** The events table as a stream, with whole-second event time `ts_sec`. */
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+      StreamRun.parquetSource(spark, dir, "events.parquet"))
       .withColumn("ts_sec", expr("timestamp_seconds(ts div 1000000000)"))
-  }
 
   private def runToMemory(df: DataFrame, spark: SparkSession, mode: String, prefix: String): DataFrame =
     StreamRun.toMemorySnapshot(df, mode, s"${prefix}_${runId.incrementAndGet()}")
@@ -62,17 +55,22 @@ object EventsStream {
     runToMemory(joined, spark, "complete", "stream_static").orderBy("cohort")
   }
 
-  /** Stream-stream inner join with watermarks on both sides: each click
-    * joined to the same user's purchases within the following hour. The
-    * time-range predicate plus the two watermarks bound the join state —
-    * without them a stream-stream join would buffer both streams forever;
-    * with them state for rows older than watermark + range is evicted,
-    * which is what makes the operator viable on an unbounded 100 TB
-    * stream. Results aggregate to one row per user (batch agg over the
-    * sink) so the output is compact and oracle-checkable against the
-    * equivalent batch join.
+  /** The UN-DRAINED click→purchase stream-stream join behind st5
+    * (`inner`), st15 (`leftOuter`) and st22 (`fullOuter`): each click
+    * joined to the same user's purchases within the following hour.
+    * The time-range predicate plus the two watermarks bound the join
+    * state — without them a stream-stream join would buffer both
+    * streams forever; with them state for rows older than watermark +
+    * range is evicted, which is what makes the operator viable on an
+    * unbounded 100 TB stream. The inner join tolerates an hour of
+    * lateness; the outer joins use zero-delay watermarks, so their
+    * final emission set is deterministic. Exposed so ExpensivePlanSpec
+    * asserts the bounded-state shape on exactly the plan each drive
+    * runs.
     */
-  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def clickPurchaseJoin(spark: SparkSession, dir: String,
+      joinType: String): DataFrame = {
+    val delay = if (joinType == "inner") "1 hour" else "0 seconds"
     val ev = eventsStream(spark, dir)
     val clicks = ev
       .where(col("event_type") === "click")
@@ -80,20 +78,29 @@ object EventsStream {
         col("user_id"),
         col("event_id").as("click_id"),
         col("ts_sec").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
+      .withWatermark("click_ts", delay)
     val purchases = ev
       .where(col("event_type") === "purchase")
       .select(
         col("user_id").as("p_user_id"),
         col("event_id").as("purchase_id"),
         col("ts_sec").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    val joined = clicks.join(
+      .withWatermark("purchase_ts", delay)
+    clicks.join(
       purchases,
       col("user_id") === col("p_user_id") &&
         col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-    runToMemory(joined, spark, "append", "stream_stream_join")
+        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+      joinType)
+  }
+
+  /** Stream-stream inner join ([[clickPurchaseJoin]]). Results aggregate
+    * to one row per user (batch agg over the sink) so the output is
+    * compact and oracle-checkable against the equivalent batch join.
+    */
+  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(clickPurchaseJoin(spark, dir, "inner"), spark, "append",
+        "stream_stream_join")
       .groupBy("user_id")
       .agg(
         count(lit(1)).as("n_pairs"),
@@ -101,36 +108,6 @@ object EventsStream {
         countDistinct(col("purchase_id")).as("n_purchases_matched"),
       )
       .orderBy("user_id")
-  }
-
-  /** The UN-DRAINED streaming join plan behind [[streamStreamLeftJoin]]
-    * — exposed so ExpensivePlanSpec can assert the bounded-state shape
-    * (watermark on each input, two-sided time-range condition) on the
-    * exact plan the drive runs.
-    */
-  def streamStreamLeftJoined(spark: SparkSession, dir: String): DataFrame = {
-    val ev = eventsStream(spark, dir)
-    val clicks = ev
-      .where(col("event_type") === "click")
-      .select(
-        col("user_id"),
-        col("event_id").as("click_id"),
-        col("ts_sec").as("click_ts"))
-      .withWatermark("click_ts", "0 seconds")
-    val purchases = ev
-      .where(col("event_type") === "purchase")
-      .select(
-        col("user_id").as("p_user_id"),
-        col("event_id").as("purchase_id"),
-        col("ts_sec").as("purchase_ts"))
-      .withWatermark("purchase_ts", "0 seconds")
-    clicks.join(
-      purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-      "leftOuter")
-  }
 
   /** Stream-stream LEFT OUTER join: clicks keep flowing even when no
     * purchase follows within the hour — the unmatched side emits
@@ -145,7 +122,7 @@ object EventsStream {
     * sealed; later clicks stay pending and are NOT emitted.
     */
   def streamStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
-    StreamRun.toMemorySnapshot(streamStreamLeftJoined(spark, dir), "append",
+    StreamRun.toMemorySnapshot(clickPurchaseJoin(spark, dir, "leftOuter"), "append",
         s"stream_stream_left_${runId.incrementAndGet()}",
         needsNoDataBatch = true)
       .groupBy("user_id")
@@ -155,34 +132,6 @@ object EventsStream {
         countDistinct(col("purchase_id")).as("n_purchases_matched"),
       )
       .orderBy("user_id")
-  }
-
-  /** The UN-DRAINED full-outer join plan (ExpensivePlanSpec asserts the
-    * bounded-state shape on exactly what the drive runs, as with
-    * [[streamStreamLeftJoined]]).
-    */
-  def streamStreamFullJoined(spark: SparkSession, dir: String): DataFrame = {
-    val ev = eventsStream(spark, dir)
-    val clicks = ev
-      .where(col("event_type") === "click")
-      .select(
-        col("user_id"),
-        col("event_id").as("click_id"),
-        col("ts_sec").as("click_ts"))
-      .withWatermark("click_ts", "0 seconds")
-    val purchases = ev
-      .where(col("event_type") === "purchase")
-      .select(
-        col("user_id").as("p_user_id"),
-        col("event_id").as("purchase_id"),
-        col("ts_sec").as("purchase_ts"))
-      .withWatermark("purchase_ts", "0 seconds")
-    clicks.join(
-      purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-      "fullOuter")
   }
 
   /** Stream-stream FULL OUTER join — the last member of the join-mode
@@ -197,7 +146,7 @@ object EventsStream {
     * sides to watermark + 1 h of rows.
     */
   def streamStreamFullJoin(spark: SparkSession, dir: String): DataFrame = {
-    StreamRun.toMemorySnapshot(streamStreamFullJoined(spark, dir), "append",
+    StreamRun.toMemorySnapshot(clickPurchaseJoin(spark, dir, "fullOuter"), "append",
         s"stream_stream_full_${runId.incrementAndGet()}",
         needsNoDataBatch = true)
       .withColumn("uid", coalesce(col("user_id"), col("p_user_id")))

@@ -90,14 +90,10 @@ object SessionStream {
       gapSeconds: Long = 1800,
   ): DataFrame = {
     import spark.implicits._
-    val schema = StreamRun.cachedSchema(spark, dir, "events.parquet")
     val name = s"closed_sessions_${runId.incrementAndGet()}"
 
     val events: Dataset[EventIn] = graft.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+      StreamRun.parquetSource(spark, dir, "events.parquet"))
       .select(col("user_id"), col("ts"), col("event_id"))
       .as[EventIn]
 
@@ -119,14 +115,10 @@ object SessionStream {
       gapSeconds: Long = 1800,
   ): DataFrame = {
     import spark.implicits._
-    val schema = StreamRun.cachedSchema(spark, dir, "events.parquet")
     val name = s"user_sessions_${runId.incrementAndGet()}"
 
     val events: Dataset[EventIn] = graft.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+      StreamRun.parquetSource(spark, dir, "events.parquet"))
       .select(col("user_id"), col("ts"), col("event_id"))
       .as[EventIn]
 

@@ -68,7 +68,6 @@ object StateV2 {
     */
   def userTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = StreamRun.cachedSchema(spark, dir, "events.parquet")
     val name = s"user_totals_v2_${runId.incrementAndGet()}"
 
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -77,10 +76,7 @@ object StateV2 {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val events: Dataset[EvIn] = graft.Tables.normalizeEventTs(
-        spark.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
+        StreamRun.parquetSource(spark, dir, "events.parquet"))
         .select(col("user_id"), col("ts"), col("value"), col("event_id"))
         .as[EvIn]
 

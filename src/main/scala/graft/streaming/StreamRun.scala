@@ -68,13 +68,18 @@ object StreamRun {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  /** Schema of `$dir/$file`, cached per path — every stream drive needs
-    * it (readStream requires an explicit schema) and the footer-read
-    * batch job is pure repeat cost within a session.
+  /** The file stream over table `file` of directory `dir` — the one
+    * streaming source of the engine's drives. The file source wants a
+    * directory; the glob filter narrows it to the table (the dir holds
+    * the other tables too). The source needs an explicit schema; it is
+    * cached per path, since the footer-read batch job is pure repeat
+    * cost within a session.
     */
-  def cachedSchema(spark: SparkSession, dir: String, file: String): org.apache.spark.sql.types.StructType =
-    schemaCache.computeIfAbsent(s"$dir/$file",
-      p => spark.read.parquet(p).schema)
+  def parquetSource(spark: SparkSession, dir: String, file: String): DataFrame =
+    spark.readStream
+      .schema(schemaCache.computeIfAbsent(s"$dir/$file", p => spark.read.parquet(p).schema))
+      .option("pathGlobFilter", file)
+      .parquet(dir)
 
   /** Run `body` (a stream start + drain) with the reduced partition
     * count; always restores the session's previous settings.

@@ -118,7 +118,6 @@ object TimerSessions {
       gapSeconds: Long = 1800,
   ): DataFrame = {
     import spark.implicits._
-    val schema = StreamRun.cachedSchema(spark, dir, "events.parquet")
     val name = s"timer_sessions_${runId.incrementAndGet()}"
 
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -127,10 +126,7 @@ object TimerSessions {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val events: Dataset[SessionStream.EventIn] = graft.Tables.normalizeEventTs(
-        spark.readStream
-          .schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
+        StreamRun.parquetSource(spark, dir, "events.parquet"))
         .withColumn("ts_sec", expr("timestamp_seconds(ts div 1000000000)"))
         .withWatermark("ts_sec", "0 seconds")
         .select(col("user_id"), col("ts"), col("event_id"))

@@ -31,12 +31,8 @@ object VectorStream {
     def withBuckets(df: DataFrame, emb: String): DataFrame =
       df.select(col("*"),
         posexplode(LshBuckets.buckets(col(emb), 4, 4)).as(Seq("t", "b")))
-    val schema = StreamRun.cachedSchema(spark, dir, "embeddings.parquet")
     val qs = withBuckets(
-      spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(dir)
+      StreamRun.parquetSource(spark, dir, "embeddings.parquet")
         .where(col("vec_id") < 8)
         .select(col("vec_id").as("q_vec"), col("embedding").as("q_emb")),
       "q_emb")
@@ -77,11 +73,7 @@ object VectorStream {
     val centroids = AtomicLayer.read(spark, s"$root/centroids.parquet")
     val sample = AtomicLayer.read(spark, s"$root/codebook.parquet")
     val index = AtomicLayer.read(spark, s"$root/index.parquet")
-    val schema = StreamRun.cachedSchema(spark, dir, "embeddings.parquet")
-    val qs = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val qs = StreamRun.parquetSource(spark, dir, "embeddings.parquet")
       .where(col("vec_id") < 8 &&
         size(col("embedding")) > 0 && size(col("embedding")) % 8 === 0)
       .select(col("vec_id").as("q_vec"), col("embedding").as("q_emb"))
@@ -115,11 +107,7 @@ object VectorStream {
     val emb = graft.Tables.embeddings(spark, dir)
     val root = Similarity.indexRoot(dir) + "_stream"
     Similarity.buildIvfPqIndex(emb.where(col("vec_id") < 400), root)
-    val schema = StreamRun.cachedSchema(spark, dir, "embeddings.parquet")
-    val feed = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val feed = StreamRun.parquetSource(spark, dir, "embeddings.parquet")
       .where(col("vec_id") >= 400)
     StreamRun.driveForeachBatch(feed, "append",
         s"st21_index_append_${runId.incrementAndGet()}") { (batch, _) =>
@@ -148,11 +136,7 @@ object VectorStream {
     val old = emb.where(col("vec_id") < 400)
     Similarity.buildNndGraphIndex(old, root)
     Similarity.freezeGraphIndexBase(spark, root)
-    val schema = StreamRun.cachedSchema(spark, dir, "embeddings.parquet")
-    val feed = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val feed = StreamRun.parquetSource(spark, dir, "embeddings.parquet")
       .where(col("vec_id") >= 400 && col("vec_id") < 500)
     StreamRun.driveForeachBatch(feed, "append",
         s"st29_graph_append_${runId.incrementAndGet()}") { (batch, _) =>
@@ -184,11 +168,7 @@ object VectorStream {
     val old = emb.where(col("vec_id") < 400)
     Similarity.buildNndGraphIndex(old, root)
     Similarity.freezeGraphIndexBase(spark, root)
-    val schema = StreamRun.cachedSchema(spark, dir, "embeddings.parquet")
-    val feed = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val feed = StreamRun.parquetSource(spark, dir, "embeddings.parquet")
       .where(col("vec_id") >= 400 && col("vec_id") < 500)
     StreamRun.driveForeachBatch(feed, "append",
         s"st30_graph_reconcile_${runId.incrementAndGet()}") { (batch, _) =>

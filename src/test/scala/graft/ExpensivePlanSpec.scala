@@ -148,9 +148,8 @@ class ExpensivePlanSpec extends SparkSpec {
     // runs (the production code's own builder): bounded state requires
     // (a) an event-time watermark on each input and (b) a two-sided
     // time-range condition — lose either and state grows without bound.
-    for (joined <- Seq(
-        graft.streaming.EventsStream.streamStreamLeftJoined(spark, sf0001),
-        graft.streaming.EventsStream.streamStreamFullJoined(spark, sf0001))) {
+    for (joinType <- Seq("inner", "leftOuter", "fullOuter")) {
+      val joined = graft.streaming.EventsStream.clickPurchaseJoin(spark, sf0001, joinType)
       val analyzed = joined.queryExecution.analyzed
       val watermarks = analyzed.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w

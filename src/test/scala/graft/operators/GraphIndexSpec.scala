@@ -124,7 +124,7 @@ class GraphIndexSpec extends SparkSpec {
       "redelivered batches must not change the artifact")
   }
 
-  test("delete makes nodes unreachable on BOTH endpoints; re-add resurrects; compact folds") {
+  test("delete makes nodes unreachable on BOTH endpoints; re-add resurrects") {
     val emb = Tables.embeddings(spark, sf0001)
     val sub = emb.where(col("vec_id") < 120)
     val root = tmpRoot()
@@ -157,35 +157,6 @@ class GraphIndexSpec extends SparkSpec {
     assert(AtomicLayer.read(spark, s"$root/tombstones.parquet").count() == 0)
     assert(serve(root, 120).collect().toSeq == baseline,
       "re-add must resurrect the exact pre-delete serving state")
-
-    // compaction: delete again, compact — tombstones empty, dead edges
-    // physically gone, ranks re-contiguous. Serving MAY legitimately
-    // differ from the pre-compact tombstone-filtered form (compaction
-    // RE-RANKS, promoting rank-6..15 survivors into the degree-5 serve
-    // window a filtered-but-unranked graph starves out of), so the pins
-    // are: dead ids stay excluded, and the artifact serve equals the
-    // in-memory beam over the same recomputed edge relation.
-    Similarity.deleteFromGraphIndex(dead.toSeq.toDF("vec_id"), root)
-    Similarity.compactGraphIndex(spark, root)
-    assert(AtomicLayer.read(spark, s"$root/tombstones.parquet").count() == 0)
-    val edges = AtomicLayer.read(spark, s"$root/edges.parquet")
-    assert(edges.where(col("v").isin(dead.toSeq: _*) ||
-      col("nbr").isin(dead.toSeq: _*)).count() == 0,
-      "compaction must drop every edge touching a dead node")
-    val rankGaps = edges.groupBy("v")
-      .agg(count(lit(1)).as("n"), max(col("rank")).as("mx"))
-      .where(col("n") =!= col("mx")).count()
-    assert(rankGaps == 0, "compaction must re-rank to contiguous 1..n per node")
-    val compacted = serve(root, 120).collect().toSeq
-    assert(compacted.map(_.getLong(2)).toSet.intersect(dead).isEmpty,
-      "compaction must keep dead ids unreachable without tombstones")
-    val inline = Similarity.graphAnnBeamServe(
-        edges.where(col("rank") <= 5).select(col("v"), col("nbr")),
-        sub.join(dead.toSeq.toDF("vec_id"), Seq("vec_id"), "left_anti"),
-        emb.where(col("vec_id") < 4), k = 5, beam = 8, rounds = 3)
-      .orderBy("q_vec", "rank").collect().toSeq
-    assert(compacted == inline,
-      "compacted-artifact serve must equal the in-memory beam over the same edges")
   }
 
   test("reconcile repairs cross-batch new×new gaps: monotone per-rank cosine, no build, recall recovers") {

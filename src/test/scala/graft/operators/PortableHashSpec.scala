@@ -76,12 +76,31 @@ class PortableHashSpec extends SparkSpec {
   }
 
   test("count-min estimates never undercount (sketch invariant)") {
-    val out = graft.queries.AnalyticsQueries.queries("cm1_countmin")(
-      spark, sf0001).collect()
-      .map(r => (r.getLong(1), r.getLong(2))) // (true_n, cm_est)
-    assert(out.nonEmpty)
-    assert(out.forall { case (t, e) => e >= t },
-      s"count-min undercounted: ${out.find { case (t, e) => e < t }}")
+    // Driver-side replay of the sketch from the raw user ids, hashed with
+    // plain JVM MessageDigest (independent of any Spark expression): cell
+    // (r, md5("r:key") first 15 hex digits mod width); est = min over rows
+    // of the key's cell count.
+    val users = spark.read.parquet(s"$sf0001/events.parquet")
+      .select("user_id").collect().map(_.getLong(0)).toSeq
+    val truth = users.groupBy(identity).map { case (u, xs) => u -> xs.size.toLong }
+    def cell(r: Int, u: Long, width: Int): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$r:$u".getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.substring(0, 15), 16) % width
+    }
+    for ((name, width) <- Seq("cm1_countmin" -> 64, "cms1_countmin" -> 256)) {
+      val out = graft.SparkEntry.queries(name)(spark, sf0001).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap // (truth, est)
+      assert(out.nonEmpty, name)
+      assert(out.values.forall { case (t, e) => e >= t },
+        s"$name undercounted: ${out.find { case (_, (t, e)) => e < t }}")
+      val cells = (0 until 4).map(r =>
+        users.groupBy(cell(r, _, width)).map { case (c, xs) => c -> xs.size.toLong })
+      val replay = truth.map { case (u, n) =>
+        u -> (n, (0 until 4).map(r => cells(r)(cell(r, u, width))).min)
+      }
+      assert(out === replay, s"$name differs from the driver-side replay")
+    }
   }
 
   test("recursive-CTE closure agrees with pointer-jumping connected components") {
