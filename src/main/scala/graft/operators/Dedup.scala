@@ -61,30 +61,6 @@ object Dedup {
       .groupBy("doc_id")
       .agg(collect_set(col("shingle")).as("shingles"))
 
-  /** MinHash signatures. The hash family uses Kirsch-Mitzenmacher double
-    * hashing — g_i(s) = h1(s) + i*h2(s) — so each shingle is hashed twice
-    * (not numHashes times) no matter how wide the signature is; the
-    * per-function min then reduces with a map-side partial aggregate to
-    * one row of numHashes longs per doc. Duplicate shingles need no
-    * pre-dedup: min over a multiset equals min over its set.
-    */
-  def minHashSignatures(docs: DataFrame, k: Int, numHashes: Int): DataFrame =
-    minHashSignaturesFromShingles(shingleRows(docs, k), numHashes)
-
-  /** Signatures from precomputed (doc_id, shingle) rows. */
-  def minHashSignaturesFromShingles(rows: DataFrame, numHashes: Int): DataFrame = {
-    val hashed = rows
-      .withColumn("h1", xxhash64(col("shingle")))
-      .withColumn("h2", xxhash64(col("shingle"), lit(1)))
-    val mins = (0 until numHashes)
-      .map(i => min(col("h1") + lit(i.toLong) * col("h2")).as(s"h$i"))
-    hashed
-      .groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"h$i")): _*).as("signature"))
-  }
-
   /** URL canonicalization for crawl dedup (the CommonCrawl first-pass
     * key): lowercase scheme+host(+path — the synthetic corpus has no
     * case-significant paths), strip the fragment, strip utm_* tracking
@@ -211,61 +187,39 @@ object Dedup {
       .select(col("doc_id"), col("band_idx"),
         portableHash60(col("band_str")).as("band_key"))
 
-  /** LSH candidate pairs from banded MinHash signatures, verified with
-    * exact Jaccard over the shingle sets. `maxBucket` caps degenerate
-    * buckets (dropped pairs are the price of not going quadratic).
+  /** Bucket-capped banded-LSH candidate pairs over a band relation
+    * (doc_id, band_idx, band_key) with one row per (doc, band), as
+    * [[portableBandKeys]] emits: the distinct (doc_a < doc_b) pairs
+    * that share at least one bucket holding 2 to `maxBucket` members,
+    * with `n_bands` = how many such buckets they share. A bucket above
+    * the cap is dropped whole (a degenerate bucket, e.g. the empty
+    * document's, would otherwise produce a quadratic pair explosion);
+    * scripts/skew_census.py replays the same [2, maxBucket] gate.
+    *
+    * One grouping of the band relation builds each bucket's member list
+    * and applies the cap on the grouped row, so the band relation is
+    * read once; joining a separate count-filter relation back onto it
+    * would read it three times. d2, d7 (via [[minHashCandidatesPortable]])
+    * and dr1 all derive their candidates here.
     */
-  def minHashCandidates(
-      docs: DataFrame,
-      k: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      maxBucket: Int = 64,
-      precomputedSigs: Option[DataFrame] = None,
-      precomputedSets: Option[DataFrame] = None,
-  ): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    // At warehouse scale signatures/shingle-sets would be persisted tables;
-    // callers composing several minhash steps pass them in to avoid
-    // recomputing the scan+hash pipeline.
-    val sigs = precomputedSigs.getOrElse(minHashSignatures(docs, k, numHashes))
-    val banded = sigs.select(
-      col("doc_id"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64(slice(col("signature"), b * r + 1, r))): _*))
-        .as(Seq("band_idx", "band_key")),
-    )
-    val sized = banded
+  def bandPairs(bands: DataFrame, maxBucket: Int): DataFrame =
+    bands
       .groupBy("band_idx", "band_key")
       .agg(collect_list(col("doc_id")).as("ids"))
       .where(size(col("ids")).between(2, maxBucket))
-    val pairs = sized
-      .select(explode(col("ids")).as("doc_a"), col("ids"), col("band_idx"), col("band_key"))
+      .select(explode(col("ids")).as("doc_a"), col("ids"))
       .select(col("doc_a"), explode(col("ids")).as("doc_b"))
       .where(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_bands"))
-    val sets = precomputedSets.getOrElse(shingleSets(docs, k))
-      .select(col("doc_id"), col("shingles"))
-    pairs
-      .join(sets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("shingles", "sh_a"), Seq("doc_a"))
-      .join(sets.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("shingles", "sh_b"), Seq("doc_b"))
-      .select(
-        col("doc_a"), col("doc_b"), col("n_bands"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
-          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"),
-      )
-  }
 
-  /** Portable-family LSH candidate pairs: [[minHashPortable]] signatures
-    * banded with [[portableBandKeys]], bucket-capped, verified with
-    * exact Jaccard over the shingle sets — the same pipeline shape as
-    * [[minHashCandidates]] with every hash md5-derived, so candidate
-    * GENERATION (not just verification) is recomputable by any engine;
-    * the d7 oracle replays it in DuckDB. The KM construction keeps the
-    * hashing cost at ONE md5 per shingle regardless of family size, so
-    * the portable path is now within ~2× of the xxhash64 family.
+  /** LSH candidate pairs: [[minHashPortable]] signatures banded with
+    * [[portableBandKeys]], bucket-capped by [[bandPairs]], verified with
+    * exact Jaccard over the shingle sets. Every hash is md5-derived, so
+    * candidate GENERATION (not just verification) is recomputable by
+    * any engine; the d7 oracle replays it in DuckDB. The KM construction
+    * keeps the hashing cost at ONE md5 per shingle regardless of family
+    * size.
     */
   def minHashCandidatesPortable(
       docs: DataFrame,
@@ -275,18 +229,9 @@ object Dedup {
       maxBucket: Int = 64,
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sigs = minHashPortable(docs, k, numHashes)
-    val banded = portableBandKeys(sigs, numHashes / bands)
-    val sized = banded
-      .groupBy("band_idx", "band_key")
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .where(size(col("ids")).between(2, maxBucket))
-    val pairs = sized
-      .select(explode(col("ids")).as("doc_a"), col("ids"))
-      .select(col("doc_a"), explode(col("ids")).as("doc_b"))
-      .where(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_bands"))
+    val pairs = bandPairs(
+      portableBandKeys(minHashPortable(docs, k, numHashes), numHashes / bands),
+      maxBucket)
     val sets = shingleSets(docs, k)
     pairs
       .join(sets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("shingles", "sh_a"), Seq("doc_a"))
@@ -298,27 +243,17 @@ object Dedup {
       )
   }
 
-  /** SimHash signatures (32-bit): per-word xxhash64, each bit position
-    * accumulates +1/-1 by whether the word hash has that bit set; the
-    * signature takes the sign of each accumulator.
+  /** SimHash signatures (32-bit) over the portable hash family: per-word
+    * [[portableHash60]], each bit position accumulates +1/-1 by whether
+    * the word hash has that bit set, and the signature takes the sign of
+    * each accumulator. Every step (hash, bit sums, sign assembly) is
+    * reproducible in any engine with md5, so signatures AND candidate
+    * counts are oracle-checkable (d3).
     */
-  def simHashSignatures(docs: DataFrame, bits: Int = 32): DataFrame =
-    simHashFrom(docs, bits, xxhash64(col("word")))
-
-  /** SimHash over the PORTABLE hash family ([[portableHash60]] per
-    * word): identical banding/Hamming semantics, but every step — hash,
-    * bit sums, sign assembly — is reproducible in any engine with md5,
-    * so signatures AND candidate counts are oracle-checkable (d3).
-    * Same trade as [[minHashPortable]]: md5 costs a few times xxhash64;
-    * use the xxhash64 family when signatures never leave Spark.
-    */
-  def simHashPortableSignatures(docs: DataFrame, bits: Int = 32): DataFrame =
-    simHashFrom(docs, bits, portableHash60(col("word")))
-
-  private def simHashFrom(docs: DataFrame, bits: Int, wordHash: Column): DataFrame = {
+  def simHashPortableSignatures(docs: DataFrame, bits: Int = 32): DataFrame = {
     val wordsDf = docs
       .select(col("doc_id"), explode(TextAnalysis.words(col("text"))).as("word"))
-      .withColumn("h", wordHash)
+      .withColumn("h", portableHash60(col("word")))
     val bitSums = (0 until bits).map(b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"s$b"))
     val sig = (0 until bits)
@@ -330,19 +265,18 @@ object Dedup {
       .select(col("doc_id"), sig.as("simhash"))
   }
 
-  /** SimHash near-dup pairs: band the 32-bit signature into 4 bytes; pairs
-    * sharing any byte-band are candidates; keep those within `maxHamming`.
-    * Like the MinHash path, degenerate bands are capped at `maxBucket`
-    * members (a hot byte value — e.g. millions of boilerplate docs — would
-    * otherwise go quadratic in the self-join).
+  /** SimHash near-dup pairs over (doc_id, simhash) signatures from
+    * [[simHashPortableSignatures]]: band the 32-bit signature into 4
+    * bytes; pairs sharing any byte-band are candidates; keep those
+    * within `maxHamming`. Like the MinHash path, degenerate bands are
+    * capped at `maxBucket` members (a hot byte value — e.g. millions of
+    * boilerplate docs — would otherwise go quadratic in the self-join).
     */
   def simHashCandidates(
-      docs: DataFrame,
+      sigs: DataFrame,
       maxHamming: Int = 6,
       maxBucket: Int = 64,
-      precomputedSigs: Option[DataFrame] = None,
   ): DataFrame = {
-    val sigs = precomputedSigs.getOrElse(simHashSignatures(docs))
     val banded = sigs.select(
       col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(b =>
@@ -479,12 +413,8 @@ object Dedup {
       k: Int = 3,
       numHashes: Int = 16,
       bands: Int = 4,
-      portable: Boolean = false,
   ): DataFrame = {
-    val cands =
-      if (portable) minHashCandidatesPortable(docs, k, numHashes, bands)
-      else minHashCandidates(docs, k, numHashes, bands)
-    val verified = cands
+    val verified = minHashCandidatesPortable(docs, k, numHashes, bands)
       .where(col("jaccard") >= minJaccard)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     clusterAndKeep(docs, verified)

@@ -633,11 +633,12 @@ object Similarity {
     * instead of rewriting the code table: at a billion vectors the
     * delete batch is O(|batch|) rows while `index.parquet` is the
     * corpus, so delete cost must not scale with corpus size. Serving
-    * anti-joins the (broadcast-tiny, compaction-bounded) tombstone set;
-    * [[compactIvfPqIndex]] folds tombstones into a code-table rewrite.
+    * anti-joins the broadcast tombstone set, which holds every id
+    * deleted and not re-added: nothing folds tombstones into the code
+    * table, so the set grows with the delete volume, never the corpus.
     * Idempotent: deleting an id twice keeps one tombstone row.
     * Unknown ids are fine (a tombstone for a never-indexed id filters
-    * nothing and compacts away).
+    * nothing).
     */
   def deleteFromIvfPqIndex(ids: DataFrame, root: String): Unit = {
     require(ids.columns.length == 1,
@@ -652,23 +653,6 @@ object Similarity {
     AtomicLayer.write(
       tombstonesOrEmpty(spark, root).unionByName(newTombs).distinct(),
       s"$root/tombstones.parquet", keepVersions = 1): Unit
-  }
-
-  /** Fold pending tombstones into the code table: one rewrite dropping
-    * the dead rows, then an empty tombstone snapshot. Run on a cadence
-    * (or when the tombstone set approaches broadcast limits) — between
-    * compactions, serving stays correct via the anti-join.
-    */
-  def compactIvfPqIndex(spark: SparkSession, root: String): Unit = {
-    val tombs = tombstonesOrEmpty(spark, root)
-    if (!tombs.isEmpty) {
-      val index = AtomicLayer.read(spark, s"$root/index.parquet")
-      AtomicLayer.write(index.join(tombs, Seq("c_vec"), "left_anti"),
-        s"$root/index.parquet", keepVersions = 1)
-      AtomicLayer.write(tombs.limit(0),
-        s"$root/tombstones.parquet", keepVersions = 1)
-      (): Unit
-    }
   }
 
   /** The pending-delete set for `root` — empty relation when no delete
@@ -713,8 +697,8 @@ object Similarity {
     * for callers that run SEVERAL searches against one index (x31's
     * probe sweep) and should pay the artifact/tombstone resolution
     * once. Serve-time delete filter: anti-join the pending tombstone
-    * set (broadcast — its size is bounded by the compaction cadence,
-    * not the corpus) so a deleted id can never reach a shortlist.
+    * set (broadcast — its size is the delete volume, not the corpus)
+    * so a deleted id can never reach a shortlist.
     */
   def loadIvfPqArtifacts(
       spark: SparkSession, root: String): (DataFrame, DataFrame, DataFrame) = {
@@ -982,40 +966,11 @@ object Similarity {
       .select(col("q_vec"), col("rank"), col("v").as("c_vec"), col("cosine"))
   }
 
-  /** NN-DESCENT kNN-graph BUILD (Dong et al., WWW 2011) — the
-    * scale-true construction tier for [[graphAnnBeam]]'s serve path,
-    * replacing the all-pairs `bruteForceTopK(slice, slice)` build that
-    * cannot survive a corpus-sized n (VERDICT r9 #2).
-    *
-    * Seeding: `seedFamilies` independent hash-bucket partitions of the
-    * id space (portable md5 buckets of expected size `seedBucketSize`)
-    * — each node's initial neighbor candidates are its bucket peers,
-    * the deterministic, engine-replayable stand-in for the paper's
-    * random seeding. Buckets outside [2, bucketCap] contribute no
-    * pairs (singletons have no peer; the cap bounds adversarial skew).
-    * Then `rounds` synchronous NN-descent iterations: candidates are
-    * neighbors-of-neighbors over the UNDIRECTED current graph (B(v) ∪
-    * R(v), the paper's local join), scored by exact quantized cosine,
-    * unioned with the current edges, and pruned to the best `graphK`
-    * per node (ties by id — fully deterministic, so a SQL oracle
-    * replays the whole construction round by round).
-    *
-    * Scale shape: every relation is node-linear. The seed stage is
-    * n/seedBucketSize buckets of ~seedBucketSize² pairs = O(n ·
-    * seedBucketSize); each round's candidate set is ≤ n · (2·graphK)²
-    * rows (undirected degree ≤ 2·graphK), anti-joined against the
-    * current graph before scoring so settled edges are never re-scored.
-    * Scoring joins candidates to the embedding table on each endpoint —
-    * two shuffles keyed on node ids, never a broadcast of the corpus;
-    * the per-round graph is localCheckpoint-pinned (the lp1/d6 loop
-    * discipline) so lineage stays flat. Compute per round is O(n·K²·d)
-    * versus brute force's O(n²·d).
-    */
   /** Hash-bucket seed pairs over `c` (vec_id, …): `seedFamilies`
     * independent portable-md5 bucketings of the id space with expected
     * bucket size `seedBucketSize`; within-bucket pairs (both
     * directions), buckets outside [2, bucketCap] contribute none.
-    * Shared by [[nnDescent]]'s build seeding and [[nnDescentUpsert]]'s
+    * Shared by [[nnDescent]]'s build seeding and [[nnDescentUpsertWithGraph]]'s
     * new×new candidate stage.
     */
   private[operators] def hashSeedPairs(
@@ -1059,7 +1014,7 @@ object Similarity {
     * scored (v, u, cosine) graph: undirected neighbor-of-neighbor
     * candidates, anti-joined against settled edges, scored against
     * `emb`, re-pruned to `graphK` per node — the loop body shared by
-    * [[nnDescent]] (after seeding) and [[nnDescentUpsert]] (after the
+    * [[nnDescent]] (after seeding) and [[nnDescentUpsertWithGraph]] (after the
     * merge, to reconcile the batch's new×new neighborhoods).
     */
   private[operators] def descentRounds(
@@ -1106,6 +1061,35 @@ object Similarity {
     */
   private[graft] val nndBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** NN-DESCENT kNN-graph BUILD (Dong et al., WWW 2011) — the
+    * scale-true construction tier for [[graphAnnBeam]]'s serve path,
+    * replacing the all-pairs `bruteForceTopK(slice, slice)` build that
+    * cannot survive a corpus-sized n (VERDICT r9 #2).
+    *
+    * Seeding: `seedFamilies` independent hash-bucket partitions of the
+    * id space (portable md5 buckets of expected size `seedBucketSize`)
+    * — each node's initial neighbor candidates are its bucket peers,
+    * the deterministic, engine-replayable stand-in for the paper's
+    * random seeding. Buckets outside [2, bucketCap] contribute no
+    * pairs (singletons have no peer; the cap bounds adversarial skew).
+    * Then `rounds` synchronous NN-descent iterations: candidates are
+    * neighbors-of-neighbors over the UNDIRECTED current graph (B(v) ∪
+    * R(v), the paper's local join), scored by exact quantized cosine,
+    * unioned with the current edges, and pruned to the best `graphK`
+    * per node (ties by id — fully deterministic, so a SQL oracle
+    * replays the whole construction round by round).
+    *
+    * Scale shape: every relation is node-linear. The seed stage is
+    * n/seedBucketSize buckets of ~seedBucketSize² pairs = O(n ·
+    * seedBucketSize); each round's candidate set is ≤ n · (2·graphK)²
+    * rows (undirected degree ≤ 2·graphK), anti-joined against the
+    * current graph before scoring so settled edges are never re-scored.
+    * Scoring joins candidates to the embedding table on each endpoint —
+    * two shuffles keyed on node ids, never a broadcast of the corpus;
+    * the per-round graph is localCheckpoint-pinned (the lp1/d6 loop
+    * discipline) so lineage stays flat. Compute per round is O(n·K²·d)
+    * versus brute force's O(n²·d).
+    */
   def nnDescent(
       corpus: DataFrame,
       graphK: Int = 5,
@@ -1124,7 +1108,10 @@ object Similarity {
     * tier next to BUILD ([[nnDescent]], x34) and SERVE
     * ([[graphAnnBeamServe]], x35), the graph analogue of the IVFADC
     * index's x23–x30 upsert path. New vectors join an existing graph
-    * WITHOUT rebuilding it:
+    * WITHOUT rebuilding it. `g` (v, u, cosine) is the already-built
+    * graph, read off a persisted artifact in a deployment (x36,
+    * [[appendToNndGraphIndex]]); `oldCorpus` must cover every node of
+    * `g` (the embedding point-lookup store).
     *
     *  1. each new vector finds its neighborhood by BEAM SEARCH over the
     *     existing graph (the serve path doubles as the insert locator —
@@ -1150,29 +1137,6 @@ object Similarity {
     * is the point. Deterministic end to end (portable seeding, exact
     * quantized cosine, id tiebreaks): the x36 oracle replays build +
     * beam + merge.
-    */
-  def nnDescentUpsert(
-      oldCorpus: DataFrame,
-      newVecs: DataFrame,
-      graphK: Int = 15,
-      beam: Int = 8,
-      rounds: Int = 3,
-      seedBucketSize: Int = 32,
-  ): DataFrame = {
-    val g = nnDescent(oldCorpus, graphK, rounds, seedBucketSize)
-      .select(col("v"), col("nbr").as("u"), col("cosine"))
-      .localCheckpoint(eager = true)
-    nnDescentUpsertWithGraph(g, oldCorpus, newVecs, graphK, beam, rounds,
-      seedBucketSize)
-  }
-
-  /** The upsert MERGE alone, over an already-built graph `g`
-    * (v, u, cosine) — steps 1–5 of [[nnDescentUpsert]]'s scaladoc with
-    * the inline rebuild removed. This is what a real deployment runs:
-    * the graph comes off a persisted artifact (x36, [[appendToNndGraphIndex]])
-    * and the upsert pays only the O(|new|) locate + merge + one
-    * reconciling round. `oldCorpus` must cover every node of `g` (the
-    * embedding point-lookup store).
     */
   def nnDescentUpsertWithGraph(
       g: DataFrame,

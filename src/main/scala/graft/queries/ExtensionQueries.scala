@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** The large-scale training-data-pipeline extension set (BASELINE.json
   * north star): dedup, similarity search, text analysis, multimodal
-  * plumbing, streaming, sketches. Oracle SQL included wherever the
-  * semantics are ANSI-expressible; hash-based operators (xxhash64 is
-  * Spark-specific) get rows-only checks.
+  * plumbing, streaming, sketches. Every query carries oracle SQL;
+  * where a result depends on a hash, the hash is md5
+  * (`Dedup.portableHash60`), which the oracle engine replays.
   */
 object ExtensionQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -26,30 +26,21 @@ object ExtensionQueries {
     // MinHash+LSH near-dup over the PORTABLE (md5) hash family: per-doc
     // signature summary + banded-LSH candidate count. Every step — the
     // signatures (d8 proves them), the band keys, the bucket-capped
-    // candidate pairs — is recomputed by the DuckDB oracle, closing the
-    // "signatures are engine-internal" gap the xxhash64 variant had.
-    // (The xxhash64-KM family stays the in-Spark fast path:
-    // Dedup.minHashCandidates / d7.)
+    // candidate pairs — is recomputed by the DuckDB oracle. The pairs
+    // are Dedup.bandPairs, the same relation d7 and dr1 build on;
+    // n_candidates is each doc's degree in it.
     "d2_dedup_minhash" -> { (spark, dir) =>
       val docs = Tables.documentsParallel(spark, dir)
-      // The md5 signature pipeline fans out to four consumers (bands ×3,
-      // summary ×1); pin both relations so the 16-hashes-per-shingle scan
-      // runs once — at scale these are the persisted index tables.
+      // The md5 signature pipeline fans out to two consumers (bands and
+      // the summary); pin both relations so the 16-hashes-per-shingle
+      // scan runs once — at scale these are the persisted index tables.
       val sigs = Dedup.minHashPortable(docs, 3, 16) // (doc_id, h_idx, min_hash)
         .localCheckpoint(eager = true)
       val bands = Dedup.portableBandKeys(sigs, 4).localCheckpoint(eager = true)
-      val sized = bands.groupBy("band_idx", "band_key")
-        .agg(count(lit(1)).as("__n"))
-        .where(col("__n").between(2, 64))
-        .drop("__n")
-      val cands = bands.join(sized, Seq("band_idx", "band_key"))
-        .select(col("band_idx"), col("band_key"), col("doc_id").as("doc_a"))
-        .join(bands.select(col("band_idx"), col("band_key"), col("doc_id").as("doc_b")),
-          Seq("band_idx", "band_key"))
-        .where(col("doc_a") =!= col("doc_b"))
-        .groupBy("doc_a")
-        .agg(count_distinct(col("doc_b")).as("n_candidates"))
-        .withColumnRenamed("doc_a", "doc_id")
+      val cands = Dedup.bandPairs(bands, 64)
+        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_candidates"))
       sigs.groupBy("doc_id")
         .agg(
           count(lit(1)).as("n_hashes"),
@@ -62,8 +53,7 @@ object ExtensionQueries {
     },
     // SimHash near-dup over the PORTABLE (md5) hash family: signatures
     // + per-doc candidate count, all recomputed by the DuckDB oracle
-    // (bit sums, sign assembly, byte-banding, Hamming filter). The
-    // xxhash64 family stays the in-Spark fast path (simHashSignatures).
+    // (bit sums, sign assembly, byte-banding, Hamming filter).
     "d3_dedup_simhash" -> { (spark, dir) =>
       val docs = Tables.documentsParallel(spark, dir)
       // PIN the signatures (optimization r15): sigs feed the band
@@ -80,8 +70,7 @@ object ExtensionQueries {
       // same accepted class as tm2's gate-barrier checkpoint.
       val sigs = Dedup.simHashPortableSignatures(docs)
         .localCheckpoint(eager = true)
-      val cands = Dedup.simHashCandidates(docs, maxHamming = 10,
-        precomputedSigs = Some(sigs))
+      val cands = Dedup.simHashCandidates(sigs, maxHamming = 10)
       val perDoc = cands
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .groupBy("doc_id")
@@ -226,8 +215,7 @@ object ExtensionQueries {
     // pointer-jumping component loop is gated. Invariants also in
     // DedupSpec.
     "d7_dedup_pipeline" -> { (spark, dir) =>
-      Dedup.dedupPipeline(Tables.documentsParallel(spark, dir),
-          minJaccard = 0.05, portable = true)
+      Dedup.dedupPipeline(Tables.documentsParallel(spark, dir), minJaccard = 0.05)
         .orderBy("doc_id")
     },
     // Transitive near-dup clusters: connected components (iterative
@@ -267,11 +255,16 @@ object ExtensionQueries {
       // buffer falls out of HashAggregateExec's mutable-buffer row
       // (the r15 plan ran 4 SortAggregates); max(BIGINT) keeps the whole
       // keep decision hash-aggregated with map-side partials. Domain:
-      // exact while doc_id < 2^32 and n_words < 2^31 — the same
-      // documented-integer-headroom posture as mod1's 4m·e_c bound
-      // (past 4.3e9 docs, widen to the struct form or DECIMAL).
-      val packed = shiftleft(col("n_words"), 32) +
-        (lit(4294967295L) - col("doc_id"))
+      // exact while 0 ≤ doc_id < 2^32 and n_words < 2^31. n_words is
+      // an INT size(), so only doc_id (unvalidated input) can leave the
+      // domain; such a row fails the query via raise_error inside the
+      // aggregate's own input, so the check adds no job (past 4.3e9
+      // docs, widen to the struct form or DECIMAL).
+      val packed = when(col("doc_id").between(0L, 4294967295L),
+          shiftleft(col("n_words"), 32) + (lit(4294967295L) - col("doc_id")))
+        .otherwise(raise_error(concat(
+          lit("d12_quality_canonical: doc_id outside [0, 2^32) breaks the packed argmax: "),
+          col("doc_id").cast("string"))))
       clusters.join(nw, Seq("doc_id"))
         .groupBy("cluster_id")
         .agg(count(lit(1)).as("n_members"),
@@ -797,7 +790,7 @@ object ExtensionQueries {
     // rewrite — delete cost is O(batch) at any corpus size); serving
     // anti-joins it broadcast. The net dead set [108,208) can never
     // appear in results — the oracle replays the same artifacts incl.
-    // the tombstone filter; AnnIndexSpec pins delete/re-add/compaction.
+    // the tombstone filter; AnnIndexSpec pins delete/re-add.
     "x30_ann_index_delete" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
       val root = Similarity.indexRoot(dir) + "_del"

@@ -767,23 +767,14 @@ object WorkloadQueries {
         .select(col("doc_a"), col("doc_b"),
           expr("(20 * n_inter) div (n_a + n_b - n_inter)").as("jb"))
       val sigs = Dedup.minHashPortable(docs, 3, 16)
-      // EAGER: three join consumers (sized + both sides of the candidate
-      // self-join) re-materialize a LAZY checkpoint once per branch — the
-      // mod1 lesson (9.1→2.9 s there), and the most plausible cause of
-      // dr1's load-sensitivity in the r10 driver window (VERDICT r10 #2).
+      // EAGER: a LAZY checkpoint re-materializes once per consuming
+      // branch — the mod1 lesson (9.1→2.9 s there), and the most
+      // plausible cause of dr1's load-sensitivity in the r10 driver
+      // window (VERDICT r10 #2).
       val bands = Dedup.portableBandKeys(sigs, 4)
         .localCheckpoint(eager = true)
-      val sized = bands.groupBy("band_idx", "band_key")
-        .agg(count(lit(1)).as("__n"))
-        .where(col("__n").between(2, 64))
-        .drop("__n")
-      val cand = bands.join(sized, Seq("band_idx", "band_key"))
-        .select(col("band_idx"), col("band_key"), col("doc_id").as("doc_a"))
-        .join(bands.select(col("band_idx"), col("band_key"),
-          col("doc_id").as("doc_b")), Seq("band_idx", "band_key"))
-        .where(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-        .withColumn("hit", lit(1L))
+      val cand = Dedup.bandPairs(bands, 64)
+        .select(col("doc_a"), col("doc_b"), lit(1L).as("hit"))
       truth.join(cand, Seq("doc_a", "doc_b"), "left")
         .groupBy("jb")
         .agg(count(lit(1)).as("n_true"),

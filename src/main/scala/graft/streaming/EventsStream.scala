@@ -161,10 +161,6 @@ object EventsStream {
       .orderBy("user_id")
   }
 
-  /** Run the windowed aggregation over `$dir/events.parquet` as a stream,
-    * landing results in a memory sink; returns the final table:
-    * (day, event_type, n_events, sum_value).
-    */
   /** The one watermarked 1-day-window aggregate behind BOTH
     * [[dailyAggregates]] and [[goldRefresh]] — the two queries gate
     * against the same batch oracle, so they must share the plan.
@@ -190,6 +186,10 @@ object EventsStream {
       col("sum_value"),
     )
 
+  /** Run the windowed aggregation over `$dir/events.parquet` as a stream,
+    * landing results in a memory sink; returns the final table:
+    * (day, event_type, n_events, sum_value).
+    */
   def dailyAggregates(spark: SparkSession, dir: String): DataFrame = {
     dailyProjection(
       runToMemory(dailyAggStream(spark, dir), spark, "complete", "events_daily"))

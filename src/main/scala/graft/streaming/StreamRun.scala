@@ -16,6 +16,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a pure startup-cost knob (a production deployment sizes it to state
   * volume, not to this harness default).
   *
+  * Cost floor, measured (sf0.1, local[32], warm JVM): a MINIMAL
+  * one-batch file-stream drive — noop sink, no watermark, no state —
+  * costs ~0.5-1.1 s; the smallest stateful one ~1.0-1.2 s. That is
+  * micro-batch lifecycle (per-batch incremental re-planning, offset
+  * WAL, no-data watermark batch, stop), not our query plans: the
+  * engine's streaming queries time within ~0.1-0.4 s of the floor.
+  * The knobs in this object (state partitions, RAM-disk checkpoints)
+  * removed the costs ABOVE the floor; pushing further means faking the
+  * drive, not running it.
+  *
   * The memory sink snapshot is materialized (`localCheckpoint`) and its
   * backing temp view dropped immediately: the sink caches every batch's
   * rows on the driver, and a long-lived session (the bench runs each
@@ -55,16 +65,6 @@ object StreamRun {
     driveLog.iterator().asScala.toSeq
   }
 
-  /** Cost floor, measured (sf0.1, local[32], warm JVM): a MINIMAL
-    * one-batch file-stream drive — noop sink, no watermark, no state —
-    * costs ~0.5-1.1 s; the smallest stateful one ~1.0-1.2 s. That is
-    * micro-batch lifecycle (per-batch incremental re-planning, offset
-    * WAL, no-data watermark batch, stop), not our query plans: the
-    * engine's streaming queries time within ~0.1-0.4 s of the floor.
-    * The knobs below (state partitions, RAM-disk checkpoints) removed
-    * the costs ABOVE the floor; pushing further means faking the drive,
-    * not running it.
-    */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
@@ -129,11 +129,10 @@ object StreamRun {
 
   /** Start `df` into a memory sink named `name`, drain it synchronously,
     * and return the MATERIALIZED snapshot with the sink table dropped
-    * and the ephemeral checkpoint removed.
-    */
-  /** `needsNoDataBatch`: event-time TIMERS only fire in the watermark-
-    * advancing no-data batch after the data drains — a timer-driven query
-    * must opt back into it (everything else skips it, see withStreamConf).
+    * and the ephemeral checkpoint removed. `needsNoDataBatch`: event-time
+    * TIMERS only fire in the watermark-advancing no-data batch after the
+    * data drains — a timer-driven query must opt back into it
+    * (everything else skips it, see withStreamConf).
     */
   def toMemorySnapshot(df: DataFrame, mode: String, name: String,
       needsNoDataBatch: Boolean = false): DataFrame = {

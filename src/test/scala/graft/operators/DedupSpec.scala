@@ -32,12 +32,15 @@ class DedupSpec extends SparkSpec {
   test("minhash: identical docs share a full signature; candidates found") {
     val base = (1 to 30).map(i => s"tok$i").mkString(" ")
     val d = docs(1L -> base, 2L -> base, 3L -> (1 to 30).map(i => s"other$i").mkString(" "))
-    val sigs = Dedup.minHashSignatures(d, k = 3, numHashes = 16)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val sigs = Dedup.minHashPortable(d, k = 3, numHashes = 16).collect()
+      .groupBy(_.getAs[Long]("doc_id")).view
+      .mapValues(_.map(r => r.getAs[Int]("h_idx") -> r.getAs[Long]("min_hash")).toMap)
+      .toMap
+    assert(sigs(1L).size == 16)
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))
-    val cands = Dedup.minHashCandidates(d).collect()
-    val pair = cands.find(r => r.getLong(1) == 1L && r.getLong(0) == 2L || r.getAs[Long]("doc_a") == 1L && r.getAs[Long]("doc_b") == 2L)
+    val cands = Dedup.minHashCandidatesPortable(d).collect()
+    val pair = cands.find(r => r.getAs[Long]("doc_a") == 1L && r.getAs[Long]("doc_b") == 2L)
     assert(pair.isDefined, s"expected (1,2) candidate, got ${cands.mkString(";")}")
     assert(math.abs(pair.get.getAs[Double]("jaccard") - 1.0) < 1e-12)
   }
@@ -45,8 +48,42 @@ class DedupSpec extends SparkSpec {
   test("simhash: identical docs get identical signatures, hamming 0") {
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
     val d = docs(10L -> base, 11L -> base)
-    val cands = Dedup.simHashCandidates(d, maxHamming = 0).collect()
+    val sigs = Dedup.simHashPortableSignatures(d)
+    val cands = Dedup.simHashCandidates(sigs, maxHamming = 0).collect()
     assert(cands.length == 1 && cands.head.getAs[Int]("hamming") == 0)
+  }
+
+  test("bandPairs: capped bucket pairs equal a driver-side replay; d2 counts are the pair degrees") {
+    val docs = graft.Tables.documents(spark, sf0001)
+    // d2's and dr1's band relation: 16 portable hashes in 4 bands of 4
+    val bands = Dedup.portableBandKeys(Dedup.minHashPortable(docs, 3, 16), 4)
+      .localCheckpoint(eager = true)
+    val rows = bands.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("band_idx"), r.getAs[Long]("band_key")))
+    // replay: bucket by (band_idx, band_key), keep buckets of 2..cap
+    // members, count the buckets each doc_a < doc_b pair shares
+    def replay(cap: Int): Map[(Long, Long), Long] =
+      rows.groupBy(r => (r._2, r._3)).values.map(_.map(_._1).sorted.toSeq)
+        .filter(m => m.length >= 2 && m.length <= cap)
+        .flatMap(m => for (a <- m; b <- m if a < b) yield (a, b))
+        .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    def got(cap: Int): Map[(Long, Long), Long] =
+      Dedup.bandPairs(bands, cap).collect()
+        .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) -> r.getAs[Long]("n_bands"))
+        .toMap
+    val want = replay(64)
+    assert(want.nonEmpty, "the fixture must produce candidate pairs")
+    assert(got(64) == want)
+    // the upper gate is exercised too: a cap of 2 keeps only the pair buckets
+    assert(replay(2) != want && got(2) == replay(2))
+
+    val degree = want.keys.toSeq.flatMap { case (a, b) => Seq(a, b) }
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val d2 = graft.SparkEntry.queries("d2_dedup_minhash")(spark, sf0001).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_candidates")).toMap
+    assert(d2.nonEmpty && d2.forall { case (id, n) => n == degree.getOrElse(id, 0L) },
+      "d2's n_candidates must be each doc's degree in the capped pair set")
+    Checkpoints.release(bands)
   }
 
   test("cosine near-dup: identical consecutive vectors score 1.0") {

@@ -133,4 +133,23 @@ class RoundNineOpsSpec3 extends SparkSpec {
       assert(r.getLong(5) == members.map(nw).sum - nw(best), "words_dropped")
     }
   }
+
+  test("d12: a doc_id outside the packed argmax domain fails the query") {
+    import spark.implicits._
+    def run(ids: Long*) = {
+      val dir = graft.tools.Scratch.dir("d12-domain").toString
+      ids.map(id => (id, "alpha beta gamma delta", "en")).toDF("doc_id", "text", "lang")
+        .write.parquet(s"$dir/documents.parquet")
+      SparkEntry.queries("d12_quality_canonical")(spark, dir).collect()
+    }
+    // the domain's top edge still packs exactly
+    val edge = run(4294967294L, 4294967295L)
+    assert(edge.map(_.getLong(2)).toSeq == Seq(4294967294L))
+    for (bad <- Seq(4294967296L, -1L)) {
+      val e = intercept[Exception](run(1L, bad))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("packed argmax")), s"doc_id $bad: $e")
+    }
+  }
 }

@@ -232,8 +232,13 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     val old = emb.where(col("vec_id") < 96)
     val nw = emb.where(col("vec_id") >= 96 && col("vec_id") < 120)
-    def run() = Similarity.nnDescentUpsert(old, nw, graphK = 8)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    def run() = {
+      val g = Similarity.nnDescent(old, graphK = 8, rounds = 3, seedBucketSize = 32)
+        .select(col("v"), col("nbr").as("u"), col("cosine"))
+        .localCheckpoint(eager = true)
+      Similarity.nnDescentUpsertWithGraph(g, old, nw, graphK = 8)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    }
     val a = run()
     assert(a == run(), "the upsert must be rerun-deterministic")
     assert(a.forall { case (v, _, u) => v != u }, "no self-edges")
