@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSimilarity, LshBuckets, PqEncode, QuantizedCosine, ShingleGen}
+import graft.functions.{LshBuckets, PqEncode, QuantizedCosine, ShingleGen}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * Catalyst expressions into the SQL function registry, so
-  * `SELECT cosine_similarity(a, b)` works alongside the Column API.
+  * `SELECT quantized_cosine(a, b)` works alongside the Column API.
   *
   * [[GraftSession]] installs it; a session built elsewhere can set
   * `spark.sql.extensions=graft.GraftExtensions`.
@@ -32,17 +32,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (on by default; spark.graft.topk.rewrite=false restores the
     // Window + WindowGroupLimit plan).
     e.injectOptimizerRule(_ => new graft.plans.RewriteRankFilterToTopK)
-    e.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(
-        classOf[CosineSimilarity].getName, null, "cosine_similarity",
-        "cosine_similarity(a, b) - cosine similarity of two float arrays",
-        "", "", "", "math_funcs", "1.0.0", "", "scala_udf"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "cosine_similarity takes exactly 2 arguments")
-        CosineSimilarity(exprs(0), exprs(1))
-      },
-    ))
     e.injectFunction((
       FunctionIdentifier("quantized_cosine"),
       new ExpressionInfo(

@@ -32,11 +32,7 @@ object Verify {
         .foreach { stale =>
           if (isDump(stale)) {
             System.err.println(s"[verify] removing stale dump: ${stale.getName}")
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-              f.delete(): Unit
-            }
-            rm(stale)
+            graft.tools.Scratch.deleteRecursively(stale.toPath)
           } else {
             System.err.println(
               s"[verify] leaving non-dump directory alone: ${stale.getName}")

@@ -8,17 +8,13 @@ import org.apache.spark.sql.types._
   * Spark's codegen'd higher-order functions (`zip_with`/`aggregate`) — no
   * UDFs, so the whole expression stays inside WholeStageCodegen.
   *
-  * Two profiles:
-  *  - `*Exact`: elements are quantized by an exact power-of-two scale
-  *    (float x 2^20 is an exponent shift — no rounding — and floor of it is
-  *    an exact integer), then accumulated in integer arithmetic. Fully
-  *    order-independent AND engine-independent: any system computing
-  *    floor(x * 2^20) sums the identical integers, so results hash-match a
-  *    DuckDB oracle bit-for-bit. Quantization error ~2^-20 per element is
-  *    inherent to the operator's contract (similarity scores, not ledgers).
-  *  - `*Fast`: plain double fold — deterministic per row (array order is
-  *    fixed) but not portable across engines. Used by scale paths (LSH
-  *    bucketing) that have rows-only checks.
+  * Elements are quantized by an exact power-of-two scale (float x 2^20 is
+  * an exponent shift — no rounding — and floor of it is an exact
+  * integer), then accumulated in integer arithmetic. Fully
+  * order-independent AND engine-independent: any system computing
+  * floor(x * 2^20) sums the identical integers, so results hash-match a
+  * DuckDB oracle bit-for-bit. Quantization error ~2^-20 per element is
+  * inherent to the operator's contract (similarity scores, not ledgers).
   */
 object VectorMath {
   private val Scale = 1048576.0 // 2^20: exact scaling for float inputs
@@ -48,15 +44,4 @@ object VectorMath {
   def cosineExactHof(a: Column, b: Column): Column =
     dotExactQ(a, b).cast(DoubleType) /
       (sqrt(dotExactQ(a, a).cast(DoubleType)) * sqrt(dotExactQ(b, b).cast(DoubleType)))
-
-  /** Double-fold dot product (fast path, no quantization). */
-  def dotFast(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0),
-      (acc, v) => acc + v,
-    )
-
-  def cosineFast(a: Column, b: Column): Column =
-    dotFast(a, b) / (sqrt(dotFast(a, a)) * sqrt(dotFast(b, b)))
 }

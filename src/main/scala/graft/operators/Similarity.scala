@@ -242,18 +242,16 @@ object Similarity {
     *    join) — the on-disk layout IS the 1/nLists read cut IVF promises.
     *
     * Skips when both artifacts have a committed snapshot (build once,
-    * serve many), unless `force`.
+    * serve many).
     */
   def buildIvfIndex(
       corpus: DataFrame,
       root: String,
       nLists: Int = 16,
-      force: Boolean = false,
   ): Unit = {
     val spark = corpus.sparkSession
     val arts = Seq("centroids.parquet", "lists.parquet")
-    if (force ||
-        !arts.forall(a => AtomicLayer.latestCommitted(spark, s"$root/$a").isDefined)) {
+    if (!arts.forall(a => AtomicLayer.latestCommitted(spark, s"$root/$a").isDefined)) {
       ivfBuilds.incrementAndGet()
       val centroids = sampleCentroids(corpus, nLists)
       AtomicLayer.write(centroids, s"$root/centroids.parquet", keepVersions = 1)
@@ -569,9 +567,9 @@ object Similarity {
     *  - `index.parquet`     (c_vec, list_id, codes) — the encoded corpus.
     *
     * Skips when all three already have a committed snapshot (build
-    * once, serve many — the warmup builds, every later call serves),
-    * unless `force`. keepVersions=1 so exactly one committed version
-    * exists at serve time (the oracle reads `v*` by glob).
+    * once, serve many — the warmup builds, every later call serves).
+    * keepVersions=1 so exactly one committed version exists at serve
+    * time (the oracle reads `v*` by glob).
     */
   def buildIvfPqIndex(
       corpus: DataFrame,
@@ -579,13 +577,11 @@ object Similarity {
       nLists: Int = 16,
       nSub: Int = 8,
       nCodes: Int = 32,
-      force: Boolean = false,
   ): Unit = {
     require(nCodes >= 1, s"need at least one codeword, got $nCodes")
     val spark = corpus.sparkSession
     val arts = Seq("centroids.parquet", "codebook.parquet", "index.parquet")
-    if (force ||
-        !arts.forall(a => AtomicLayer.latestCommitted(spark, s"$root/$a").isDefined)) {
+    if (!arts.forall(a => AtomicLayer.latestCommitted(spark, s"$root/$a").isDefined)) {
       val centroids = sampleCentroids(corpus, nLists)
       val sample = pqSample(corpus, nSub, nCodes)
       AtomicLayer.write(centroids, s"$root/centroids.parquet", keepVersions = 1)
@@ -1187,9 +1183,9 @@ object Similarity {
     s"/tmp/graft_graph_index/${new java.io.File(dir).getName}"
 
   /** Build + PERSIST the NN-descent kNN graph as an index artifact.
-    * Skips when a committed snapshot exists (build once, serve many),
-    * unless `force`. keepVersions = 1 so the oracle's `v*` glob
-    * resolves exactly one version.
+    * Skips when a committed snapshot exists (build once, serve many).
+    * keepVersions = 1 so the oracle's `v*` glob resolves exactly one
+    * version.
     */
   def buildNndGraphIndex(
       corpus: DataFrame,
@@ -1197,11 +1193,10 @@ object Similarity {
       graphK: Int = 15,
       rounds: Int = 3,
       seedBucketSize: Int = 32,
-      force: Boolean = false,
   ): Unit = {
     val spark = corpus.sparkSession
     val path = s"$root/edges.parquet"
-    if (force || AtomicLayer.latestCommitted(spark, path).isEmpty) {
+    if (AtomicLayer.latestCommitted(spark, path).isEmpty) {
       AtomicLayer.write(
         nnDescent(corpus, graphK, rounds, seedBucketSize)
           .select(col("v"), col("rank"), col("nbr"), col("cosine")),

@@ -234,8 +234,7 @@ object ScaleOpsQueries {
     // rides QueryExprs.revQ exact-integer cents, sum_qty is summed as
     // LONG, so the rollup is bit-identical across engines.
     "bkt1_bucketed_join" -> { (spark, dir) =>
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_bucketed").getAbsolutePath
+      val base = graft.tools.Scratch.dir("bkt1").toString
       // Keyed repartition before the bucketed write (optimization r15 +
       // r16, guide §6): bucket placement is pmod(murmur3(key), 8) — the
       // same function as HashPartitioning — and hash partitions NEST
@@ -284,12 +283,7 @@ object ScaleOpsQueries {
     // never torn by the new write (fresh v<n> dir + marker), which is
     // the property that makes concurrent refresh safe at any scale.
     "tt1_time_travel" -> { (spark, dir) =>
-      import org.apache.hadoop.fs.Path
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_tt1").getAbsolutePath
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true) // deterministic two-version history
+      val root = graft.tools.Scratch.dir("tt1").toString
       val orders = Tables.orders(spark, dir)
         .select("o_orderkey", "o_totalprice")
       graft.energy.AtomicLayer.write(
@@ -313,8 +307,7 @@ object ScaleOpsQueries {
     // the join against the bucket-aligned orders table shuffles
     // NEITHER side.
     "bkt2_partitioned_bucketed" -> { (spark, dir) =>
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_bucketed").getAbsolutePath
+      val base = graft.tools.Scratch.dir("bkt2").toString
       // same one-bucket-per-task, data-driven pre-partitioning as bkt1
       // (nested hash: h mod N = p and 8 | N ⇒ h mod 8 = p mod 8; a
       // partitioned table writes one file per (partition dir, task))

@@ -327,8 +327,7 @@ object SurfaceQueries {
     // round-trips losslessly (counts, distincts and exact value cents
     // match the unwritten source in the oracle).
     "pw1_partitioned_sink" -> { (spark, dir) =>
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_pw1").getAbsolutePath
+      val out = graft.tools.Scratch.dir("pw1").toString
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts_sec"), col("value"))
@@ -377,8 +376,7 @@ object SurfaceQueries {
     // oracle proves type fidelity (dates, doubles, strings) through the
     // ORC writer/reader pair.
     "orc1_roundtrip" -> { (spark, dir) =>
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_orc1").getAbsolutePath
+      val out = graft.tools.Scratch.dir("orc1").toString
       Tables.orders(spark, dir)
         .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice",
           "o_orderdate")
@@ -399,8 +397,7 @@ object SurfaceQueries {
     // the text — newlines, quotes, unicode — survives the JSON
     // escape/unescape pair byte-for-byte.
     "jsonl1_roundtrip" -> { (spark, dir) =>
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_jsonl1").getAbsolutePath
+      val out = graft.tools.Scratch.dir("jsonl1").toString
       Tables.documents(spark, dir).write.mode("overwrite").json(out)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
@@ -421,8 +418,7 @@ object SurfaceQueries {
     // pure layout, the metadata-stampede fix, never a content change.
     // files_reduced carries the layout claim into the oracle gate.
     "cmp1_compaction_roundtrip" -> { (spark, dir) =>
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_cmp1").getAbsolutePath
+      val base = graft.tools.Scratch.dir("cmp1").toString
       val src = s"$base/src"
       val dst = s"$base/dst"
       Tables.events(spark, dir)
@@ -447,8 +443,7 @@ object SurfaceQueries {
     // good-row checksum prove exactly the planted lines — no more, no
     // fewer — were quarantined.
     "src1_jsonl_corrupt" -> { (spark, dir) =>
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_src1").getAbsolutePath
+      val out = graft.tools.Scratch.dir("src1").toString
       val good = Tables.documents(spark, dir)
         .select(to_json(struct(col("doc_id"), col("lang"))).as("value"))
       val bad = spark.range(7)
@@ -475,8 +470,7 @@ object SurfaceQueries {
     // Numeric/date/string columns only — the checksum proves the
     // quote/escape pair and the typed re-read are lossless.
     "csv1_roundtrip" -> { (spark, dir) =>
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_csv1").getAbsolutePath
+      val out = graft.tools.Scratch.dir("csv1").toString
       Tables.customer(spark, dir)
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
         .write.mode("overwrite").option("header", "true").csv(out)

@@ -242,7 +242,7 @@ object EventsStream {
     * atomicity (what Delta gave the reference; SURVEY §2.13 / K1).
     */
   def goldRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val rootDir = java.nio.file.Files.createTempDirectory("st13-gold")
+    val rootDir = graft.tools.Scratch.dir("st13")
     val root = rootDir.toString
     try {
       StreamRun.driveForeachBatch(dailyAggStream(spark, dir), "complete",
@@ -255,13 +255,7 @@ object EventsStream {
       graft.energy.AtomicLayer.read(spark, root)
         .orderBy("day", "event_type")
         .localCheckpoint()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(rootDir.toFile)
-    }
+    } finally graft.tools.Scratch.deleteRecursively(rootDir)
   }
 
   /** Bounded-state streaming dedup: `dropDuplicatesWithinWatermark`

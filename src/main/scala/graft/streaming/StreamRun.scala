@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.tools.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared drive harness for the synchronous local streaming queries.
@@ -116,15 +117,10 @@ object StreamRun {
     * checkpoint at durable storage precisely BECAUSE it resumes; this
     * knob only applies to the drain-and-discard harness path.
     */
-  private def ephemeralCheckpointRoot: String = {
+  private lazy val ephemeralCheckpointRoot: String = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-stream-ckpt"
-    else sys.props("java.io.tmpdir") + "/graft-stream-ckpt"
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+    else Scratch.dir("stream-ckpt").toString
   }
 
   /** Start `df` into a memory sink named `name`, drain it synchronously,
@@ -178,7 +174,7 @@ object StreamRun {
           query.processAllAvailable()
           drainNs = System.nanoTime() - d0
         } finally query.stop()
-      } finally deleteRecursively(ckpt)
+      } finally Scratch.deleteRecursively(ckpt.toPath)
     }
     val totalNs = System.nanoTime() - t0
     driveLog.add(DriveStats(name, drainNs / 1e9, (totalNs - drainNs) / 1e9))

@@ -21,7 +21,7 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.adaptive.enabled" -> "true")
     contract.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
     // GraftExtensions registered its SQL functions
-    assert(spark.catalog.functionExists("cosine_similarity"))
+    assert(spark.catalog.functionExists("quantized_cosine"))
   }
 
   test("no source outside GraftSession.scala builds a SparkSession") {

@@ -360,18 +360,21 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pw1: the read-back scan partition-prunes on event_type") {
-    import org.apache.spark.sql.functions.col
-    q("pw1_partitioned_sink").collect() // writes the partitioned layout
-    val out = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_pw1").getAbsolutePath
-    val read = spark.read.parquet(out).where(col("event_type") === "click")
-    val scan = read.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val df = q("pw1_partitioned_sink")
+    df.collect() // let AQE finalize; the scans sit inside query stages
+    val scans = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f
     }
-    assert(scan.nonEmpty)
-    assert(scan.get.relation.location.listFiles(
-        scan.get.partitionFilters, scan.get.dataFilters).length == 1,
-      "expected exactly the click partition to be read")
+    assert(scans.nonEmpty, df.queryExecution.executedPlan.toString.take(600))
+    scans.foreach { scan =>
+      assert(scan.relation.partitionSchema.fieldNames.toSeq == Seq("event_type"))
+      assert(scan.partitionFilters.nonEmpty, "the filter must reach the scan as a partition filter")
+      assert(scan.relation.location.listFiles(
+          scan.partitionFilters, scan.dataFilters).length == 1,
+        "expected exactly the click partition to be read")
+    }
   }
 
   test("withScanParallelism: multi-split input plans no Exchange; single-split repartitions") {

@@ -172,16 +172,23 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("cosineExact matches cosineFast to quantization tolerance") {
-    val emb = Tables.embeddings(spark, sf0001).limit(50)
-      .select(col("embedding").as("a"), col("embedding").as("b"))
-    val both = emb.select(
-      VectorMath.cosineExact(col("a"), col("b")).as("e"),
-      VectorMath.cosineFast(col("a"), col("b")).as("f"),
-    ).collect()
-    both.foreach { r =>
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-4)
-      assert(math.abs(r.getDouble(0) - 1.0) < 1e-6) // self-cosine = 1
+  test("cosineExact matches a double cosine to quantization tolerance") {
+    val rows = Tables.embeddings(spark, sf0001).limit(50)
+      .select(col("embedding").as("a"), reverse(col("embedding")).as("b"))
+      .select(col("a"), col("b"),
+        VectorMath.cosineExact(col("a"), col("a")).as("self"),
+        VectorMath.cosineExact(col("a"), col("b")).as("e"))
+      .collect()
+    def cos(x: Seq[Float], y: Seq[Float]): Double = {
+      def dot(u: Seq[Float], v: Seq[Float]) =
+        u.zip(v).map { case (p, q) => p.toDouble * q.toDouble }.sum
+      dot(x, y) / (math.sqrt(dot(x, x)) * math.sqrt(dot(y, y)))
+    }
+    assert(rows.length == 50)
+    rows.foreach { r =>
+      val (a, b) = (r.getSeq[Float](0), r.getSeq[Float](1))
+      assert(math.abs(r.getDouble(2) - 1.0) < 1e-6) // self-cosine = 1
+      assert(math.abs(r.getDouble(3) - cos(a, b)) < 1e-4)
     }
   }
 

@@ -3,41 +3,44 @@ package graft.tools
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Scratch: every registered dir (and everything inside it) is gone
-  * after the exit-time sweep — the bench/verify/test no-debris
-  * guarantee. The sweep is exercised on an ISOLATED Registry instance
-  * (the same class the global hook drains): sweeping the global registry
-  * mid-run would delete dirs other suites are still reading.
+/** Scratch owns run-local space: every dir shares one per-run root that
+  * the exit hook deletes, and its recursive delete is the only one under
+  * `src/main`. The global root is never deleted mid-run here: other
+  * suites are still reading dirs inside it.
   */
 class ScratchSpec extends AnyFunSuite {
 
-  test("registered dirs are deleted recursively by the sweep") {
-    val reg = new Scratch.Registry
-    val d1 = reg.dir("scratch-spec")
-    val d2 = reg.dir("scratch-spec")
+  test("deleteRecursively removes a nested tree; dirs share one run root") {
+    val d1 = Scratch.dir("scratch-spec")
+    val d2 = Scratch.dir("scratch-spec")
+    assert(d1 != d2)
+    assert(d1.getParent == d2.getParent, "both dirs must sit in the run root")
+    assert(d1.getParent.getFileName.toString.startsWith("graft-run-"))
+
     val nested = d1.resolve("a/b")
     Files.createDirectories(nested)
     Files.write(nested.resolve("f.txt"), "x".getBytes)
-    Files.write(d2.resolve("g.txt"), "y".getBytes)
-    assert(Files.exists(nested) && Files.exists(d2))
+    Files.write(d1.resolve("g.txt"), "y".getBytes)
+    // a link out of the tree is removed, its target is not
+    val outside = d2.resolve("keep.txt")
+    Files.write(outside, "z".getBytes)
+    Files.createSymbolicLink(nested.resolve("link"), d2)
 
-    reg.sweep()
-    assert(!Files.exists(d1), "nested tree should be swept")
-    assert(!Files.exists(d2), "sibling dir should be swept")
-    // idempotent: a second sweep (hook after manual sweep) is a no-op
-    reg.sweep()
+    Scratch.deleteRecursively(d1)
+    assert(!Files.exists(d1), "nested tree should be deleted")
+    assert(Files.exists(outside), "a symlink target must survive")
+    // idempotent: deleting a missing path is a no-op
+    Scratch.deleteRecursively(d1)
+    Scratch.deleteRecursively(d2)
+    assert(!Files.exists(d2))
   }
 
   test("no unmanaged temp dirs outside the registry") {
-    // every createTempDirectory in the tree must route through Scratch
-    // (that was the r7 /tmp leak class); st13-gold additionally does its
-    // own EAGER try/finally cleanup and is allowed its direct call
+    // Scratch alone decides where run-local files go: no other source
+    // creates a temp dir, and no other main source names java.io.tmpdir
     import scala.jdk.CollectionConverters._
-    val allowed = Set(
-      "src/main/scala/graft/tools/Scratch.scala",
-      "src/main/scala/graft/streaming/EventsStream.scala", // st13: eager cleanup
-      "src/test/scala/graft/tools/ScratchSpec.scala", // this grep itself
-    )
+    val scratch = "src/main/scala/graft/tools/Scratch.scala"
+    val self = "src/test/scala/graft/tools/ScratchSpec.scala"
     // anchor at the repo root explicitly — a bare relative "src" walks
     // the wrong tree (vacuous pass) or throws when the test JVM's cwd
     // is not the repo root (forked tests, IDE runners)
@@ -49,9 +52,12 @@ class ScratchSpec extends AnyFunSuite {
     assert(Files.exists(srcRoot), s"missing $srcRoot")
     val leaky = Files.walk(srcRoot).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(p => allowed.contains(repoRoot.relativize(p).toString))
-      .filter(p => new String(Files.readAllBytes(p)).contains("createTempDirectory"))
-      .map(_.toString).toSeq
+      .map(p => repoRoot.relativize(p).toString -> new String(Files.readAllBytes(p)))
+      .filter { case (rel, text) =>
+        rel != scratch && rel != self && (text.contains("createTempDirectory") ||
+          (rel.startsWith("src/main/") && text.contains("java.io.tmpdir")))
+      }
+      .map(_._1).toSeq.sorted
     assert(leaky.isEmpty,
       s"unmanaged temp dirs in: ${leaky.mkString(", ")} — use Scratch.dir")
   }
