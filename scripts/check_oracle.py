@@ -75,9 +75,15 @@ def main(sf_dir, out_dir):
             print(f"STALE {n}: not in this run's query_names.json — skipped "
                   f"(delete the dir or re-run Verify unfiltered)")
         names = [n for n in names if n in owned]
+        # Verify records the cause of each query it could not dump
+        fl_path = f"{out_dir}/failures.json"
+        failures = json.load(open(fl_path)) if os.path.exists(fl_path) else {}
         for n in sorted(owned - set(names)):
+            f = failures.get(n)
+            why = (f"{f['class']}: {(f['message'].splitlines() or [''])[0]}"
+                   if f else "no cause in failures.json")
             print(f"FAIL {n}: listed in query_names.json but no dump "
-                  f"directory (query failed in Verify?)")
+                  f"directory — Verify failed: {why}")
             n_fail += 1
     for name in names:
         spark_tbl = pq.read_table(f"{out_dir}/{name}")

@@ -1,17 +1,30 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.SortedMap
+import scala.util.matching.Regex
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare, and
+  * failures.json (name → class and message of each failed query). The
+  * exit status stays 0 on failures: perfbench's `Record` calls [[main]]
+  * in process and records each cause itself. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // Optional third arg: regex over query names (dev-loop filter; the
     // driver always runs the full set).
     val Array(sfDir, outDir) = args.take(2)
-    val nameFilter = args.lift(2).map(_.r)
-    def selected(name: String): Boolean =
-      nameFilter.forall(_.findFirstIn(name).isDefined)
     val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    run(spark, sfDir, outDir, args.lift(2).map(_.r))
+    spark.stop()
+  }
+
+  /** One Verify pass on `spark` over the queries `nameFilter` selects
+    * (all when empty); returns the exception of each that failed. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      nameFilter: Option[Regex]): Map[String, Throwable] = {
+    def selected(name: String): Boolean =
+      nameFilter.forall(_.findFirstIn(name).isDefined)
     new java.io.File(outDir).mkdirs()
     // FRESH-OUTDIR GUARD: an UNFILTERED run owns the whole directory —
     // remove subdirectories for queries that no longer exist (renames /
@@ -39,27 +52,16 @@ object Verify {
           }
         }
     }
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+    val failures = SparkEntry.queries.toSeq.filter(kv => selected(kv._1))
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> e)
         }
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+      }.to(SortedMap)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -72,6 +74,27 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/query_names.json"),
         SparkEntry.queries.keys.toSeq.sorted
           .map(q).mkString("[", ",", "]"))
-    spark.stop()
+    // This run's failure causes, written on every run: it cannot make a
+    // sweep pass, and check_oracle.py prints the cause of a listed query
+    // that has no dump.
+    Files.writeString(Paths.get(s"$outDir/failures.json"),
+      failures.map { case (name, e) =>
+        s"${q(name)}: {${q("class")}: ${q(e.getClass.getName)}, " +
+          s"${q("message")}: ${q(String.valueOf(e.getMessage))}}"
+      }.mkString("{", ",", "}"))
+    failures
   }
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in builder-authored SQL would otherwise make the
+  // oracle check's json.load fail and silently zero its correctness count.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

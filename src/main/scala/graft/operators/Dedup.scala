@@ -313,90 +313,6 @@ object Dedup {
       )
   }
 
-  /** Connected components over a near-dup pair graph: every document gets
-    * `cluster_id` = the minimum doc_id reachable through candidate pairs
-    * (singletons cluster with themselves). This is the step that turns
-    * pairwise near-dup hits into dedup decisions — transitive chains
-    * (A≈B, B≈C) must collapse into ONE cluster or the pipeline keeps
-    * near-copies.
-    *
-    * Algorithm: min-label propagation accelerated with pointer jumping
-    * (the Pregel shape on DataFrames). Per round: one shuffle to send
-    * each node's label across its edges + a min-aggregate, then a
-    * label-of-label hop — every label is itself a node id, so following
-    * it halves the distance to the component root. Propagation alone
-    * converges in O(diameter) rounds; with the jump it is O(log
-    * diameter), so even a pathological million-node chain finishes in
-    * ~20 rounds. The loop runs TO CONVERGENCE — `maxIter` is a safety
-    * rail that throws instead of silently returning splintered clusters
-    * (the failure mode a capped loop would hide). Each round's result is
-    * `localCheckpoint`ed (flat lineage, cheap task retries) and the
-    * superseded checkpoint is unpersisted, bounding storage at two label
-    * tables regardless of round count. The convergence check is one tiny
-    * per-round action — labels never leave the cluster.
-    */
-  def connectedComponents(
-      nodes: DataFrame, // one column: id
-      edges: DataFrame, // two columns: a, b (undirected pairs)
-      maxIter: Int = 50,
-  ): DataFrame = {
-    // Pin the edge relation ONCE: it is read by every round's min-label
-    // join, and without the checkpoint each round re-derives it from
-    // scratch — for the LSH pipeline that re-runs candidate generation +
-    // Jaccard verification per jump (d6 12.4 s → 2.8 s at sf0.1; d7
-    // measures 2.2-2.8 s in BENCH_r04 runs — the 10 s d7 in BENCH_r03
-    // did not reproduce on the same tree and is attributed to a GC/host
-    // outlier during that run). Edges pin BEFORE the symmetric union:
-    // union reads its input twice, so checkpointing only the union would
-    // still evaluate the whole upstream pipeline twice. The pinned
-    // relation is only the near-dup PAIRS (two longs each), tiny
-    // relative to the corpus.
-    val pinned = edges.select(col("a"), col("b")).localCheckpoint()
-    val sym = pinned.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(pinned.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
-    Checkpoints.release(pinned) // sym is pinned eagerly above; the pre-union blocks can go
-    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val incoming = labels
-        .join(sym, col("id") === col("src"))
-        .groupBy(col("dst"))
-        .agg(min(col("label")).as("nbr_label"))
-      // `old` (the round's starting label) rides along to the checkpoint:
-      // the convergence test is then a filter over the already-pinned
-      // blocks instead of a per-round shuffle join of `next` back against
-      // `labels` (one whole Exchange+join per round removed; labels only
-      // ever DECREASE, so `label < old` is exactly the old join's test).
-      val propagated = labels
-        .join(incoming, col("id") === col("dst"), "left")
-        .select(col("id"), least(col("label"), col("nbr_label")).as("label"),
-          col("label").as("old"))
-      // Pointer jump: label := label(label). Labels are node ids, so the
-      // self-join resolves each label one more hop toward the root.
-      val roots = propagated
-        .select(col("id").as("r_id"), col("label").as("r_label"))
-      val next = propagated
-        .join(roots, col("label") === col("r_id"), "left")
-        .select(col("id"), least(col("label"), col("r_label")).as("label"),
-          col("old"))
-        .localCheckpoint()
-      converged = next.where(col("label") < col("old")).isEmpty
-      Checkpoints.release(labels)
-      labels = next.select(col("id"), col("label"))
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponents did not converge within $maxIter rounds — " +
-        "component diameter exceeds 2^rounds; raise maxIter")
-    // The result is the final checkpoint — its lineage no longer touches
-    // sym, so the edge blocks are dead weight in a long-lived session
-    // (the bench runs every query twice); free them before returning.
-    Checkpoints.release(sym)
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
-
   /** End-to-end dedup decision pipeline — the full production shape:
     * MinHash/LSH candidate generation → exact-Jaccard verification at
     * `minJaccard` → transitive clustering → keep-lowest-id decision.
@@ -425,7 +341,7 @@ object Dedup {
     * semantics cannot diverge between pipelines.
     */
   private def clusterAndKeep(docs: DataFrame, edges: DataFrame): DataFrame =
-    connectedComponents(docs.select(col("doc_id").as("id")), edges)
+    GraphOps.connectedComponents(docs.select(col("doc_id").as("id")), edges)
       .withColumn("is_kept", (col("doc_id") === col("cluster_id")).cast(IntegerType))
 
   /** Consecutive-pair bigram overlap — the oracle-checkable chain graph

@@ -160,7 +160,7 @@ object EmbeddingOps {
     * [[assignToCentroids]]). A Lloyd round therefore shuffles only the
     * (label, dim)-keyed centroid partials, never the corpus.
     * `localCheckpoint` between rounds keeps lineage flat (same
-    * discipline as [[Dedup.connectedComponents]]).
+    * discipline as [[GraphOps.connectedComponents]]).
     *
     * Returns the final assignment (vec_id, cluster, qdist). With real
     * (unquantized) means the Lloyd objective Σ dist is non-increasing;

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorMath
-import graft.operators.{Dedup, Multimodal, Sessionize, Similarity, TextAnalysis}
+import graft.operators.{Dedup, GraphOps, Multimodal, Sessionize, Similarity, TextAnalysis}
 import graft.streaming.EventsStream
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -238,7 +238,7 @@ object ExtensionQueries {
       val docs = Tables.documentsParallel(spark, dir)
       val edges = Dedup.consecutiveBigramEdges(docs, minJaccard = 0.05)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val clusters = Dedup.connectedComponents(
+      val clusters = GraphOps.connectedComponents(
         docs.select(col("doc_id").as("id")), edges)
       val nw = docs.select(col("doc_id"),
         size(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
@@ -598,7 +598,7 @@ object ExtensionQueries {
       val mutual = tk.join(rev, Seq("q_vec", "c_vec"), "left_semi")
         .where(col("q_vec") < col("c_vec"))
         .select(col("q_vec").as("a"), col("c_vec").as("b"))
-      graft.operators.Dedup
+      GraphOps
         .connectedComponents(sub.select(col("vec_id").as("id")), mutual)
         .select(col("doc_id").as("vec_id"), col("cluster_id").as("cluster"))
         .orderBy("vec_id")

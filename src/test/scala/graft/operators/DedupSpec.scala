@@ -98,38 +98,6 @@ class DedupSpec extends SparkSpec {
     assert(res(1).getAs[Double]("cosine") < 0.9)
   }
 
-  test("connected components: chains collapse transitively, singletons stay") {
-    import spark.implicits._
-    // graph: 1-2, 2-3 (chain -> one cluster rooted at 1); 5-6; 9 alone
-    val nodes = Seq(1L, 2L, 3L, 5L, 6L, 9L).toDF("id")
-    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
-    val got = Dedup.connectedComponents(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L))
-  }
-
-  test("connected components: pointer jumping beats the chain diameter") {
-    import spark.implicits._
-    // a 40-node path with only 8 rounds allowed: plain propagation moves
-    // the min one hop per round (needs 39); the label-of-label jump makes
-    // distance-to-root halve, so convergence is O(log diameter)
-    val n = 40L
-    val nodes = (1L to n).toDF("id")
-    val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
-    val got = Dedup.connectedComponents(nodes, edges, maxIter = 8)
-      .collect().map(r => r.getLong(1)).distinct
-    assert(got.toSeq == Seq(1L), "every node must reach the chain head")
-  }
-
-  test("connected components: throws instead of returning splintered clusters") {
-    import spark.implicits._
-    val nodes = (1L to 9L).toDF("id")
-    val edges = (1L until 9L).map(i => (i, i + 1)).toDF("a", "b")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(nodes, edges, maxIter = 1).collect()
-    }
-  }
-
   test("dedupPipeline: near-dup copies collapse, one kept per cluster") {
     import spark.implicits._
     val docs = Seq(

@@ -113,7 +113,7 @@ class RoundNineOpsSpec3 extends SparkSpec {
     val docs = Tables.documents(spark, sf0001)
     val edges = Dedup.consecutiveBigramEdges(docs, minJaccard = 0.05)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val clusters = Dedup.connectedComponents(
+    val clusters = GraphOps.connectedComponents(
         docs.select(col("doc_id").as("id")), edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val nw = docs.select(col("doc_id"),

@@ -6,7 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Property tests for the round-6 dedup kernels on RANDOM corpora (the
-  * fixed-seed sampling pattern of ConnectedComponentsPropSpec — the
+  * fixed-seed sampling pattern of EnergyPropertiesSpec — the
   * scalatest/scalacheck bridge artifact is not in the offline cache).
   *
   * Tiny vocabularies force heavy shingle sharing, so the random corpora
@@ -48,62 +48,6 @@ class RoundSixPropSpec extends SparkSpec {
       assert(got == expected,
         s"containment mismatch: extra=${got -- expected} missing=${expected -- got}\n" +
           corpus.map { case (i, s) => s"$i: '$s'" }.mkString("\n"))
-    }
-  }
-
-  test("minLabelRounds equals a reference K-round replay on random graphs") {
-    val gen = for {
-      n <- Gen.choose(2, 40)
-      m <- Gen.choose(0, 60)
-      k <- Gen.choose(1, 5)
-      edges <- Gen.listOfN(m, for {
-        a <- Gen.choose(0, n - 1); b <- Gen.choose(0, n - 1) if a != b
-      } yield (a.toLong, b.toLong))
-    } yield (n, k, edges)
-    for ((n, k, edges) <- samples(gen, 10)) {
-      val nodes = (0L until n.toLong).toDF("v")
-      val edgeDf = edges.toDF("doc_a", "doc_b")
-      val got = GraphOps.minLabelRounds(nodes, edgeDf, k)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // reference replay: synchronous min over self + neighbors, k rounds
-      val adj = (edges ++ edges.map(_.swap))
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      var lab = (0L until n.toLong).map(v => v -> v).toMap
-      for (_ <- 1 to k)
-        lab = lab.map { case (v, l) =>
-          v -> (adj.getOrElse(v, Nil).map(lab) :+ l).min
-        }
-      assert(got == lab, s"n=$n k=$k edges=$edges")
-    }
-  }
-
-  test("boundedSssp equals a reference k-round Bellman-Ford on random weighted graphs") {
-    val gen = for {
-      n <- Gen.choose(2, 30)
-      m <- Gen.choose(0, 50)
-      k <- Gen.choose(1, 5)
-      edges <- Gen.listOfN(m, for {
-        a <- Gen.choose(0, n - 1); b <- Gen.choose(0, n - 1) if a != b
-        w <- Gen.choose(1L, 9L)
-      } yield (a.toLong, b.toLong, w))
-    } yield (n, k, edges)
-    for ((n, k, edges) <- samples(gen, 10)) {
-      val nodes = (0L until n.toLong).toDF("v")
-      val edgeDf = edges.toDF("doc_a", "doc_b", "w")
-      val got = GraphOps.boundedSssp(nodes, edgeDf, k,
-          isSource = col("v") === 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val inf = GraphOps.SsspInf
-      val adj = (edges.map { case (a, b, w) => (a, (b, w)) } ++
-        edges.map { case (a, b, w) => (b, (a, w)) })
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      var d = (0L until n.toLong).map(v => v -> (if (v == 0L) 0L else inf)).toMap
-      for (_ <- 1 to k)
-        d = d.map { case (v, dv) =>
-          v -> (adj.getOrElse(v, Nil).map { case (u, w) =>
-            math.min(inf, d(u) + w) } :+ dv).min
-        }
-      assert(got == d, s"n=$n k=$k edges=$edges")
     }
   }
 

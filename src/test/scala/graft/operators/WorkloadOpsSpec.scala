@@ -4,8 +4,9 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** Specs for the round-4 workload operators: prefix-filtered set-similarity
-  * join (losslessness vs brute force), frontier BFS (vs a hand-checked
-  * graph), market-basket lift, Markov transitions, and lexical diversity.
+  * join (losslessness vs brute force), market-basket lift, Markov
+  * transitions, and lexical diversity. The graph operators' specs live in
+  * [[GraphOpsSpec]].
   */
 class WorkloadOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -34,21 +35,6 @@ class WorkloadOpsSpec extends SparkSpec {
     val bruteMap = brute.map(p => ((p._1, p._2), p._3)).toMap
     fast.foreach { case (a, b, j) => assert(j === bruteMap((a, b))) }
     assert(fast.nonEmpty, "fixture corpus should contain near-dup pairs")
-  }
-
-  test("bfsHops computes shortest hop counts on a hand-checked graph") {
-    // Path a-b-c-d plus a triangle a-e-f(-a): hops a=0 b=1 c=2 d=3 e=1 f=1.
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("a", "e"), ("e", "f"), ("f", "a"))
-      .toDF("ta", "tb")
-    val got = GraphOps.bfsHops(edges, maxHops = 10)
-      .as[(String, Int)].collect().toMap
-    assert(got === Map("a" -> 0, "b" -> 1, "c" -> 2, "d" -> 3, "e" -> 1, "f" -> 1))
-  }
-
-  test("bfsHops maxHops bound truncates the frontier, not the visited prefix") {
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("ta", "tb")
-    val got = GraphOps.bfsHops(edges, maxHops = 2).as[(String, Int)].collect().toMap
-    assert(got === Map("a" -> 0, "b" -> 1, "c" -> 2)) // d is beyond the bound
   }
 
   test("cooccurrenceLift: exact supports and the lift identity on a tiny fixture") {
@@ -80,33 +66,6 @@ class WorkloadOpsSpec extends SparkSpec {
     val nEvents = ev.count()
     val nUsers = ev.select("user_id").distinct().count()
     assert(rows.map(_._3).sum === nEvents - nUsers)
-  }
-
-  test("personalizedPageRank: all teleport mass returns to the source") {
-    // Star: center "a" — with teleport pinned to "a", leaves rank only
-    // via mass flowing from a; every leaf gets the same rank.
-    val edges = Seq(("a", "b"), ("a", "c"), ("a", "d")).toDF("ta", "tb")
-    val pr = GraphOps.personalizedPageRank(edges, iterations = 3)
-      .as[(String, Long)].collect().toMap
-    assert(pr("b") === pr("c") && pr("c") === pr("d"))
-    assert(pr("a") > pr("b")) // source keeps the teleport share
-    // Uniform pageRank on the same graph must differ from the
-    // personalized one on the leaves (teleport there is 0).
-    val uni = GraphOps.pageRank(edges, iterations = 3)
-      .as[(String, Long)].collect().toMap
-    assert(uni("b") !== pr("b"))
-  }
-
-  test("hits: exact integer scores match the hand-computed unrolled recursion") {
-    // Path a-b-c (symmetrized). h0=1 for all.
-    // a1: auth(v) = sum of h0 over in-neighbors = deg: a=1, b=2, c=1
-    // h1: hub(v) = sum of a1 over out-neighbors: a=2, b=2, c=2
-    // a2: auth = sum of h1 in-neighbors: a=2, b=4, c=2
-    // h2: hub = sum of a2 out-neighbors: a=4, b=4, c=4
-    val edges = Seq(("a", "b"), ("b", "c")).toDF("ta", "tb")
-    val got = GraphOps.hits(edges, iterations = 2)
-      .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(got === Map("a" -> (4L, 2L), "b" -> (4L, 4L), "c" -> (4L, 2L)))
   }
 
   test("streaming incremental dedup: no corpus hash survives, counts are exact") {
