@@ -1,10 +1,12 @@
 package graft.energy
 
 import graft.GraftSession
+import graft.operators.Compaction
 
 /** Pipeline orchestrator CLI — the Scala twin of the reference's
   * `src/main.py:28-114`: run the full Bronze → Silver → Gold backfill and
-  * print per-layer row counts and samples for human verification.
+  * print per-layer row counts, each layer table's committed data files,
+  * the wall time of the run, and Gold samples for human verification.
   *
   * Usage: EnergyMain <storageRoot> [startDate endDate]
   * The environment is zero-egress, so the source is the deterministic
@@ -39,12 +41,20 @@ object EnergyMain {
 
     val dates = Dates.dateRange(cfg.backfill.startDate, cfg.backfill.endDate)
     val src = FixtureEnergySource.synthetic(dates)
+    val t0 = System.nanoTime()
     val res = EnergyPipeline.run(spark, cfg, src)
+    val runS = (System.nanoTime() - t0) / 1e9
 
     println(s"bronze power rows: ${res.bronzePowerRows}")
     println(s"bronze price rows: ${res.bronzePriceRows}")
     println(s"silver power rows: ${res.silverPowerRows}")
     println(s"silver price rows: ${res.silverPriceRows}")
+    for (root <- EnergyPipeline.layerRoots(cfg.storage)) {
+      val files = AtomicLayer.latestCommitted(spark, root)
+        .fold(0)(Compaction.dataFiles(spark, _).size)
+      println(s"${root.stripPrefix(cfg.storage.root + "/")} data files: $files")
+    }
+    println(f"pipeline run: $runS%.3f s")
     println("gold power_daily_by_type:")
     res.goldPowerDaily.orderBy("date", "production_type").show(30, truncate = false)
     println("gold price_daily:")

@@ -90,6 +90,12 @@ object EnergyPipeline {
       price.silverRows, power.gold, price.gold, join)
   }
 
+  /** The seven table roots [[run]] commits, Bronze to the Gold join. */
+  def layerRoots(storage: StorageConfig): Seq[String] = Seq(
+    storage.bronze("power"), storage.bronze("price"), storage.silver("power"),
+    storage.silver("price"), storage.gold("power_daily_by_type"),
+    storage.gold("price_daily"), storage.gold("power_price_daily"))
+
   /** Evaluate `a` on a thread created here and `b` on the caller thread,
     * and return both results once both have finished. The thread is new
     * rather than pooled so that it inherits the caller's SparkContext

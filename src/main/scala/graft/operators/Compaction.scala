@@ -11,6 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * task, a footer read, and an open; compaction rewrites a directory into
   * ~size/target files so scans run at `maxPartitionBytes` granularity.
   *
+  * [[filesFor]] is the one bytes-to-files rule: `compact` sizes its output
+  * with it, and [[graft.energy.Bronze]] sizes the medallion's tasks and
+  * files with it, so a layer writes files by payload bytes, not one per
+  * core.
+  *
   * The rewrite is a plain repartition-and-write — no shuffle key, so rows
   * round-robin into equal-size outputs. Production systems compact per
   * partition directory (bounding each rewrite) and swap atomically via
@@ -31,15 +36,23 @@ object Compaction {
       .map(s => s.getPath.toString -> s.getLen)
   }
 
+  /** Files (or tasks) needed for `bytes` at ~`targetBytes` each:
+    * ceil(bytes / targetBytes), at least one. Computed without adding the
+    * two, so no target, however large, overflows.
+    */
+  def filesFor(bytes: Long, targetBytes: Long): Long = {
+    require(targetBytes > 0, "targetBytes must be positive")
+    require(bytes >= 0, "bytes must not be negative")
+    math.max(1L, bytes / targetBytes + (if (bytes % targetBytes == 0) 0L else 1L))
+  }
+
   /** Rewrite `srcDir` into `dstDir` with ~targetBytes per output file
-    * (at least one). Returns (filesBefore, filesAfter).
+    * ([[filesFor]]). Returns (filesBefore, filesAfter).
     */
   def compact(spark: SparkSession, srcDir: String, dstDir: String,
       targetBytes: Long): (Int, Int) = {
-    require(targetBytes > 0, "targetBytes must be positive")
     val before = dataFiles(spark, srcDir)
-    val totalBytes = before.map(_._2).sum
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
+    val nOut = filesFor(before.map(_._2).sum, targetBytes).toInt
     spark.read.parquet(srcDir)
       .repartition(nOut)
       .write.mode("overwrite").parquet(dstDir)

@@ -5,6 +5,7 @@ import java.util.Properties
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 import graft.SparkSpec
+import graft.operators.Compaction
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -116,13 +117,6 @@ class EnergyPipelineSpec extends SparkSpec {
     assert(keys("price", "market") == Seq("AT"))
   }
 
-  /** The seven table roots a run commits, Bronze to the Gold join. */
-  private def layerRoots(cfg: EnergyConfig): Seq[String] = {
-    val st = cfg.storage
-    Seq(st.bronze("power"), st.bronze("price"), st.silver("power"), st.silver("price"),
-      st.gold("power_daily_by_type"), st.gold("price_daily"), st.gold("power_price_daily"))
-  }
-
   test("run launches only SQL-execution jobs, as many for 40 days as for 3") {
     val sc = spark.sparkContext
     val TagKey = "graft.test.pipeline_run"
@@ -173,11 +167,43 @@ class EnergyPipelineSpec extends SparkSpec {
       // jobs' executions write every layer's next snapshot
       val tagged = jobs.flatMap(j => Option(j.getProperty("spark.sql.execution.id")))
         .flatMap(id => plans.get(id.toLong))
-      val missed = layerRoots(cfg).filterNot(root => tagged.exists(_.contains(s"$root/v")))
+      val missed = EnergyPipeline.layerRoots(cfg.storage).filterNot(root => tagged.exists(_.contains(s"$root/v")))
       assert(missed.isEmpty, s"$label: no tagged job wrote under $missed")
     }
     assert(short._2.nonEmpty && long._2.size == short._2.size,
       s"jobs: ${short._2.size} for 3 days, ${long._2.size} for 40 days")
+  }
+
+  test("Bronze and Silver file counts follow payload bytes, not cores") {
+    // data files in the committed Bronze and Silver snapshots, power first
+    def files(cfg: EnergyConfig): Seq[Int] = EnergyPipeline.layerRoots(cfg.storage).take(4)
+      .map(root => Compaction.dataFiles(spark, AtomicLayer.latestCommitted(spark, root).get).size)
+    // a few hundred KB at most: one task per table on the 4-core session
+    for (days <- Seq(3, 40)) assert(files(runDays(s"energy-files$days", days)) == Seq(1, 1, 1, 1),
+      s"$days days")
+
+    // ~1.3 MiB of power payload, 2.5 Bronze targets, padded in a field
+    // Silver's schema ignores: three tasks, and the same Silver rows as
+    // without padding
+    val start = day("2025-01-01")
+    val dates = Dates.dateRange(start, start.plusDays(4))
+    val fixture = FixtureEnergySource.synthetic(dates)
+    val pad = "x" * (256 * 1024)
+    val padded = new EnergySource {
+      def publicPower(country: String, date: LocalDate): String =
+        s"""{"padding": "$pad", ${fixture.publicPower(country, date).drop(1)}"""
+      def price(bzn: String, date: LocalDate): String = fixture.price(bzn, date)
+    }
+    def silverPower(prefix: String, src: EnergySource): (EnergyConfig, Seq[String]) = {
+      val cfg = EnergyConfig.default(graft.tools.Scratch.dir(prefix).toString)
+        .copy(backfill = BackfillConfig(dates.head, dates.last))
+      EnergyPipeline.run(spark, cfg, src)
+      (cfg, AtomicLayer.read(spark, cfg.storage.silver("power")).collect().map(_.toString).sorted.toSeq)
+    }
+    val (paddedCfg, paddedRows) = silverPower("energy-files-padded", padded)
+    val (_, plainRows) = silverPower("energy-files-plain", fixture)
+    assert(files(paddedCfg) == Seq(3, 1, 3, 1))
+    assert(paddedRows.size == 5 * 96 * 4 && paddedRows == plainRows)
   }
 
   test("a failing fetch throws as is and commits no layer") {
@@ -194,7 +220,7 @@ class EnergyPipelineSpec extends SparkSpec {
     }
     val thrown = intercept[IllegalStateException](EnergyPipeline.run(spark, cfg, failing))
     assert(thrown eq boom)
-    val committed = layerRoots(cfg).filter(AtomicLayer.latestCommitted(spark, _).nonEmpty)
+    val committed = EnergyPipeline.layerRoots(cfg.storage).filter(AtomicLayer.latestCommitted(spark, _).nonEmpty)
     assert(committed.isEmpty, s"committed despite the failed fetch: $committed")
   }
 

@@ -25,6 +25,16 @@ class CompactionSpec extends SparkSpec {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
+  test("filesFor is ceil(bytes / target), at least one, for any target") {
+    for (t <- Seq(1L, 1L << 20, Long.MaxValue / 2 + 1)) {
+      assert(Compaction.filesFor(0, t) === 1, s"(0, $t)")
+      assert(Compaction.filesFor(t, t) === 1, s"($t, $t)")
+      assert(Compaction.filesFor(t + 1, t) === 2, s"(${t + 1}, $t)")
+    }
+    for (x <- Seq(0L, 1L, Long.MaxValue - 1, Long.MaxValue))
+      assert(Compaction.filesFor(x, Long.MaxValue) === 1, s"($x, Long.MaxValue)")
+  }
+
   test("target larger than the table compacts to a single file") {
     val src = tmp("compact-one") + "/t"
     val dst = tmp("compact-one-dst") + "/t"
