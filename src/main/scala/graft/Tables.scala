@@ -62,8 +62,8 @@ object Tables {
     * branch — the shipped code path IS the scale-safe one. The split count
     * comes from the planned partitioning, not the data, so this adds no
     * job. Guarded by `PlanSpec` ("multi-split input plans no Exchange").
-    */
-  /** `keys`: hash-partition by these columns instead of round-robin
+    *
+    * `keys`: hash-partition by these columns instead of round-robin
     * (optimization r15, guide §2.4): a keyed repartition both skips the
     * local sort every round-robin repartition pays
     * (spark.sql.execution.sortBeforeRepartition) and is REUSED by any

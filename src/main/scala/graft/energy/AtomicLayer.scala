@@ -309,11 +309,23 @@ object AtomicLayer {
   }
 
   /** Read the highest committed snapshot. Falls back to reading `root`
-    * directly when no version directories exist (pre-atomic layouts and
-    * external tables stay readable).
+    * directly only when it has no `v<n>` child at all (pre-atomic
+    * layouts and external tables stay readable). A root whose version
+    * directories are all uncommitted — a first write that crashed or is
+    * still running — fails instead: reading `root` would list that torn
+    * version's part files.
     */
-  def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(latestCommitted(spark, root).getOrElse(root))
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val (fs, p) = fsFor(spark, root)
+    val versions = versionDirs(fs, p)
+    versions.filter(_._3).lastOption match {
+      case Some((_, dir, _)) => spark.read.parquet(dir.toString)
+      case None if versions.isEmpty => spark.read.parquet(root)
+      case None => throw new IllegalStateException(
+        s"no committed snapshot under $root: its ${versions.size} version " +
+          "director(y/ies) all lack _SUCCESS (a first write crashed or is in flight)")
+    }
+  }
 
   /** Highest `_merged_batch_id` folded into the committed snapshot at
     * `root`, or -1 when no snapshot exists or it is empty (an empty

@@ -40,6 +40,18 @@ object AsOfJoin {
     asofImpl(left, right, keyCols, leftTs, rightTs, rightPrefix, inner,
       forward = false)
 
+  /** Per-user event matching: each `leftType` event of `events`
+    * (user_id, ts, event_id) with the same user's nearest preceding
+    * `rightType` event by [[asof]], whose columns come back prefixed
+    * `<rightType>_`.
+    */
+  def priorEventOfType(events: DataFrame, leftType: String, rightType: String): DataFrame = {
+    def ofType(t: String) =
+      events.where(col("event_type") === t).select("user_id", "ts", "event_id")
+    asof(ofType(leftType), ofType(rightType), Seq("user_id"), "ts", "ts",
+      rightPrefix = s"${rightType}_")
+  }
+
   /** Forward as-of: for each left row, the right row with the SMALLEST
     * timestamp >= the left timestamp within the same key (`ON l.ts <=
     * r.ts` — "next quote after the trade"). Identical cost shape to the

@@ -133,23 +133,32 @@ object Contamination {
     // the scan + substring + md5 pipeline executes once, not twice.
     val wins = spanHashes(docs.withColumn("__eval", isEval), Seq("__eval"))
       .localCheckpoint(eager = true)
-    val evalHashes = wins.where(col("__eval")).select("h").distinct()
-      .withColumn("__hit", lit(1L))
-    val perDoc = wins.where(!col("__eval"))
-      .join(broadcast(evalHashes), Seq("h"), "left")
+    hitCounts(docs.where(!isEval), wins.where(!col("__eval")),
+      wins.where(col("__eval")), "h", "n_windows", "n_contaminated")
+  }
+
+  /** The per-document half of every contamination report: for each
+    * document of `train`, how many `key` rows it has in `trainKeys`
+    * (doc_id, key) and how many of those the `evalKeys` set also holds,
+    * as (doc_id, `nName`, `hitName`, contaminated) — zero-filled, so
+    * documents without keys still get a row. The eval set broadcasts
+    * (benchmarks are small; corpora are not).
+    */
+  private[graft] def hitCounts(train: DataFrame, trainKeys: DataFrame,
+      evalKeys: DataFrame, key: String, nName: String, hitName: String): DataFrame = {
+    val perDoc = Similarity
+      .markFound(trainKeys, broadcast(evalKeys.select(key).distinct()), Seq(key))
       .groupBy("doc_id")
-      .agg(
-        count(lit(1)).as("__nw"),
-        sum(coalesce(col("__hit"), lit(0L))).as("__nc"))
-    // Left-join back onto the full train split: windowless (short)
+      .agg(count(lit(1)).as("__nw"), sum(Similarity.found).as("__nc"))
+    // Left-join back onto the full train split: keyless (short)
     // documents surface with zero counts instead of vanishing.
-    docs.where(!isEval).select(col("doc_id"))
+    train.select(col("doc_id"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(
         col("doc_id"),
-        coalesce(col("__nw"), lit(0L)).as("n_windows"),
-        coalesce(col("__nc"), lit(0L)).as("n_contaminated"))
-      .withColumn("contaminated", col("n_contaminated") > 0)
+        coalesce(col("__nw"), lit(0L)).as(nName),
+        coalesce(col("__nc"), lit(0L)).as(hitName))
+      .withColumn("contaminated", col(hitName) > 0)
   }
 
   /** Substring-dedup REMOVAL (Lee et al. 2022, "Deduplicating Training

@@ -65,6 +65,18 @@ object EmbeddingOps {
           .as("centroid"),
       )
 
+  /** Long-form centroids (label, dim, centroid) packed one row per
+    * label: (label, qcs), the quantized coordinates in dim order.
+    */
+  private def packedCentroids(centroidsLong: DataFrame): DataFrame =
+    centroidsLong
+      .select(col("label"), col("dim"), q20(col("centroid")).as("qc"))
+      .groupBy("label")
+      .agg(
+        transform(
+          array_sort(collect_list(struct(col("dim"), col("qc")))),
+          s => s.getField("qc")).as("qcs"))
+
   /** K-means ASSIGNMENT step: each vector goes to its nearest centroid.
     *
     * The centroid table (long format, from [[centroids]]) is re-quantized
@@ -95,14 +107,7 @@ object EmbeddingOps {
       carry: Seq[String] = Nil,
       restoreScanParallelism: Boolean = true,
   ): DataFrame = {
-    val cent = centroidsLong
-      .select(col("label"), col("dim"), q20(col("centroid")).as("qc"))
-      .groupBy("label")
-      .agg(
-        transform(
-          array_sort(collect_list(struct(col("dim"), col("qc")))),
-          s => s.getField("qc")).as("qcs"))
-    val centArr = cent.agg(
+    val centArr = packedCentroids(centroidsLong).agg(
       array_sort(collect_list(struct(col("label"), col("qcs")))).as("__cents"))
     // Empty/NULL embeddings drop — same UNNEST semantics as the oracle
     // (and as norms()); without the guard they would score qdist 0
@@ -217,13 +222,7 @@ object EmbeddingOps {
       nSub: Int = 4,
   ): DataFrame = {
     require(nSub >= 1, s"need at least one subspace, got $nSub")
-    val cent = centroidsLong
-      .select(col("label"), col("dim"), q20(col("centroid")).as("qc"))
-      .groupBy("label")
-      .agg(
-        transform(
-          array_sort(collect_list(struct(col("dim"), col("qc")))),
-          s => s.getField("qc")).as("qcs"))
+    val cent = packedCentroids(centroidsLong)
     // Vectors whose length doesn't split evenly into nSub subspaces drop
     // (a real PQ index pads or rejects them at ingest); empty ones too.
     val vecs = embeddings

@@ -23,25 +23,8 @@ object EventAnalytics {
     * step-(i-1) event. Each stage is a per-user min-aggregate; only
     * per-user scalars flow between stages.
     */
-  def funnel3(events: DataFrame, s1: String, s2: String, s3: String): DataFrame = {
-    val ev = events.select(col("user_id"), col("event_type"), col("ts_sec"))
-    val t1 = ev.where(col("event_type") === s1)
-      .groupBy("user_id").agg(min(col("ts_sec")).as("t1"))
-    val t2 = t1.join(ev.where(col("event_type") === s2), Seq("user_id"))
-      .where(col("ts_sec") > col("t1"))
-      .groupBy("user_id").agg(min(col("ts_sec")).as("t2"))
-    val t3 = t2.join(ev.where(col("event_type") === s3), Seq("user_id"))
-      .where(col("ts_sec") > col("t2"))
-      .groupBy("user_id").agg(min(col("ts_sec")).as("t3"))
-    val n1 = t1.agg(count(lit(1)).as("n_users")).withColumn("step", lit(1))
-      .withColumn("event_type", lit(s1))
-    val n2 = t2.agg(count(lit(1)).as("n_users")).withColumn("step", lit(2))
-      .withColumn("event_type", lit(s2))
-    val n3 = t3.agg(count(lit(1)).as("n_users")).withColumn("step", lit(3))
-      .withColumn("event_type", lit(s3))
-    n1.unionByName(n2).unionByName(n3)
-      .select(col("step"), col("event_type"), col("n_users"))
-  }
+  def funnel3(events: DataFrame, s1: String, s2: String, s3: String): DataFrame =
+    funnel(events, s1, s2, s3, None)
 
   /** Cohort retention: users are assigned to the cohort of their first
     * active day; for each (cohort_day, day_offset) the number of cohort
@@ -80,25 +63,32 @@ object EventAnalytics {
     * per-user scalars flow between stages.
     */
   def windowedFunnel3(events: DataFrame, s1: String, s2: String, s3: String,
-                      windowSecs: Long): DataFrame = {
+                      windowSecs: Long): DataFrame =
+    funnel(events, s1, s2, s3, Some(windowSecs))
+
+  /** The one body behind [[funnel3]] and [[windowedFunnel3]]: a step
+    * counts when it follows the previous step's time, and when
+    * `windowSecs` is set, by at most that many seconds.
+    */
+  private def funnel(events: DataFrame, s1: String, s2: String, s3: String,
+                     windowSecs: Option[Long]): DataFrame = {
     val ev = events.select(col("user_id"), col("event_type"), col("ts_sec"))
-    val bound = expr(s"INTERVAL $windowSecs SECOND")
+    def follows(prev: String) = windowSecs.foldLeft(col("ts_sec") > col(prev))(
+      (c, w) => c && col("ts_sec") <= col(prev) + expr(s"INTERVAL $w SECOND"))
     val t1 = ev.where(col("event_type") === s1)
       .groupBy("user_id").agg(min(col("ts_sec")).as("t1"))
-    val t2 = t1.join(ev.where(col("event_type") === s2), Seq("user_id"))
-      .where(col("ts_sec") > col("t1") && col("ts_sec") <= col("t1") + bound)
-      .groupBy("user_id").agg(min(col("ts_sec")).as("t2"))
-    val t3 = t2.join(ev.where(col("event_type") === s3), Seq("user_id"))
-      .where(col("ts_sec") > col("t2") && col("ts_sec") <= col("t2") + bound)
-      .groupBy("user_id").agg(min(col("ts_sec")).as("t3"))
-    val n1 = t1.agg(count(lit(1)).as("n_users")).withColumn("step", lit(1))
-      .withColumn("event_type", lit(s1))
-    val n2 = t2.agg(count(lit(1)).as("n_users")).withColumn("step", lit(2))
-      .withColumn("event_type", lit(s2))
-    val n3 = t3.agg(count(lit(1)).as("n_users")).withColumn("step", lit(3))
-      .withColumn("event_type", lit(s3))
-    n1.unionByName(n2).unionByName(n3)
-      .select(col("step"), col("event_type"), col("n_users"))
+    def next(prev: DataFrame, p: String, s: String, t: String) =
+      prev.join(ev.where(col("event_type") === s), Seq("user_id"))
+        .where(follows(p))
+        .groupBy("user_id").agg(min(col("ts_sec")).as(t))
+    val t2 = next(t1, "t1", s2, "t2")
+    val t3 = next(t2, "t2", s3, "t3")
+    Seq((t1, s1), (t2, s2), (t3, s3)).zipWithIndex
+      .map { case ((t, s), i) =>
+        t.agg(count(lit(1)).as("n_users"))
+          .select(lit(i + 1).as("step"), lit(s).as("event_type"), col("n_users"))
+      }
+      .reduce(_ unionByName _)
   }
 
   /** Market-basket co-occurrence with lift: baskets are (user_id, day),

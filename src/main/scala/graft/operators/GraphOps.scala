@@ -35,13 +35,15 @@ object GraphOps {
 
   /** The symmetrized edge list (src, dst, carry...) of undirected edges
     * (a, b, carry...): each edge in both directions, pinned eagerly. The
-    * one place an operator here builds it.
+    * one place an operator here builds it. Both orientations come out of
+    * one pass over `edges` (an inlined two-struct array per row), so an
+    * unpinned input pipeline runs once, not once per orientation.
     */
   def undirected(edges: DataFrame, a: String, b: String,
       carry: String*): DataFrame = {
-    val rest = carry.map(col)
-    edges.select(col(a).as("src") +: col(b).as("dst") +: rest: _*)
-      .unionAll(edges.select(col(b).as("src") +: col(a).as("dst") +: rest: _*))
+    def orient(s: String, d: String) =
+      struct(col(s).as("src") +: col(d).as("dst") +: carry.map(col): _*)
+    edges.select(inline(array(orient(a, b), orient(b, a))))
       .localCheckpoint(eager = true)
   }
 

@@ -319,6 +319,18 @@ object Multimodal {
     })
   }
 
+  /** The WAV container parsed back to frames by `javax.sound`, checked
+    * to be the 16-bit little-endian PCM every decoder here reads.
+    */
+  private def openPcm16(wav: Array[Byte]): javax.sound.sampled.AudioInputStream = {
+    val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(wav))
+    val fmt = ais.getFormat
+    require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
+      s"unexpected decoded format: $fmt")
+    ais
+  }
+
   /** REAL decode: `AudioSystem.getAudioInputStream` parses the WAV
     * container back to frames, and the samples reduce to exact integer
     * stats — sum, sum of |s|, peak |s|, and energy Σ s² (all BIGINT, so
@@ -329,12 +341,8 @@ object Multimodal {
   def decodeWavStats(spark: SparkSession, wavs: Dataset[WavRecord]): Dataset[WavStats] = {
     import spark.implicits._
     wavs.mapPartitions(_.map { rec =>
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(rec.wav))
-      val fmt = ais.getFormat
-      require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
-        s"unexpected decoded format: $fmt")
-      val ch = fmt.getChannels
+      val ais = openPcm16(rec.wav)
+      val ch = ais.getFormat.getChannels
       val nFrames = ais.getFrameLength
       val bytes = ais.readAllBytes()
       var (sum, sumAbs, energy) = (0L, 0L, 0L)
@@ -373,12 +381,8 @@ object Multimodal {
       spark: SparkSession, wavs: Dataset[WavRecord]): Dataset[WavFingerprint] = {
     import spark.implicits._
     wavs.mapPartitions(_.map { rec =>
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(rec.wav))
-      val fmt = ais.getFormat
-      require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
-        s"unexpected decoded format: $fmt")
-      val ch = fmt.getChannels
+      val ais = openPcm16(rec.wav)
+      val ch = ais.getFormat.getChannels
       // getFrameLength is a Long; the in-memory decode bounds it via the
       // byte-array size, so a clip whose PCM exceeds a JVM array fails
       // LOUDLY here instead of truncating to a wrong fingerprint
@@ -571,6 +575,42 @@ object Multimodal {
   private[operators] def jpegLevel(id: Long, bx: Int, by: Int): Int =
     16 * ((id * 5 + bx * 3 + by * 7) % 16).toInt + 8
 
+  /** One grayscale image of `bw`×`bh` constant 8×8 blocks, block
+    * (bx, by) at gray `level(bx, by)`, encoded by `writer` as JPEG at
+    * explicit quality 0.95 — the frame codec of both the JPEG and the
+    * MJPEG-AVI payloads.
+    */
+  private def encodeBlockJpeg(writer: javax.imageio.ImageWriter, bw: Int, bh: Int)(
+      level: (Int, Int) => Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      bw * 8, bh * 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    var by = 0
+    while (by < bh) {
+      var bx = 0
+      while (bx < bw) {
+        val v = level(bx, by)
+        var y = by * 8
+        while (y < by * 8 + 8) {
+          var x = bx * 8
+          while (x < bx * 8 + 8) { raster.setSample(x, y, 0, v); x += 1 }
+          y += 1
+        }
+        bx += 1
+      }
+      by += 1
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    val p = writer.getDefaultWriteParam
+    p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+    p.setCompressionQuality(0.95f)
+    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    writer.setOutput(ios)
+    writer.write(null, new javax.imageio.IIOImage(img, null, null), p)
+    ios.close()
+    bos.toByteArray
+  }
+
   /** REAL lossy-image payloads: constant-block grayscale pixels encoded
     * to actual JPEG bytes with `javax.imageio` at explicit quality 0.95
     * inside `mapPartitions` — the JDK's own codec, no external jars.
@@ -583,34 +623,7 @@ object Multimodal {
       val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
       val out = it.map { id =>
         val (bw, bh) = (jpegBlocksW(id), jpegBlocksH(id))
-        val (w, h) = (bw * 8, bh * 8)
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val raster = img.getRaster
-        var by = 0
-        while (by < bh) {
-          var bx = 0
-          while (bx < bw) {
-            val level = jpegLevel(id, bx, by)
-            var y = by * 8
-            while (y < by * 8 + 8) {
-              var x = bx * 8
-              while (x < bx * 8 + 8) { raster.setSample(x, y, 0, level); x += 1 }
-              y += 1
-            }
-            bx += 1
-          }
-          by += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        val p = writer.getDefaultWriteParam
-        p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-        p.setCompressionQuality(0.95f)
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        writer.setOutput(ios)
-        writer.write(null, new javax.imageio.IIOImage(img, null, null), p)
-        ios.close()
-        JpegRecord(id, bos.toByteArray)
+        JpegRecord(id, encodeBlockJpeg(writer, bw, bh)(jpegLevel(id, _, _)))
       }.toVector // materialize before disposing the shared writer
       writer.dispose()
       out.iterator
@@ -731,33 +744,7 @@ object Multimodal {
         val (bw, bh, nf) = (aviBlocksW(id), aviBlocksH(id), aviFrames(id))
         val (w, h) = (bw * 8, bh * 8)
         val jpegs = (0 until nf).map { f =>
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var by = 0
-          while (by < bh) {
-            var bx = 0
-            while (bx < bw) {
-              val level = 16 * (aviCensus(id, f, bx, by) - 1) + 8
-              var y = by * 8
-              while (y < by * 8 + 8) {
-                var x = bx * 8
-                while (x < bx * 8 + 8) { raster.setSample(x, y, 0, level); x += 1 }
-                y += 1
-              }
-              bx += 1
-            }
-            by += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          val p = writer.getDefaultWriteParam
-          p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-          p.setCompressionQuality(0.95f)
-          val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-          writer.setOutput(ios)
-          writer.write(null, new javax.imageio.IIOImage(img, null, null), p)
-          ios.close()
-          bos.toByteArray
+          encodeBlockJpeg(writer, bw, bh)((bx, by) => 16 * (aviCensus(id, f, bx, by) - 1) + 8)
         }
         val maxFrame = jpegs.map(_.length).max
 

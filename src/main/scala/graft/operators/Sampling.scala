@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deterministic sampling for training-data pipelines.
   *
@@ -86,5 +88,37 @@ object Sampling {
     ranked.crossJoin(broadcast(ranked.agg(count(lit(1)).as("kk"))))
       .agg(max(col("kk")).as("k_sample"), os(0.25, "p25_est"),
         os(0.5, "p50_est"), os(0.75, "p75_est"), os(0.9, "p90_est"))
+  }
+
+  /** Poisson(1) bootstrap weight from a uniform 60-bit hash `h`: exact
+    * integer inverse-CDF thresholds (floor(P(X<=k)·2^60)) with the tail
+    * capped at 5 (P(X>5) ≈ 0.06%, an operational definition every engine
+    * shares). Each (unit, replicate) hash gives an independent weight,
+    * so a bootstrap needs no resampling shuffle.
+    */
+  def poissonWeight(h: Column): Column =
+    when(h < 424136118829305344L, 0L)
+      .when(h < 848272237658610688L, 1L)
+      .when(h < 1060340297073263360L, 2L)
+      .when(h < 1131029650211480960L, 3L)
+      .when(h < 1148701988496035200L, 4L)
+      .otherwise(5L)
+
+  /** `point` (one row) with the 95% percentile bootstrap interval of the
+    * replicate statistic `stat` in `reps` (r, `stat`) appended as
+    * (ci_lo_cents, ci_hi_cents): the replicates ranked by (`stat`, r),
+    * the bounds the ceil(0.025·n)-th and ceil(0.975·n)-th. The rank
+    * runs on the replicate relation (bounded — a global window there is
+    * free at any corpus size).
+    */
+  def withBootstrapCi(point: DataFrame, reps: DataFrame, stat: String): DataFrame = {
+    val ranked = reps
+      .withColumn("rk", row_number().over(Window.orderBy(col(stat), col("r"))))
+      .localCheckpoint(eager = true) // feeds lo + hi + count
+    val nRep = broadcast(ranked.agg(count(lit(1)).as("nb")))
+    def bound(q: Double, name: String) = broadcast(ranked.crossJoin(nRep)
+      .where(col("rk") === ceil(col("nb") * q).cast(LongType))
+      .select(col(stat).as(name)))
+    point.crossJoin(bound(0.025, "ci_lo_cents")).crossJoin(bound(0.975, "ci_hi_cents"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,10 +14,24 @@ import org.apache.spark.sql.functions._
   */
 object Sessionize {
 
-  def sessions(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
+  def sessions(events: DataFrame, gapSeconds: Long = 1800): DataFrame =
+    withSessionIdx(events, gapSeconds)
+      .groupBy(col("user_id"), col("session_idx"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        expr("timestamp_seconds(min(ts) div 1000000000)").as("session_start"),
+        expr("(max(ts) - min(ts)) div 1000000000").as("duration_sec"),
+      )
+
+  /** The session-index step [[sessions]] and [[eventFeatures]] share:
+    * (user_id, ts, event_id) with `is_new` = 1 where a gap of more than
+    * `gapSeconds` (or the user's first event) opens a session, and
+    * `session_idx` the running count of those flags per user.
+    */
+  private def withSessionIdx(events: DataFrame, gapSeconds: Long): DataFrame = {
     val gapNs = gapSeconds * 1000000000L
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val withFlag = events
+    events
       .select(col("user_id"), col("ts"), col("event_id"))
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn(
@@ -27,13 +41,6 @@ object Sessionize {
       )
       .withColumn("session_idx", sum(col("is_new")).over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    withFlag
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        expr("timestamp_seconds(min(ts) div 1000000000)").as("session_start"),
-        expr("(max(ts) - min(ts)) div 1000000000").as("duration_sec"),
-      )
   }
 
   /** Per-EVENT session-relative features — the columns a behavioral
@@ -47,25 +54,29 @@ object Sessionize {
     * no second exchange.
     */
   def eventFeatures(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
-    val gapNs = gapSeconds * 1000000000L
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val bySession = Window
       .partitionBy(col("user_id"), col("session_idx"))
       .orderBy(col("ts"), col("event_id"))
-    events
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn(
-        "is_new",
-        when(col("prev_ts").isNull || col("ts") - col("prev_ts") > gapNs, 1L)
-          .otherwise(0L),
-      )
-      .withColumn("session_idx", sum(col("is_new")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    withSessionIdx(events, gapSeconds)
       .withColumn("idx_in_session", row_number().over(bySession).cast("long"))
       // running min == session start, since the frame is ordered by ts
       .withColumn("secs_since_start",
         expr("(ts - min(ts) OVER (PARTITION BY user_id, session_idx)) div 1000000000"))
       .select("event_id", "user_id", "session_idx", "idx_in_session", "secs_since_start")
   }
+
+  /** Spark's native gap-merged `session_window` per user, with `gap` a
+    * duration literal or an expression of the event:
+    * (user_id, session_start, session_end, n_events), ordered.
+    */
+  def windowSessions(events: DataFrame, gap: Column): DataFrame =
+    events
+      .groupBy(col("user_id"), session_window(col("ts_sec"), gap))
+      .agg(count(lit(1)).as("n_events"))
+      .select(
+        col("user_id"),
+        col("session_window.start").as("session_start"),
+        col("session_window.end").as("session_end"),
+        col("n_events"))
+      .orderBy("user_id", "session_start")
 }

@@ -158,32 +158,41 @@ object SetSimilarityJoin {
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_a"), col("n_b"))
   }
 
+  /** The token-set-and-prefix step [[prefixJaccardJoin]] and
+    * [[containmentJoin]] share: (toks, byDoc, prefix), where `toks` is
+    * the distinct (doc_id, term) relation over k-word shingles — the SET
+    * both measures are defined on — `byDoc` its per-doc arrays from
+    * [[docTermArrays]], and `prefix` each doc's first
+    * n_tok − ceil(threshold·n_tok) + 1 tokens as (doc_id, n_tok, pos,
+    * term). Ranking each doc's tokens rarest-first ONCE (collect the
+    * (df, term) set, sort it locally) and slicing the prefix off that
+    * array, re-exploded WITH POSITIONS, saves one doc-keyed exchange and
+    * a sort-based window pass over the join-sizes + row_number
+    * formulation. Prefix rows carry the HASHED token (8 bytes) as the
+    * join key — lossless: a collision can only add a candidate, and
+    * every true shared prefix token hashes equal on both sides.
+    */
+  private def tokenPrefix(docs: DataFrame, shingleK: Int, threshold: Double)
+      : (DataFrame, DataFrame, DataFrame) = {
+    require(threshold > 0 && threshold <= 1, s"threshold in (0, 1], got $threshold")
+    val toks = Dedup.shingleRows(docs, shingleK)
+      .select(col("doc_id"), col("shingle").as("term"))
+      .distinct()
+      .localCheckpoint(eager = true)
+    val byDoc = docTermArrays(toks)
+    val prefixLen = (col("n_tok") -
+      ceil(lit(threshold) * col("n_tok")).cast("long") + 1).cast("int")
+    val prefix = byDoc.select(col("doc_id"), col("n_tok"),
+      posexplode(slice(col("hterms"), lit(1), prefixLen)).as(Seq("pos", "term")))
+    (toks, byDoc, prefix)
+  }
+
   /** All document pairs (doc_a < doc_b) whose k-shingle sets have Jaccard
     * similarity >= `threshold`, with exact intersection / set sizes.
     * Output: (doc_a, doc_b, n_inter, n_a, n_b, jaccard), exact.
     */
   def prefixJaccardJoin(docs: DataFrame, shingleK: Int, threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1, s"threshold in (0, 1], got $threshold")
-    // Distinct (doc_id, term) over k-word shingles: the SET the Jaccard
-    // is defined on.
-    val toks = Dedup.shingleRows(docs, shingleK)
-      .select(col("doc_id"), col("shingle").as("term"))
-      .distinct()
-      .localCheckpoint(eager = true)
-
-    // Rank each doc's tokens rarest-first ONCE (collect the (df, term)
-    // set, sort it locally); the prefix is a slice of that array,
-    // re-exploded WITH POSITIONS. Vs the join-sizes + row_number window
-    // formulation this saves one doc-keyed exchange and a sort-based
-    // window pass.
-    val byDoc = docTermArrays(toks)
-    val prefixLen = (col("n_tok") -
-      ceil(lit(threshold) * col("n_tok")).cast("long") + 1).cast("int")
-    // prefix rows carry the HASHED token (8 bytes) as the join key —
-    // lossless: a collision can only add a candidate, and every true
-    // shared prefix token hashes equal on both sides
-    val prefix = byDoc.select(col("doc_id"), col("n_tok"),
-      posexplode(slice(col("hterms"), lit(1), prefixLen)).as(Seq("pos", "term")))
+    val (toks, byDoc, prefix) = tokenPrefix(docs, shingleK, threshold)
 
     // Candidates: docs sharing any prefix token, RESTRICTED by the
     // AllPairs length filter — Jaccard >= t forces t·|A| <= |B| and
@@ -240,18 +249,7 @@ object SetSimilarityJoin {
     * candidate-bounded and exact, as in [[prefixJaccardJoin]].
     */
   def containmentJoin(docs: DataFrame, shingleK: Int, threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1, s"threshold in (0, 1], got $threshold")
-    val toks = Dedup.shingleRows(docs, shingleK)
-      .select(col("doc_id"), col("shingle").as("term"))
-      .distinct()
-      .localCheckpoint(eager = true)
-
-    val byDoc = docTermArrays(toks)
-    val prefixLen = (col("n_tok") -
-      ceil(lit(threshold) * col("n_tok")).cast("long") + 1).cast("int")
-    // hashed-token prefix rows, as in prefixJaccardJoin (lossless)
-    val prefix = byDoc.select(col("doc_id"), col("n_tok"),
-      posexplode(slice(col("hterms"), lit(1), prefixLen)).as(Seq("pos", "term")))
+    val (toks, byDoc, prefix) = tokenPrefix(docs, shingleK, threshold)
 
     // the container side needs no prefix (containment is one-sided):
     // A's prefix probes B's FULL posting rows, with the length bound

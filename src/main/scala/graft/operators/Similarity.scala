@@ -21,24 +21,9 @@ import org.apache.spark.sql.types._
 object Similarity {
 
   /** Exact top-k cosine neighbors for each query vector. */
-  def bruteForceTopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int,
-  ): DataFrame = {
-    val q = broadcast(
-      queries.select(col("vec_id").as("q_vec"), col("embedding").as("q_emb")))
-    val c = corpus.select(col("vec_id").as("c_vec"), col("embedding").as("c_emb"))
-    val w = Window.partitionBy(col("q_vec")).orderBy(col("cosine").desc, col("c_vec"))
-    c.join(q, col("c_vec") =!= col("q_vec"))
-      .select(
-        col("q_vec"), col("c_vec"),
-        VectorMath.cosineExact(col("q_emb"), col("c_emb")).as("cosine"),
-      )
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("q_vec", "rank", "c_vec", "cosine")
-  }
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    exactTopK(queries, corpus, k, Nil, "cosine",
+      VectorMath.cosineExact(col("q_emb"), col("c_emb")), col("cosine").desc)
 
   /** FILTERED vector search: exact top-k cosine among corpus vectors
     * satisfying a metadata predicate (here: same `label` as the query) —
@@ -51,22 +36,89 @@ object Similarity {
     * touch only their shard); the per-query ranking cost is the
     * filtered candidate count, not the corpus.
     */
-  def filteredTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(queries.select(
-      col("vec_id").as("q_vec"), col("label").as("q_label"),
-      col("embedding").as("q_emb")))
-    val c = corpus.select(
-      col("vec_id").as("c_vec"), col("label").as("c_label"),
-      col("embedding").as("c_emb"))
-    val w = Window.partitionBy(col("q_vec")).orderBy(col("cosine").desc, col("c_vec"))
-    c.join(q, col("c_label") === col("q_label") && col("c_vec") =!= col("q_vec"))
-      .select(
-        col("q_vec"), col("c_vec"),
-        VectorMath.cosineExact(col("q_emb"), col("c_emb")).as("cosine"),
-      )
+  def filteredTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    exactTopK(queries, corpus, k, Seq("label"), "cosine",
+      VectorMath.cosineExact(col("q_emb"), col("c_emb")), col("cosine").desc)
+
+  /** The one exact top-k body behind [[bruteForceTopK]], [[filteredTopK]]
+    * and [[bruteForceL2TopK]]: queries broadcast, the corpus streams,
+    * each (query, candidate) pair other than the query itself that agrees
+    * on every `sameCols` column is scored as `scoreName` and ranked per
+    * query by `order`, ties to the lower candidate id. Output:
+    * (q_vec, rank, c_vec, `scoreName`).
+    */
+  private def exactTopK(
+      queries: DataFrame,
+      corpus: DataFrame,
+      k: Int,
+      sameCols: Seq[String],
+      scoreName: String,
+      score: Column,
+      order: Column,
+  ): DataFrame = {
+    def side(p: String, df: DataFrame) = df.select(
+      (col("vec_id").as(s"${p}_vec") +: sameCols.map(c => col(c).as(s"${p}_$c")) :+
+        col("embedding").as(s"${p}_emb")): _*)
+    val on = sameCols.foldRight(col("c_vec") =!= col("q_vec"))(
+      (c, rest) => col(s"c_$c") === col(s"q_$c") && rest)
+    val w = Window.partitionBy(col("q_vec")).orderBy(order, col("c_vec"))
+    side("c", corpus).join(broadcast(side("q", queries)), on)
+      .select(col("q_vec"), col("c_vec"), score.as(scoreName))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
-      .select("q_vec", "rank", "c_vec", "cosine")
+      .select("q_vec", "rank", "c_vec", scoreName)
+  }
+
+  /** Recall bookkeeping, the one definition every ANN audit (and the
+    * contamination reports) share: each row of `exact` — the true
+    * neighbours — marked by whether `approx` holds the same `keys`;
+    * [[found]] reads the mark as 1 or 0. `approx` must hold each key at
+    * most once (a top-k list or a distinct set). Counting the rows gives
+    * the neighbours to find and summing [[found]] the ones found; each
+    * caller keeps only its own final aggregate. The join strategy is the
+    * caller's: a `broadcast` hint on `approx` carries through.
+    */
+  def markFound(exact: DataFrame, approx: DataFrame, keys: Seq[String]): DataFrame =
+    exact.join(approx.select(keys.map(col) :+ lit(1L).as("__hit"): _*), keys, "left")
+
+  /** 1 on a [[markFound]] row whose neighbour `approx` found, else 0. */
+  def found: Column = coalesce(col("__hit"), lit(0L))
+
+  /** Overall recall of `approx` against `exact`, both keyed by
+    * (q_vec, c_vec): (n_exact, n_hit, recall).
+    */
+  def recall(exact: DataFrame, approx: DataFrame): DataFrame =
+    markFound(exact, approx, Seq("q_vec", "c_vec"))
+      .agg(count(lit(1)).as("n_exact"), sum(found).as("n_hit"))
+      .select(col("n_exact"), col("n_hit"),
+        (col("n_hit").cast(DoubleType) / col("n_exact")).as("recall"))
+
+  /** Per-query recall of `approx` against `exact`, both keyed by
+    * (q_vec, c_vec): (vec_id, n_true, n_recovered), ordered by vec_id.
+    */
+  def recallByQuery(exact: DataFrame, approx: DataFrame): DataFrame =
+    markFound(exact, approx, Seq("q_vec", "c_vec"))
+      .groupBy("q_vec")
+      .agg(count(lit(1)).as("n_true"), sum(found).as("n_recovered"))
+      .select(col("q_vec").as("vec_id"), col("n_true"), col("n_recovered"))
+      .orderBy("vec_id")
+
+  /** Per anchor, how many of its top-`k` candidates by `exactScore` are
+    * also in its top-`k` by `approxScore` (both descending, ties to the
+    * lower `cv`): (q_vec, overlap_at_`k`), ordered, with 0 for an anchor
+    * in `anchors` that has no candidate in `scored` (q_vec, cv, scores).
+    */
+  def topKOverlap(anchors: DataFrame, scored: DataFrame, exactScore: String,
+      approxScore: String, k: Int): DataFrame = {
+    def top(score: String) = scored
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("q_vec").orderBy(col(score).desc, col("cv"))))
+      .where(col("rn") <= k).select(col("q_vec"), col("cv"))
+    val counts = markFound(top(exactScore), top(approxScore), Seq("q_vec", "cv"))
+      .groupBy("q_vec").agg(sum(found).as("n"))
+    anchors.select(col("q_vec")).join(counts, Seq("q_vec"), "left")
+      .select(col("q_vec"), coalesce(col("n"), lit(0L)).as(s"overlap_at_$k"))
+      .orderBy("q_vec")
   }
 
   /** Deterministic INTEGER hyperplane weight for (plane, dim): an LCG
@@ -739,22 +791,9 @@ object Similarity {
     * on unit-norm embeddings it coincides with cosine order). Same scale
     * shape as [[bruteForceTopK]]: queries broadcast, corpus streams.
     */
-  def bruteForceL2TopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int,
-  ): DataFrame = {
-    val q = broadcast(
-      queries.select(col("vec_id").as("q_vec"), col("embedding").as("q_emb")))
-    val c = corpus.select(col("vec_id").as("c_vec"), col("embedding").as("c_emb"))
-    val w = Window.partitionBy(col("q_vec")).orderBy(col("qdist"), col("c_vec"))
-    c.join(q, col("c_vec") =!= col("q_vec"))
-      .select(col("q_vec"), col("c_vec"),
-        quantL2(col("q_emb"), col("c_emb")).as("qdist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("q_vec", "rank", "c_vec", "qdist")
-  }
+  def bruteForceL2TopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    exactTopK(queries, corpus, k, Nil, "qdist",
+      quantL2(col("q_emb"), col("c_emb")), col("qdist"))
 
   /** PQ search with exact re-ranking (the IVFADC-with-refinement tier,
     * Jégou et al. 2011 §VI): the code scan of [[pqTopK]] produces a
@@ -1181,6 +1220,17 @@ object Similarity {
     */
   def graphIndexRoot(dir: String): String =
     s"/tmp/graft_graph_index/${new java.io.File(dir).getName}"
+
+  /** The graph tier's audit read, the one every graph-index query and
+    * stream drive reports: the first 8 vectors of `emb` served top-5
+    * (beam 8, 3 rounds, degree 5) over the [0, 500) slice from the
+    * persisted index at `root`, ordered by (q_vec, rank).
+    */
+  def serveGraphAudit(emb: DataFrame, root: String): DataFrame =
+    graphAnnServeFromIndex(
+        emb.where(col("vec_id") < 8), emb.where(col("vec_id") < 500), root,
+        k = 5, beam = 8, rounds = 3, degree = 5)
+      .orderBy("q_vec", "rank")
 
   /** Build + PERSIST the NN-descent kNN graph as an index artifact.
     * Skips when a committed snapshot exists (build once, serve many).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -221,4 +221,21 @@ object TimeSeries {
       .agg(min(col("day")).as("cp_day"), max(col("mx")).as("peak"))
       .orderBy(seriesCol)
   }
+
+  /** OHLC + VWAP bars, one per group of `grouped`, over rows carrying
+    * `cents` (exact integer price) and `k` (a total-order string key):
+    * open/close ride min_by/max_by on `k`, high/low/volume are plain
+    * aggregates and VWAP is one late division of exact cent sums. Every
+    * aggregate merges across partial states, so a streaming micro-batch
+    * bar equals the batch bar exactly.
+    */
+  def ohlcBars(grouped: RelationalGroupedDataset): DataFrame =
+    grouped.agg(
+      min_by(col("cents"), col("k")).as("open_cents"),
+      max(col("cents")).as("high_cents"),
+      min(col("cents")).as("low_cents"),
+      max_by(col("cents"), col("k")).as("close_cents"),
+      count(lit(1)).as("n_trades"),
+      (sum(col("cents")).cast(DoubleType) /
+        count(lit(1)).cast(DoubleType)).as("vwap_cents"))
 }

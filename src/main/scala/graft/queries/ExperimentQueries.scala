@@ -639,12 +639,7 @@ object ExperimentQueries {
         .localCheckpoint(eager = true) // feeds replicates + point median
       val h = graft.operators.Dedup.portableHash60(
         concat_ws(":", lit("bs2"), col("user_id"), col("r")))
-      val w = when(h < 424136118829305344L, 0L)
-        .when(h < 848272237658610688L, 1L)
-        .when(h < 1060340297073263360L, 2L)
-        .when(h < 1131029650211480960L, 3L)
-        .when(h < 1148701988496035200L, 4L)
-        .otherwise(5L)
+      val w = graft.operators.Sampling.poissonWeight(h)
       val grouped = pu
         .select(col("user_id"), col("cents"),
           explode(sequence(lit(1), lit(b))).as("r"))
@@ -662,23 +657,13 @@ object ExperimentQueries {
         .withColumn("tot", sum(col("ws")).over(wr))
         .where(col("cw") * 2 >= col("tot"))
         .groupBy("r").agg(min(col("cents")).as("med"))
-      val ord = Window.orderBy(col("med"), col("r"))
-      val ranked = medians.withColumn("rk", row_number().over(ord))
-        .localCheckpoint(eager = true) // feeds lo + hi + count
-      val nRep = broadcast(ranked.agg(count(lit(1)).as("nb")))
-      val lo = ranked.crossJoin(nRep)
-        .where(col("rk") === ceil(col("nb") * 0.025).cast(LongType))
-        .select(col("med").as("ci_lo_cents"))
-      val hi = ranked.crossJoin(nRep)
-        .where(col("rk") === ceil(col("nb") * 0.975).cast(LongType))
-        .select(col("med").as("ci_hi_cents"))
       // full-sample discrete lower median via the shared distributed
       // prefix-sum selector (same convention: least v with
       // crank >= (n+1) div 2 ⟺ 2·cw >= n)
-      pu.agg(count(lit(1)).as("n_users"))
-        .crossJoin(broadcast(medianDisc(pu, "cents", "med_cents")))
-        .crossJoin(broadcast(lo))
-        .crossJoin(broadcast(hi))
+      graft.operators.Sampling.withBootstrapCi(
+        pu.agg(count(lit(1)).as("n_users"))
+          .crossJoin(broadcast(medianDisc(pu, "cents", "med_cents"))),
+        medians, "med")
     },
 
     // Grouped 5-fold cross-validation assignment — folds split by USER
@@ -728,12 +713,7 @@ object ExperimentQueries {
         .agg(sum(floor(col("value") * 100).cast(LongType)).as("cents"))
       val h = graft.operators.Dedup.portableHash60(
         concat_ws(":", lit("bs1"), col("user_id"), col("r")))
-      val w = when(h < 424136118829305344L, 0L)
-        .when(h < 848272237658610688L, 1L)
-        .when(h < 1060340297073263360L, 2L)
-        .when(h < 1131029650211480960L, 3L)
-        .when(h < 1148701988496035200L, 4L)
-        .otherwise(5L)
+      val w = graft.operators.Sampling.poissonWeight(h)
       val reps = pu
         .select(col("user_id"), col("cents"),
           explode(sequence(lit(1), lit(b))).as("r"))
@@ -744,21 +724,11 @@ object ExperimentQueries {
         .select(col("r"),
           (col("num").cast(DoubleType) / col("den").cast(DoubleType))
             .as("mean_c"))
-      val ord = Window.orderBy(col("mean_c"), col("r"))
-      val ranked = reps.withColumn("rk", row_number().over(ord))
-        .localCheckpoint(eager = true) // feeds lo + hi + count
-      val nRep = broadcast(ranked.agg(count(lit(1)).as("nb")))
-      val lo = ranked.crossJoin(nRep)
-        .where(col("rk") === ceil(col("nb") * 0.025).cast(LongType))
-        .select(col("mean_c").as("ci_lo_cents"))
-      val hi = ranked.crossJoin(nRep)
-        .where(col("rk") === ceil(col("nb") * 0.975).cast(LongType))
-        .select(col("mean_c").as("ci_hi_cents"))
-      pu.agg(count(lit(1)).as("n_users"),
+      graft.operators.Sampling.withBootstrapCi(
+        pu.agg(count(lit(1)).as("n_users"),
           (sum(col("cents")).cast(DoubleType) /
-            count(lit(1)).cast(DoubleType)).as("mean_cents"))
-        .crossJoin(broadcast(lo))
-        .crossJoin(broadcast(hi))
+            count(lit(1)).cast(DoubleType)).as("mean_cents")),
+        reps, "mean_c")
     },
 
     // Hellinger drift census — tv1's companion divergence with the

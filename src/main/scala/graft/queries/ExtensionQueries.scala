@@ -395,16 +395,8 @@ object ExtensionQueries {
     "x2r_ann_lsh_recall" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
       val qs = emb.where(col("vec_id") < 8)
-      val exact = Similarity.bruteForceTopK(qs, emb, k = 3)
-        .select(col("q_vec"), col("c_vec"))
-      val lsh = Similarity.lshTopK(qs, emb, k = 3)
-        .select(col("q_vec"), col("c_vec"), lit(1L).as("__hit"))
-      exact.join(lsh, Seq("q_vec", "c_vec"), "left")
-        .agg(
-          count(lit(1)).as("n_exact"),
-          sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-        .select(col("n_exact"), col("n_hit"),
-          (col("n_hit").cast(DoubleType) / col("n_exact")).as("recall"))
+      Similarity.recall(Similarity.bruteForceTopK(qs, emb, k = 3),
+        Similarity.lshTopK(qs, emb, k = 3))
     },
     // Mutual-kNN census — the reciprocal-neighbor graph behind SemDeDup
     // variants and kNN-graph clustering: (a,b) is mutual iff each sits
@@ -456,15 +448,8 @@ object ExtensionQueries {
       val nnd = Similarity
         .nnDescent(sub, graphK = 15, rounds = 3, seedBucketSize = 32)
         .where(col("rank") <= 5)
-        .select(col("v"), col("nbr"), lit(1L).as("__hit"))
-      Similarity.bruteForceTopK(sub, sub, k = 5)
-        .select(col("q_vec").as("v"), col("c_vec").as("nbr"))
-        .join(nnd, Seq("v", "nbr"), "left")
-        .groupBy("v")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("__hit"), lit(0L))).as("n_recovered"))
-        .select(col("v").as("vec_id"), col("n_true"), col("n_recovered"))
-        .orderBy("vec_id")
+        .select(col("v").as("q_vec"), col("nbr").as("c_vec"))
+      Similarity.recallByQuery(Similarity.bruteForceTopK(sub, sub, k = 5), nnd)
     },
     // The PRODUCTION graph-ANN pairing (x33's serve fed by x34's
     // build): beam search over the NN-DESCENT top-5 graph instead of
@@ -478,12 +463,9 @@ object ExtensionQueries {
     // replay-from-artifact oracle (the x23 pattern).
     "x35_graph_ann_nnd" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
-      val sub = emb.where(col("vec_id") < 500)
       val root = Similarity.graphIndexRoot(dir)
-      Similarity.buildNndGraphIndex(sub, root)
-      Similarity.graphAnnServeFromIndex(emb.where(col("vec_id") < 8), sub, root,
-          k = 5, beam = 8, rounds = 3, degree = 5)
-        .orderBy("q_vec", "rank")
+      Similarity.buildNndGraphIndex(emb.where(col("vec_id") < 500), root)
+      Similarity.serveGraphAudit(emb, root)
     },
     // Serve from the PERSISTED graph index, gated by the
     // replay-from-artifact oracle — x23's pattern applied to the graph
@@ -495,12 +477,9 @@ object ExtensionQueries {
     // never constructs a graph (nndBuilds counter).
     "x37_graph_index_persisted" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
-      val sub = emb.where(col("vec_id") < 500)
       val root = Similarity.graphIndexRoot(dir)
-      Similarity.buildNndGraphIndex(sub, root)
-      Similarity.graphAnnServeFromIndex(emb.where(col("vec_id") < 8), sub, root,
-          k = 5, beam = 8, rounds = 3, degree = 5)
-        .orderBy("q_vec", "rank")
+      Similarity.buildNndGraphIndex(emb.where(col("vec_id") < 500), root)
+      Similarity.serveGraphAudit(emb, root)
     },
     // Graph-index DELETE + APPEND lifecycle from persisted artifacts —
     // the graph analogue of x30: build the base graph on [0,400), APPEND
@@ -545,10 +524,7 @@ object ExtensionQueries {
         root)
       Similarity.appendToNndGraphIndex(emb.where(col("vec_id") < 500),
         emb.where(col("vec_id") >= 8 && col("vec_id") < 108), root)
-      Similarity.graphAnnServeFromIndex(
-          emb.where(col("vec_id") < 8), emb.where(col("vec_id") < 500), root,
-          k = 5, beam = 8, rounds = 3, degree = 5)
-        .orderBy("q_vec", "rank")
+      Similarity.serveGraphAudit(emb, root)
     },
     // INCREMENTAL graph upsert — the lifecycle's third tier (x34 BUILD,
     // x35/x37 SERVE, x36 UPSERT — the graph analogue of the IVFADC
@@ -573,16 +549,9 @@ object ExtensionQueries {
         .select(col("v"), col("nbr").as("u"), col("cosine"))
       val upserted = Similarity.nnDescentUpsertWithGraph(g, old, nw)
         .where(col("rank") <= 5)
-        .select(col("v"), col("nbr"), lit(1L).as("__hit"))
+        .select(col("v").as("q_vec"), col("nbr").as("c_vec"))
       val all = emb.where(col("vec_id") < 500)
-      Similarity.bruteForceTopK(all, all, k = 5)
-        .select(col("q_vec").as("v"), col("c_vec").as("nbr"))
-        .join(upserted, Seq("v", "nbr"), "left")
-        .groupBy("v")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("__hit"), lit(0L))).as("n_recovered"))
-        .select(col("v").as("vec_id"), col("n_true"), col("n_recovered"))
-        .orderBy("vec_id")
+      Similarity.recallByQuery(Similarity.bruteForceTopK(all, all, k = 5), upserted)
     },
     // Mutual-kNN CLUSTERS: connected components over the reciprocal-
     // neighbor edges (rnn1's graph) — the clustering step of
@@ -642,16 +611,8 @@ object ExtensionQueries {
     "x20r_ann_pq_recall" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
       val qs = emb.where(col("vec_id") < 8)
-      val exact = Similarity.bruteForceTopK(qs, emb, k = 3)
-        .select(col("q_vec"), col("c_vec"))
-      val pq = Similarity.pqTopK(qs, emb, k = 3)
-        .select(col("q_vec"), col("c_vec"), lit(1L).as("__hit"))
-      exact.join(pq, Seq("q_vec", "c_vec"), "left")
-        .agg(
-          count(lit(1)).as("n_exact"),
-          sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-        .select(col("n_exact"), col("n_hit"),
-          (col("n_hit").cast(DoubleType) / col("n_exact")).as("recall"))
+      Similarity.recall(Similarity.bruteForceTopK(qs, emb, k = 3),
+        Similarity.pqTopK(qs, emb, k = 3))
     },
     // PQ with exact re-rank (IVFADC-refine): the code scan produces a
     // 32-deep shortlist; only those candidates' real vectors are fetched
@@ -668,16 +629,8 @@ object ExtensionQueries {
     "x21r_ann_pq_refine_recall" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
       val qs = emb.where(col("vec_id") < 8)
-      val exact = Similarity.bruteForceL2TopK(qs, emb, k = 3)
-        .select(col("q_vec"), col("c_vec"))
-      val pq = Similarity.pqRefineTopK(qs, emb, k = 3, refine = 32)
-        .select(col("q_vec"), col("c_vec"), lit(1L).as("__hit"))
-      exact.join(pq, Seq("q_vec", "c_vec"), "left")
-        .agg(
-          count(lit(1)).as("n_exact"),
-          sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-        .select(col("n_exact"), col("n_hit"),
-          (col("n_hit").cast(DoubleType) / col("n_exact")).as("recall"))
+      Similarity.recall(Similarity.bruteForceL2TopK(qs, emb, k = 3),
+        Similarity.pqRefineTopK(qs, emb, k = 3, refine = 32))
     },
     // IVFADC (IVF + PQ + refine): probe 2/16 inverted lists, ADC-scan
     // only those lists' codes, exact-re-rank a 32-deep shortlist — the
@@ -693,16 +646,8 @@ object ExtensionQueries {
     "x22r_ann_ivfpq_recall" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
       val qs = emb.where(col("vec_id") < 8)
-      val exact = Similarity.bruteForceL2TopK(qs, emb, k = 3)
-        .select(col("q_vec"), col("c_vec"))
-      val ivfpq = Similarity.ivfPqTopK(qs, emb, k = 3)
-        .select(col("q_vec"), col("c_vec"), lit(1L).as("__hit"))
-      exact.join(ivfpq, Seq("q_vec", "c_vec"), "left")
-        .agg(
-          count(lit(1)).as("n_exact"),
-          sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-        .select(col("n_exact"), col("n_hit"),
-          (col("n_hit").cast(DoubleType) / col("n_exact")).as("recall"))
+      Similarity.recall(Similarity.bruteForceL2TopK(qs, emb, k = 3),
+        Similarity.ivfPqTopK(qs, emb, k = 3))
     },
     // Recall-vs-nProbe tuning curve — the quality/latency trade every
     // IVF deployment measures before picking its operating point: the
@@ -736,14 +681,9 @@ object ExtensionQueries {
       Similarity.buildIvfPqIndex(emb, root)
       val (index, cents, sample) = Similarity.loadIvfPqArtifacts(spark, root)
       Seq(1, 2, 4).map { p =>
-        val approx = Similarity
-          .ivfPqTopKFromArtifacts(index, cents, sample, qs, emb, k = 3, nProbe = p)
-          .select(col("q_vec"), col("c_vec"), lit(1L).as("__hit"))
-        exact.join(approx, Seq("q_vec", "c_vec"), "left")
-          .agg(count(lit(1)).as("n_exact"),
-            sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-          .select(lit(p.toLong).as("n_probe"), col("n_exact"), col("n_hit"),
-            (col("n_hit").cast(DoubleType) / col("n_exact")).as("recall"))
+        Similarity.recall(exact, Similarity
+            .ivfPqTopKFromArtifacts(index, cents, sample, qs, emb, k = 3, nProbe = p))
+          .select(lit(p.toLong).as("n_probe"), col("*"))
       }.reduce(_ unionByName _).orderBy("n_probe")
     },
     // IVFADC from a PERSISTED index — the serving half of the
@@ -1286,13 +1226,8 @@ object ExtensionQueries {
     // --- As-of join: each click matched to the user's nearest preceding
     // signup (checked against DuckDB's NATIVE ASOF JOIN) ---
     "x6_asof_join" -> { (spark, dir) =>
-      val ev = Tables.events(spark, dir)
-      val clicks = ev.where(col("event_type") === "click")
-        .select("user_id", "ts", "event_id")
-      val signups = ev.where(col("event_type") === "signup")
-        .select("user_id", "ts", "event_id")
-      graft.operators.AsOfJoin.asof(
-        clicks, signups, Seq("user_id"), "ts", "ts", rightPrefix = "signup_")
+      graft.operators.AsOfJoin
+        .priorEventOfType(Tables.events(spark, dir), "click", "signup")
         .select(
           col("user_id"), col("event_id"),
           expr("timestamp_seconds(ts div 1000000000)").as("click_ts"),
@@ -1314,15 +1249,7 @@ object ExtensionQueries {
     // sits at precisely the gap): an event AT prev + gap still MERGES —
     // a new session starts only strictly beyond the gap.
     "st6_session_window" -> { (spark, dir) =>
-      Tables.events(spark, dir)
-        .groupBy(col("user_id"), session_window(col("ts_sec"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(
-          col("user_id"),
-          col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("n_events"))
-        .orderBy("user_id", "session_start")
+      Sessionize.windowSessions(Tables.events(spark, dir), lit("30 minutes"))
     },
 
     // Dynamic-gap session windows: the inactivity gap is an EXPRESSION
@@ -1337,15 +1264,7 @@ object ExtensionQueries {
     "st18_dynamic_gap_sessions" -> { (spark, dir) =>
       val gap = when(col("event_type") === "purchase", lit("60 minutes"))
         .otherwise(lit("30 minutes"))
-      Tables.events(spark, dir)
-        .groupBy(col("user_id"), session_window(col("ts_sec"), gap))
-        .agg(count(lit(1)).as("n_events"))
-        .select(
-          col("user_id"),
-          col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("n_events"))
-        .orderBy("user_id", "session_start")
+      Sessionize.windowSessions(Tables.events(spark, dir), gap)
     },
 
     // --- Streaming ---
@@ -1556,18 +1475,7 @@ object ExtensionQueries {
           VectorMath.cosineExact(slice(col("qe"), 1, 16),
             slice(col("embedding"), 1, 16)).as("ct"))
         .localCheckpoint(eager = true) // feeds both rankings
-      def top5(score: String) = {
-        val w = Window.partitionBy("q_vec")
-          .orderBy(col(score).desc, col("cv"))
-        scored.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5).select(col("q_vec"), col("cv"))
-      }
-      val counts = top5("cf").intersect(top5("ct"))
-        .groupBy("q_vec")
-        .agg(count(lit(1)).as("n"))
-      q.select(col("q_vec")).join(counts, Seq("q_vec"), "left")
-        .select(col("q_vec"), coalesce(col("n"), lit(0L)).as("overlap_at_5"))
-        .orderBy("q_vec")
+      Similarity.topKOverlap(q, scored, "cf", "ct", k = 5)
     },
 
     // Int8-quantization recall audit — the scalar-quantization column
@@ -1597,18 +1505,7 @@ object ExtensionQueries {
             (sqrt(dotL(col("qa"), col("qa")).cast(DoubleType)) *
               sqrt(dotL(col("qb"), col("qb")).cast(DoubleType)))).as("c8"))
         .localCheckpoint(eager = true) // feeds both rankings
-      def top5(score: String) = {
-        val w = Window.partitionBy("q_vec")
-          .orderBy(col(score).desc, col("cv"))
-        scored.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5).select(col("q_vec"), col("cv"))
-      }
-      val counts = top5("cf").intersect(top5("c8"))
-        .groupBy("q_vec")
-        .agg(count(lit(1)).as("n"))
-      q.select(col("q_vec")).join(counts, Seq("q_vec"), "left")
-        .select(col("q_vec"), coalesce(col("n"), lit(0L)).as("overlap_at_5"))
-        .orderBy("q_vec")
+      Similarity.topKOverlap(q, scored, "cf", "c8", k = 5)
     },
 
     // Hard-negative mining for contrastive training — per anchor, the

@@ -264,18 +264,10 @@ object PipelineQueries {
     // per-bar key space is bounded (types × days), never row-scaled.
     "ts11_ohlc_bars" -> { (spark, dir) =>
       val key = format_string("%020d:%020d", col("ts"), col("event_id"))
-      Tables.events(spark, dir)
-        .select(col("event_type"), to_date(col("ts_sec")).as("day"),
-          floor(col("value") * 100).cast(LongType).as("cents"), key.as("k"))
-        .groupBy("event_type", "day")
-        .agg(
-          min_by(col("cents"), col("k")).as("open_cents"),
-          max(col("cents")).as("high_cents"),
-          min(col("cents")).as("low_cents"),
-          max_by(col("cents"), col("k")).as("close_cents"),
-          count(lit(1)).as("n_trades"),
-          (sum(col("cents")).cast(DoubleType) /
-            count(lit(1)).cast(DoubleType)).as("vwap_cents"))
+      TimeSeries.ohlcBars(Tables.events(spark, dir)
+          .select(col("event_type"), to_date(col("ts_sec")).as("day"),
+            floor(col("value") * 100).cast(LongType).as("cents"), key.as("k"))
+          .groupBy("event_type", "day"))
         .orderBy("event_type", "day")
     },
 

@@ -352,21 +352,9 @@ object TrainingDataQueries {
     "wcont1_winnowed_contamination" -> { (spark, dir) =>
       val docs = Tables.documentsParallel(spark, dir)
       val isEval = col("doc_id") % 10 === 7
-      val evalFps = graft.operators.Contamination
-        .winnowedFingerprints(docs.where(isEval))
-        .select(col("fp")).distinct().withColumn("__hit", lit(1L))
-      val perDoc = graft.operators.Contamination
-        .winnowedFingerprints(docs.where(!isEval))
-        .join(broadcast(evalFps), Seq("fp"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_fps"),
-          sum(coalesce(col("__hit"), lit(0L))).as("n_shared"))
-      docs.where(!isEval).select("doc_id")
-        .join(perDoc, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_fps"), lit(0L)).as("n_fps"),
-          coalesce(col("n_shared"), lit(0L)).as("n_shared"))
-        .withColumn("contaminated", col("n_shared") > 0)
+      def fps(d: DataFrame) = Contamination.winnowedFingerprints(d)
+      Contamination.hitCounts(docs.where(!isEval),
+          fps(docs.where(!isEval)), fps(docs.where(isEval)), "fp", "n_fps", "n_shared")
         .orderBy("doc_id")
     },
 

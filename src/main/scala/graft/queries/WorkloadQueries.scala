@@ -300,13 +300,8 @@ object WorkloadQueries {
     // only counts within 7 days (market-data max-staleness semantics) —
     // a post-filter on the as-of match, same one-shuffle core.
     "x27_asof_tolerance" -> { (spark, dir) =>
-      val ev = Tables.events(spark, dir)
-      val clicks = ev.where(col("event_type") === "click")
-        .select("user_id", "ts", "event_id")
-      val signups = ev.where(col("event_type") === "signup")
-        .select("user_id", "ts", "event_id")
-      graft.operators.AsOfJoin.asof(
-        clicks, signups, Seq("user_id"), "ts", "ts", rightPrefix = "signup_")
+      graft.operators.AsOfJoin
+        .priorEventOfType(Tables.events(spark, dir), "click", "signup")
         .where(col("ts") - col("signup_ts") <= lit(7L * 86400L * 1000000000L))
         .select(col("user_id"), col("event_id"), col("signup_event_id"))
         .orderBy("user_id", "event_id")

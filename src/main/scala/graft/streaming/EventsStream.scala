@@ -207,20 +207,11 @@ object EventsStream {
     */
   def streamOhlcBars(spark: SparkSession, dir: String): DataFrame = {
     val k = format_string("%020d:%020d", col("ts"), col("event_id"))
-    val bars = eventsStream(spark, dir)
+    val bars = graft.operators.TimeSeries.ohlcBars(eventsStream(spark, dir)
       .withColumn("cents", floor(col("value") * 100).cast(LongType))
       .withColumn("k", k)
       .withWatermark("ts_sec", "1 day")
-      .groupBy(window(col("ts_sec"), "1 day"), col("event_type"))
-      .agg(
-        min_by(col("cents"), col("k")).as("open_cents"),
-        max(col("cents")).as("high_cents"),
-        min(col("cents")).as("low_cents"),
-        max_by(col("cents"), col("k")).as("close_cents"),
-        count(lit(1)).as("n_trades"),
-        (sum(col("cents")).cast(DoubleType) /
-          count(lit(1)).cast(DoubleType)).as("vwap_cents"),
-      )
+      .groupBy(window(col("ts_sec"), "1 day"), col("event_type")))
     runToMemory(bars, spark, "complete", "stream_ohlc")
       .select(col("event_type"),
         col("window.start").cast(DateType).as("day"),

@@ -130,22 +130,30 @@ object VectorStream {
     * the oracle replays the beam search FROM the same persisted edges.
     */
   def streamGraphAppend(spark: SparkSession, dir: String): DataFrame = {
+    val (emb, root) = streamBuiltGraphIndex(spark, dir, "_stream", "st29_graph_append")
+    graft.operators.Similarity.serveGraphAudit(emb, root)
+  }
+
+  /** The stream-built graph index st29 and st30 serve from: the base
+    * graph over [0, 400) builds and freezes once under
+    * `graphIndexRoot(dir) + suffix`, then a stream drive named after
+    * `name` NSW-inserts [400, 500). Returns (embeddings, root).
+    */
+  private def streamBuiltGraphIndex(spark: SparkSession, dir: String,
+      suffix: String, name: String): (DataFrame, String) = {
     import graft.operators.Similarity
     val emb = graft.Tables.embeddings(spark, dir)
-    val root = Similarity.graphIndexRoot(dir) + "_stream"
+    val root = Similarity.graphIndexRoot(dir) + suffix
     val old = emb.where(col("vec_id") < 400)
     Similarity.buildNndGraphIndex(old, root)
     Similarity.freezeGraphIndexBase(spark, root)
     val feed = StreamRun.parquetSource(spark, dir, "embeddings.parquet")
       .where(col("vec_id") >= 400 && col("vec_id") < 500)
     StreamRun.driveForeachBatch(feed, "append",
-        s"st29_graph_append_${runId.incrementAndGet()}") { (batch, _) =>
+        s"${name}_${runId.incrementAndGet()}") { (batch, _) =>
       if (!batch.isEmpty) Similarity.streamInsertIntoGraphIndex(old, batch, root)
     }
-    Similarity.graphAnnServeFromIndex(
-        emb.where(col("vec_id") < 8), emb.where(col("vec_id") < 500), root,
-        k = 5, beam = 8, rounds = 3, degree = 5)
-      .orderBy("q_vec", "rank")
+    (emb, root)
   }
 
   /** st29 + the OFFLINE RECONCILIATION pass (VERDICT r11 #2): the same
@@ -163,26 +171,13 @@ object VectorStream {
   def streamGraphReconcile(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     import graft.energy.AtomicLayer
-    val emb = graft.Tables.embeddings(spark, dir)
-    val root = Similarity.graphIndexRoot(dir) + "_rec"
-    val old = emb.where(col("vec_id") < 400)
-    Similarity.buildNndGraphIndex(old, root)
-    Similarity.freezeGraphIndexBase(spark, root)
-    val feed = StreamRun.parquetSource(spark, dir, "embeddings.parquet")
-      .where(col("vec_id") >= 400 && col("vec_id") < 500)
-    StreamRun.driveForeachBatch(feed, "append",
-        s"st30_graph_reconcile_${runId.incrementAndGet()}") { (batch, _) =>
-      if (!batch.isEmpty) Similarity.streamInsertIntoGraphIndex(old, batch, root)
-    }
+    val (emb, root) = streamBuiltGraphIndex(spark, dir, "_rec", "st30_graph_reconcile")
     val marker = s"$root/reconciled.parquet"
     if (AtomicLayer.latestCommitted(spark, marker).isEmpty) {
       Similarity.reconcileGraphIndex(emb.where(col("vec_id") < 500), root)
       AtomicLayer.write(spark.range(1).toDF("done"), marker, keepVersions = 1)
       (): Unit
     }
-    Similarity.graphAnnServeFromIndex(
-        emb.where(col("vec_id") < 8), emb.where(col("vec_id") < 500), root,
-        k = 5, beam = 8, rounds = 3, degree = 5)
-      .orderBy("q_vec", "rank")
+    Similarity.serveGraphAudit(emb, root)
   }
 }

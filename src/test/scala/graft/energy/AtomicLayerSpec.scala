@@ -186,4 +186,21 @@ class AtomicLayerSpec extends SparkSpec {
     df(7, 8).write.parquet(root)
     assert(AtomicLayer.read(spark, root).as[Int].collect().sorted === Array(7, 8))
   }
+
+  test("read fails on a root whose only version is uncommitted") {
+    // a first write that died after its part files landed: a real
+    // parquet v0 without the _SUCCESS marker. Partitioned, Spark would
+    // read the torn v0's rows through the root; unpartitioned, it finds
+    // no schema at all. Either way the error must name the root.
+    val partitioned = tmpTable()
+    Seq((1, "a"), (2, "b")).toDF("x", "p").write.partitionBy("p")
+      .parquet(s"$partitioned/v0")
+    val flat = tmpTable()
+    df(4, 5).write.parquet(s"$flat/v0")
+    for (root <- Seq(partitioned, flat)) {
+      Files.delete(Paths.get(root, "v0", "_SUCCESS"))
+      val e = intercept[IllegalStateException](AtomicLayer.read(spark, root).collect())
+      assert(e.getMessage.contains(root))
+    }
+  }
 }

@@ -367,6 +367,21 @@ class GraphOpsSpec extends SparkSpec {
     assert(msgs.exists(_.contains("hits: auth score overflowed BIGINT")), e.toString)
   }
 
+  test("undirected evaluates its input pipeline once for both orientations") {
+    val evals = spark.sparkContext.longAccumulator("undirected_input_rows")
+    val counted = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    // a narrow, unpinned input pipeline: every evaluation of it bumps
+    // the accumulator once per row
+    val input = spark.range(0, 10, 1, 2)
+      .select(counted(col("id")).as("ta"), (col("id") + 1).as("tb"), lit(7L).as("w"))
+    val und = GraphOps.undirected(input, "ta", "tb", "w")
+    assert(evals.value == 10L, s"input rows evaluated ${evals.value} times for 10 rows")
+    val rows = und.as[(Long, Long, Long)].collect()
+    assert(rows.sorted.toSeq ===
+      (0L until 10L).flatMap(i => Seq((i, i + 1, 7L), (i + 1, i, 7L))).sorted)
+    assert(evals.value == 10L)
+  }
+
   test("no source under src/main outside GraphOps.scala builds a symmetrized src/dst edge list") {
     // select(col(a).as("src"), col(b).as("dst")).unionAll(...
     // select(col(b).as("src"), col(a).as("dst"))) for any columns a, b:

@@ -62,34 +62,6 @@ class RoundEightOpsSpec extends SparkSpec {
     assert(rows.forall(r => r.getLong(1) >= 1 && r.getLong(1) <= r.getLong(2)))
   }
 
-  test("x32: filtered search never crosses the predicate and never under-fills k") {
-    val emb = Tables.embeddings(spark, sf0001)
-    val labels = emb.select(col("vec_id").as("id"), col("label")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val perLabel = labels.values.groupBy(identity).view.mapValues(_.size).toMap
-
-    val res = Similarity.filteredTopK(emb.where(col("vec_id") < 8), emb, k = 5)
-      .collect()
-    // predicate safety: every neighbor shares the query's label
-    assert(res.forall { r =>
-      labels(r.getAs[Long]("q_vec")) == labels(r.getAs[Long]("c_vec"))
-    }, "a neighbor crossed the label predicate")
-    // k-honesty: each query returns min(k, |its label class| - 1) rows —
-    // the property post-filtering an unfiltered top-k cannot guarantee
-    val got = res.groupBy(_.getAs[Long]("q_vec")).view.mapValues(_.length)
-    for ((qv, n) <- got) {
-      val expected = math.min(5, perLabel(labels(qv)) - 1)
-      assert(n == expected, s"query $qv returned $n of expected $expected")
-    }
-    // the pitfall, demonstrated: post-filtering a plain top-5 under-fills
-    val post = Similarity.bruteForceTopK(emb.where(col("vec_id") < 8), emb, k = 5)
-      .collect()
-      .filter(r => labels(r.getAs[Long]("q_vec")) == labels(r.getAs[Long]("c_vec")))
-      .groupBy(_.getAs[Long]("q_vec")).view.mapValues(_.length)
-    assert(got.exists { case (qv, n) => post.getOrElse(qv, 0) < n },
-      "expected at least one query where post-filtering under-fills k")
-  }
-
   test("snm1: every pair is a sorted neighbor within its block; planted twin found") {
     val res = q("snm1_sorted_neighborhood").collect()
     assert(res.nonEmpty)

@@ -5,51 +5,16 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Property tests for the round-6 dedup kernels on RANDOM corpora (the
-  * fixed-seed sampling pattern of EnergyPropertiesSpec — the
-  * scalatest/scalacheck bridge artifact is not in the offline cache).
-  *
-  * Tiny vocabularies force heavy shingle sharing, so the random corpora
-  * actually exercise candidate generation, not just empty joins.
+/** Property tests for the round-6 as-of and span-removal kernels on
+  * RANDOM inputs (the fixed-seed sampling pattern of
+  * EnergyPropertiesSpec — the scalatest/scalacheck bridge artifact is
+  * not in the offline cache).
   */
 class RoundSixPropSpec extends SparkSpec {
   import spark.implicits._
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(77L + i)))
-
-  private val corpusGen: Gen[Seq[(Long, String)]] = for {
-    nDocs <- Gen.choose(4, 12)
-    docs <- Gen.listOfN(nDocs, for {
-      len <- Gen.choose(0, 20)
-      ws <- Gen.listOfN(len, Gen.oneOf("a", "b", "c", "d"))
-    } yield ws.mkString(" "))
-  } yield docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-
-  test("containmentJoin equals the brute-force definition on random corpora") {
-    val t = 0.8
-    for (corpus <- samples(corpusGen, 10)) {
-      val df = corpus.toDF("doc_id", "text")
-      val got = SetSimilarityJoin.containmentJoin(df, shingleK = 3, threshold = t)
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-
-      def shingles(s: String): Set[String] = {
-        val w = s.toLowerCase.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-        if (w.length < 3) Set.empty
-        else w.sliding(3).map(_.mkString(" ")).toSet
-      }
-      val sets = corpus.map { case (id, t0) => id -> shingles(t0) }.toMap
-      val expected = (for {
-        (a, sa) <- sets.toSeq if sa.nonEmpty
-        (b, sb) <- sets.toSeq if a != b
-        if sa.intersect(sb).size.toDouble / sa.size >= t
-      } yield (a, b)).toSet
-      assert(got == expected,
-        s"containment mismatch: extra=${got -- expected} missing=${expected -- got}\n" +
-          corpus.map { case (i, s) => s"$i: '$s'" }.mkString("\n"))
-    }
-  }
 
   test("asofNearest equals brute-force nearest on random event sets") {
     val gen = for {

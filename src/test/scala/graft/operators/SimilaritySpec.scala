@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.{SparkSpec, Tables}
 import graft.functions.VectorMath
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -281,5 +283,51 @@ class SimilaritySpec extends SparkSpec {
       .collect()(0)
     val recall = rec.getLong(1).toDouble / rec.getLong(0)
     assert(recall >= 0.9, f"NN-descent recall@5 $recall%.3f below the 0.9 floor")
+  }
+
+  test("x32: filtered search never crosses the predicate and never under-fills k") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val labels = emb.select(col("vec_id").as("id"), col("label")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val perLabel = labels.values.groupBy(identity).view.mapValues(_.size).toMap
+
+    val res = Similarity.filteredTopK(emb.where(col("vec_id") < 8), emb, k = 5)
+      .collect()
+    // predicate safety: every neighbor shares the query's label
+    assert(res.forall { r =>
+      labels(r.getAs[Long]("q_vec")) == labels(r.getAs[Long]("c_vec"))
+    }, "a neighbor crossed the label predicate")
+    // k-honesty: each query returns min(k, |its label class| - 1) rows —
+    // the property post-filtering an unfiltered top-k cannot guarantee
+    val got = res.groupBy(_.getAs[Long]("q_vec")).view.mapValues(_.length)
+    for ((qv, n) <- got) {
+      val expected = math.min(5, perLabel(labels(qv)) - 1)
+      assert(n == expected, s"query $qv returned $n of expected $expected")
+    }
+    // the pitfall, demonstrated: post-filtering a plain top-5 under-fills
+    val post = Similarity.bruteForceTopK(emb.where(col("vec_id") < 8), emb, k = 5)
+      .collect()
+      .filter(r => labels(r.getAs[Long]("q_vec")) == labels(r.getAs[Long]("c_vec")))
+      .groupBy(_.getAs[Long]("q_vec")).view.mapValues(_.length)
+    assert(got.exists { case (qv, n) => post.getOrElse(qv, 0) < n },
+      "expected at least one query where post-filtering under-fills k")
+  }
+
+  test("no source under src/main outside Similarity.scala spells the recall hit-join") {
+    // the "__hit" marker column of the exact-vs-approximate left join:
+    // Similarity.markFound is its one owner, so recall has one definition
+    val repoRoot = Paths.get(sys.props("user.dir"))
+    assert(Files.exists(repoRoot.resolve("build.sbt")), s"cwd $repoRoot is not the repo root")
+    val sources = Files.walk(repoRoot.resolve("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    val owner = sources.filter(_.getFileName.toString == "Similarity.scala")
+    assert(owner.exists(p => Files.readString(p).contains("\"__hit\"")),
+      "the owner no longer spells the marker, so the scan proves nothing")
+    val copies = sources
+      .filter((p: Path) => Files.readString(p).contains("\"__hit\""))
+      .map(p => repoRoot.relativize(p).toString)
+      .filterNot(_.endsWith("/operators/Similarity.scala"))
+    assert(copies.isEmpty,
+      s"recall hit-joins outside Similarity: $copies — use Similarity.markFound")
   }
 }
