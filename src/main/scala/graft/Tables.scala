@@ -40,14 +40,19 @@ object Tables {
             "LONG (nanos), TIMESTAMP or TIMESTAMP_NTZ")
     }
 
-  /** events with `ts` normalized to long nanos (see [[normalizeEventTs]])
-    * plus a second-precision timestamp column `ts_sec`. Queries stay at
-    * second precision so the DuckDB oracle (which reads the parquet
-    * natively) can match via `date_trunc('second', ts)`.
+  /** Raw events (batch or stream) with `ts` normalized to long nanos
+    * (see [[normalizeEventTs]]) plus a second-precision timestamp column
+    * `ts_sec`. Queries stay at second precision so the DuckDB oracle
+    * (which reads the parquet natively) can match via
+    * `date_trunc('second', ts)`.
     */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    normalizeEventTs(t(spark, dir, "events"))
+  def withTsSec(rawEvents: DataFrame): DataFrame =
+    normalizeEventTs(rawEvents)
       .withColumn("ts_sec", expr("timestamp_seconds(ts div 1000000000)"))
+
+  /** The events table through [[withTsSec]]. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    withTsSec(t(spark, dir, "events"))
 
   /** events with scan parallelism restored (same single-row-group local
     * fixture situation as [[documentsParallel]]): JSON-extraction queries

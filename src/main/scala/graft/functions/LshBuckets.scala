@@ -10,24 +10,23 @@ import org.apache.spark.sql.types._
 /** Native Catalyst expression: all `nTables` random-hyperplane LSH
   * bucket ids of an `array<float>` embedding in ONE fused loop.
   *
-  * The Column-composition equivalent
-  * ([[graft.operators.Similarity.lshBucket]] per table) builds
-  * nTables x nPlanes x dim expression nodes — 1024 multiply terms for
-  * the default 4x4x64 — which overflows whole-stage codegen's method
-  * budget and measured 7x slower end to end (x2 0.84 s -> 5.9 s at
-  * sf0.1 when the OR-construction landed on the composed form). Here
-  * the plane weights are one flat precomputed array carried as a
-  * codegen reference object and the kernel is three tight loops.
+  * The Column-composition equivalent (a sum of dim products per plane,
+  * per table) builds nTables x nPlanes x dim expression nodes — 1024
+  * multiply terms for the default 4x4x64 — which overflows whole-stage
+  * codegen's method budget and measured 7x slower end to end (x2 0.84 s
+  * -> 5.9 s at sf0.1 when the OR-construction landed on the composed
+  * form). Here the plane weights are one flat precomputed array carried
+  * as a codegen reference object, and [[LshBuckets.kernel]], which
+  * `nullSafeEval` and the generated code both call, is three tight loops.
   *
   * Weights reproduce [[graft.operators.Similarity.planeWeightInt]]'s
   * integer LCG exactly (plane index stride 64), and the dot products
   * are sums of exact integers (floor(v * 2^20) longs x [-1000, 1000]
   * weights, < 2^38 total) — evaluation-order-independent, so bucket
   * assignment is recomputable in any engine (the x2 oracle recomputes
-  * it in DuckDB SQL). Table t's bucket equals
-  * `lshBucket(emb, dim, nPlanes, planeOffset = t * nPlanes)` — asserted
-  * in SimilaritySpec. Null elements contribute nothing to a plane's
-  * dot product; a null array yields null.
+  * it in DuckDB SQL). SimilaritySpec asserts each table's bucket equals
+  * that composition with plane offset `t * nPlanes`. Null elements
+  * contribute nothing to a plane's dot product; a null array yields null.
   */
 case class LshBuckets(child: Expression, nPlanes: Int, nTables: Int)
     extends UnaryExpression {
@@ -50,64 +49,14 @@ case class LshBuckets(child: Expression, nPlanes: Int, nTables: Int)
       graft.operators.Similarity.planeWeightInt(k / 64, k % 64)
     }
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), 64)
-    val out = new Array[Long](nTables)
-    var t = 0
-    while (t < nTables) {
-      var bucket = 0L
-      var p = 0
-      while (p < nPlanes) {
-        var dot = 0L
-        val base = (t * nPlanes + p) * 64
-        var d = 0
-        while (d < n) {
-          if (!x.isNullAt(d)) {
-            dot += math.floor(x.getFloat(d).toDouble * 1048576.0).toLong * weights(base + d)
-          }
-          d += 1
-        }
-        if (dot > 0) bucket |= (1L << p)
-        p += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any =
+    LshBuckets.kernel(a.asInstanceOf[ArrayData], weights, nPlanes, nTables)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val wts = ctx.addReferenceObj("lshWeights", weights, "long[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val p = ctx.freshName("p")
-      val d = ctx.freshName("d")
-      val dot = ctx.freshName("dot")
-      val bucket = ctx.freshName("bucket")
-      val base = ctx.freshName("base")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), 64);
-         |long[] $out = new long[$nTables];
-         |for (int $t = 0; $t < $nTables; $t++) {
-         |  long $bucket = 0L;
-         |  for (int $p = 0; $p < $nPlanes; $p++) {
-         |    long $dot = 0L;
-         |    int $base = ($t * $nPlanes + $p) * 64;
-         |    for (int $d = 0; $d < $n; $d++) {
-         |      if ($a.isNullAt($d)) continue;
-         |      $dot += ((long) java.lang.Math.floor(((double) $a.getFloat($d)) * 1048576.0))
-         |        * $wts[$base + $d];
-         |    }
-         |    if ($dot > 0) $bucket |= (1L << $p);
-         |  }
-         |  $out[$t] = $bucket;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    val k = classOf[LshBuckets].getName
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = $k.kernel($a, $wts, $nPlanes, $nTables);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): LshBuckets =
@@ -121,4 +70,32 @@ object LshBuckets {
   def buckets(emb: Column, nPlanes: Int, nTables: Int): Column =
     GraftSqlBridge.column(
       LshBuckets(GraftSqlBridge.expression(emb), nPlanes, nTables))
+
+  /** The one bucketing loop, run by both the interpreted and the
+    * generated path: table t's bit p is set iff the quantized first 64
+    * elements dotted with plane `t * nPlanes + p` of `weights` is positive.
+    */
+  def kernel(x: ArrayData, weights: Array[Long], nPlanes: Int, nTables: Int): ArrayData = {
+    val n = math.min(x.numElements(), 64)
+    val out = new Array[Long](nTables)
+    var t = 0
+    while (t < nTables) {
+      var bucket = 0L
+      var p = 0
+      while (p < nPlanes) {
+        var dot = 0L
+        val base = (t * nPlanes + p) * 64
+        var d = 0
+        while (d < n) {
+          if (!x.isNullAt(d)) dot += VectorMath.quantizeFloat(x.getFloat(d)) * weights(base + d)
+          d += 1
+        }
+        if (dot > 0) bucket |= (1L << p)
+        p += 1
+      }
+      out(t) = bucket
+      t += 1
+    }
+    new GenericArrayData(out)
+  }
 }

@@ -35,7 +35,9 @@ import org.apache.spark.sql.types._
   * codeword allocating two slices and a zipped array. At PQ's operating
   * point the encode touches every corpus vector once (write time), so
   * the per-row constant IS the index build cost; here it is three tight
-  * loops over primitive arrays with zero allocation beyond the output.
+  * loops over primitive arrays ([[PqEncode.kernel]], which `nullSafeEval`
+  * and the generated code both call) with no allocation beyond the
+  * quantized vector and the output.
   */
 case class PqEncode(left: Expression, right: Expression, nSub: Int)
     extends BinaryExpression {
@@ -56,9 +58,37 @@ case class PqEncode(left: Expression, right: Expression, nSub: Int)
         s"(${l.simpleString}, ${r.simpleString})")
   }
 
-  override def nullSafeEval(e: Any, cb: Any): Any = {
-    val x = e.asInstanceOf[ArrayData]
-    val cbs = cb.asInstanceOf[ArrayData]
+  override def nullSafeEval(e: Any, cb: Any): Any =
+    PqEncode.kernel(e.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData], nSub)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val k = classOf[PqEncode].getName
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""
+         |${ev.value} = $k.kernel($a, $b, $nSub);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PqEncode =
+    copy(left = newLeft, right = newRight)
+}
+
+object PqEncode {
+  import org.apache.spark.sql.GraftSqlBridge
+
+  /** Column-API face: nSub 0-based codeword positions for `emb`. */
+  def encode(emb: Column, codebook: Column, nSub: Int): Column =
+    GraftSqlBridge.column(
+      PqEncode(GraftSqlBridge.expression(emb), GraftSqlBridge.expression(codebook), nSub))
+
+  /** The one encoding loop, run by both the interpreted and the generated
+    * path: per subspace, the lowest codebook position at the least
+    * squared distance; null (the marker, since the arithmetic returns
+    * an array) when `x` does not split evenly into `nSub` subspaces.
+    */
+  def kernel(x: ArrayData, cbs: ArrayData, nSub: Int): ArrayData = {
     val len = x.numElements()
     // A vector that doesn't split evenly into nSub subspaces has no
     // well-defined codes: return NULL rather than silently dropping
@@ -72,7 +102,7 @@ case class PqEncode(left: Expression, right: Expression, nSub: Int)
     var d = 0
     while (d < len) {
       if (x.isNullAt(d)) qNull(d) = true
-      else q(d) = math.floor(x.getFloat(d).toDouble * 1048576.0).toLong
+      else q(d) = VectorMath.quantizeFloat(x.getFloat(d))
       d += 1
     }
     val out = new Array[Long](nSub)
@@ -104,72 +134,4 @@ case class PqEncode(left: Expression, right: Expression, nSub: Int)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val len = ctx.freshName("len")
-      val subdim = ctx.freshName("subdim")
-      val q = ctx.freshName("q")
-      val qn = ctx.freshName("qn")
-      val out = ctx.freshName("out")
-      val d = ctx.freshName("d")
-      val s = ctx.freshName("s")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val di = ctx.freshName("di")
-      val cw = ctx.freshName("cw")
-      val cwn = ctx.freshName("cwn")
-      val dist = ctx.freshName("dist")
-      val diff = ctx.freshName("diff")
-      val bestD = ctx.freshName("bestD")
-      val bestJ = ctx.freshName("bestJ")
-      s"""
-         |int $len = $a.numElements();
-         |if ($len == 0 || $len % $nSub != 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $subdim = $len / $nSub;
-         |  long[] $q = new long[$len];
-         |  boolean[] $qn = new boolean[$len];
-         |  for (int $d = 0; $d < $len; $d++) {
-         |    if ($a.isNullAt($d)) { $qn[$d] = true; continue; }
-         |    $q[$d] = (long) java.lang.Math.floor(((double) $a.getFloat($d)) * 1048576.0);
-         |  }
-         |  long[] $out = new long[$nSub];
-         |  for (int $s = 0; $s < $nSub; $s++) {
-         |    long $bestD = Long.MAX_VALUE;
-         |    long $bestJ = -1L;
-         |    for (int $j = 0; $j < $b.numElements(); $j++) {
-         |      if ($b.isNullAt($j)) continue;
-         |      org.apache.spark.sql.catalyst.util.ArrayData $cw = $b.getArray($j);
-         |      int $cwn = $cw.numElements();
-         |      long $dist = 0L;
-         |      for (int $i = 0; $i < $subdim; $i++) {
-         |        int $di = $s * $subdim + $i;
-         |        if ($di >= $cwn || $qn[$di] || $cw.isNullAt($di)) continue;
-         |        long $diff = $q[$di] - $cw.getLong($di);
-         |        $dist += $diff * $diff;
-         |      }
-         |      if ($dist < $bestD) { $bestD = $dist; $bestJ = $j; }
-         |    }
-         |    $out[$s] = $bestJ;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-object PqEncode {
-  import org.apache.spark.sql.GraftSqlBridge
-
-  /** Column-API face: nSub 0-based codeword positions for `emb`. */
-  def encode(emb: Column, codebook: Column, nSub: Int): Column =
-    GraftSqlBridge.column(
-      PqEncode(GraftSqlBridge.expression(emb), GraftSqlBridge.expression(codebook), nSub))
 }

@@ -1,47 +1,49 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Vector arithmetic over `array<float>` embedding columns, built from
-  * Spark's codegen'd higher-order functions (`zip_with`/`aggregate`) — no
-  * UDFs, so the whole expression stays inside WholeStageCodegen.
+/** The one owner of the engine's 2^20 fixed-point contract: a value x
+  * enters integer arithmetic as floor(x * 2^20), a long.
   *
-  * Elements are quantized by an exact power-of-two scale (float x 2^20 is
-  * an exponent shift — no rounding — and floor of it is an exact
-  * integer), then accumulated in integer arithmetic. Fully
-  * order-independent AND engine-independent: any system computing
-  * floor(x * 2^20) sums the identical integers, so results hash-match a
-  * DuckDB oracle bit-for-bit. Quantization error ~2^-20 per element is
-  * inherent to the operator's contract (similarity scores, not ledgers).
+  * For float inputs the scale is an exponent shift (no rounding) and the
+  * floor is an exact integer, so sums and products of quantized values
+  * are evaluation-order-independent AND engine-independent: any system
+  * computing floor(x * 2^20) gets the identical integers, which is what
+  * lets every quantized result hash-match its DuckDB oracle bit for bit.
+  * Quantization error ~2^-20 per element is inherent to the contract
+  * (similarity scores, not ledgers).
+  *
+  * Every Scala site that scales by 2^20 goes through this object: the
+  * column quantizer [[quantize]], its array form [[quantizeArray]], the
+  * scalar form [[quantizeFloat]] the native kernels ([[QuantizedCosine]],
+  * [[LshBuckets]], [[PqEncode]]) call per element, and [[Scale]] for the
+  * sites that de-scale a quantized sum and for the generated loop of
+  * [[QuantizedCosine]].
   */
 object VectorMath {
-  private val Scale = 1048576.0 // 2^20: exact scaling for float inputs
 
-  private def quantize(a: Column): Column =
-    transform(a, x => floor(x.cast(DoubleType) * lit(Scale)).cast(LongType))
+  /** 2^20, the fixed-point scale. */
+  val Scale = 1048576.0
 
-  /** Quantized-integer dot product of two float-array columns (exact,
-    * engine-portable), surfaced as the integer sum (long).
+  /** floor(c * 2^20) as a long column; on a double column the optimizer
+    * drops the cast.
     */
-  def dotExactQ(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(quantize(a), quantize(b), (x, y) => x * y),
-      lit(0L),
-      (acc, v) => acc + v,
-    )
+  def quantize(c: Column): Column =
+    floor(c.cast(DoubleType) * lit(Scale)).cast(LongType)
 
-  /** Cosine similarity over the quantized vectors: every input to the
-    * final double arithmetic is an exactly-reproducible integer. Delegates
-    * to the native [[QuantizedCosine]] expression (one fused codegen loop);
-    * [[cosineExactHof]] is the builtin-composition equivalent kept for
-    * cross-checking the two implementations against each other.
+  /** [[quantize]] applied to every element of an array column. */
+  def quantizeArray(a: Column): Column = transform(a, v => quantize(v))
+
+  /** floor(x * 2^20) for one float element (the native kernels' form). */
+  def quantizeFloat(x: Float): Long = math.floor(x.toDouble * Scale).toLong
+
+  /** Cosine similarity over the quantized vectors: dot and norms are
+    * exact integer sums, so every input to the final double arithmetic
+    * is reproducible. The native [[QuantizedCosine]] expression.
     */
   def cosineExact(a: Column, b: Column): Column =
-    QuantizedCosine.quantizedCosine(a, b)
-
-  def cosineExactHof(a: Column, b: Column): Column =
-    dotExactQ(a, b).cast(DoubleType) /
-      (sqrt(dotExactQ(a, a).cast(DoubleType)) * sqrt(dotExactQ(b, b).cast(DoubleType)))
+    GraftSqlBridge.column(
+      QuantizedCosine(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 }

@@ -522,7 +522,6 @@ object Dedup {
     * rather than silently vanishing from the decision set.
     */
   def semanticDedup(embeddings: DataFrame, minCosine: Double = 0.3): DataFrame = {
-    import graft.functions.QuantizedCosine.{quantizedCosine => cosine}
     // The assignment CARRIES the embedding (map-only fold, see
     // assignToCentroids) — no relabel join; eager pin because the fold
     // feeds three branches (both pair sides + the final left join).
@@ -537,7 +536,7 @@ object Dedup {
       col("cluster"), col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
     val dups = a.join(b, Seq("cluster"))
       .where(col("vec_a") < col("vec_b") &&
-        cosine(col("emb_a"), col("emb_b")) >= minCosine)
+        VectorMath.cosineExact(col("emb_a"), col("emb_b")) >= minCosine)
       .select(col("vec_b").as("vec_id"))
       .distinct()
     val result = embeddings.select(col("vec_id"))
@@ -599,7 +598,6 @@ object Dedup {
       nPlanes: Int = 4,
       nTables: Int = 4,
   ): DataFrame = {
-    import graft.functions.QuantizedCosine.{quantizedCosine => cosine}
     import org.apache.spark.sql.expressions.Window
     // EAGER pin: the centroid-assignment fold is the expensive upstream
     // and feeds FOUR branches (phase-1 exemplar scan, both phase-2
@@ -631,7 +629,7 @@ object Dedup {
         .over(Window.partitionBy("cluster", "t", "b")))
     val p1dups = withEx
       .where(col("vec_id") > col("__m.vec_id") &&
-        cosine(col("embedding"), col("__m.embedding")) >= minCosine)
+        VectorMath.cosineExact(col("embedding"), col("__m.embedding")) >= minCosine)
       .select(col("vec_id"))
       .distinct()
       .localCheckpoint(eager = true) // consumed by the survivor anti-join AND the union
@@ -651,7 +649,7 @@ object Dedup {
         col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
     val p2dups = a.join(bb, Seq("cluster", "t", "b"))
       .where(col("vec_a") < col("vec_b") && col("vec_a") =!= col("m_id") &&
-        cosine(col("emb_a"), col("emb_b")) >= minCosine)
+        VectorMath.cosineExact(col("emb_a"), col("emb_b")) >= minCosine)
       .select(col("vec_b").as("vec_id"))
     val dups = p1dups.unionByName(p2dups).distinct()
     embeddings.select(col("vec_id"))

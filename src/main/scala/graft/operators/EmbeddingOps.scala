@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VectorMath
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,10 +24,6 @@ import org.apache.spark.sql.types._
   */
 object EmbeddingOps {
 
-  /** floor(v * 2^20) as a long-typed column expression. */
-  private def q20(v: org.apache.spark.sql.Column) =
-    floor(v.cast(DoubleType) * 1048576.0).cast(LongType)
-
   /** L2 norms from exact integer squares: (vec_id, n_dims, qnorm2, norm).
     * qnorm2 < dims * 2^42 — safe in a long up to ~2^20 dims.
     *
@@ -44,9 +41,9 @@ object EmbeddingOps {
         aggregate(
           col("embedding"),
           lit(0L),
-          (acc, v) => acc + coalesce(q20(v) * q20(v), lit(0L)),
+          (acc, v) => acc + coalesce(VectorMath.quantize(v) * VectorMath.quantize(v), lit(0L)),
         ).as("qnorm2"),
-      ).withColumn("norm", sqrt(col("qnorm2").cast(DoubleType)) / 1048576.0)
+      ).withColumn("norm", sqrt(col("qnorm2").cast(DoubleType)) / VectorMath.Scale)
 
   /** Average-pool embeddings per label (class centroids): one output row
     * per (label, dim). The centroid component is sum(q)/(n * 2^20) — an
@@ -56,12 +53,12 @@ object EmbeddingOps {
     embeddings
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy("label", "dim")
-      .agg(count(lit(1)).as("n_vecs"), sum(q20(col("v"))).as("sum_q"))
+      .agg(count(lit(1)).as("n_vecs"), sum(VectorMath.quantize(col("v"))).as("sum_q"))
       .select(
         col("label"),
         col("dim"),
         col("n_vecs"),
-        (col("sum_q").cast(DoubleType) / (col("n_vecs").cast(DoubleType) * 1048576.0))
+        (col("sum_q").cast(DoubleType) / (col("n_vecs").cast(DoubleType) * VectorMath.Scale))
           .as("centroid"),
       )
 
@@ -70,7 +67,7 @@ object EmbeddingOps {
     */
   private def packedCentroids(centroidsLong: DataFrame): DataFrame =
     centroidsLong
-      .select(col("label"), col("dim"), q20(col("centroid")).as("qc"))
+      .select(col("label"), col("dim"), VectorMath.quantize(col("centroid")).as("qc"))
       .groupBy("label")
       .agg(
         transform(
@@ -128,7 +125,7 @@ object EmbeddingOps {
       .where(size(col("embedding")) > 0)
       .select(
         col("vec_id") +:
-          transform(col("embedding"), v => q20(v)).as("qv") +:
+          VectorMath.quantizeArray(col("embedding")).as("qv") +:
           carry.map(col): _*)
     val vecs =
       if (restoreScanParallelism)
@@ -229,7 +226,7 @@ object EmbeddingOps {
       .where(size(col("embedding")) > 0 && size(col("embedding")) % nSub === 0)
       .select(
         col("vec_id"),
-        transform(col("embedding"), v => q20(v)).as("qv"))
+        VectorMath.quantizeArray(col("embedding")).as("qv"))
       .withColumn("__subdim", size(col("qv")) / nSub)
     val subDists = (0 until nSub).map { s =>
       aggregate(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VectorMath
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -90,8 +91,8 @@ object GraphOps {
     nodes.crossJoin(nEdges).crossJoin(tri)
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
         when(col("n_wedges") > 0,
-          floor(lit(3.0) * col("n_triangles") / col("n_wedges") * lit(1048576.0))
-            .cast("long")).as("clustering_q"))
+          VectorMath.quantize(lit(3.0) * col("n_triangles") / col("n_wedges")))
+          .as("clustering_q"))
   }
 
   /** Common-neighbor link prediction over an ordered edge list (ta <

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VectorMath
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -61,7 +62,7 @@ object Relevance {
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(corpus))
       .select(col("doc_id"),
-        floor(idf * tfNorm * lit(1048576.0)).cast(LongType).as("score_term_q"))
+        VectorMath.quantize(idf * tfNorm).as("score_term_q"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_hits"), sum(col("score_term_q")).as("score_q"))
       .orderBy(col("score_q").desc, col("doc_id"))

@@ -124,31 +124,14 @@ object Similarity {
   /** Deterministic INTEGER hyperplane weight for (plane, dim): an LCG
     * step mapped to [-1000, 1000]. No RNG state and no floating point,
     * so every engine (and every re-run) derives the identical planes —
-    * and because the bucket dot products below are sums of exact
+    * and because the bucket dot products of the native
+    * [[graft.functions.LshBuckets]] expression are sums of exact
     * integers (|q| < 2^21, |w| <= 2^10, 64 dims → < 2^38), bucket
     * assignment is evaluation-order-independent and recomputable in
-    * plain SQL (the x2 oracle does). Public contract: the native
-    * [[graft.functions.LshBuckets]] expression reproduces this table
-    * exactly.
+    * plain SQL (the x2 oracle does).
     */
   def planeWeightInt(p: Int, d: Int): Long =
     ((1103515245L * (p * 64 + d) + 12345L) % 2001L + 2001L) % 2001L - 1000L
-
-  /** Sign-pattern bucket id from `nPlanes` hyperplanes: bit i set iff
-    * sum_d floor(emb[d] * 2^20) * planeWeightInt(offset + i, d) > 0.
-    * `planeOffset` selects a disjoint plane family — table t of an
-    * OR-construction uses offset t * nPlanes.
-    */
-  def lshBucket(emb: Column, dim: Int, nPlanes: Int, planeOffset: Int = 0): Column =
-    (0 until nPlanes)
-      .map { i =>
-        val dot = (0 until dim)
-          .map(d => floor(emb.getItem(d).cast(DoubleType) * 1048576.0).cast(LongType) *
-            lit(planeWeightInt(planeOffset + i, d)))
-          .reduce(_ + _)
-        when(dot > 0, lit(1L << i)).otherwise(0L)
-      }
-      .reduce(_ + _)
 
   /** First `n` corpus vectors by id as (centroid_id, c_emb) — the
     * deterministic centroid seeding shared by the IVF variants.
@@ -177,12 +160,11 @@ object Similarity {
     * bit-identical on any engine in any evaluation order.
     */
   private def nearestListCol(embCol: Column): Column = {
-    import graft.functions.QuantizedCosine.{quantizedCosine => cosine}
     aggregate(
       col("__cents"),
       struct(lit(-2.0).as("sim"), lit(-1L).as("centroid_id")),
       (acc, c) => {
-        val s = cosine(embCol, c.getField("c_emb"))
+        val s = VectorMath.cosineExact(embCol, c.getField("c_emb"))
         when(s > acc.getField("sim"),
           struct(s.as("sim"), c.getField("centroid_id").as("centroid_id")))
           .otherwise(acc)
@@ -196,12 +178,11 @@ object Similarity {
     * itself plans as the bounded-heap TopKPerKey operator.
     */
   private def probeLists(queries: DataFrame, centroids: DataFrame, nProbe: Int): DataFrame = {
-    import graft.functions.QuantizedCosine.{quantizedCosine => cosine}
     val w = Window.partitionBy(col("q_vec")).orderBy(col("__sim").desc, col("centroid_id"))
     queries
       .select(col("vec_id").as("q_vec"), col("embedding").as("q_emb"))
       .crossJoin(broadcast(centroids))
-      .withColumn("__sim", cosine(col("q_emb"), col("c_emb")))
+      .withColumn("__sim", VectorMath.cosineExact(col("q_emb"), col("c_emb")))
       .withColumn("__rk", row_number().over(w))
       .where(col("__rk") <= nProbe)
       .withColumn("list_id", col("centroid_id"))
@@ -259,14 +240,13 @@ object Similarity {
     // Quantized (integer-exact) cosine throughout — what lets the x5
     // oracle recompute the full IVF pipeline in DuckDB (float cosine
     // sums are order-dependent near ties; quantized ones are not).
-    import graft.functions.QuantizedCosine.{quantizedCosine => cosine}
     val q = probeLists(queries, centroids, nProbe)
     val w = Window.partitionBy(col("q_vec")).orderBy(col("cosine").desc, col("c_vec"))
     lists.join(broadcast(q), Seq("list_id"))
       .where(col("c_vec") =!= col("q_vec"))
       .select(
         col("q_vec"), col("c_vec"), col("list_id"),
-        cosine(col("q_emb"), col("c_emb")).as("cosine"),
+        VectorMath.cosineExact(col("q_emb"), col("c_emb")).as("cosine"),
       )
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -364,9 +344,6 @@ object Similarity {
     * (q_vec, rank, c_vec, qdist_approx); approximate by construction
     * (reconstruction error), quality gated by the x20r recall query.
     */
-  private def q20(v: Column): Column =
-    floor(v.cast(DoubleType) * 1048576.0).cast(LongType)
-  private def quantEmb(emb: Column): Column = transform(emb, v => q20(v))
 
   /** Vectors that don't split evenly into nSub subspaces drop (a real
     * PQ index pads or rejects at ingest) — mirrored in the oracles.
@@ -382,7 +359,7 @@ object Similarity {
     */
   private def pqSample(corpus: DataFrame, nSub: Int, nCodes: Int): DataFrame =
     pqSplittable(corpus, nSub).orderBy(col("vec_id")).limit(nCodes)
-      .select(col("vec_id").as("cw_id"), quantEmb(col("embedding")).as("qcw"))
+      .select(col("vec_id").as("cw_id"), VectorMath.quantizeArray(col("embedding")).as("qcw"))
 
   /** One-row broadcast of the position-ordered codeword arrays (column
     * `__cbv`) — the relation [[graft.functions.PqEncode]] folds over.
@@ -414,7 +391,7 @@ object Similarity {
     */
   private def pqLutDf(queries: DataFrame, sample: DataFrame, nSub: Int): DataFrame =
     pqSplittable(queries, nSub)
-      .select(col("vec_id").as("q_vec"), quantEmb(col("embedding")).as("qqv"))
+      .select(col("vec_id").as("q_vec"), VectorMath.quantizeArray(col("embedding")).as("qqv"))
       .withColumn("__subdim", size(col("qqv")) / nSub)
       .crossJoin(broadcast(sample))
       .select(col("q_vec"), col("cw_id"),
@@ -586,7 +563,7 @@ object Similarity {
     * lookups + subspace L2 folds, exact integers.
     */
   def withAdcDist(df: DataFrame, sample: DataFrame, qEmbCol: String, nSub: Int): DataFrame = {
-    val qqv = quantEmb(col(qEmbCol))
+    val qqv = VectorMath.quantizeArray(col(qEmbCol))
     val subdim = size(qqv) / nSub
     val dist = (0 until nSub).map { s =>
       pqSubL2(qqv,
@@ -780,8 +757,8 @@ object Similarity {
   private def quantL2(a: Column, b: Column): Column =
     aggregate(
       zip_with(
-        transform(a, v => floor(v.cast(DoubleType) * 1048576.0).cast(LongType)),
-        transform(b, v => floor(v.cast(DoubleType) * 1048576.0).cast(LongType)),
+        VectorMath.quantizeArray(a),
+        VectorMath.quantizeArray(b),
         (x, y) => coalesce((x - y) * (x - y), lit(0L))),
       lit(0L),
       (acc, d) => acc + d)
@@ -878,7 +855,7 @@ object Similarity {
         // and — like the bucket dots above — exact-integer accumulation,
         // so the whole x2 pipeline (buckets, candidates, ranks) is
         // engine-recomputable.
-        graft.functions.QuantizedCosine.quantizedCosine(col("q_emb"), col("c_emb")).as("cosine"),
+        VectorMath.cosineExact(col("q_emb"), col("c_emb")).as("cosine"),
       )
       // a pair colliding in several tables scores identically each time:
       // dedup on ids, keeping the collision count as a diagnostic
@@ -1194,7 +1171,7 @@ object Similarity {
         seedFamilies = 2, bucketCap = 64))
     // No distinct over the 4-way union (optimization r16): every source
     // scores the same deterministic quantized cosine for a given (v, u)
-    // — cosineExact IS quantizedCosine, and it is symmetric, so the
+    // — cosineExact is one integer-exact kernel, and it is symmetric, so the
     // reverse links carry the identical value — which makes cross-source
     // duplicates full-row-identical; descentRounds' in-heap (v, u) dedup
     // absorbs them without the union-wide exchange the distinct paid.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VectorMath
 import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -146,7 +147,7 @@ object TimeSeries {
     val byType = Window.partitionBy("event_type")
     val ranked = events
       .select(col("event_id"), col("event_type"),
-        floor(col("value") * lit(1048576.0)).cast(LongType).as("q"))
+        VectorMath.quantize(col("value")).as("q"))
       .select(col("event_id"), col("event_type"), col("q"),
         row_number().over(byType.orderBy("q", "event_id")).as("rn"),
         count(lit(1)).over(byType).as("n"))
@@ -181,7 +182,7 @@ object TimeSeries {
     val byUser = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
     val ranked = events
       .select(col("user_id"), col("event_id"), col("ts_sec"),
-        floor(col("value") * lit(1048576.0)).cast(LongType).as("q"))
+        VectorMath.quantize(col("value")).as("q"))
       .withColumn("rn", row_number().over(byUser))
     val contrib = ranked
       .select(col("user_id"), col("q"), col("rn"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorMath
 import graft.operators.{Dedup, EventAnalytics, GraphOps, Multimodal, TimeSeries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -567,8 +568,7 @@ object AnalyticsQueries {
     // aggregate/exists stay inside codegen (no UDFs). Quantized exact-
     // integer arithmetic keeps every output engine-portable.
     "h1_hof_surface" -> { (spark, dir) =>
-      val q = transform(col("embedding"),
-        x => floor(x.cast(DoubleType) * lit(1048576.0)).cast(LongType))
+      val q = VectorMath.quantizeArray(col("embedding"))
       Tables.embeddings(spark, dir)
         .select(
           col("vec_id"),

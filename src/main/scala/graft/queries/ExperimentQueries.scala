@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorMath
 import graft.operators.{Packing, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -82,14 +83,13 @@ object ExperimentQueries {
     val tot = counts.agg(sum(col("cs")).as("n"))
     counts.join(g, Seq("term"))
       .select(col("source"),
-        floor(sqrt((col("cs") * col("c")).cast(DoubleType)) *
-          lit(1048576.0)).cast(LongType).as("bq"))
+        VectorMath.quantize(sqrt((col("cs") * col("c")).cast(DoubleType))).as("bq"))
       .groupBy("source").agg(sum(col("bq")).as("bc_q"))
       .join(broadcast(ns), Seq("source"))
       .crossJoin(broadcast(tot))
       .select(col("source"), col("n_s").as("n_tokens"), col("bc_q"),
         (lit(1.0) - col("bc_q").cast(DoubleType) /
-          (lit(1048576.0) *
+          (lit(VectorMath.Scale) *
             sqrt(col("n_s").cast(DoubleType) * col("n").cast(DoubleType))))
           .as("hell2"))
   }
@@ -336,7 +336,7 @@ object ExperimentQueries {
       val fit = minOverK.groupBy("i").agg(max(col("mn")).as("fit"))
       b.join(fit, col("b") === col("i"))
         .select(col("b").as("bucket"), col("n"), col("npos"),
-          floor(col("fit") * 1048576.0).cast(LongType).as("fit_q"))
+          VectorMath.quantize(col("fit")).as("fit_q"))
         .orderBy("bucket")
     },
 
@@ -809,7 +809,7 @@ object ExperimentQueries {
       val p = least(col("o_totalprice") / lit(600000.0), lit(1.0))
       val o = Tables.orders(spark, dir).select(
         least(floor(p * lit(10.0)), lit(9.0)).cast(LongType).as("bin"),
-        floor(p * lit(1048576.0)).cast(LongType).as("p_q"),
+        VectorMath.quantize(p).as("p_q"),
         when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("pos"))
       o.groupBy("bin")
         .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos"),
@@ -817,7 +817,7 @@ object ExperimentQueries {
         .withColumn("acc",
           col("n_pos").cast(DoubleType) / col("n").cast(DoubleType))
         .withColumn("conf", col("conf_q").cast(DoubleType) /
-          (col("n").cast(DoubleType) * lit(1048576.0)))
+          (col("n").cast(DoubleType) * lit(VectorMath.Scale)))
         .withColumn("gap", abs(col("acc") - col("conf")))
         .orderBy("bin")
     },

@@ -1443,8 +1443,7 @@ object ExtensionQueries {
       val q = Tables.embeddings(spark, dir)
         .select(posexplode(col("embedding")).as(Seq("dim", "v")))
         .select(col("dim"),
-          floor(col("v").cast(DoubleType) * lit(1048576.0))
-            .cast(LongType).as("q"))
+          VectorMath.quantize(col("v")).as("q"))
       q.groupBy("dim")
         .agg(count(lit(1)).as("n"), sum(col("q")).as("s"),
           sum(col("q") * col("q")).as("sq"))

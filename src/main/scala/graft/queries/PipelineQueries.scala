@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorMath
 import graft.operators.{DataQuality, GraphOps, Relevance, Similarity, TextAnalysis, TimeSeries}
 import graft.streaming.EventsStream
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -568,10 +569,9 @@ object PipelineQueries {
           (col("n").cast(DoubleType) *
             element_at(benford, col("digit"))).as("exp"))
         .select(col("digit"), col("n_obs"),
-          floor(col("exp") * 1048576.0).cast(LongType).as("exp_q"),
-          floor((col("n_obs").cast(DoubleType) - col("exp")) *
-            (col("n_obs").cast(DoubleType) - col("exp")) / col("exp") *
-            1048576.0).cast(LongType).as("chi_q"))
+          VectorMath.quantize(col("exp")).as("exp_q"),
+          VectorMath.quantize((col("n_obs").cast(DoubleType) - col("exp")) *
+            (col("n_obs").cast(DoubleType) - col("exp")) / col("exp")).as("chi_q"))
         .orderBy("digit")
     },
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorMath
 import graft.operators.{Contamination, Packing, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -880,7 +881,7 @@ object TrainingDataQueries {
         .agg(count(lit(1)).as("n_feats"), sum(col("r")).as("r_sum"))
         .select(col("doc_id"), col("n_feats"),
           (col("r_sum").cast(DoubleType) / col("n_feats").cast(DoubleType) /
-            lit(1048576.0)).as("dsir_score"),
+            lit(VectorMath.Scale)).as("dsir_score"),
           (col("r_sum") > col("n_feats") * 1048576L).as("target_like"))
         .orderBy("doc_id")
     },
@@ -937,7 +938,7 @@ object TrainingDataQueries {
       val all = Window.partitionBy() // post-agg: one row per language
       byLang
         .withColumn("qw",
-          floor(sqrt(col("n_tokens").cast(DoubleType)) * 1048576.0).cast(LongType))
+          VectorMath.quantize(sqrt(col("n_tokens").cast(DoubleType))))
         .withColumn("total_qw", sum("qw").over(all))
         .withColumn("total_tokens", sum("n_tokens").over(all))
         .select(

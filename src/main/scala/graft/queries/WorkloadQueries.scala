@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorMath
 import graft.operators.{Dedup, EventAnalytics, GraphOps, SetSimilarityJoin, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -560,7 +561,7 @@ object WorkloadQueries {
       val comp = Tables.embeddings(spark, dir)
         .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy("label", "dim")
-        .agg(sum(floor(col("v").cast(DoubleType) * 1048576.0).cast(LongType)).as("sq"))
+        .agg(sum(VectorMath.quantize(col("v"))).as("sq"))
         .localCheckpoint(eager = true)
       val dec = DecimalType(20, 0)
       val self = comp.groupBy("label")

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,8 +19,6 @@ import org.apache.spark.sql.functions._
   * "first arrival wins" race on which copy survives.
   */
 object DocsStream {
-  private val runId = new AtomicInteger(0)
-
   /** The screening plan itself — shared by the streaming drive and the
     * plan-shape spec (which applies it to a batch frame, the only way to
     * inspect the join after a stream is stopped): broadcast anti-join
@@ -47,7 +44,7 @@ object DocsStream {
       .select(sha2(col("text"), 256).as("content_hash"))
       .distinct()
     StreamRun.toMemorySnapshot(screen(newDocs, corpusIndex), "complete",
-        s"stream_inc_dedup_${runId.incrementAndGet()}")
+        "stream_inc_dedup")
       .orderBy("content_hash")
   }
 
@@ -77,7 +74,7 @@ object DocsStream {
     val root = graft.tools.Scratch.dir("graft-gate")
       .toString + "/census.parquet"
     StreamRun.driveForeachBatch(docs, "append",
-        s"quality_gate_${runId.incrementAndGet()}") { (batch, batchId) =>
+        "quality_gate") { (batch, batchId) =>
       mergeCensus(spark, root, batch, batchId): Unit
     }
     AtomicLayer.read(spark, root)
@@ -109,7 +106,7 @@ object DocsStream {
     val root = graft.tools.Scratch.dir("graft-drift")
       .toString + "/term_counts.parquet"
     StreamRun.driveForeachBatch(docs, "append",
-        s"drift_census_${runId.incrementAndGet()}") { (batch, batchId) =>
+        "drift_census") { (batch, batchId) =>
       mergeTermCounts(spark, root, batch, batchId): Unit
     }
     graft.operators.TextAnalysis.totalVariationBySource(

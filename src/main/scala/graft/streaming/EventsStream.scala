@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,16 +13,9 @@ import org.apache.spark.sql.types._
   * file/Kafka source unchanged.
   */
 object EventsStream {
-  private val runId = new AtomicInteger(0)
-
   /** The events table as a stream, with whole-second event time `ts_sec`. */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.normalizeEventTs(
-      StreamRun.parquetSource(spark, dir, "events.parquet"))
-      .withColumn("ts_sec", expr("timestamp_seconds(ts div 1000000000)"))
-
-  private def runToMemory(df: DataFrame, spark: SparkSession, mode: String, prefix: String): DataFrame =
-    StreamRun.toMemorySnapshot(df, mode, s"${prefix}_${runId.incrementAndGet()}")
+    graft.Tables.withTsSec(StreamRun.parquetSource(spark, dir, "events.parquet"))
 
   /** Streaming deduplication: first occurrence of each (user_id,
     * event_type) pair passes, duplicates are dropped against state.
@@ -33,7 +25,7 @@ object EventsStream {
     val deduped = eventsStream(spark, dir)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    runToMemory(deduped, spark, "append", "stream_dedup")
+    StreamRun.toMemorySnapshot(deduped, "append", "stream_dedup")
       .orderBy("user_id", "event_type")
   }
 
@@ -52,7 +44,7 @@ object EventsStream {
         count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(20, 4))).cast(DoubleType).as("sum_value"),
       )
-    runToMemory(joined, spark, "complete", "stream_static").orderBy("cohort")
+    StreamRun.toMemorySnapshot(joined, "complete", "stream_static").orderBy("cohort")
   }
 
   /** The UN-DRAINED click→purchase stream-stream join behind st5
@@ -99,7 +91,7 @@ object EventsStream {
     * compact and oracle-checkable against the equivalent batch join.
     */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(clickPurchaseJoin(spark, dir, "inner"), spark, "append",
+    StreamRun.toMemorySnapshot(clickPurchaseJoin(spark, dir, "inner"), "append",
         "stream_stream_join")
       .groupBy("user_id")
       .agg(
@@ -123,7 +115,7 @@ object EventsStream {
     */
   def streamStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
     StreamRun.toMemorySnapshot(clickPurchaseJoin(spark, dir, "leftOuter"), "append",
-        s"stream_stream_left_${runId.incrementAndGet()}",
+        "stream_stream_left",
         needsNoDataBatch = true)
       .groupBy("user_id")
       .agg(
@@ -147,7 +139,7 @@ object EventsStream {
     */
   def streamStreamFullJoin(spark: SparkSession, dir: String): DataFrame = {
     StreamRun.toMemorySnapshot(clickPurchaseJoin(spark, dir, "fullOuter"), "append",
-        s"stream_stream_full_${runId.incrementAndGet()}",
+        "stream_stream_full",
         needsNoDataBatch = true)
       .withColumn("uid", coalesce(col("user_id"), col("p_user_id")))
       .groupBy(col("uid").as("user_id"))
@@ -192,7 +184,7 @@ object EventsStream {
     */
   def dailyAggregates(spark: SparkSession, dir: String): DataFrame = {
     dailyProjection(
-      runToMemory(dailyAggStream(spark, dir), spark, "complete", "events_daily"))
+      StreamRun.toMemorySnapshot(dailyAggStream(spark, dir), "complete", "events_daily"))
       .orderBy("day", "event_type")
   }
 
@@ -212,7 +204,7 @@ object EventsStream {
       .withColumn("k", k)
       .withWatermark("ts_sec", "1 day")
       .groupBy(window(col("ts_sec"), "1 day"), col("event_type")))
-    runToMemory(bars, spark, "complete", "stream_ohlc")
+    StreamRun.toMemorySnapshot(bars, "complete", "stream_ohlc")
       .select(col("event_type"),
         col("window.start").cast(DateType).as("day"),
         col("open_cents"), col("high_cents"), col("low_cents"),
@@ -237,7 +229,7 @@ object EventsStream {
     val root = rootDir.toString
     try {
       StreamRun.driveForeachBatch(dailyAggStream(spark, dir), "complete",
-          s"st13_gold_${runId.incrementAndGet()}") { (batch, _) =>
+          "st13_gold") { (batch, _) =>
         graft.energy.AtomicLayer.write(dailyProjection(batch), root): Unit
       }
       // materialize the final committed snapshot BEFORE the root is
@@ -265,7 +257,7 @@ object EventsStream {
       .withWatermark("ts_sec", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-    runToMemory(deduped, spark, "append", "stream_dedup_wm")
+    StreamRun.toMemorySnapshot(deduped, "append", "stream_dedup_wm")
       .orderBy("user_id", "event_type")
   }
 
@@ -283,7 +275,7 @@ object EventsStream {
         count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(20, 4))).cast(DoubleType).as("sum_value"),
       )
-    runToMemory(stream, spark, "complete", "events_sliding")
+    StreamRun.toMemorySnapshot(stream, "complete", "events_sliding")
       .select(
         col("window.start").as("win_start"),
         col("event_type"),
@@ -308,7 +300,7 @@ object EventsStream {
       .agg(max_by(
         struct(col("event_type"), col("value")),
         struct(col("ts"), col("event_id"))).as("last"))
-    runToMemory(latest, spark, "complete", "stream_cdc")
+    StreamRun.toMemorySnapshot(latest, "complete", "stream_cdc")
       .where(col("last.event_type") =!= "error")
       .select(col("user_id"),
         floor(col("last.value") * 100).cast(LongType).as("bal_cents"))
@@ -330,7 +322,7 @@ object EventsStream {
       .withWatermark("ts_sec", "1 hour")
       .groupBy(window(col("ts_sec"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val snap = runToMemory(counts, spark, "complete", "stream_topk")
+    val snap = StreamRun.toMemorySnapshot(counts, "complete", "stream_topk")
       .select(unix_seconds(col("window.start")).as("win_start"),
         col("event_type"), col("n"))
     val w = Window.partitionBy("win_start")
@@ -368,7 +360,7 @@ object EventsStream {
       col("user_id") === col("d_user") &&
         col("ts_sec") >= col("effective_from") &&
         (col("effective_to").isNull || col("ts_sec") < col("effective_to")))
-    runToMemory(joined, spark, "append", "stream_pit")
+    StreamRun.toMemorySnapshot(joined, "append", "stream_pit")
       .select(col("event_id"), col("user_id"), col("version"),
         floor(col("dim_value") * 100).cast(LongType).as("dim_cents"))
       .orderBy("event_id")
@@ -393,7 +385,7 @@ object EventsStream {
     val root = graft.tools.Scratch.dir("graft-scd2")
       .toString + "/dim.parquet"
     StreamRun.driveForeachBatch(signups, "append",
-        s"scd2_dim_${runId.incrementAndGet()}") { (batch, batchId) =>
+        "scd2_dim") { (batch, batchId) =>
       mergeScd2(spark, root, batch, batchId): Unit
     }
     graft.energy.AtomicLayer.read(spark, root).drop("_merged_batch_id")
@@ -472,7 +464,7 @@ object EventsStream {
     val root = graft.tools.Scratch.dir("graft-qsketch")
       .toString + "/sketch.parquet"
     StreamRun.driveForeachBatch(ev, "append",
-        s"quantile_sketch_${runId.incrementAndGet()}") { (batch, batchId) =>
+        "quantile_sketch") { (batch, batchId) =>
       mergeSketch(spark, root, batch, batchId): Unit
     }
     // the SAME order-statistics tail as qsk1 (Sampling.bottomKQuantiles)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -15,8 +14,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * into that state and emits the updated snapshot (Update mode).
   */
 object SessionStream {
-  private val runId = new AtomicInteger(0)
-
   final case class EventIn(user_id: Long, ts: Long, event_id: Long)
   final case class SessionState(lastTs: Long, nSessions: Long, nEvents: Long)
   final case class SessionSnapshot(
@@ -90,8 +87,6 @@ object SessionStream {
       gapSeconds: Long = 1800,
   ): DataFrame = {
     import spark.implicits._
-    val name = s"closed_sessions_${runId.incrementAndGet()}"
-
     val events: Dataset[EventIn] = graft.Tables.normalizeEventTs(
       StreamRun.parquetSource(spark, dir, "events.parquet"))
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -102,7 +97,7 @@ object SessionStream {
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         emitClosed(gapSeconds * 1000000000L))
 
-    StreamRun.toMemorySnapshot(closed.toDF(), "append", name)
+    StreamRun.toMemorySnapshot(closed.toDF(), "append", "closed_sessions")
       .orderBy("user_id", "session_start_ms")
   }
 
@@ -115,8 +110,6 @@ object SessionStream {
       gapSeconds: Long = 1800,
   ): DataFrame = {
     import spark.implicits._
-    val name = s"user_sessions_${runId.incrementAndGet()}"
-
     val events: Dataset[EventIn] = graft.Tables.normalizeEventTs(
       StreamRun.parquetSource(spark, dir, "events.parquet"))
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -127,7 +120,7 @@ object SessionStream {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(
         updateState(gapSeconds * 1000000000L))
 
-    StreamRun.toMemorySnapshot(snapshots.toDF(), "update", name)
+    StreamRun.toMemorySnapshot(snapshots.toDF(), "update", "user_sessions")
       .orderBy("user_id")
   }
 }

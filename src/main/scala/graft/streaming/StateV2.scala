@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -19,8 +18,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * rewriting the blob).
   */
 object StateV2 {
-  private val runId = new AtomicInteger(0)
-
   final case class EvIn(user_id: Long, ts: Long, value: Double, event_id: Long)
   final case class UserTotals(
       user_id: Long,
@@ -68,32 +65,22 @@ object StateV2 {
     */
   def userTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"user_totals_v2_${runId.incrementAndGet()}"
+    val events: Dataset[EvIn] = graft.Tables.normalizeEventTs(
+      StreamRun.parquetSource(spark, dir, "events.parquet"))
+      .select(col("user_id"), col("ts"), col("value"), col("event_id"))
+      .as[EvIn]
 
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events: Dataset[EvIn] = graft.Tables.normalizeEventTs(
-        StreamRun.parquetSource(spark, dir, "events.parquet"))
-        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-        .as[EvIn]
+    val totals = events
+      .groupByKey(_.user_id)
+      .transformWithState(
+        new TotalsProcessor, TimeMode.None(), OutputMode.Update(),
+        Encoders.product[UserTotals])
 
-      val totals = events
-        .groupByKey(_.user_id)
-        .transformWithState(
-          new TotalsProcessor, TimeMode.None(), OutputMode.Update(),
-          Encoders.product[UserTotals])
-
-      // StreamRun materializes the snapshot and drops the memory-sink
-      // table (no orphaned result tables), and drives with few state
-      // partitions — fewer RocksDB instances to open per run.
-      StreamRun.toMemorySnapshot(totals.toDF(), "update", name)
-        .orderBy("user_id")
-    } finally savedProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    // StreamRun materializes the snapshot and drops the memory-sink
+    // table (no orphaned result tables), and drives with few state
+    // partitions — fewer RocksDB instances to open per run.
+    StreamRun.toMemorySnapshot(totals.toDF(), "update", "user_totals_v2",
+        conf = Seq(StreamRun.RocksDbStateStore))
+      .orderBy("user_id")
   }
 }

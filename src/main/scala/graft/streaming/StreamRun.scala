@@ -82,8 +82,17 @@ object StreamRun {
       .option("pathGlobFilter", file)
       .parquet(dir)
 
+  /** The RocksDB state store provider setting, for drives whose
+    * operator (state-v2 `transformWithState`) requires it; pass it in a
+    * drive's `conf`.
+    */
+  val RocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Run `body` (a stream start + drain) with the reduced partition
-    * count; always restores the session's previous settings.
+    * count and the drive's own `conf`; always restores the session's
+    * previous settings.
     *
     * `noDataMicroBatches=false` removes the second, empty micro-batch
     * each drive otherwise executes after draining its data: that batch
@@ -96,11 +105,12 @@ object StreamRun {
     * adds an append-mode windowed aggregate must re-enable it or drain
     * forever-pending windows.
     */
-  def withStreamConf[A](spark: SparkSession, needsNoDataBatch: Boolean = false)(body: => A): A = {
+  private def withStreamConf[A](spark: SparkSession, needsNoDataBatch: Boolean,
+      conf: Seq[(String, String)])(body: => A): A = {
     val keys = Seq(
       "spark.sql.shuffle.partitions" -> StatePartitions.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> needsNoDataBatch.toString,
-    )
+    ) ++ conf
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -109,6 +119,11 @@ object StreamRun {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  private val runId = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** A sink name unique within the JVM: `prefix` plus a run number. */
+  private def uniqueName(prefix: String): String = s"${prefix}_${runId.incrementAndGet()}"
 
   /** Ephemeral checkpoint root: these drives are one-shot (the query is
     * drained and stopped; the checkpoint is never resumed), so the
@@ -123,17 +138,20 @@ object StreamRun {
     else Scratch.dir("stream-ckpt").toString
   }
 
-  /** Start `df` into a memory sink named `name`, drain it synchronously,
-    * and return the MATERIALIZED snapshot with the sink table dropped
-    * and the ephemeral checkpoint removed. `needsNoDataBatch`: event-time
-    * TIMERS only fire in the watermark-advancing no-data batch after the
-    * data drains — a timer-driven query must opt back into it
-    * (everything else skips it, see withStreamConf).
+  /** Start `df` into a memory sink named after `prefix` (made unique),
+    * drain it synchronously, and return the MATERIALIZED snapshot with
+    * the sink table dropped and the ephemeral checkpoint removed.
+    * `needsNoDataBatch`: event-time TIMERS only fire in the
+    * watermark-advancing no-data batch after the data drains — a
+    * timer-driven query must opt back into it (everything else skips it,
+    * see withStreamConf). `conf` holds session settings the drive needs
+    * (e.g. [[RocksDbStateStore]]), set for the drive only.
     */
-  def toMemorySnapshot(df: DataFrame, mode: String, name: String,
-      needsNoDataBatch: Boolean = false): DataFrame = {
+  def toMemorySnapshot(df: DataFrame, mode: String, prefix: String,
+      needsNoDataBatch: Boolean = false, conf: Seq[(String, String)] = Nil): DataFrame = {
     val spark = df.sparkSession
-    runDrained(df, name, needsNoDataBatch)(
+    val name = uniqueName(prefix)
+    runDrained(df, name, needsNoDataBatch, conf)(
       _.outputMode(mode).format("memory").queryName(name))
     val s0 = System.nanoTime()
     val out = spark.table(name).localCheckpoint()
@@ -142,14 +160,15 @@ object StreamRun {
     out
   }
 
-  /** Start `df` into a foreachBatch sink, drain it synchronously, clean
-    * up the ephemeral checkpoint. The batch function decides persistence
-    * (e.g. an AtomicLayer snapshot write) — this is the drive harness
-    * for sink-integration streaming queries.
+  /** Start `df` into a foreachBatch sink named after `prefix` (made
+    * unique), drain it synchronously, clean up the ephemeral checkpoint.
+    * The batch function decides persistence (e.g. an AtomicLayer
+    * snapshot write) — this is the drive harness for sink-integration
+    * streaming queries.
     */
-  def driveForeachBatch(df: DataFrame, mode: String, name: String)(
+  def driveForeachBatch(df: DataFrame, mode: String, prefix: String)(
       f: (DataFrame, Long) => Unit): Unit =
-    runDrained(df, name)(
+    runDrained(df, uniqueName(prefix), needsNoDataBatch = false, conf = Nil)(
       _.outputMode(mode).foreachBatch((batch: DataFrame, id: Long) => f(batch, id)))
 
   /** One copy of the drive lifecycle (state-partition conf, ephemeral
@@ -157,14 +176,14 @@ object StreamRun {
     * thing a caller configures.
     */
   private def runDrained(df: DataFrame, name: String,
-      needsNoDataBatch: Boolean = false)(
+      needsNoDataBatch: Boolean, conf: Seq[(String, String)])(
       sink: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]
         => org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
     val ckpt = new java.io.File(
       s"$ephemeralCheckpointRoot/$name-${java.util.UUID.randomUUID()}")
     val t0 = System.nanoTime()
     var drainNs = 0L
-    withStreamConf(df.sparkSession, needsNoDataBatch) {
+    withStreamConf(df.sparkSession, needsNoDataBatch, conf) {
       try {
         val query = sink(df.writeStream)
           .option("checkpointLocation", ckpt.getAbsolutePath)

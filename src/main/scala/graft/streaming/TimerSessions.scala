@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -30,8 +29,6 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * `end + gap <= max(event_time)` (watermark delay 0).
   */
 object TimerSessions {
-  private val runId = new AtomicInteger(0)
-
   // state in NANOS so gap splits are bit-identical to the batch/st9
   // sessionizers; only the timer itself lives in ms (the engine's unit)
   final case class OpenSess(startNs: Long, lastNs: Long, n: Long)
@@ -118,33 +115,21 @@ object TimerSessions {
       gapSeconds: Long = 1800,
   ): DataFrame = {
     import spark.implicits._
-    val name = s"timer_sessions_${runId.incrementAndGet()}"
+    val events: Dataset[SessionStream.EventIn] = graft.Tables.withTsSec(
+      StreamRun.parquetSource(spark, dir, "events.parquet"))
+      .withWatermark("ts_sec", "0 seconds")
+      .select(col("user_id"), col("ts"), col("event_id"))
+      .as[SessionStream.EventIn]
 
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events: Dataset[SessionStream.EventIn] = graft.Tables.normalizeEventTs(
-        StreamRun.parquetSource(spark, dir, "events.parquet"))
-        .withColumn("ts_sec", expr("timestamp_seconds(ts div 1000000000)"))
-        .withWatermark("ts_sec", "0 seconds")
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .as[SessionStream.EventIn]
+    val closed = events
+      .groupByKey(_.user_id)
+      .transformWithState(
+        new TimeoutProcessor(gapSeconds * 1000000000L),
+        TimeMode.EventTime(), OutputMode.Update(),
+        Encoders.product[Closed])
 
-      val closed = events
-        .groupByKey(_.user_id)
-        .transformWithState(
-          new TimeoutProcessor(gapSeconds * 1000000000L),
-          TimeMode.EventTime(), OutputMode.Update(),
-          Encoders.product[Closed])
-
-      StreamRun.toMemorySnapshot(closed.toDF(), "update", name,
-          needsNoDataBatch = true)
-        .orderBy("user_id", "session_start_ms")
-    } finally savedProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    StreamRun.toMemorySnapshot(closed.toDF(), "update", "timer_sessions",
+        needsNoDataBatch = true, conf = Seq(StreamRun.RocksDbStateStore))
+      .orderBy("user_id", "session_start_ms")
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +9,6 @@ import org.apache.spark.sql.functions._
   * tier; this is the lookup path as a continuous query).
   */
 object VectorStream {
-  private val runId = new AtomicInteger(0)
-
   /** Streaming nearest neighbor (top-1) via LSH candidates: each
     * streamed query vector hashes to its OR-construction buckets
     * map-side (the native LshBuckets kernel — no state, no shuffle of
@@ -27,7 +24,7 @@ object VectorStream {
     * the result exactly (quantized cosine, integer hyperplanes).
     */
   def annTop1(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{LshBuckets, QuantizedCosine}
+    import graft.functions.{LshBuckets, VectorMath}
     def withBuckets(df: DataFrame, emb: String): DataFrame =
       df.select(col("*"),
         posexplode(LshBuckets.buckets(col(emb), 4, 4)).as(Seq("t", "b")))
@@ -43,13 +40,13 @@ object VectorStream {
     val best = qs.join(corpus, Seq("t", "b"))
       .where(col("c_vec") =!= col("q_vec"))
       .select(col("q_vec"), col("c_vec"),
-        QuantizedCosine.quantizedCosine(col("q_emb"), col("c_emb")).as("cosine"))
+        VectorMath.cosineExact(col("q_emb"), col("c_emb")).as("cosine"))
       .groupBy("q_vec")
       .agg(max(struct(col("cosine"), (-col("c_vec")).as("neg_c"))).as("best"))
       .select(col("q_vec"),
         col("best.cosine").as("best_cosine"),
         (-col("best.neg_c")).as("best_c_vec"))
-    StreamRun.toMemorySnapshot(best, "complete", s"stream_ann_${runId.incrementAndGet()}")
+    StreamRun.toMemorySnapshot(best, "complete", "stream_ann")
       .orderBy("q_vec")
   }
 
@@ -87,7 +84,7 @@ object VectorStream {
         col("best.qdist_approx").as("best_qdist"),
         col("best.c_vec").as("best_c_vec"))
     StreamRun.toMemorySnapshot(best, "complete",
-        s"stream_ivfpq_${runId.incrementAndGet()}")
+        "stream_ivfpq")
       .orderBy("q_vec")
   }
 
@@ -110,7 +107,7 @@ object VectorStream {
     val feed = StreamRun.parquetSource(spark, dir, "embeddings.parquet")
       .where(col("vec_id") >= 400)
     StreamRun.driveForeachBatch(feed, "append",
-        s"st21_index_append_${runId.incrementAndGet()}") { (batch, _) =>
+        "st21_index_append") { (batch, _) =>
       if (!batch.isEmpty) Similarity.appendToIvfPqIndex(batch, root)
     }
     Similarity.ivfPqTopKFromIndex(emb.where(col("vec_id") < 8), emb, root, k = 3)
@@ -150,7 +147,7 @@ object VectorStream {
     val feed = StreamRun.parquetSource(spark, dir, "embeddings.parquet")
       .where(col("vec_id") >= 400 && col("vec_id") < 500)
     StreamRun.driveForeachBatch(feed, "append",
-        s"${name}_${runId.incrementAndGet()}") { (batch, _) =>
+        name) { (batch, _) =>
       if (!batch.isEmpty) Similarity.streamInsertIntoGraphIndex(old, batch, root)
     }
     (emb, root)

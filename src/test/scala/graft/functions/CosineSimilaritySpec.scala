@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.{SparkSpec, Tables}
-import graft.functions.QuantizedCosine.quantizedCosine
+import graft.functions.VectorMath.cosineExact
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The one cosine kernel, [[QuantizedCosine]]: its native expression
@@ -10,14 +11,29 @@ import org.apache.spark.sql.functions._
 class CosineSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  /** Quantized-integer dot product of two float-array columns, composed
+    * from builtin higher-order functions: the reference the native
+    * kernel is checked against.
+    */
+  private def dotExactQ(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(VectorMath.quantizeArray(a), VectorMath.quantizeArray(b), (x, y) => x * y),
+      lit(0L),
+      (acc, v) => acc + v,
+    )
+
+  private def cosineExactHof(a: Column, b: Column): Column =
+    dotExactQ(a, b).cast("double") /
+      (sqrt(dotExactQ(a, a).cast("double")) * sqrt(dotExactQ(b, b).cast("double")))
+
   test("QuantizedCosine native expression is bit-identical to the HOF composition") {
     val emb = Tables.embeddings(spark, sf0001)
     val a = emb.select(col("vec_id").as("ia"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("ib"), col("embedding").as("eb"))
     val rows = a.join(b, col("ib") === col("ia") + 7)
       .select(
-        quantizedCosine(col("ea"), col("eb")).as("native"),
-        VectorMath.cosineExactHof(col("ea"), col("eb")).as("hof"),
+        cosineExact(col("ea"), col("eb")).as("native"),
+        cosineExactHof(col("ea"), col("eb")).as("hof"),
       ).collect()
     assert(rows.length > 0)
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
@@ -30,7 +46,7 @@ class CosineSimilaritySpec extends SparkSpec {
       (Array(1f, 1f), Array(-1f, -1f), Some(-1.0)),
       (Array(0f, 0f), Array(1f, 1f), None), // zero norm -> NULL, never NaN
     ).toDF("a", "b", "expected")
-    val rows = df.select(quantizedCosine(col("a"), col("b")).as("c"), col("expected")).collect()
+    val rows = df.select(cosineExact(col("a"), col("b")).as("c"), col("expected")).collect()
     assert(rows.length == 4)
     rows.foreach { r =>
       if (r.isNullAt(1)) assert(r.isNullAt(0), s"expected NULL, got ${r.get(0)}")
@@ -42,11 +58,11 @@ class CosineSimilaritySpec extends SparkSpec {
     val df = Seq(
       (Some(Array(1f, 0f)), None: Option[Array[Float]]),
     ).toDF("a", "b")
-    val r = df.select(quantizedCosine(col("a"), col("b"))).collect()
+    val r = df.select(cosineExact(col("a"), col("b"))).collect()
     assert(r.head.isNullAt(0))
     val pref = Seq((Array(1f, 0f, 5f), Array(1f, 0f)))
       .toDF("a", "b")
-      .select(quantizedCosine(col("a"), col("b")))
+      .select(cosineExact(col("a"), col("b")))
       .collect().head.getDouble(0)
     assert(math.abs(pref - 1.0) < 1e-12)
   }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{SparkSpec, Tables}
 import graft.functions.VectorMath
 import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -85,12 +86,30 @@ class SimilaritySpec extends SparkSpec {
     assert(plans("ivf").contains("BroadcastNestedLoopJoin"), plans("ivf"))
   }
 
+  /** Sign-pattern bucket id from `nPlanes` hyperplanes, composed from
+    * Column arithmetic: bit i set iff
+    * sum_d floor(emb[d] * 2^20) * planeWeightInt(offset + i, d) > 0.
+    * `planeOffset` selects a disjoint plane family — table t of an
+    * OR-construction uses offset t * nPlanes. The reference the native
+    * LshBuckets kernel is checked against.
+    */
+  private def lshBucket(emb: Column, dim: Int, nPlanes: Int, planeOffset: Int): Column =
+    (0 until nPlanes)
+      .map { i =>
+        val dot = (0 until dim)
+          .map(d => VectorMath.quantize(emb.getItem(d)) *
+            lit(Similarity.planeWeightInt(planeOffset + i, d)))
+          .reduce(_ + _)
+        when(dot > 0, lit(1L << i)).otherwise(0L)
+      }
+      .reduce(_ + _)
+
   test("LshBuckets native kernel equals the composed lshBucket per table") {
     val emb = Tables.embeddings(spark, sf0001).limit(50)
     val both = emb.select(
       graft.functions.LshBuckets.buckets(col("embedding"), 4, 4).as("nb"),
       array((0 until 4).map(t =>
-        Similarity.lshBucket(col("embedding"), 64, 4, planeOffset = t * 4)): _*).as("cb"),
+        lshBucket(col("embedding"), 64, 4, planeOffset = t * 4)): _*).as("cb"),
     ).collect()
     assert(both.nonEmpty)
     both.foreach { r =>
