@@ -35,11 +35,20 @@ object SparkEntry {
       graft.queries.DecisionQueries.queries ++
       graft.queries.ExperimentQueries.queries
 
-  def oracleSql: Map[String, String] =
+  /** The oracle SQL of the correctness gate, which runs at sf0.01. */
+  def oracleSql: Map[String, String] = oracleSqlFor("sf0.01")
+
+  /** The oracle SQL for the corpus at `sfDir`: the persisted-index
+    * replays read that corpus's index roots (only the directory's
+    * basename counts, see [[graft.operators.IndexStore.root]]).
+    */
+  def oracleSqlFor(sfDir: String): Map[String, String] =
     graft.queries.ReferenceQueries.oracles ++ graft.queries.ExtensionQueries.oracles ++
       graft.queries.AnalyticsQueries.oracles ++ graft.queries.PipelineQueries.oracles ++
       graft.queries.SurfaceQueries.oracles ++ graft.queries.TrainingDataQueries.oracles ++
       graft.queries.ScaleOpsQueries.oracles ++ graft.queries.WorkloadQueries.oracles ++
       graft.queries.DecisionQueries.oracles ++
-      graft.queries.ExperimentQueries.oracles
+      graft.queries.ExperimentQueries.oracles ++
+      graft.queries.ExtensionQueries.indexOracles(sfDir) ++
+      graft.queries.SurfaceQueries.indexOracles(sfDir)
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.SortedMap
 import scala.util.matching.Regex
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the DuckDB oracle compare, and
+  * plus oracle_sql.json (the oracle SQL for `sfDir`'s own persisted
+  * indexes), for the DuckDB oracle compare, and
   * failures.json (name → class and message of each failed query). The
   * exit status stays 0 on failures: perfbench's `Record` calls [[main]]
   * in process and records each cause itself. */
@@ -62,7 +63,7 @@ object Verify {
           Some(name -> e)
         }
       }.to(SortedMap)
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSqlFor(sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // The names THIS run was responsible for — check_oracle.py uses it to

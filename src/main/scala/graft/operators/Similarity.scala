@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.energy.AtomicLayer
 import graft.functions.VectorMath
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -264,7 +263,7 @@ object Similarity {
     * write-time half of the scont2 decontamination scale path (VERDICT
     * r11 #3), the un-quantized little sibling of [[buildIvfPqIndex]]
     * for corpora served with exact in-list cosine. Two parquet tables
-    * land under `root` via [[AtomicLayer]] snapshots:
+    * land under `root` via [[IndexStore]]:
     *
     *  - `centroids.parquet` (centroid_id, c_emb) — the coarse quantizer;
     *  - `lists.parquet`     (c_vec, c_emb) PARTITIONED BY list_id — the
@@ -280,18 +279,15 @@ object Similarity {
       corpus: DataFrame,
       root: String,
       nLists: Int = 16,
-  ): Unit = {
-    val spark = corpus.sparkSession
-    val arts = Seq("centroids.parquet", "lists.parquet")
-    if (!arts.forall(a => AtomicLayer.latestCommitted(spark, s"$root/$a").isDefined)) {
+  ): Unit =
+    IndexStore.buildOnce(corpus.sparkSession, root,
+        "centroids.parquet", "lists.parquet") {
       ivfBuilds.incrementAndGet()
       val centroids = sampleCentroids(corpus, nLists)
-      AtomicLayer.write(centroids, s"$root/centroids.parquet", keepVersions = 1)
-      AtomicLayer.write(ivfListsDf(corpus, centroids),
-        s"$root/lists.parquet", partitionCols = Seq("list_id"), keepVersions = 1)
-      (): Unit
+      IndexStore.put(centroids, root, "centroids.parquet")
+      IndexStore.put(ivfListsDf(corpus, centroids), root, "lists.parquet",
+        partitionCols = Seq("list_id"))
     }
-  }
 
   /** Answer queries from the PERSISTED flat-IVF index at `root` — the
     * serving path of [[buildIvfIndex]]: centroids and clustered lists
@@ -307,10 +303,10 @@ object Similarity {
       nProbe: Int = 2,
   ): DataFrame = {
     val spark = queries.sparkSession
-    val centroids = AtomicLayer.read(spark, s"$root/centroids.parquet")
+    val centroids = IndexStore.get(spark, root, "centroids.parquet")
     // partition-column type inference narrows list_id to int — restore
     // the long the inline path carries so the two paths stay identical
-    val lists = AtomicLayer.read(spark, s"$root/lists.parquet")
+    val lists = IndexStore.get(spark, root, "lists.parquet")
       .withColumn("list_id", col("list_id").cast(LongType))
     ivfSearch(lists, centroids, queries, k, nProbe)
   }
@@ -576,18 +572,10 @@ object Similarity {
       .drop("__cbv")
   }
 
-  /** Deterministic on-disk root for the persisted IVF-PQ artifacts of
-    * the corpus at `dir`, keyed by the sf directory's basename — the
-    * x23 oracle replays the same parquet files in DuckDB by literal
-    * path, so this layout is part of the serving contract.
-    */
-  def indexRoot(dir: String): String =
-    s"/tmp/graft_ann_index/${new java.io.File(dir).getName}"
-
   /** Build + PERSIST the IVF-PQ index artifacts — the write-time half
     * of a billion-vector serving deployment that [[ivfPqTopK]] only
     * models inline. Three parquet tables land under `root` via
-    * [[AtomicLayer]] commit-marker snapshots (readers never see a torn
+    * [[IndexStore]] commit-marker snapshots (readers never see a torn
     * index; a crashed build leaves uncommitted debris the next build
     * supersedes):
     *
@@ -596,9 +584,8 @@ object Similarity {
     *  - `index.parquet`     (c_vec, list_id, codes) — the encoded corpus.
     *
     * Skips when all three already have a committed snapshot (build
-    * once, serve many — the warmup builds, every later call serves).
-    * keepVersions=1 so exactly one committed version exists at serve
-    * time (the oracle reads `v*` by glob).
+    * once, serve many — the warmup builds, every later call serves);
+    * [[IndexStore]] keeps one committed version of each.
     */
   def buildIvfPqIndex(
       corpus: DataFrame,
@@ -608,16 +595,13 @@ object Similarity {
       nCodes: Int = 32,
   ): Unit = {
     require(nCodes >= 1, s"need at least one codeword, got $nCodes")
-    val spark = corpus.sparkSession
-    val arts = Seq("centroids.parquet", "codebook.parquet", "index.parquet")
-    if (!arts.forall(a => AtomicLayer.latestCommitted(spark, s"$root/$a").isDefined)) {
+    IndexStore.buildOnce(corpus.sparkSession, root,
+        "centroids.parquet", "codebook.parquet", "index.parquet") {
       val centroids = sampleCentroids(corpus, nLists)
       val sample = pqSample(corpus, nSub, nCodes)
-      AtomicLayer.write(centroids, s"$root/centroids.parquet", keepVersions = 1)
-      AtomicLayer.write(sample, s"$root/codebook.parquet", keepVersions = 1)
-      AtomicLayer.write(ivfPqIndexDf(corpus, centroids, sample, nSub),
-        s"$root/index.parquet", keepVersions = 1)
-      (): Unit
+      IndexStore.put(centroids, root, "centroids.parquet")
+      IndexStore.put(sample, root, "codebook.parquet")
+      IndexStore.put(ivfPqIndexDf(corpus, centroids, sample, nSub), root, "index.parquet")
     }
   }
 
@@ -628,72 +612,20 @@ object Similarity {
     * present in both keeps the NEW encoding (anti-join on c_vec), which
     * also makes re-running the append idempotent. Cost at scale is one
     * encode pass over the BATCH plus one anti-join keyed on ids — the
-    * billion-row existing code table never re-encodes.
+    * billion-row existing code table never re-encodes. Re-adding a
+    * deleted id clears its tombstone ([[IndexStore.clearOnAdd]]).
     */
   def appendToIvfPqIndex(newVecs: DataFrame, root: String, nSub: Int = 8): Unit = {
     val spark = newVecs.sparkSession
-    val centroids = AtomicLayer.read(spark, s"$root/centroids.parquet")
-    val sample = AtomicLayer.read(spark, s"$root/codebook.parquet")
-    val existing = AtomicLayer.read(spark, s"$root/index.parquet")
+    val centroids = IndexStore.get(spark, root, "centroids.parquet")
+    val sample = IndexStore.get(spark, root, "codebook.parquet")
+    val existing = IndexStore.get(spark, root, "index.parquet")
     val added = ivfPqIndexDf(newVecs, centroids, sample, nSub)
       .localCheckpoint() // consumed twice (upsert + tombstone clear)
     val kept = existing.join(
       added.select(col("c_vec")), Seq("c_vec"), "left_anti")
-    AtomicLayer.write(kept.unionByName(added),
-      s"$root/index.parquet", keepVersions = 1)
-    // Re-adding a deleted id RESURRECTS it: clear its tombstone (the
-    // add is the later operation — latest wins, the st19 CDC rule).
-    val tombs = tombstonesOrEmpty(spark, root)
-    if (!tombs.isEmpty) {
-      AtomicLayer.write(
-        tombs.join(added.select(col("c_vec")), Seq("c_vec"), "left_anti"),
-        s"$root/tombstones.parquet", keepVersions = 1)
-      (): Unit
-    }
-  }
-
-  /** DELETE ids from the persisted index — the tombstone path a real
-    * vector store needs (GDPR erasure, dedup-driven retractions).
-    * Appends the ids to a SMALL side artifact `tombstones.parquet`
-    * instead of rewriting the code table: at a billion vectors the
-    * delete batch is O(|batch|) rows while `index.parquet` is the
-    * corpus, so delete cost must not scale with corpus size. Serving
-    * anti-joins the broadcast tombstone set, which holds every id
-    * deleted and not re-added: nothing folds tombstones into the code
-    * table, so the set grows with the delete volume, never the corpus.
-    * Idempotent: deleting an id twice keeps one tombstone row.
-    * Unknown ids are fine (a tombstone for a never-indexed id filters
-    * nothing).
-    */
-  def deleteFromIvfPqIndex(ids: DataFrame, root: String): Unit = {
-    require(ids.columns.length == 1,
-      s"delete batch must be a single id column, got: ${ids.columns.mkString(", ")}")
-    val spark = ids.sparkSession
-    val newTombs = ids.select(ids.columns.head match {
-      case "c_vec" => col("c_vec")
-      case other => col(other).as("c_vec")
-    })
-    // one distinct over the union dedups batch-internal repeats AND
-    // already-tombstoned ids in the same exchange
-    AtomicLayer.write(
-      tombstonesOrEmpty(spark, root).unionByName(newTombs).distinct(),
-      s"$root/tombstones.parquet", keepVersions = 1): Unit
-  }
-
-  /** The pending-delete set for `root` — empty relation when no delete
-    * has ever run (indexes built before the tombstone feature keep
-    * serving unchanged).
-    */
-  private def tombstonesOrEmpty(spark: SparkSession, root: String): DataFrame = {
-    val path = s"$root/tombstones.parquet"
-    if (AtomicLayer.latestCommitted(spark, path).isDefined)
-      AtomicLayer.read(spark, path)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("c_vec",
-            org.apache.spark.sql.types.LongType))))
+    IndexStore.put(kept.unionByName(added), root, "index.parquet")
+    IndexStore.clearOnAdd(added.select(col("c_vec")), root)
   }
 
   /** Answer queries from the PERSISTED index at `root` — the serving
@@ -727,10 +659,10 @@ object Similarity {
     */
   def loadIvfPqArtifacts(
       spark: SparkSession, root: String): (DataFrame, DataFrame, DataFrame) = {
-    val centroids = AtomicLayer.read(spark, s"$root/centroids.parquet")
-    val sample = AtomicLayer.read(spark, s"$root/codebook.parquet")
-    val index = AtomicLayer.read(spark, s"$root/index.parquet")
-      .join(broadcast(tombstonesOrEmpty(spark, root)), Seq("c_vec"), "left_anti")
+    val centroids = IndexStore.get(spark, root, "centroids.parquet")
+    val sample = IndexStore.get(spark, root, "codebook.parquet")
+    val index = IndexStore.get(spark, root, "index.parquet")
+      .join(broadcast(IndexStore.tombstones(spark, root)), Seq("c_vec"), "left_anti")
     (index, centroids, sample)
   }
 
@@ -1182,21 +1114,12 @@ object Similarity {
   // ------------------------------------------------------------------
   // Persisted NN-descent graph index (VERDICT r10 #1): the graph
   // analogue of the IVFADC x23–x30 artifact lifecycle. The index is ONE
-  // parquet relation `edges.parquet` (v, rank, nbr, cosine) under
-  // AtomicLayer commit-marker snapshots, plus the shared
-  // `tombstones.parquet` delete side-table. Build once / serve many:
-  // serving reads the artifact and pays only the beam traversal —
-  // never a graph construction (GraphIndexSpec pins that with the
-  // nndBuilds counter).
+  // parquet relation `edges.parquet` (v, rank, nbr, cosine) plus the
+  // shared `tombstones.parquet` delete side-table, both kept by
+  // IndexStore. Build once / serve many: serving reads the artifact and
+  // pays only the beam traversal — never a graph construction
+  // (GraphIndexSpec pins that with the nndBuilds counter).
   // ------------------------------------------------------------------
-
-  /** Deterministic on-disk root for the persisted graph-index artifacts
-    * of the corpus at `dir` — like [[indexRoot]], the layout is part of
-    * the serving contract (the x37/x38 oracles replay the beam search
-    * from these literal parquet paths in DuckDB).
-    */
-  def graphIndexRoot(dir: String): String =
-    s"/tmp/graft_graph_index/${new java.io.File(dir).getName}"
 
   /** The graph tier's audit read, the one every graph-index query and
     * stream drive reports: the first 8 vectors of `emb` served top-5
@@ -1211,8 +1134,6 @@ object Similarity {
 
   /** Build + PERSIST the NN-descent kNN graph as an index artifact.
     * Skips when a committed snapshot exists (build once, serve many).
-    * keepVersions = 1 so the oracle's `v*` glob resolves exactly one
-    * version.
     */
   def buildNndGraphIndex(
       corpus: DataFrame,
@@ -1220,16 +1141,13 @@ object Similarity {
       graphK: Int = 15,
       rounds: Int = 3,
       seedBucketSize: Int = 32,
-  ): Unit = {
-    val spark = corpus.sparkSession
-    val path = s"$root/edges.parquet"
-    if (AtomicLayer.latestCommitted(spark, path).isEmpty) {
-      AtomicLayer.write(
+  ): Unit =
+    IndexStore.buildOnce(corpus.sparkSession, root, "edges.parquet") {
+      IndexStore.put(
         nnDescent(corpus, graphK, rounds, seedBucketSize)
           .select(col("v"), col("rank"), col("nbr"), col("cosine")),
-        path, keepVersions = 1): Unit
+        root, "edges.parquet")
     }
-  }
 
   /** Answer queries by beam search over the PERSISTED graph at `root` —
     * the serve tier: edges come off disk filtered to the top-`degree`
@@ -1252,8 +1170,8 @@ object Similarity {
       degree: Int = 5,
   ): DataFrame = {
     val spark = queries.sparkSession
-    val tombs = tombstonesOrEmpty(spark, root)
-    val edges = AtomicLayer.read(spark, s"$root/edges.parquet")
+    val tombs = IndexStore.tombstones(spark, root)
+    val edges = IndexStore.get(spark, root, "edges.parquet")
       .where(col("rank") <= degree)
       .select(col("v"), col("nbr"))
       .join(broadcast(tombs.select(col("c_vec").as("v"))), Seq("v"), "left_anti")
@@ -1281,35 +1199,20 @@ object Similarity {
       rounds: Int = 3,
       seedBucketSize: Int = 32,
   ): Unit = {
-    val spark = newVecs.sparkSession
-    val path = s"$root/edges.parquet"
-    val tombs = tombstonesOrEmpty(spark, root)
-    if (!tombs.isEmpty) {
-      AtomicLayer.write(
-        tombs.join(newVecs.select(col("vec_id").as("c_vec")), Seq("c_vec"), "left_anti"),
-        s"$root/tombstones.parquet", keepVersions = 1)
-      (): Unit
-    }
-    val g = AtomicLayer.read(spark, path)
+    IndexStore.clearOnAdd(newVecs.select(col("vec_id").as("c_vec")), root)
+    val g = IndexStore.get(newVecs.sparkSession, root, "edges.parquet")
       .select(col("v"), col("nbr").as("u"), col("cosine"))
     val fresh = newVecs
       .join(g.select(col("v").as("vec_id")).distinct(), Seq("vec_id"), "left_anti")
       .localCheckpoint() // consumed by the emptiness probe AND the merge
     if (!fresh.isEmpty) {
-      AtomicLayer.write(
+      IndexStore.put(
         nnDescentUpsertWithGraph(g, corpus, fresh, graphK, beam, rounds,
             seedBucketSize)
           .select(col("v"), col("rank"), col("nbr"), col("cosine")),
-        path, keepVersions = 1): Unit
+        root, "edges.parquet")
     }
   }
-
-  /** DELETE ids from the persisted graph index — the identical tombstone
-    * side-table contract (and implementation) as [[deleteFromIvfPqIndex]]:
-    * O(batch) at any graph size, idempotent, unknown ids harmless.
-    */
-  def deleteFromGraphIndex(ids: DataFrame, root: String): Unit =
-    deleteFromIvfPqIndex(ids, root)
 
   /** One micro-batch's BATCHING-INVARIANT NSW insertion into the
     * persisted graph (the st29 streaming-ingest primitive). Unlike
@@ -1340,8 +1243,8 @@ object Similarity {
       rounds: Int = 3,
   ): Unit = {
     val spark = batch.sparkSession
-    val base = AtomicLayer.read(spark, s"$root/base_edges.parquet")
-    val current = AtomicLayer.read(spark, s"$root/edges.parquet")
+    val base = IndexStore.get(spark, root, "base_edges.parquet")
+    val current = IndexStore.get(spark, root, "edges.parquet")
     val fresh = batch.select(col("vec_id"), col("embedding"))
       .join(current.select(col("v").as("vec_id")).distinct(),
         Seq("vec_id"), "left_anti")
@@ -1352,13 +1255,13 @@ object Similarity {
         .select(col("q_vec").as("v"), col("c_vec").as("u"), col("cosine"))
       val rev = beamed.select(col("u").as("v"), col("v").as("u"), col("cosine"))
       val w = Window.partitionBy("v").orderBy(col("cosine").desc, col("u"))
-      AtomicLayer.write(
+      IndexStore.put(
         current.select(col("v"), col("nbr").as("u"), col("cosine"))
           .unionByName(beamed).unionByName(rev).distinct()
           .withColumn("rank", row_number().over(w))
           .where(col("rank") <= graphK)
           .select(col("v"), col("rank"), col("u").as("nbr"), col("cosine")),
-        s"$root/edges.parquet", keepVersions = 1): Unit
+        root, "edges.parquet")
     }
   }
 
@@ -1366,15 +1269,12 @@ object Similarity {
     * [[streamInsertIntoGraphIndex]] — run once at stream start (skips
     * when already frozen, so a restarted stream keeps ITS base).
     */
-  def freezeGraphIndexBase(spark: SparkSession, root: String): Unit = {
-    val path = s"$root/base_edges.parquet"
-    if (AtomicLayer.latestCommitted(spark, path).isEmpty) {
-      AtomicLayer.write(
-        AtomicLayer.read(spark, s"$root/edges.parquet")
-          .select(col("v"), col("nbr")),
-        path, keepVersions = 1): Unit
+  def freezeGraphIndexBase(spark: SparkSession, root: String): Unit =
+    IndexStore.buildOnce(spark, root, "base_edges.parquet") {
+      IndexStore.put(
+        IndexStore.get(spark, root, "edges.parquet").select(col("v"), col("nbr")),
+        root, "base_edges.parquet")
     }
-  }
 
   /** OFFLINE RECONCILIATION of the persisted graph index (VERDICT r11
     * #2) — the repair half of [[streamInsertIntoGraphIndex]]'s
@@ -1404,13 +1304,11 @@ object Similarity {
       root: String,
       graphK: Int = 15,
   ): Unit = {
-    val spark = corpus.sparkSession
-    val path = s"$root/edges.parquet"
-    val g = AtomicLayer.read(spark, path)
+    val g = IndexStore.get(corpus.sparkSession, root, "edges.parquet")
       .select(col("v"), col("nbr").as("u"), col("cosine"))
-    AtomicLayer.write(
+    IndexStore.put(
       descentRounds(corpus.select(col("vec_id"), col("embedding")), g,
         graphK, rounds = 1),
-      path, keepVersions = 1): Unit
+      root, "edges.parquet")
   }
 }

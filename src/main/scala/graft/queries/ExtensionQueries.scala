@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorMath
-import graft.operators.{Dedup, GraphOps, Multimodal, Sessionize, Similarity, TextAnalysis}
+import graft.operators.{Dedup, GraphOps, IndexStore, Multimodal, Sessionize, Similarity, TextAnalysis}
 import graft.streaming.EventsStream
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -200,7 +200,7 @@ object ExtensionQueries {
       val emb = Tables.embeddings(spark, dir)
       val evalSet = emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 2500)
       val trainSet = emb.where(col("vec_id") % 5 =!= 0)
-      val root = Similarity.indexRoot(dir) + "_scont"
+      val root = IndexStore.root(IndexStore.Ann, dir, "_scont")
       Similarity.buildIvfIndex(trainSet, root, nLists = 16)
       Similarity.ivfTopKFromIndex(evalSet, root, k = 1, nProbe = 2)
         .select(col("q_vec").as("vec_id"), col("c_vec").as("nn_train"),
@@ -463,7 +463,7 @@ object ExtensionQueries {
     // replay-from-artifact oracle (the x23 pattern).
     "x35_graph_ann_nnd" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
-      val root = Similarity.graphIndexRoot(dir)
+      val root = IndexStore.root(IndexStore.Graph, dir)
       Similarity.buildNndGraphIndex(emb.where(col("vec_id") < 500), root)
       Similarity.serveGraphAudit(emb, root)
     },
@@ -477,7 +477,7 @@ object ExtensionQueries {
     // never constructs a graph (nndBuilds counter).
     "x37_graph_index_persisted" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
-      val root = Similarity.graphIndexRoot(dir)
+      val root = IndexStore.root(IndexStore.Graph, dir)
       Similarity.buildNndGraphIndex(emb.where(col("vec_id") < 500), root)
       Similarity.serveGraphAudit(emb, root)
     },
@@ -514,12 +514,12 @@ object ExtensionQueries {
     },
     "x38_graph_index_delete" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
-      val root = Similarity.graphIndexRoot(dir) + "_gd"
+      val root = IndexStore.root(IndexStore.Graph, dir, "_gd")
       val old = emb.where(col("vec_id") < 400)
       val nw = emb.where(col("vec_id") >= 400 && col("vec_id") < 500)
       Similarity.buildNndGraphIndex(old, root)
       Similarity.appendToNndGraphIndex(old, nw, root)
-      Similarity.deleteFromGraphIndex(
+      IndexStore.delete(
         emb.where(col("vec_id") >= 8 && col("vec_id") < 208).select("vec_id"),
         root)
       Similarity.appendToNndGraphIndex(emb.where(col("vec_id") < 500),
@@ -543,9 +543,9 @@ object ExtensionQueries {
       val emb = Tables.embeddings(spark, dir)
       val old = emb.where(col("vec_id") < 400)
       val nw = emb.where(col("vec_id") >= 400 && col("vec_id") < 500)
-      val root = Similarity.graphIndexRoot(dir) + "_b400"
+      val root = IndexStore.root(IndexStore.Graph, dir, "_b400")
       Similarity.buildNndGraphIndex(old, root)
-      val g = graft.energy.AtomicLayer.read(spark, s"$root/edges.parquet")
+      val g = IndexStore.get(spark, root, "edges.parquet")
         .select(col("v"), col("nbr").as("u"), col("cosine"))
       val upserted = Similarity.nnDescentUpsertWithGraph(g, old, nw)
         .where(col("rank") <= 5)
@@ -677,7 +677,7 @@ object ExtensionQueries {
       // scan, which only holds when the index is a fixed artifact).
       // Index content is identical to the inline derivation, so the
       // oracle's inline replay stays valid.
-      val root = Similarity.indexRoot(dir)
+      val root = IndexStore.root(IndexStore.Ann, dir)
       Similarity.buildIvfPqIndex(emb, root)
       val (index, cents, sample) = Similarity.loadIvfPqArtifacts(spark, root)
       Seq(1, 2, 4).map { p =>
@@ -690,15 +690,15 @@ object ExtensionQueries {
     // billion-vector story that x22 only models inline (x22 re-derives
     // centroids, codebook, and codes on every call; a real deployment
     // builds them ONCE at write time). The artifacts land as three
-    // parquet tables under AtomicLayer commit-marker snapshots; query
+    // parquet tables under IndexStore's commit-marker snapshots; query
     // time reads them off disk and pays only probe + probed-list ADC +
     // refine. The oracle replays the search FROM THE SAME PERSISTED
-    // FILES (read_parquet by literal path), proving the on-disk layout
+    // FILES (read_parquet of IndexStore.glob), proving the on-disk layout
     // — not just the math — is engine-portable. Build-once semantics:
     // the first call builds, every later call serves.
     "x23_ann_ivfpq_persisted" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
-      val root = Similarity.indexRoot(dir)
+      val root = IndexStore.root(IndexStore.Ann, dir)
       Similarity.buildIvfPqIndex(emb, root)
       Similarity.ivfPqTopKFromIndex(emb.where(col("vec_id") < 8), emb, root, k = 3)
         .orderBy("q_vec", "rank")
@@ -713,7 +713,7 @@ object ExtensionQueries {
     // no duplicate ids, new codes consistent with the base codebook).
     "x29_ann_index_upsert" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
-      val root = Similarity.indexRoot(dir) + "_b400"
+      val root = IndexStore.root(IndexStore.Ann, dir, "_b400")
       Similarity.buildIvfPqIndex(emb.where(col("vec_id") < 400), root)
       Similarity.appendToIvfPqIndex(emb.where(col("vec_id") >= 400), root)
       Similarity.ivfPqTopKFromIndex(emb.where(col("vec_id") < 8), emb, root, k = 3)
@@ -733,9 +733,9 @@ object ExtensionQueries {
     // the tombstone filter; AnnIndexSpec pins delete/re-add.
     "x30_ann_index_delete" -> { (spark, dir) =>
       val emb = Tables.embeddings(spark, dir)
-      val root = Similarity.indexRoot(dir) + "_del"
+      val root = IndexStore.root(IndexStore.Ann, dir, "_del")
       Similarity.buildIvfPqIndex(emb, root)
-      Similarity.deleteFromIvfPqIndex(
+      IndexStore.delete(
         emb.where(col("vec_id") >= 8 && col("vec_id") < 208).select("vec_id"),
         root)
       Similarity.appendToIvfPqIndex(
@@ -2594,91 +2594,6 @@ object ExtensionQueries {
          |$beamReplayCtes
          |${beamReportSql(5)}""".stripMargin,
 
-    // x23's pattern applied to the graph tier: the beam search replayed
-    // FROM THE PERSISTED ARTIFACT the Spark side wrote (AtomicLayer
-    // keeps exactly one committed v* snapshot) — proving the on-disk
-    // edge layout, not just the build math, is engine-portable. The
-    // literal path is Similarity.graphIndexRoot("<sf0.01>")'s layout.
-    "x37_graph_index_persisted" ->
-      s"""WITH qe AS MATERIALIZED (
-         |  SELECT vec_id,
-         |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-         |  FROM embeddings WHERE vec_id < 500
-         |), edges AS MATERIALIZED (
-         |  SELECT v, nbr
-         |  FROM read_parquet('/tmp/graft_graph_index/sf0.01/edges.parquet/v*/*.parquet')
-         |  WHERE rank <= 5
-         |), sc AS MATERIALIZED (
-         |  SELECT a.vec_id AS q_vec, b.vec_id AS v, ${qcosSql("a", "b")} AS cosine
-         |  FROM qe a, qe b WHERE a.vec_id < 8
-         |), e0 AS (SELECT MIN(v) AS e0 FROM edges),
-         |$beamReplayCtes
-         |${beamReportSql(5)}""".stripMargin,
-
-    // the serve replayed from the STREAM-BUILT artifact — x37's replay
-    // pointed at the _stream root (no tombstones in this lifecycle leg)
-    "st29_stream_graph_append" ->
-      s"""WITH qe AS MATERIALIZED (
-         |  SELECT vec_id,
-         |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-         |  FROM embeddings WHERE vec_id < 500
-         |), edges AS MATERIALIZED (
-         |  SELECT v, nbr
-         |  FROM read_parquet('/tmp/graft_graph_index/sf0.01_stream/edges.parquet/v*/*.parquet')
-         |  WHERE rank <= 5
-         |), sc AS MATERIALIZED (
-         |  SELECT a.vec_id AS q_vec, b.vec_id AS v, ${qcosSql("a", "b")} AS cosine
-         |  FROM qe a, qe b WHERE a.vec_id < 8
-         |), e0 AS (SELECT MIN(v) AS e0 FROM edges),
-         |$beamReplayCtes
-         |${beamReportSql(5)}""".stripMargin,
-
-    // the serve replayed from the RECONCILED stream-built artifact —
-    // st29's replay pointed at the _rec root: the persisted edges
-    // already carry the offline NN-descent repair round, so the same
-    // beam replay gates insert + reconcile + layout end to end.
-    "st30_graph_reconcile" ->
-      s"""WITH qe AS MATERIALIZED (
-         |  SELECT vec_id,
-         |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-         |  FROM embeddings WHERE vec_id < 500
-         |), edges AS MATERIALIZED (
-         |  SELECT v, nbr
-         |  FROM read_parquet('/tmp/graft_graph_index/sf0.01_rec/edges.parquet/v*/*.parquet')
-         |  WHERE rank <= 5
-         |), sc AS MATERIALIZED (
-         |  SELECT a.vec_id AS q_vec, b.vec_id AS v, ${qcosSql("a", "b")} AS cosine
-         |  FROM qe a, qe b WHERE a.vec_id < 8
-         |), e0 AS (SELECT MIN(v) AS e0 FROM edges),
-         |$beamReplayCtes
-         |${beamReportSql(5)}""".stripMargin,
-
-    // the post-delete serve replayed from the SAME persisted artifacts:
-    // identical to the x37 replay except every edge touching a
-    // tombstoned node — on EITHER endpoint — is filtered before the
-    // traversal, and the entry vertex is recomputed over the survivors
-    // (a dead node must be unreachable however close it is).
-    "x38_graph_index_delete" ->
-      s"""WITH qe AS MATERIALIZED (
-         |  SELECT vec_id,
-         |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-         |  FROM embeddings WHERE vec_id < 500
-         |), tomb AS (
-         |  SELECT c_vec
-         |  FROM read_parquet('/tmp/graft_graph_index/sf0.01_gd/tombstones.parquet/v*/*.parquet')
-         |), edges AS MATERIALIZED (
-         |  SELECT v, nbr
-         |  FROM read_parquet('/tmp/graft_graph_index/sf0.01_gd/edges.parquet/v*/*.parquet')
-         |  WHERE rank <= 5
-         |    AND v NOT IN (SELECT c_vec FROM tomb)
-         |    AND nbr NOT IN (SELECT c_vec FROM tomb)
-         |), sc AS MATERIALIZED (
-         |  SELECT a.vec_id AS q_vec, b.vec_id AS v, ${qcosSql("a", "b")} AS cosine
-         |  FROM qe a, qe b WHERE a.vec_id < 8
-         |), e0 AS (SELECT MIN(v) AS e0 FROM edges),
-         |$beamReplayCtes
-         |${beamReportSql(5)}""".stripMargin,
-
     // the lifecycle composed: build replay over the 400-slice (qe/g3),
     // beam-locate the 100 new vectors over g3's edges, reverse-link,
     // batch hash-seed pairs, merged re-prune, census vs brute-500 truth
@@ -3190,219 +3105,6 @@ object ExtensionQueries {
            |  CAST(SUM(CASE WHEN p.c_vec IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS recall
            |FROM ex3 br LEFT JOIN ref3 p ON p.q_vec = br.q_vec AND p.c_vec = br.c_vec) u$p""".stripMargin
       }.mkString("\nUNION ALL\n") + "\nORDER BY n_probe"),
-        // x23: the search replayed FROM THE PERSISTED ARTIFACTS the Spark
-    // side wrote (AtomicLayer keeps exactly one committed v* snapshot,
-    // so the glob resolves one version). The driver verifies at sf0.01;
-    // the literal paths below are Similarity.indexRoot("<sf0.01>")'s
-    // layout. Persisted `codes` hold 0-based POSITIONS into the
-    // cw_id-sorted codebook — the row_number()-1 in `cb` rebuilds that
-    // positional map.
-    "x23_ann_ivfpq_persisted" ->
-      """WITH cent AS (
-        |  SELECT centroid_id,
-        |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01/centroids.parquet/v*/*.parquet')
-        |), qe AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-        |  FROM embeddings WHERE vec_id < 8
-        |), query_assign AS (
-        |  SELECT q_vec, centroid_id AS list_id FROM (
-        |    SELECT e.vec_id AS q_vec, c.centroid_id,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_dot_product(e.q, c.cq) /
-        |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
-        |          DESC, c.centroid_id) AS rk
-        |    FROM qe e, cent c) t WHERE rk <= 2
-        |), cb AS (
-        |  SELECT qcw, row_number() OVER (ORDER BY cw_id) - 1 AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01/codebook.parquet/v*/*.parquet')
-        |), cwdim AS (
-        |  SELECT pos, g.i - 1 AS dim, qcw[g.i] AS qc
-        |  FROM cb, UNNEST(generate_series(1, len(qcw))) AS g(i)
-        |), vq AS (
-        |  SELECT vec_id, len(embedding) // 8 AS sd, g.i - 1 AS dim,
-        |    CAST(floor(CAST(embedding[g.i] AS DOUBLE) * 1048576.0) AS BIGINT) AS qv
-        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
-        |  WHERE len(embedding) > 0 AND len(embedding) % 8 = 0
-        |), lut AS (
-        |  SELECT v.vec_id, c.pos, v.dim // v.sd AS s,
-        |    CAST(SUM((qv - qc) * (qv - qc)) AS BIGINT) AS d
-        |  FROM vq v JOIN cwdim c ON c.dim = v.dim
-        |  WHERE v.vec_id < 8
-        |  GROUP BY 1, 2, 3
-        |), codepos AS (
-        |  SELECT i.c_vec, i.list_id, g.s1 - 1 AS s, i.codes[g.s1] AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01/index.parquet/v*/*.parquet') i,
-        |    UNNEST(generate_series(1, len(i.codes))) AS g(s1)
-        |), adc AS (
-        |  SELECT qa.q_vec, cp.c_vec, cp.list_id,
-        |    CAST(SUM(l.d) AS BIGINT) AS qdist_approx
-        |  FROM codepos cp
-        |  JOIN query_assign qa ON qa.list_id = cp.list_id
-        |  JOIN lut l ON l.s = cp.s AND l.pos = cp.pos AND l.vec_id = qa.q_vec
-        |  WHERE cp.c_vec <> qa.q_vec
-        |  GROUP BY 1, 2, 3
-        |), short AS (
-        |  SELECT q_vec, c_vec, list_id FROM (
-        |    SELECT q_vec, c_vec, list_id,
-        |      row_number() OVER (PARTITION BY q_vec
-        |        ORDER BY qdist_approx, c_vec) AS rank
-        |    FROM adc) t WHERE rank <= 32
-        |), rex AS (
-        |  SELECT sh.q_vec, sh.c_vec, sh.list_id,
-        |    CAST(SUM((a.qv - b.qv) * (a.qv - b.qv)) AS BIGINT) AS qdist_exact
-        |  FROM short sh
-        |  JOIN vq a ON a.vec_id = sh.q_vec
-        |  JOIN vq b ON b.vec_id = sh.c_vec AND b.dim = a.dim
-        |  GROUP BY 1, 2, 3
-        |), ranked AS (
-        |  SELECT q_vec, c_vec, list_id, qdist_exact,
-        |    row_number() OVER (PARTITION BY q_vec
-        |      ORDER BY qdist_exact, c_vec) AS rank
-        |  FROM rex)
-        |SELECT q_vec, rank, c_vec, qdist_exact, list_id FROM ranked
-        |WHERE rank <= 3 ORDER BY q_vec, rank""".stripMargin,
-    "x29_ann_index_upsert" ->
-      """WITH cent AS (
-        |  SELECT centroid_id,
-        |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_b400/centroids.parquet/v*/*.parquet')
-        |), qe AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-        |  FROM embeddings WHERE vec_id < 8
-        |), query_assign AS (
-        |  SELECT q_vec, centroid_id AS list_id FROM (
-        |    SELECT e.vec_id AS q_vec, c.centroid_id,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_dot_product(e.q, c.cq) /
-        |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
-        |          DESC, c.centroid_id) AS rk
-        |    FROM qe e, cent c) t WHERE rk <= 2
-        |), cb AS (
-        |  SELECT qcw, row_number() OVER (ORDER BY cw_id) - 1 AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_b400/codebook.parquet/v*/*.parquet')
-        |), cwdim AS (
-        |  SELECT pos, g.i - 1 AS dim, qcw[g.i] AS qc
-        |  FROM cb, UNNEST(generate_series(1, len(qcw))) AS g(i)
-        |), vq AS (
-        |  SELECT vec_id, len(embedding) // 8 AS sd, g.i - 1 AS dim,
-        |    CAST(floor(CAST(embedding[g.i] AS DOUBLE) * 1048576.0) AS BIGINT) AS qv
-        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
-        |  WHERE len(embedding) > 0 AND len(embedding) % 8 = 0
-        |), lut AS (
-        |  SELECT v.vec_id, c.pos, v.dim // v.sd AS s,
-        |    CAST(SUM((qv - qc) * (qv - qc)) AS BIGINT) AS d
-        |  FROM vq v JOIN cwdim c ON c.dim = v.dim
-        |  WHERE v.vec_id < 8
-        |  GROUP BY 1, 2, 3
-        |), codepos AS (
-        |  SELECT i.c_vec, i.list_id, g.s1 - 1 AS s, i.codes[g.s1] AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_b400/index.parquet/v*/*.parquet') i,
-        |    UNNEST(generate_series(1, len(i.codes))) AS g(s1)
-        |), adc AS (
-        |  SELECT qa.q_vec, cp.c_vec, cp.list_id,
-        |    CAST(SUM(l.d) AS BIGINT) AS qdist_approx
-        |  FROM codepos cp
-        |  JOIN query_assign qa ON qa.list_id = cp.list_id
-        |  JOIN lut l ON l.s = cp.s AND l.pos = cp.pos AND l.vec_id = qa.q_vec
-        |  WHERE cp.c_vec <> qa.q_vec
-        |  GROUP BY 1, 2, 3
-        |), short AS (
-        |  SELECT q_vec, c_vec, list_id FROM (
-        |    SELECT q_vec, c_vec, list_id,
-        |      row_number() OVER (PARTITION BY q_vec
-        |        ORDER BY qdist_approx, c_vec) AS rank
-        |    FROM adc) t WHERE rank <= 32
-        |), rex AS (
-        |  SELECT sh.q_vec, sh.c_vec, sh.list_id,
-        |    CAST(SUM((a.qv - b.qv) * (a.qv - b.qv)) AS BIGINT) AS qdist_exact
-        |  FROM short sh
-        |  JOIN vq a ON a.vec_id = sh.q_vec
-        |  JOIN vq b ON b.vec_id = sh.c_vec AND b.dim = a.dim
-        |  GROUP BY 1, 2, 3
-        |), ranked AS (
-        |  SELECT q_vec, c_vec, list_id, qdist_exact,
-        |    row_number() OVER (PARTITION BY q_vec
-        |      ORDER BY qdist_exact, c_vec) AS rank
-        |  FROM rex)
-        |SELECT q_vec, rank, c_vec, qdist_exact, list_id FROM ranked
-        |WHERE rank <= 3 ORDER BY q_vec, rank""".stripMargin,
-    // Replay of the post-delete serving path from the SAME persisted
-    // artifacts: identical to the x23/x29 replay except the code table
-    // is anti-filtered by the tombstones.parquet side table before
-    // probing — a tombstoned id must be unreachable however close it is.
-    "x30_ann_index_delete" ->
-      """WITH cent AS (
-        |  SELECT centroid_id,
-        |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_del/centroids.parquet/v*/*.parquet')
-        |), qe AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-        |  FROM embeddings WHERE vec_id < 8
-        |), query_assign AS (
-        |  SELECT q_vec, centroid_id AS list_id FROM (
-        |    SELECT e.vec_id AS q_vec, c.centroid_id,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_dot_product(e.q, c.cq) /
-        |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
-        |          DESC, c.centroid_id) AS rk
-        |    FROM qe e, cent c) t WHERE rk <= 2
-        |), cb AS (
-        |  SELECT qcw, row_number() OVER (ORDER BY cw_id) - 1 AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_del/codebook.parquet/v*/*.parquet')
-        |), cwdim AS (
-        |  SELECT pos, g.i - 1 AS dim, qcw[g.i] AS qc
-        |  FROM cb, UNNEST(generate_series(1, len(qcw))) AS g(i)
-        |), vq AS (
-        |  SELECT vec_id, len(embedding) // 8 AS sd, g.i - 1 AS dim,
-        |    CAST(floor(CAST(embedding[g.i] AS DOUBLE) * 1048576.0) AS BIGINT) AS qv
-        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
-        |  WHERE len(embedding) > 0 AND len(embedding) % 8 = 0
-        |), lut AS (
-        |  SELECT v.vec_id, c.pos, v.dim // v.sd AS s,
-        |    CAST(SUM((qv - qc) * (qv - qc)) AS BIGINT) AS d
-        |  FROM vq v JOIN cwdim c ON c.dim = v.dim
-        |  WHERE v.vec_id < 8
-        |  GROUP BY 1, 2, 3
-        |), tomb AS (
-        |  SELECT c_vec
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_del/tombstones.parquet/v*/*.parquet')
-        |), codepos AS (
-        |  SELECT i.c_vec, i.list_id, g.s1 - 1 AS s, i.codes[g.s1] AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_del/index.parquet/v*/*.parquet') i,
-        |    UNNEST(generate_series(1, len(i.codes))) AS g(s1)
-        |  WHERE i.c_vec NOT IN (SELECT c_vec FROM tomb)
-        |), adc AS (
-        |  SELECT qa.q_vec, cp.c_vec, cp.list_id,
-        |    CAST(SUM(l.d) AS BIGINT) AS qdist_approx
-        |  FROM codepos cp
-        |  JOIN query_assign qa ON qa.list_id = cp.list_id
-        |  JOIN lut l ON l.s = cp.s AND l.pos = cp.pos AND l.vec_id = qa.q_vec
-        |  WHERE cp.c_vec <> qa.q_vec
-        |  GROUP BY 1, 2, 3
-        |), short AS (
-        |  SELECT q_vec, c_vec, list_id FROM (
-        |    SELECT q_vec, c_vec, list_id,
-        |      row_number() OVER (PARTITION BY q_vec
-        |        ORDER BY qdist_approx, c_vec) AS rank
-        |    FROM adc) t WHERE rank <= 32
-        |), rex AS (
-        |  SELECT sh.q_vec, sh.c_vec, sh.list_id,
-        |    CAST(SUM((a.qv - b.qv) * (a.qv - b.qv)) AS BIGINT) AS qdist_exact
-        |  FROM short sh
-        |  JOIN vq a ON a.vec_id = sh.q_vec
-        |  JOIN vq b ON b.vec_id = sh.c_vec AND b.dim = a.dim
-        |  GROUP BY 1, 2, 3
-        |), ranked AS (
-        |  SELECT q_vec, c_vec, list_id, qdist_exact,
-        |    row_number() OVER (PARTITION BY q_vec
-        |      ORDER BY qdist_exact, c_vec) AS rank
-        |  FROM rex)
-        |SELECT q_vec, rank, c_vec, qdist_exact, list_id FROM ranked
-        |WHERE rank <= 3 ORDER BY q_vec, rank""".stripMargin,
     // SemDeDup replay: k-means assignment (the e4 pipeline), within-
     // cluster pairwise quantized cosine, drop-on-senior-twin decision.
     "sd2_semantic_dedup" ->
@@ -3902,53 +3604,6 @@ object ExtensionQueries {
         |  CAST(COUNT(DISTINCT url) AS BIGINT) AS n_distinct_raw,
         |  MIN(doc_id) AS keep_doc_id
         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the probe + rank-1 census replayed FROM THE PERSISTED train-side
-    // index artifacts (x37's pattern applied to the flat-IVF tier):
-    // DuckDB reads the same centroids.parquet and list_id-partitioned
-    // lists.parquet the Spark side built once at write time, so the
-    // clustered on-disk layout — not just the assignment math (x5's
-    // oracle covers that) — is what the census is gated on. The literal
-    // paths are Similarity.indexRoot("<sf0.01>") + "_scont"'s layout.
-    "scont2_semantic_contamination_ivf" ->
-      """WITH qe AS MATERIALIZED (
-        |  SELECT vec_id,
-        |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-        |  FROM embeddings
-        |), cent AS (
-        |  SELECT centroid_id,
-        |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_scont/centroids.parquet/v*/*.parquet')
-        |), corpus_assign AS (
-        |  SELECT c_vec, CAST(list_id AS BIGINT) AS list_id
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_scont/lists.parquet/v*/*/*.parquet',
-        |                    hive_partitioning = 1)
-        |), query_assign AS (
-        |  SELECT q_vec, centroid_id AS list_id FROM (
-        |    SELECT e.vec_id AS q_vec, c.centroid_id,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_dot_product(e.q, c.cq) /
-        |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
-        |          DESC, c.centroid_id) AS rk
-        |    FROM qe e, cent c
-        |    WHERE e.vec_id % 5 = 0 AND e.vec_id < 2500) t WHERE rk <= 2
-        |), scored AS (
-        |  SELECT qa.q_vec, ca.c_vec,
-        |    list_dot_product(eq.q, ec.q) /
-        |      nullif(sqrt(list_dot_product(eq.q, eq.q)) * sqrt(list_dot_product(ec.q, ec.q)), 0)
-        |      AS cosine
-        |  FROM query_assign qa
-        |  JOIN corpus_assign ca USING (list_id)
-        |  JOIN qe eq ON eq.vec_id = qa.q_vec
-        |  JOIN qe ec ON ec.vec_id = ca.c_vec
-        |  WHERE ca.c_vec <> qa.q_vec
-        |)
-        |SELECT q_vec AS vec_id, c_vec AS nn_train, cosine,
-        |  cosine >= 0.9 AS contaminated
-        |FROM (
-        |  SELECT q_vec, c_vec, cosine,
-        |    row_number() OVER (PARTITION BY q_vec ORDER BY cosine DESC, c_vec) AS rank
-        |  FROM scored) t
-        |WHERE rank = 1 ORDER BY vec_id""".stripMargin,
     // eval x train exact-quantized-cosine argmax, replayed like x1
     "scont1_semantic_contamination" ->
       s"""WITH qe AS MATERIALIZED (
@@ -4823,4 +4478,195 @@ object ExtensionQueries {
         |    THEN purchase_id END) AS BIGINT) AS n_purchases_matched
         |FROM allrows GROUP BY 1 ORDER BY 1""".stripMargin,
   )
+
+  /** The oracles that replay a PERSISTED index, for the corpus at `dir`:
+    * every `read_parquet` path is [[IndexStore.glob]] over the same
+    * [[IndexStore.root]] the query's Scala side writes, so the replay
+    * reads the run's own index at any corpus directory.
+    */
+  def indexOracles(dir: String): Map[String, String] = {
+    def ann(suffix: String) = IndexStore.root(IndexStore.Ann, dir, suffix)
+    def graph(suffix: String) = IndexStore.root(IndexStore.Graph, dir, suffix)
+    Map(
+      // x23: the search replayed FROM THE PERSISTED ARTIFACTS the Spark
+      // side wrote, proving the on-disk layout — not just the math — is
+      // engine-portable; x29 replays the merged index after the append.
+      "x23_ann_ivfpq_persisted" -> ivfPqReplaySql(ann("")),
+      "x29_ann_index_upsert" -> ivfPqReplaySql(ann("_b400")),
+      // the post-delete serve: a tombstoned id must be unreachable
+      // however close it is
+      "x30_ann_index_delete" -> ivfPqReplaySql(ann("_del"), tombstones = true),
+      // x23's pattern applied to the graph tier: the beam search
+      // replayed from the persisted edges — the x37 build, the
+      // stream-built st29 index (no tombstones in that lifecycle leg)
+      // and st30's reconciled one, whose persisted edges already carry
+      // the offline NN-descent repair round
+      "x37_graph_index_persisted" -> graphReplaySql(graph("")),
+      "st29_stream_graph_append" -> graphReplaySql(graph("_stream")),
+      "st30_graph_reconcile" -> graphReplaySql(graph("_rec")),
+      // the post-delete serve: every edge touching a tombstoned node —
+      // on EITHER endpoint — is filtered before the traversal, and the
+      // entry vertex is recomputed over the survivors
+      "x38_graph_index_delete" -> graphReplaySql(graph("_gd"), tombstones = true),
+      // the probe + rank-1 census replayed FROM THE PERSISTED train-side
+      // index artifacts (x37's pattern applied to the flat-IVF tier):
+      // DuckDB reads the same centroids.parquet and list_id-partitioned
+      // lists.parquet the Spark side built once at write time, so the
+      // clustered on-disk layout — not just the assignment math (x5's
+      // oracle covers that) — is what the census is gated on.
+      "scont2_semantic_contamination_ivf" -> scont2Sql(ann("_scont")),
+    )
+  }
+
+  /** The x23 IVF-PQ serve (probe 2, ADC shortlist 32, exact refine, top
+    * 3 of the first 8 vectors) replayed from the persisted artifacts at
+    * `root`; with `tombstones` the code table is anti-filtered by the
+    * delete set before probing (x30). Persisted `codes` hold 0-based
+    * POSITIONS into the cw_id-sorted codebook — the row_number()-1 in
+    * `cb` rebuilds that positional map.
+    */
+  private[queries] def ivfPqReplaySql(root: String, tombstones: Boolean = false): String = {
+    val tomb = if (!tombstones) "" else tombCte(root)
+    val live = if (!tombstones) "" else "\n  WHERE i.c_vec NOT IN (SELECT c_vec FROM tomb)"
+    s"""WITH cent AS (
+       |  SELECT centroid_id,
+       |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
+       |  FROM read_parquet('${IndexStore.glob(root, "centroids.parquet")}')
+       |), qe AS (
+       |  SELECT vec_id,
+       |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
+       |  FROM embeddings WHERE vec_id < 8
+       |), query_assign AS (
+       |  SELECT q_vec, centroid_id AS list_id FROM (
+       |    SELECT e.vec_id AS q_vec, c.centroid_id,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        list_dot_product(e.q, c.cq) /
+       |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
+       |          DESC, c.centroid_id) AS rk
+       |    FROM qe e, cent c) t WHERE rk <= 2
+       |), cb AS (
+       |  SELECT qcw, row_number() OVER (ORDER BY cw_id) - 1 AS pos
+       |  FROM read_parquet('${IndexStore.glob(root, "codebook.parquet")}')
+       |), cwdim AS (
+       |  SELECT pos, g.i - 1 AS dim, qcw[g.i] AS qc
+       |  FROM cb, UNNEST(generate_series(1, len(qcw))) AS g(i)
+       |), vq AS (
+       |  SELECT vec_id, len(embedding) // 8 AS sd, g.i - 1 AS dim,
+       |    CAST(floor(CAST(embedding[g.i] AS DOUBLE) * 1048576.0) AS BIGINT) AS qv
+       |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
+       |  WHERE len(embedding) > 0 AND len(embedding) % 8 = 0
+       |), lut AS (
+       |  SELECT v.vec_id, c.pos, v.dim // v.sd AS s,
+       |    CAST(SUM((qv - qc) * (qv - qc)) AS BIGINT) AS d
+       |  FROM vq v JOIN cwdim c ON c.dim = v.dim
+       |  WHERE v.vec_id < 8
+       |  GROUP BY 1, 2, 3
+       |$tomb), codepos AS (
+       |  SELECT i.c_vec, i.list_id, g.s1 - 1 AS s, i.codes[g.s1] AS pos
+       |  FROM read_parquet('${IndexStore.glob(root, "index.parquet")}') i,
+       |    UNNEST(generate_series(1, len(i.codes))) AS g(s1)$live
+       |), adc AS (
+       |  SELECT qa.q_vec, cp.c_vec, cp.list_id,
+       |    CAST(SUM(l.d) AS BIGINT) AS qdist_approx
+       |  FROM codepos cp
+       |  JOIN query_assign qa ON qa.list_id = cp.list_id
+       |  JOIN lut l ON l.s = cp.s AND l.pos = cp.pos AND l.vec_id = qa.q_vec
+       |  WHERE cp.c_vec <> qa.q_vec
+       |  GROUP BY 1, 2, 3
+       |), short AS (
+       |  SELECT q_vec, c_vec, list_id FROM (
+       |    SELECT q_vec, c_vec, list_id,
+       |      row_number() OVER (PARTITION BY q_vec
+       |        ORDER BY qdist_approx, c_vec) AS rank
+       |    FROM adc) t WHERE rank <= 32
+       |), rex AS (
+       |  SELECT sh.q_vec, sh.c_vec, sh.list_id,
+       |    CAST(SUM((a.qv - b.qv) * (a.qv - b.qv)) AS BIGINT) AS qdist_exact
+       |  FROM short sh
+       |  JOIN vq a ON a.vec_id = sh.q_vec
+       |  JOIN vq b ON b.vec_id = sh.c_vec AND b.dim = a.dim
+       |  GROUP BY 1, 2, 3
+       |), ranked AS (
+       |  SELECT q_vec, c_vec, list_id, qdist_exact,
+       |    row_number() OVER (PARTITION BY q_vec
+       |      ORDER BY qdist_exact, c_vec) AS rank
+       |  FROM rex)
+       |SELECT q_vec, rank, c_vec, qdist_exact, list_id FROM ranked
+       |WHERE rank <= 3 ORDER BY q_vec, rank""".stripMargin
+  }
+
+  /** The graph tier's audit serve (top 5 of the first 8 vectors, beam 8,
+    * 3 rounds, degree 5) replayed from the persisted edges at `root`;
+    * with `tombstones` every edge touching a deleted node is dropped
+    * before the traversal (x38).
+    */
+  private def graphReplaySql(root: String, tombstones: Boolean = false): String = {
+    val tomb = if (!tombstones) "" else tombCte(root)
+    val live = if (!tombstones) "" else
+      "\n    AND v NOT IN (SELECT c_vec FROM tomb)\n    AND nbr NOT IN (SELECT c_vec FROM tomb)"
+    s"""WITH qe AS MATERIALIZED (
+       |  SELECT vec_id,
+       |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
+       |  FROM embeddings WHERE vec_id < 500
+       |$tomb), edges AS MATERIALIZED (
+       |  SELECT v, nbr
+       |  FROM read_parquet('${IndexStore.glob(root, "edges.parquet")}')
+       |  WHERE rank <= 5$live
+       |), sc AS MATERIALIZED (
+       |  SELECT a.vec_id AS q_vec, b.vec_id AS v, ${qcosSql("a", "b")} AS cosine
+       |  FROM qe a, qe b WHERE a.vec_id < 8
+       |), e0 AS (SELECT MIN(v) AS e0 FROM edges),
+       |$beamReplayCtes
+       |${beamReportSql(5)}""".stripMargin
+  }
+
+  /** The `tomb` CTE over the index at `root`'s pending-delete set,
+    * opening with the `), ` that closes the CTE before it.
+    */
+  private def tombCte(root: String): String =
+    s"""), tomb AS (
+       |  SELECT c_vec
+       |  FROM read_parquet('${IndexStore.glob(root, "tombstones.parquet")}')
+       |""".stripMargin
+
+  private def scont2Sql(root: String): String =
+    s"""WITH qe AS MATERIALIZED (
+       |  SELECT vec_id,
+       |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
+       |  FROM embeddings
+       |), cent AS (
+       |  SELECT centroid_id,
+       |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
+       |  FROM read_parquet('${IndexStore.glob(root, "centroids.parquet")}')
+       |), corpus_assign AS (
+       |  SELECT c_vec, CAST(list_id AS BIGINT) AS list_id
+       |  FROM read_parquet('${IndexStore.glob(root, "lists.parquet", partitionLevels = 1)}',
+       |                    hive_partitioning = 1)
+       |), query_assign AS (
+       |  SELECT q_vec, centroid_id AS list_id FROM (
+       |    SELECT e.vec_id AS q_vec, c.centroid_id,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        list_dot_product(e.q, c.cq) /
+       |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
+       |          DESC, c.centroid_id) AS rk
+       |    FROM qe e, cent c
+       |    WHERE e.vec_id % 5 = 0 AND e.vec_id < 2500) t WHERE rk <= 2
+       |), scored AS (
+       |  SELECT qa.q_vec, ca.c_vec,
+       |    list_dot_product(eq.q, ec.q) /
+       |      nullif(sqrt(list_dot_product(eq.q, eq.q)) * sqrt(list_dot_product(ec.q, ec.q)), 0)
+       |      AS cosine
+       |  FROM query_assign qa
+       |  JOIN corpus_assign ca USING (list_id)
+       |  JOIN qe eq ON eq.vec_id = qa.q_vec
+       |  JOIN qe ec ON ec.vec_id = ca.c_vec
+       |  WHERE ca.c_vec <> qa.q_vec
+       |)
+       |SELECT q_vec AS vec_id, c_vec AS nn_train, cosine,
+       |  cosine >= 0.9 AS contaminated
+       |FROM (
+       |  SELECT q_vec, c_vec, cosine,
+       |    row_number() OVER (PARTITION BY q_vec ORDER BY cosine DESC, c_vec) AS rank
+       |  FROM scored) t
+       |WHERE rank = 1 ORDER BY vec_id""".stripMargin
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{TextAnalysis, ZOrder}
+import graft.operators.{IndexStore, TextAnalysis, ZOrder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -431,7 +431,7 @@ object ScaleOpsQueries {
       AtomicLayer.write(
         ev.where(!erase).groupBy("user_id")
           .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("cents")),
-        out, keepVersions = 1)
+        out)
       val back = AtomicLayer.read(spark, out)
         .localCheckpoint(eager = true) // feeds residual + kept stats
       ev.agg(
@@ -536,7 +536,6 @@ object ScaleOpsQueries {
     // O(delta + view), not O(history). The oracle IS the full
     // recompute: the incremental result must equal it bit for bit.
     "imv1_incremental_rollup" -> { (spark, dir) =>
-      import graft.energy.AtomicLayer
       val split = lit("2024-01-25").cast("date")
       val ev = Tables.events(spark, dir)
         .select(col("event_type"), to_date(col("ts_sec")).as("day"),
@@ -550,13 +549,11 @@ object ScaleOpsQueries {
       // (metadata stat, not a history rescan — invalidation stays O(1)).
       val src = new java.io.File(s"$dir/events.parquet")
       val root = s"/tmp/graft_imv/${src.getParentFile.getName}-" +
-        s"${src.length()}_${src.lastModified()}/daily.parquet"
-      if (AtomicLayer.latestCommitted(spark, root).isEmpty) {
-        AtomicLayer.write(roll(ev.where(col("day") < split)), root,
-          keepVersions = 1)
-        (): Unit
+        s"${src.length()}_${src.lastModified()}"
+      IndexStore.buildOnce(spark, root, "daily.parquet") {
+        IndexStore.put(roll(ev.where(col("day") < split)), root, "daily.parquet")
       }
-      val base = AtomicLayer.read(spark, root)
+      val base = IndexStore.get(spark, root, "daily.parquet")
       val delta = roll(ev.where(col("day") >= split))
       base.unionByName(delta)
         .groupBy("event_type", "day")
@@ -572,12 +569,11 @@ object ScaleOpsQueries {
     // base relation only against the small opposite delta, and γ's
     // partials merge by key-wise summation — so a refresh never
     // re-joins the base-base bulk. The base census persists once
-    // (imv1's fingerprint-keyed AtomicLayer cache); the refreshed view
+    // (imv1's fingerprint-keyed IndexStore cache); the refreshed view
     // must equal the plain full-join census bit for bit — the oracle
     // IS that plain join. The two delta predicates cut ACROSS each
     // other (order-keyed vs line-numbered) so every term is non-empty.
     "imv2_incremental_join" -> { (spark, dir) =>
-      import graft.energy.AtomicLayer
       val o = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderpriority"),
           (col("o_orderkey") % 5 === 4).as("d"))
@@ -600,12 +596,11 @@ object ScaleOpsQueries {
       val srcO = new java.io.File(s"$dir/orders.parquet")
       val root = s"/tmp/graft_imv2/${srcL.getParentFile.getName}-" +
         s"${srcL.length()}_${srcL.lastModified()}-" +
-        s"${srcO.length()}_${srcO.lastModified()}/join_census.parquet"
-      if (AtomicLayer.latestCommitted(spark, root).isEmpty) {
-        AtomicLayer.write(census(o0, l0), root, keepVersions = 1)
-        (): Unit
+        s"${srcO.length()}_${srcO.lastModified()}"
+      IndexStore.buildOnce(spark, root, "join_census.parquet") {
+        IndexStore.put(census(o0, l0), root, "join_census.parquet")
       }
-      AtomicLayer.read(spark, root)
+      IndexStore.get(spark, root, "join_census.parquet")
         .unionByName(census(dO, l0))
         .unionByName(census(o0, dL))
         .unionByName(census(dO, dL))

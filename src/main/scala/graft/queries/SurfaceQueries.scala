@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WeightedMean
-import graft.operators.Skyline
+import graft.operators.{IndexStore, Skyline}
 import graft.streaming.SessionStream
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.expressions.Window
@@ -603,128 +603,6 @@ object SurfaceQueries {
         |WHERE sid < max_sid
         |   OR (end_ns + 1800000000000 + 999999) // 1000000 <= wm_ms
         |ORDER BY user_id, session_start_ms""".stripMargin,
-    // st16: probe (rk=1), ADC, and argmin replayed from the SAME
-    // persisted artifacts as x23 (driver verifies at sf0.01; the Spark
-    // side builds them on first call). Persisted codes are 0-based
-    // positions into the cw_id-sorted codebook.
-    "st21_stream_index_append" ->
-      """WITH cent AS (
-        |  SELECT centroid_id,
-        |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_stream/centroids.parquet/v*/*.parquet')
-        |), qe AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-        |  FROM embeddings WHERE vec_id < 8
-        |), query_assign AS (
-        |  SELECT q_vec, centroid_id AS list_id FROM (
-        |    SELECT e.vec_id AS q_vec, c.centroid_id,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_dot_product(e.q, c.cq) /
-        |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
-        |          DESC, c.centroid_id) AS rk
-        |    FROM qe e, cent c) t WHERE rk <= 2
-        |), cb AS (
-        |  SELECT qcw, row_number() OVER (ORDER BY cw_id) - 1 AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_stream/codebook.parquet/v*/*.parquet')
-        |), cwdim AS (
-        |  SELECT pos, g.i - 1 AS dim, qcw[g.i] AS qc
-        |  FROM cb, UNNEST(generate_series(1, len(qcw))) AS g(i)
-        |), vq AS (
-        |  SELECT vec_id, len(embedding) // 8 AS sd, g.i - 1 AS dim,
-        |    CAST(floor(CAST(embedding[g.i] AS DOUBLE) * 1048576.0) AS BIGINT) AS qv
-        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
-        |  WHERE len(embedding) > 0 AND len(embedding) % 8 = 0
-        |), lut AS (
-        |  SELECT v.vec_id, c.pos, v.dim // v.sd AS s,
-        |    CAST(SUM((qv - qc) * (qv - qc)) AS BIGINT) AS d
-        |  FROM vq v JOIN cwdim c ON c.dim = v.dim
-        |  WHERE v.vec_id < 8
-        |  GROUP BY 1, 2, 3
-        |), codepos AS (
-        |  SELECT i.c_vec, i.list_id, g.s1 - 1 AS s, i.codes[g.s1] AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01_stream/index.parquet/v*/*.parquet') i,
-        |    UNNEST(generate_series(1, len(i.codes))) AS g(s1)
-        |), adc AS (
-        |  SELECT qa.q_vec, cp.c_vec, cp.list_id,
-        |    CAST(SUM(l.d) AS BIGINT) AS qdist_approx
-        |  FROM codepos cp
-        |  JOIN query_assign qa ON qa.list_id = cp.list_id
-        |  JOIN lut l ON l.s = cp.s AND l.pos = cp.pos AND l.vec_id = qa.q_vec
-        |  WHERE cp.c_vec <> qa.q_vec
-        |  GROUP BY 1, 2, 3
-        |), short AS (
-        |  SELECT q_vec, c_vec, list_id FROM (
-        |    SELECT q_vec, c_vec, list_id,
-        |      row_number() OVER (PARTITION BY q_vec
-        |        ORDER BY qdist_approx, c_vec) AS rank
-        |    FROM adc) t WHERE rank <= 32
-        |), rex AS (
-        |  SELECT sh.q_vec, sh.c_vec, sh.list_id,
-        |    CAST(SUM((a.qv - b.qv) * (a.qv - b.qv)) AS BIGINT) AS qdist_exact
-        |  FROM short sh
-        |  JOIN vq a ON a.vec_id = sh.q_vec
-        |  JOIN vq b ON b.vec_id = sh.c_vec AND b.dim = a.dim
-        |  GROUP BY 1, 2, 3
-        |), ranked AS (
-        |  SELECT q_vec, c_vec, list_id, qdist_exact,
-        |    row_number() OVER (PARTITION BY q_vec
-        |      ORDER BY qdist_exact, c_vec) AS rank
-        |  FROM rex)
-        |SELECT q_vec, rank, c_vec, qdist_exact, list_id FROM ranked
-        |WHERE rank <= 3 ORDER BY q_vec, rank""".stripMargin,
-    "st16_stream_ann_index" ->
-      """WITH cent AS (
-        |  SELECT centroid_id,
-        |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01/centroids.parquet/v*/*.parquet')
-        |), qe AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
-        |  FROM embeddings
-        |  WHERE vec_id < 8 AND len(embedding) > 0 AND len(embedding) % 8 = 0
-        |), qa AS (
-        |  SELECT q_vec, centroid_id AS list_id FROM (
-        |    SELECT e.vec_id AS q_vec, c.centroid_id,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_dot_product(e.q, c.cq) /
-        |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
-        |          DESC, c.centroid_id) AS rk
-        |    FROM qe e, cent c) t WHERE rk = 1
-        |), cb AS (
-        |  SELECT qcw, row_number() OVER (ORDER BY cw_id) - 1 AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01/codebook.parquet/v*/*.parquet')
-        |), cwdim AS (
-        |  SELECT pos, g.i - 1 AS dim, qcw[g.i] AS qc
-        |  FROM cb, UNNEST(generate_series(1, len(qcw))) AS g(i)
-        |), vq AS (
-        |  SELECT vec_id, len(embedding) // 8 AS sd, g.i - 1 AS dim,
-        |    CAST(floor(CAST(embedding[g.i] AS DOUBLE) * 1048576.0) AS BIGINT) AS qv
-        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
-        |  WHERE vec_id < 8 AND len(embedding) > 0 AND len(embedding) % 8 = 0
-        |), lut AS (
-        |  SELECT v.vec_id, c.pos, v.dim // v.sd AS s,
-        |    CAST(SUM((qv - qc) * (qv - qc)) AS BIGINT) AS d
-        |  FROM vq v JOIN cwdim c ON c.dim = v.dim
-        |  GROUP BY 1, 2, 3
-        |), codepos AS (
-        |  SELECT i.c_vec, i.list_id, g.s1 - 1 AS s, i.codes[g.s1] AS pos
-        |  FROM read_parquet('/tmp/graft_ann_index/sf0.01/index.parquet/v*/*.parquet') i,
-        |    UNNEST(generate_series(1, len(i.codes))) AS g(s1)
-        |), adc AS (
-        |  SELECT qa.q_vec, cp.c_vec,
-        |    CAST(SUM(l.d) AS BIGINT) AS qdist_approx
-        |  FROM codepos cp
-        |  JOIN qa ON qa.list_id = cp.list_id
-        |  JOIN lut l ON l.s = cp.s AND l.pos = cp.pos AND l.vec_id = qa.q_vec
-        |  WHERE cp.c_vec <> qa.q_vec
-        |  GROUP BY 1, 2
-        |)
-        |SELECT q_vec, qdist_approx AS best_qdist, c_vec AS best_c_vec FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_vec
-        |    ORDER BY qdist_approx, c_vec) AS rn
-        |  FROM adc) t WHERE rn = 1
-        |ORDER BY q_vec""".stripMargin,
     "st9_stream_closed_sessions" ->
       """WITH e AS (
         |  SELECT user_id, epoch_ns(ts) AS tns, event_id FROM events),
@@ -889,4 +767,72 @@ object SurfaceQueries {
         |  CAST(regexp_extract(xml, '<rk>([0-9]+)</rk>', 1) AS BIGINT) AS rk
         |FROM x ORDER BY n_nationkey""".stripMargin,
   )
+
+  /** The oracles that replay a persisted index, for the corpus at `dir`
+    * (see [[ExtensionQueries.indexOracles]]): st21 is x23's replay
+    * pointed at the stream-maintained `_stream` root.
+    */
+  def indexOracles(dir: String): Map[String, String] = Map(
+    "st16_stream_ann_index" -> st16Sql(IndexStore.root(IndexStore.Ann, dir)),
+    "st21_stream_index_append" ->
+      ExtensionQueries.ivfPqReplaySql(IndexStore.root(IndexStore.Ann, dir, "_stream")),
+  )
+
+  /** st16: probe (rk=1), ADC, and argmin replayed from the SAME
+    * persisted artifacts as x23, at `root` (the Spark side builds them
+    * on first call). Persisted codes are 0-based positions into the
+    * cw_id-sorted codebook.
+    */
+  private def st16Sql(root: String): String =
+    s"""WITH cent AS (
+       |  SELECT centroid_id,
+       |    list_transform(c_emb, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS cq
+       |  FROM read_parquet('${IndexStore.glob(root, "centroids.parquet")}')
+       |), qe AS (
+       |  SELECT vec_id,
+       |    list_transform(embedding, v -> floor(CAST(v AS DOUBLE) * 1048576.0)) AS q
+       |  FROM embeddings
+       |  WHERE vec_id < 8 AND len(embedding) > 0 AND len(embedding) % 8 = 0
+       |), qa AS (
+       |  SELECT q_vec, centroid_id AS list_id FROM (
+       |    SELECT e.vec_id AS q_vec, c.centroid_id,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        list_dot_product(e.q, c.cq) /
+       |          nullif(sqrt(list_dot_product(e.q, e.q)) * sqrt(list_dot_product(c.cq, c.cq)), 0)
+       |          DESC, c.centroid_id) AS rk
+       |    FROM qe e, cent c) t WHERE rk = 1
+       |), cb AS (
+       |  SELECT qcw, row_number() OVER (ORDER BY cw_id) - 1 AS pos
+       |  FROM read_parquet('${IndexStore.glob(root, "codebook.parquet")}')
+       |), cwdim AS (
+       |  SELECT pos, g.i - 1 AS dim, qcw[g.i] AS qc
+       |  FROM cb, UNNEST(generate_series(1, len(qcw))) AS g(i)
+       |), vq AS (
+       |  SELECT vec_id, len(embedding) // 8 AS sd, g.i - 1 AS dim,
+       |    CAST(floor(CAST(embedding[g.i] AS DOUBLE) * 1048576.0) AS BIGINT) AS qv
+       |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
+       |  WHERE vec_id < 8 AND len(embedding) > 0 AND len(embedding) % 8 = 0
+       |), lut AS (
+       |  SELECT v.vec_id, c.pos, v.dim // v.sd AS s,
+       |    CAST(SUM((qv - qc) * (qv - qc)) AS BIGINT) AS d
+       |  FROM vq v JOIN cwdim c ON c.dim = v.dim
+       |  GROUP BY 1, 2, 3
+       |), codepos AS (
+       |  SELECT i.c_vec, i.list_id, g.s1 - 1 AS s, i.codes[g.s1] AS pos
+       |  FROM read_parquet('${IndexStore.glob(root, "index.parquet")}') i,
+       |    UNNEST(generate_series(1, len(i.codes))) AS g(s1)
+       |), adc AS (
+       |  SELECT qa.q_vec, cp.c_vec,
+       |    CAST(SUM(l.d) AS BIGINT) AS qdist_approx
+       |  FROM codepos cp
+       |  JOIN qa ON qa.list_id = cp.list_id
+       |  JOIN lut l ON l.s = cp.s AND l.pos = cp.pos AND l.vec_id = qa.q_vec
+       |  WHERE cp.c_vec <> qa.q_vec
+       |  GROUP BY 1, 2
+       |)
+       |SELECT q_vec, qdist_approx AS best_qdist, c_vec AS best_c_vec FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY q_vec
+       |    ORDER BY qdist_approx, c_vec) AS rn
+       |  FROM adc) t WHERE rn = 1
+       |ORDER BY q_vec""".stripMargin
 }

@@ -77,6 +77,14 @@ object SessionStream {
     out.result().iterator
   }
 
+  /** `$dir/events.parquet` as a stream of [[EventIn]]. */
+  private def eventStream(spark: SparkSession, dir: String): Dataset[EventIn] = {
+    import spark.implicits._
+    graft.Tables.normalizeEventTs(StreamRun.parquetSource(spark, dir, "events.parquet"))
+      .select(col("user_id"), col("ts"), col("event_id"))
+      .as[EventIn]
+  }
+
   /** Stream `$dir/events.parquet` and return every closed session
     * (per-user, gap-split). The open tail session per user is state, not
     * output — exactly what an unbounded deployment would see.
@@ -87,12 +95,7 @@ object SessionStream {
       gapSeconds: Long = 1800,
   ): DataFrame = {
     import spark.implicits._
-    val events: Dataset[EventIn] = graft.Tables.normalizeEventTs(
-      StreamRun.parquetSource(spark, dir, "events.parquet"))
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .as[EventIn]
-
-    val closed = events
+    val closed = eventStream(spark, dir)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         emitClosed(gapSeconds * 1000000000L))
@@ -110,12 +113,7 @@ object SessionStream {
       gapSeconds: Long = 1800,
   ): DataFrame = {
     import spark.implicits._
-    val events: Dataset[EventIn] = graft.Tables.normalizeEventTs(
-      StreamRun.parquetSource(spark, dir, "events.parquet"))
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .as[EventIn]
-
-    val snapshots = events
+    val snapshots = eventStream(spark, dir)
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(
         updateState(gapSeconds * 1000000000L))

@@ -29,9 +29,9 @@ import java.nio.file.{Files, LinkOption, Path}
   *  - `/tmp/graft_imv` and `/tmp/graft_imv2`, the imv1/imv2
   *    materialized-view caches: their point is cross-run persistence,
   *    and their keys carry source (size, mtime) fingerprints;
-  *  - `/tmp/graft_ann_index/<sf>` and `/tmp/graft_graph_index/<sf>`,
-  *    the persisted ANN and graph indexes, which the oracle SQL reads
-  *    by literal path after the JVM exits;
+  *  - the persisted ANN and graph indexes, under the fixed roots of
+  *    [[graft.operators.IndexStore]], which the oracle SQL reads after
+  *    the JVM exits;
   *  - `/dev/shm/graft-stream-ckpt`, the RAM-disk checkpoint root of
   *    `StreamRun`, whose every checkpoint has a UUID name and is
   *    deleted when its drive ends.

@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-
 /** The session contract lives in [[GraftSession]] alone: the shared test
   * session carries all of it, and no other source builds a session (the
   * hand-copied builders had drifted apart).
@@ -26,13 +23,7 @@ class GraftSessionSpec extends SparkSpec {
 
   test("no source outside GraftSession.scala builds a SparkSession") {
     val builderCall = """SparkSession\s*\.\s*builder|\.builder\(\)|new\s+SparkSession\.Builder""".r
-    val builders = Files.walk(Paths.get("src")).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter((p: Path) => builderCall.findFirstIn(Files.readString(p)).isDefined)
-      .map(_.getFileName.toString).toList
-    // the scan must see the one legitimate builder, or it proves nothing
-    assert(builders.contains("GraftSession.scala"))
-    assert(builders.filterNot(_ == "GraftSession.scala").isEmpty,
-      s"session builders outside GraftSession: $builders")
+    val builders = OwnerScan.sitesOutside(builderCall, "GraftSession.scala", tree = "src")
+    assert(builders.isEmpty, s"session builders outside GraftSession: $builders")
   }
 }

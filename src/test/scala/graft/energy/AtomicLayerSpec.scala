@@ -1,8 +1,7 @@
 package graft.energy
 
-import graft.SparkSpec
+import graft.{OwnerScan, SparkSpec}
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** AtomicLayer: snapshot-versioned Parquet overwrite with a commit
   * marker — readers see only complete snapshots, crashed writes are
@@ -172,12 +171,8 @@ class AtomicLayerSpec extends SparkSpec {
 
   test("only AtomicLayer writes the _merged_batch_id column") {
     val tagWrite = "withColumn(\"_merged_batch_id\""
-    val writers = Files.walk(Paths.get("src", "main")).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains(tagWrite))
-      .map(_.getFileName.toString).toList
-    // the scan must see the one legitimate site, or it proves nothing
-    assert(writers == List("AtomicLayer.scala"),
+    val writers = OwnerScan.sitesOutside(OwnerScan.literal(tagWrite), "AtomicLayer.scala")
+    assert(writers.isEmpty,
       s"_merged_batch_id written outside AtomicLayer.mergeBatch: $writers")
   }
 

@@ -132,7 +132,7 @@ class AnnIndexSpec extends SparkSpec {
     // delete every id the pre-delete serve returned — the strongest
     // possible check that tombstoned ids become unreachable
     val victims = before
-    Similarity.deleteFromIvfPqIndex(
+    IndexStore.delete(
       emb.where(col("vec_id").isin(victims.toSeq: _*)).select("vec_id"), root)
 
     val after = Similarity.ivfPqTopKFromIndex(qs, emb, root, k = 3)
@@ -146,7 +146,7 @@ class AnnIndexSpec extends SparkSpec {
       "delete must not touch index.parquet (tombstones are a side table)")
 
     // idempotent: deleting the same ids again keeps one tombstone each
-    Similarity.deleteFromIvfPqIndex(
+    IndexStore.delete(
       emb.where(col("vec_id").isin(victims.toSeq: _*)).select("vec_id"), root)
     val tombs = AtomicLayer.read(spark, s"$root/tombstones.parquet")
     assert(tombs.count() == victims.size)
@@ -164,7 +164,7 @@ class AnnIndexSpec extends SparkSpec {
       .orderBy("q_vec", "rank").collect().toSeq
 
     val victims = baseline.map(_.getAs[Long]("c_vec")).distinct
-    Similarity.deleteFromIvfPqIndex(
+    IndexStore.delete(
       emb.where(col("vec_id").isin(victims: _*)).select("vec_id"), root)
 
     // resurrection: re-adding the deleted ids clears their tombstones

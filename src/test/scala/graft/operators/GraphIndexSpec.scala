@@ -138,7 +138,7 @@ class GraphIndexSpec extends SparkSpec {
     val dead = hitIds.filter(_ >= 4)
     assert(dead.nonEmpty, "fixture must place some non-query ids in the results")
     import spark.implicits._
-    Similarity.deleteFromGraphIndex(dead.toSeq.toDF("vec_id"), root)
+    IndexStore.delete(dead.toSeq.toDF("vec_id"), root)
 
     val after = serve(root, 120).collect().toSeq
     val afterIds = after.map(_.getLong(2)).toSet
@@ -147,7 +147,7 @@ class GraphIndexSpec extends SparkSpec {
     assert(after.nonEmpty, "the graph must keep serving around deleted nodes")
 
     // delete is idempotent and O(batch): tombstone rows = |dead ids|
-    Similarity.deleteFromGraphIndex(dead.toSeq.toDF("vec_id"), root)
+    IndexStore.delete(dead.toSeq.toDF("vec_id"), root)
     assert(AtomicLayer.read(spark, s"$root/tombstones.parquet").count() == dead.size)
 
     // RESURRECTION: re-adding the dead ids clears their tombstones and

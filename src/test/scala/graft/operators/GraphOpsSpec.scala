@@ -1,11 +1,9 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths}
-import graft.SparkSpec
+import graft.{OwnerScan, SparkSpec}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import scala.jdk.CollectionConverters._
 
 /** Specs for [[GraphOps]]: hand-checked graphs, and property tests
   * against driver-side references on seeded random graphs (the
@@ -392,15 +390,10 @@ class GraphOpsSpec extends SparkSpec {
     // the pattern must catch the shape it forbids, or the scan proves nothing
     assert(sym.findFirstIn("""e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))""").isDefined)
-    val repoRoot = Paths.get(sys.props("user.dir"))
-    assert(Files.exists(repoRoot.resolve("build.sbt")), s"cwd $repoRoot is not the repo root")
-    val sources = Files.walk(repoRoot.resolve("src/main")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList
-    assert(sources.exists(_.getFileName.toString == "GraphOps.scala"))
-    val builders = sources
-      .filter((p: Path) => sym.findFirstIn(Files.readString(p)).isDefined)
-      .map(p => repoRoot.relativize(p).toString)
-      .filterNot(_.endsWith("/GraphOps.scala"))
+    // the owner builds both orientations without a union, so the scan
+    // checks it was read through the builder's definition instead
+    val builders = OwnerScan.sitesOutside(sym, "GraphOps.scala",
+      ownerMark = Some(OwnerScan.literal("def undirected(")))
     assert(builders.isEmpty,
       s"symmetrized edge lists outside GraphOps: $builders — use GraphOps.undirected")
   }

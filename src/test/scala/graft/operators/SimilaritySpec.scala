@@ -1,11 +1,9 @@
 package graft.operators
 
-import graft.{SparkSpec, Tables}
+import graft.{OwnerScan, SparkSpec, Tables}
 import graft.functions.VectorMath
-import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -335,17 +333,8 @@ class SimilaritySpec extends SparkSpec {
   test("no source under src/main outside Similarity.scala spells the recall hit-join") {
     // the "__hit" marker column of the exact-vs-approximate left join:
     // Similarity.markFound is its one owner, so recall has one definition
-    val repoRoot = Paths.get(sys.props("user.dir"))
-    assert(Files.exists(repoRoot.resolve("build.sbt")), s"cwd $repoRoot is not the repo root")
-    val sources = Files.walk(repoRoot.resolve("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList
-    val owner = sources.filter(_.getFileName.toString == "Similarity.scala")
-    assert(owner.exists(p => Files.readString(p).contains("\"__hit\"")),
-      "the owner no longer spells the marker, so the scan proves nothing")
-    val copies = sources
-      .filter((p: Path) => Files.readString(p).contains("\"__hit\""))
-      .map(p => repoRoot.relativize(p).toString)
-      .filterNot(_.endsWith("/operators/Similarity.scala"))
+    val copies = OwnerScan.sitesOutside(OwnerScan.literal("\"__hit\""),
+      "operators/Similarity.scala", tree = "src/main/scala")
     assert(copies.isEmpty,
       s"recall hit-joins outside Similarity: $copies — use Similarity.markFound")
   }

@@ -38,26 +38,12 @@ class ScratchSpec extends AnyFunSuite {
   test("no unmanaged temp dirs outside the registry") {
     // Scratch alone decides where run-local files go: no other source
     // creates a temp dir, and no other main source names java.io.tmpdir
-    import scala.jdk.CollectionConverters._
+    import graft.OwnerScan
     val scratch = "src/main/scala/graft/tools/Scratch.scala"
-    val self = "src/test/scala/graft/tools/ScratchSpec.scala"
-    // anchor at the repo root explicitly — a bare relative "src" walks
-    // the wrong tree (vacuous pass) or throws when the test JVM's cwd
-    // is not the repo root (forked tests, IDE runners)
-    val repoRoot = java.nio.file.Paths.get(sys.props("user.dir"))
-    assert(Files.exists(repoRoot.resolve("build.sbt")),
-      s"test cwd $repoRoot is not the repo root (no build.sbt) — " +
-        "cannot locate src/ for the temp-dir sweep")
-    val srcRoot = repoRoot.resolve("src")
-    assert(Files.exists(srcRoot), s"missing $srcRoot")
-    val leaky = Files.walk(srcRoot).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .map(p => repoRoot.relativize(p).toString -> new String(Files.readAllBytes(p)))
-      .filter { case (rel, text) =>
-        rel != scratch && rel != self && (text.contains("createTempDirectory") ||
-          (rel.startsWith("src/main/") && text.contains("java.io.tmpdir")))
-      }
-      .map(_._1).toSeq.sorted
+    val leaky =
+      OwnerScan.sitesOutside(OwnerScan.literal("createTempDirectory"), scratch, tree = "src",
+        exempt = Seq("src/test/scala/graft/tools/ScratchSpec.scala")) ++
+        OwnerScan.sitesOutside(OwnerScan.literal("java.io.tmpdir"), scratch)
     assert(leaky.isEmpty,
       s"unmanaged temp dirs in: ${leaky.mkString(", ")} — use Scratch.dir")
   }
